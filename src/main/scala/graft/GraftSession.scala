@@ -42,17 +42,20 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Let AQE coalesce the OUTPUT partitioning of cached plans too.
-      // Every streaming DML body persists its micro-batch across the
-      // commit's actions, and with this off (the default) the cache pins
-      // the pre-coalesce reducer count — a KB-sized batch is frozen into
-      // `spark.sql.shuffle.partitions` cached partitions and EVERY
-      // downstream action pays a full-width map stage over them
+      // Batch DML persists frames that several of its actions read (a
+      // merge's source and join, CDF/CHECK re-reads in update/delete,
+      // replaceWhere's survivors), and with this off (the default) the
+      // cache pins the pre-coalesce reducer count — a KB-sized frame is
+      // frozen into `spark.sql.shuffle.partitions` cached partitions and
+      // EVERY downstream action pays a full-width map stage over them
       // (measured: 32-task map stages repeated per probe/stage/commit
-      // action; with coalescing the same batch caches as 1 partition).
-      // Scale-adaptive by construction: AQE sizes partitions from bytes
-      // (advisoryPartitionSizeInBytes), so large batches keep their
-      // parallelism. The conf only changes physical partitioning of the
-      // cached plan, never results.
+      // action; with coalescing the same frame caches as 1 partition).
+      // Only batch DML benefits: stream bodies run with AQE off
+      // (withMicroBatchDml), where the conf is inert, and the append
+      // bodies do not persist. Scale-adaptive by construction:
+      // AQE sizes partitions from bytes (advisoryPartitionSizeInBytes),
+      // so large frames keep their parallelism. The conf only changes
+      // physical partitioning of the cached plan, never results.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.filterPushdown", "true")

@@ -597,8 +597,7 @@ object DeltaInterop {
   def write(df: DataFrame, path: String, partitionBy: Seq[String] = Nil,
       overwrite: Boolean = false, txn: Option[(String, Long)] = None,
       mergeSchema: Boolean = false): Long =
-    commitStaged(df, path, partitionBy, overwrite, txn, allowEmpty = false,
-      mergeSchema = mergeSchema)
+    commitStaged(df, path, partitionBy, overwrite, txn, mergeSchema = mergeSchema)
 
   /** Additive schema union for mergeSchema appends: shared columns must
     * keep their exact type (no widening — refuse loudly), batch-only
@@ -706,8 +705,14 @@ object DeltaInterop {
       }
     }
 
+  /** Stage `df` and publish it as the next version. A txn-stamped append
+    * (a streaming micro-batch) that stages no rows publishes NOTHING
+    * and returns the current version (-1 when the table does not exist
+    * yet): replaying an empty batch is a no-op either way, so it needs
+    * no txn marker. Any other write of no rows refuses.
+    */
   private def commitStaged(df: DataFrame, path: String, partitionBy: Seq[String],
-      overwrite: Boolean, txn: Option[(String, Long)], allowEmpty: Boolean,
+      overwrite: Boolean, txn: Option[(String, Long)],
       mergeSchema: Boolean = false): Long = {
     val spark = df.sparkSession
     val fs = fsFor(spark, path)
@@ -747,7 +752,9 @@ object DeltaInterop {
     // both paths must hold the incoming batch to them
     prev.foreach(enforceConstraints(_, df))
     val adds = stageAdds(df, path, partitionBy)
-    require(allowEmpty || adds.nonEmpty, "DeltaInterop: write produced no data files")
+    if (adds.isEmpty && txn.isDefined && !overwrite)
+      return prev.map(_.version).getOrElse(-1L)
+    require(adds.nonEmpty, "DeltaInterop: write produced no data files")
     val now = System.currentTimeMillis()
     val removes = if (overwrite)
       prev.toSeq.flatMap(_.adds).map(a =>
@@ -1454,6 +1461,7 @@ object DeltaInterop {
     val candidates = graft.JobLabel(spark, "delta.merge: key envelope") {
       FileStats.keyEnvelope(source.select(on.map(col): _*), on)
     } match {
+      case FileStats.Empty => return DeleteResult(snap.version, 0, snap.adds.size)
       case FileStats.Unmatchable => Nil // no source key can equal anything
       case FileStats.Unbounded => snap.adds
       case FileStats.Bounds(p) => pruneAdds(spark, snap, Some(p))
@@ -1471,7 +1479,7 @@ object DeltaInterop {
             LocalProbe.distinctStrings(
               frameOver(spark, path, snap, candidates, fileCol = Some("__file"))
                 .join(srcKeys, on, "left_semi")
-                .select(col("__file")))
+                .select(col("__file")), cap = candidates.size) // never more than the candidates
           }.flatMap(f => byPath.get(new Path(f).toUri.getPath))
             .toSeq
         }
@@ -1530,22 +1538,20 @@ object DeltaInterop {
     * the CDC-upsert sink shape ([[VersionedTable.streamMerger]]'s
     * sibling): each micro-batch merges under its (appId, batchId) txn
     * action, so a replayed batch after recovery is a no-op and the
-    * sink stays exactly-once end to end. Empty batches commit nothing.
+    * sink stays exactly-once end to end.
+    *
+    * No separate emptiness action: [[merge]]'s key-envelope aggregate
+    * also counts the source, so an empty batch stops there and commits
+    * nothing. [[merge]] persists the source itself, since several of
+    * its actions read it.
     */
   def streamBatchMerger(path: String, on: Seq[String],
       clauses: Seq[VersionedTable.MergeClause],
       appId: String): (DataFrame, Long) => Unit = { (batch, batchId) =>
     graft.GraftSession.withMicroBatchDml(batch) {
-      val persisted = batch.persist()
-      try {
-        val empty = graft.JobLabel(persisted.sparkSession,
-          "delta.stream: emptiness probe")(persisted.isEmpty)
-        if (!empty) {
-          merge(persisted.sparkSession, path, persisted, on, clauses,
-            txn = Some((appId, batchId)))
-          ()
-        }
-      } finally { persisted.unpersist(); () }
+      merge(batch.sparkSession, path, batch, on, clauses,
+        txn = Some((appId, batchId)))
+      ()
     }
   }
 
@@ -2329,19 +2335,19 @@ object DeltaInterop {
     * is one append commit stamped with the (appId, batchId) txn action,
     * so a replayed batch after recovery is a NO-OP — the protocol's
     * exactly-once contract (txn action), the same one
-    * [[VersionedTable.streamWriter]] implements natively. Empty batches
-    * commit nothing.
+    * [[VersionedTable.streamWriter]] implements natively.
+    *
+    * No separate emptiness action: the batch is staged first and its
+    * zero-row files dropped by their footer counts, so an empty batch
+    * stages nothing and commits nothing. The staging write is the only
+    * action reading the batch (plus one probe per CHECK constraint, on
+    * tables that carry any), so it is not persisted.
     */
   def streamBatchWriter(path: String, partitionBy: Seq[String] = Nil,
       appId: String): (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val persisted = batch.persist()
-    try {
-      if (!persisted.isEmpty) {
-        commitStaged(persisted, path, partitionBy, overwrite = false,
-          txn = Some((appId, batchId)), allowEmpty = true)
-        ()
-      }
-    } finally { persisted.unpersist(); () }
+    commitStaged(batch, path, partitionBy, overwrite = false,
+      txn = Some((appId, batchId)))
+    ()
   }
 
   /** Driver-checked round trip through the WIRE FORMAT: orders land as

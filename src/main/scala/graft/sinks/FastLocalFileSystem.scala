@@ -30,6 +30,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   */
 class FastLocalFileSystem extends LocalFileSystem(new RawLocalFileSystem {
       override def setPermission(p: Path, permission: FsPermission): Unit = ()
+      override def getFileLinkStatus(f: Path): org.apache.hadoop.fs.FileStatus =
+        FastLocalFileSystem.linkStatus(this, f)(super.getFileLinkStatus(f))
     }) {
 
   override def initialize(uri: URI, conf: Configuration): Unit = {
@@ -48,6 +50,16 @@ class FastLocalFileSystem extends LocalFileSystem(new RawLocalFileSystem {
     */
   override def getFileStatus(f: Path): org.apache.hadoop.fs.FileStatus =
     FastLocalFileSystem.nioStatus(this, f)
+
+  /** Same answer for the link-aware lookup: stock raw local FORKS
+    * `readlink` on every call to learn whether `f` is a symlink, and
+    * `FileContext.rename` (every checkpoint offset/commit/sources/
+    * `_spark_metadata` log entry) asks it for both sides of the rename.
+    * One NIO no-follow stat answers it; real symlinks keep the stock
+    * resolution.
+    */
+  override def getFileLinkStatus(f: Path): org.apache.hadoop.fs.FileStatus =
+    FastLocalFileSystem.linkStatus(this, f)(super.getFileLinkStatus(f))
 
   override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] = {
     val st = getFileStatus(f) // throws FileNotFoundException like stock
@@ -87,19 +99,34 @@ object FastLocalFileSystem {
   private val DirPerm = new FsPermission(Integer.parseInt("755", 8).toShort)
   private val FilePerm = new FsPermission(Integer.parseInt("644", 8).toShort)
 
+  private def attributes(f: Path,
+      options: java.nio.file.LinkOption*): java.nio.file.attribute.BasicFileAttributes =
+    try java.nio.file.Files.readAttributes(java.nio.file.Paths.get(f.toUri.getPath),
+      classOf[java.nio.file.attribute.BasicFileAttributes], options: _*)
+    catch {
+      case _: java.nio.file.NoSuchFileException =>
+        throw new java.io.FileNotFoundException(s"File $f does not exist")
+    }
+
   /** FileStatus from NIO attributes in ONE stat call, permissions fixed
     * at umask-style defaults (never read back through a forked `ls`).
     */
   private[sinks] def nioStatus(fs: org.apache.hadoop.fs.FileSystem,
-      f: Path): org.apache.hadoop.fs.FileStatus = {
-    val p = java.nio.file.Paths.get(f.toUri.getPath)
-    val attrs =
-      try java.nio.file.Files.readAttributes(
-        p, classOf[java.nio.file.attribute.BasicFileAttributes])
-      catch {
-        case _: java.nio.file.NoSuchFileException =>
-          throw new java.io.FileNotFoundException(s"File $f does not exist")
-      }
+      f: Path): org.apache.hadoop.fs.FileStatus =
+    statusOf(fs, f, attributes(f))
+
+  /** `getFileLinkStatus` without the `readlink` fork: a no-follow stat
+    * of anything but a symlink IS its link status; a real symlink goes
+    * to `stock` (target resolution stays Hadoop's).
+    */
+  private[sinks] def linkStatus(fs: org.apache.hadoop.fs.FileSystem, f: Path)(
+      stock: => org.apache.hadoop.fs.FileStatus): org.apache.hadoop.fs.FileStatus = {
+    val attrs = attributes(f, java.nio.file.LinkOption.NOFOLLOW_LINKS)
+    if (attrs.isSymbolicLink) stock else statusOf(fs, f, attrs)
+  }
+
+  private def statusOf(fs: org.apache.hadoop.fs.FileSystem, f: Path,
+      attrs: java.nio.file.attribute.BasicFileAttributes): org.apache.hadoop.fs.FileStatus = {
     val dir = attrs.isDirectory
     new org.apache.hadoop.fs.FileStatus(
       if (dir) 0L else attrs.size(), dir, 1,

@@ -432,6 +432,10 @@ object FileStats {
     * into a file-prunable range predicate?
     */
   sealed trait Envelope
+  /** The source has no rows: the merge is a no-op, answered by the same
+    * aggregate (no separate emptiness action).
+    */
+  case object Empty extends Envelope
   /** Some key column has no non-null source value: equality can never
     * hold, so NO target row matches any source row.
     */
@@ -447,7 +451,8 @@ object FileStats {
     * driver aggregate (2·|on| scalars), for MERGE-style touched-file
     * pruning: a target file whose stats lie outside every source key's
     * range cannot contain a matched row. Non-orderable key types simply
-    * drop out of the conjunction (still conservative).
+    * drop out of the conjunction (still conservative). The same
+    * aggregate counts the source, so an empty source reports [[Empty]].
     */
   private[sinks] def keyEnvelope(source: DataFrame, on: Seq[String]): Envelope = {
     val fields = source.schema.fields.filter(f => on.contains(f.name))
@@ -460,7 +465,9 @@ object FileStats {
     val aggs = orderable.flatMap(f =>
       Seq(min(col(f.name)).as(s"__lo_${f.name}"),
         max(col(f.name)).as(s"__hi_${f.name}")))
-    val row = source.agg(aggs.head, aggs.tail.toSeq: _*).collect()(0) // one row
+    val row = source.agg(count(lit(1)).as("__n"), aggs.toSeq: _*)
+      .collect()(0) // one row
+    if (row.getAs[Long]("__n") == 0L) return Empty
     val bounds = orderable.map { f =>
       (f, row.getAs[Any](s"__lo_${f.name}"), row.getAs[Any](s"__hi_${f.name}"))
     }

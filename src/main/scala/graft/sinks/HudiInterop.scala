@@ -369,11 +369,17 @@ object HudiInterop {
     // COW resolves latest committed slices directly
     if (tableType(fsFor(spark, path), path) == "MERGE_ON_READ")
       return HudiMor.read(spark, path, asOf)
-    val live = liveSlices(spark, path, asOf)
+    val files = liveSlices(spark, path, asOf).map(s => s"$path/${s.rel}")
     // explicit file list WITHOUT basePath: partition values already live
     // inside Hudi data files, and dir-based inference would duplicate
-    // the column
-    spark.read.parquet(live.map(s => s"$path/${s.rel}"): _*)
+    // the column. Schema from FOOTERS read on a local thread pool
+    // (HudiMor.read's rule): inference ships a distributed footer job on every read
+    // construction, which identical footers (the common case) do not
+    // need; divergent slices keep Spark's own inference.
+    val schemas = FileStats.footerSchemas(
+      spark.sparkContext.hadoopConfiguration, files).distinct
+    if (schemas.size == 1) spark.read.schema(schemas.head).parquet(files: _*)
+    else spark.read.parquet(files: _*)
   }
 
   /** Hudi incremental query: exactly the records whose commit time is
@@ -572,7 +578,7 @@ object HudiInterop {
     * the ceiling the result is exact and complete.
     */
   private[sinks] def collectPairsLocal(df: DataFrame, dirCol: String,
-      bucketCol: String, cap: Int = Int.MaxValue): Array[(String, Int)] =
+      bucketCol: String, cap: Int): Array[(String, Int)] =
     graft.JobLabel(df.sparkSession, "hudi: routing-pair probe") {
       LocalProbe.distinctRows(
         df.select(col(dirCol).cast("string"), col(bucketCol).cast("int")), cap)
@@ -684,7 +690,11 @@ object HudiInterop {
   /** Keyed latest-wins upsert: incoming rows replace existing rows with
     * the same record key when their `precombine` is >= (ties to
     * incoming); unaffected partitions keep their file slices untouched,
-    * carried-over records keep their original meta columns.
+    * carried-over records keep their original meta columns. An empty
+    * `df` commits nothing and returns the latest completed instant; the
+    * routing-pair probe answers that, so callers run no emptiness
+    * action of their own. `df` is read by that probe and by the staging
+    * write: persist it when it is costly to recompute.
     */
   def upsert(df: DataFrame, path: String, recordKey: String,
       precombine: String, partitionBy: Seq[String] = Nil,
@@ -698,7 +708,10 @@ object HudiInterop {
     val n = numFileGroups(fsFor(spark, path), path)
     val incomingPairs = collectPairsLocal(
       df.select(hivePath(partitionBy).as("__dir"), bucketExpr(recordKey, n).as("__b")),
-      "__dir", "__b")
+      "__dir", "__b", cap = Int.MaxValue) // exact: dirs × buckets, the rewrite set
+    // the routing probe doubles as the emptiness answer (HudiMor.upsert's
+    // rule): an empty batch commits nothing and reports the latest instant
+    if (incomingPairs.isEmpty) return completedInstants(spark, path).last
     val existingBucket = bucketOfKeyString(col("_hoodie_record_key"), n)
     val affected = semiJoinPairs(
       existing.withColumn("__dir", col("_hoodie_partition_path"))
@@ -827,53 +840,38 @@ object HudiInterop {
         .groupBy(_.dir).map { case (d, ss) => d -> ss.map(_.fileId).distinct }
       collectPairsLocal(
           df.select(dirCol.as("__dir"), bucketExpr(recordKey, n).as("__bucket")),
-          "__dir", "__bucket")
+          "__dir", "__bucket", cap = Int.MaxValue) // exact: one entry per written group
         .map { case (d, b) => (d, b) -> routeGroup(liveGroupByDir, n, d, b) }.toMap
     }
     val isCarry = carryOver.isDefined && df.schema.fieldNames.contains("__is_incoming")
     // fileId is a pure function of (dir, bucket): a literal map keeps
     // the stamp codegen'd (no UDF); huge pair sets route through the
     // broadcast join in withPairColumn
-    val stamped0 = withPairColumn(
-      df.withColumn("__dir", dirCol)
-        .withColumn("__bucket", bucketExpr(recordKey, n)),
+    val routed = withPairColumn(
+      df.withColumns(Map("__dir" -> dirCol, "__bucket" -> bucketExpr(recordKey, n))),
       "__file_id", fidByPair)
-      .withColumn("__new_ct", lit(instant))
     // carried-over records keep their original commit time + seqno; new
     // winners get this instant (Hudi preserves meta fields on merge)
-    val stamped = (if (isCarry)
-      stamped0
-        .withColumn("_hoodie_commit_time",
-          when(col("__is_incoming") === 1, col("__new_ct"))
-            .otherwise(col("_hoodie_commit_time")))
-        .withColumn("_hoodie_commit_seqno",
-          when(col("__is_incoming") === 1,
-            concat_ws("_", col("__new_ct"), lit("0"),
-              pmod(xxhash64(keyStringExpr(recordKey)), lit(1000000L))
-                .cast("string")))
-            .otherwise(col("_hoodie_commit_seqno")))
-        .drop("__is_incoming")
-    else
-      stamped0
-        .withColumn("_hoodie_commit_time", col("__new_ct"))
-        .withColumn("_hoodie_commit_seqno",
-          concat_ws("_", col("__new_ct"), lit("0"),
-            pmod(xxhash64(keyStringExpr(recordKey)), lit(1000000L))
-              .cast("string"))))
-      .withColumn("_hoodie_record_key", keyStringExpr(recordKey))
-      .withColumn("_hoodie_partition_path", col("__dir"))
-      .withColumn("_hoodie_file_name",
-        concat(col("__file_id"), lit("_0-0-0_"), col("__new_ct"),
-          lit(".parquet")))
-      .drop("__new_ct")
-    val dataCols = stamped.columns.filterNot(c =>
+    val ct = lit(instant)
+    val seqno = concat_ws("_", ct, lit("0"),
+      pmod(xxhash64(keyStringExpr(recordKey)), lit(1000000L)).cast("string"))
+    def stampNew(c: org.apache.spark.sql.Column, meta: String) =
+      (if (isCarry) when(col("__is_incoming") === 1, c).otherwise(col(meta)) else c).as(meta)
+    val dataCols = df.columns.filterNot(c =>
       MetaCols.contains(c) || c.startsWith("__"))
-    val ordered = stamped.select(
-      // __file_id is consumed by the _hoodie_file_name stamp above and
-      // must NOT reach the parquet: the wire format has exactly the five
-      // meta columns + data columns (a stray engine column would leak
-      // into every reader's schema, including metadata-only conversions)
-      (MetaCols.map(col) ++ dataCols.map(col) :+ col("__dir") :+ col("__bucket")): _*)
+    // ONE projection stamps the meta columns (each chained withColumn
+    // re-analyzes the whole plan). __file_id is consumed by the
+    // _hoodie_file_name stamp and must NOT reach the parquet: the wire
+    // format has exactly the five meta columns + data columns (a stray
+    // engine column would leak into every reader's schema, including
+    // metadata-only conversions)
+    val ordered = routed.select((Seq(
+      stampNew(ct, "_hoodie_commit_time"),
+      stampNew(seqno, "_hoodie_commit_seqno"),
+      keyStringExpr(recordKey).as("_hoodie_record_key"),
+      col("__dir").as("_hoodie_partition_path"),
+      concat(col("__file_id"), lit("_0-0-0_"), ct, lit(".parquet")).as("_hoodie_file_name")) ++
+      dataCols.map(col) :+ col("__dir") :+ col("__bucket")): _*)
 
     // one writer per file group (dir × bucket), then rename each part
     // file to its Hudi slice name

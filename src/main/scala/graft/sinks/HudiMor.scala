@@ -762,6 +762,27 @@ object HudiMor {
     instant
   }
 
+  /** `foreachBatch` body for a streaming MOR upsert: each micro-batch
+    * is one [[upsert]] delta commit. Replays are IDEMPOTENT rather than
+    * skipped — the keyed latest-wins upsert converges when a batch
+    * re-lands (Hudi's at-least-once + precombine contract).
+    *
+    * No separate emptiness action: [[upsert]]'s routing-pair probe
+    * answers it, and an empty batch commits nothing. The one explicit
+    * check is the bootstrap — a table with no completed commit, where
+    * [[upsert]] refuses an empty batch — so an empty first batch is a
+    * no-op too. [[upsert]] persists its combined batch itself.
+    */
+  def streamBatchUpserter(path: String, recordKey: String, precombine: String,
+      partitionBy: Seq[String] = Nil): (DataFrame, Long) => Unit = { (batch, _) =>
+    graft.GraftSession.withMicroBatchDml(batch) {
+      if (HudiInterop.completedInstants(batch.sparkSession, path).nonEmpty ||
+          !batch.isEmpty)
+        upsert(batch, path, recordKey, precombine, partitionBy)
+      ()
+    }
+  }
+
   /** Keyed MOR delete: `keys` must carry the record-key columns (and
     * the partition columns when the table is partitioned — Hudi deletes
     * are (key, partition) pairs). Appends one DELETE block per affected

@@ -384,11 +384,17 @@ object IcebergInterop {
         }
     // record counts from the parquet FOOTERS the writer just produced
     // (KBs per file on an IO thread pool) — a distributed re-scan of the
-    // staged bytes would read every commit's data a SECOND time
+    // staged bytes would read every commit's data a SECOND time. Zero-row
+    // files (an empty unpartitioned write still emits one) never reach a
+    // manifest, so callers derive emptiness from what actually landed
+    // instead of paying a probe action first.
     val counts = FileStats.fromFooters(spark,
       stagedFiles.map(_._1.getPath.toString), StructType(Nil))
       .map { case (p, st) => p -> st.numRecords.getOrElse(0L) }
-    val moved = stagedFiles.zipWithIndex.map { case ((st, values), i) =>
+    def records(st: org.apache.hadoop.fs.FileStatus): Long =
+      counts.getOrElse(FileStats.canon(st.getPath.toString), 0L)
+    val moved = stagedFiles.filter(f => records(f._1) > 0L).zipWithIndex.map {
+        case ((st, values), i) =>
       val name = f"00000-$i%05d-${java.util.UUID.randomUUID()}.parquet"
       // cosmetic hive-ish dir per partition tuple (readers use manifests)
       val subdir = partitionBy.zip(values).map { case (c, v) =>
@@ -398,9 +404,7 @@ object IcebergInterop {
       val dst = new Path(s"$dir/$name")
       fs.mkdirs(dst.getParent)
       require(fs.rename(st.getPath, dst), s"move failed: $dst")
-      DataFileRef(s"$dir/$name",
-        counts.getOrElse(FileStats.canon(st.getPath.toString), 0L), st.getLen,
-        values)
+      DataFileRef(s"$dir/$name", records(st), st.getLen, values)
     }
     fs.delete(stage, true)
     moved
@@ -609,7 +613,10 @@ object IcebergInterop {
     * carried as a `graft.txn.<appId>` table property (the same
     * mechanism real streaming writers use via snapshot summaries):
     * replaying a batch whose version the table already recorded is a
-    * no-op returning the current snapshot.
+    * no-op returning the current snapshot. A txn-stamped append that
+    * stages no rows (an empty micro-batch) publishes nothing and
+    * returns the current snapshot (-1 when the table does not exist
+    * yet): replaying it is a no-op either way.
     */
   def write(df: DataFrame, path: String, overwrite: Boolean = false,
       txn: Option[(String, Long)] = None,
@@ -661,6 +668,8 @@ object IcebergInterop {
       }
     }
     val moved = stageDataFiles(df, path, partitionBy, fs)
+    if (moved.isEmpty && txn.isDefined && !overwrite)
+      return prev.map(p => (p._2 \ "current-snapshot-id").extract[Long]).getOrElse(-1L)
     commitRefs(spark, fs, path, df.schema, moved, overwrite, txn, partFields,
       prev, prevProps)
   }
@@ -1422,6 +1431,7 @@ object IcebergInterop {
     val eqIds = on.map(c => idByName.getOrElse(c,
       throw new IllegalStateException(s"no field id for $c")))
     val t0 = FileStats.keyEnvelope(source.select(on.map(col): _*), on) match {
+      case FileStats.Empty => return curId // full no-op
       case FileStats.Unmatchable =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -1461,14 +1471,11 @@ object IcebergInterop {
           .filter(col("__r").isNotNull).select("__r.*")
         // Emptiness and the delete-key count both come from the STAGED
         // WRITES' own parquet footers — no count()/isEmpty probe actions
-        // per micro-batch (guide §1: cut actions, not just task work).
-        // Zero-row staged files (an empty unpartitioned write still emits
-        // one) are dropped before any manifest references them.
-        val moved0 = graft.JobLabel(spark, "iceberg.merge: stage appends") {
+        // per micro-batch (guide §1: cut actions, not just task work);
+        // stageDataFiles drops zero-row files before any manifest sees them.
+        val moved = graft.JobLabel(spark, "iceberg.merge: stage appends") {
           stageDataFiles(appendRows, path, partFields.map(_.name), fs)
         }
-        val (movedEmpty, moved) = moved0.partition(_.records == 0L)
-        movedEmpty.foreach(r => fs.delete(new Path(r.path), false))
         // sorted equality-delete parquet of the ON-key rows; row count
         // read back from its footer
         val delStage = new Path(s"$path/metadata/eqstage-${java.util.UUID.randomUUID()}")
@@ -1570,20 +1577,21 @@ object IcebergInterop {
     * format — the Flink-CDC-style upsert sink: each micro-batch
     * commits one merge-on-read snapshot under its (appId, batchId)
     * `graft.txn` property, so replayed batches are no-ops and the
-    * sink is exactly-once. Empty batches commit nothing.
+    * sink is exactly-once.
+    *
+    * No separate emptiness action: [[merge]]'s key-envelope aggregate
+    * also counts the source, so an empty batch stops there and commits
+    * nothing; staged zero-row files are dropped by their footer counts.
+    * [[merge]] persists the source itself, since several of its actions
+    * read it.
     */
   def streamBatchMerger(path: String, on: Seq[String],
       clauses: Seq[VersionedTable.MergeClause],
       appId: String): (DataFrame, Long) => Unit = { (batch, batchId) =>
     graft.GraftSession.withMicroBatchDml(batch) {
-      val persisted = batch.persist()
-      try {
-        if (!persisted.isEmpty) {
-          merge(persisted.sparkSession, path, persisted, on, clauses,
-            txn = Some((appId, batchId)))
-          ()
-        }
-      } finally { persisted.unpersist(); () }
+      merge(batch.sparkSession, path, batch, on, clauses,
+        txn = Some((appId, batchId)))
+      ()
     }
   }
 

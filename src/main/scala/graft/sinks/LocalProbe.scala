@@ -15,11 +15,15 @@ import org.apache.spark.sql.{DataFrame, Row}
   * once the set exceeds `cap` — one partition alone then already proves
   * "> cap distinct values", so per-task memory is O(cap), never O(rows).
   * Below the cap the result is exact and complete. Callers with a
-  * refusal ceiling pass it as `cap` and check `length > cap`.
+  * refusal ceiling pass it as `cap` and check `length > cap`. `cap` is
+  * required: every caller states its bound (a touched-file probe can
+  * never exceed its candidate count; an unbounded caller says
+  * `Int.MaxValue` and why), and a non-empty input never yields an empty
+  * result under any cap, so a probe doubles as the emptiness answer.
   */
 private[graft] object LocalProbe {
 
-  def distinctRows(df: DataFrame, cap: Int = Int.MaxValue): Array[Row] = {
+  def distinctRows(df: DataFrame, cap: Int): Array[Row] = {
     val perPartition = df.rdd.mapPartitions { it =>
       val seen = new java.util.LinkedHashSet[Row]()
       while (it.hasNext && seen.size <= cap) { seen.add(it.next()); () }
@@ -30,6 +34,6 @@ private[graft] object LocalProbe {
   }
 
   /** Distinct values of a single string column (nulls kept as null). */
-  def distinctStrings(df: DataFrame, cap: Int = Int.MaxValue): Array[String] =
+  def distinctStrings(df: DataFrame, cap: Int): Array[String] =
     distinctRows(df, cap).map(r => if (r.isNullAt(0)) null else r.getString(0))
 }

@@ -179,6 +179,13 @@ object TableSink {
     * than skipped — the keyed latest-wins upsert converges to the same
     * state when a batch re-lands (Hudi's own at-least-once + precombine
     * contract).
+    *
+    * No separate emptiness action in any body: delta and iceberg stage
+    * first, drop zero-row files by their footer counts and publish
+    * nothing when nothing was staged; a hudi upsert's routing-pair probe
+    * answers emptiness. The one explicit check left is hudi's bootstrap
+    * insert into a table with no commit yet. A batch is persisted only
+    * where more than one action reads it (hudi: probe and stage).
     */
   def streamBatch(cfg: SinkConfig, appId: String): (DataFrame, Long) => Unit = {
     require(SupportedFormats.contains(cfg.format) && cfg.format != "parquet",
@@ -187,34 +194,25 @@ object TableSink {
       case "delta" => DeltaInterop.streamBatchWriter(cfg.path, cfg.partitionBy, appId)
       case "hudi" =>
         val (key, pre) = hudiKeys(cfg)
+        val name = cfg.tableName.getOrElse("graft_table")
         (batch, _) => {
-          val persisted = batch.persist()
+          // combine-before-insert: in-batch duplicates resolve by
+          // precombine even on the bootstrap commit (upsert's merge
+          // window covers the existing-table case)
+          val combined = HudiInterop.precombineBatch(batch, key, pre).persist()
           try {
-            if (!persisted.isEmpty) {
-              // combine-before-insert: in-batch duplicates resolve by
-              // precombine even on the bootstrap commit (upsert's merge
-              // window covers the existing-table case)
-              val combined = HudiInterop.precombineBatch(persisted, key, pre)
-              val exists =
-                HudiInterop.completedInstants(persisted.sparkSession, cfg.path).nonEmpty
-              if (exists) HudiInterop.upsert(combined, cfg.path, key, pre,
-                cfg.partitionBy, cfg.tableName.getOrElse("graft_table"))
-              else HudiInterop.insert(combined, cfg.path, key, pre,
-                cfg.partitionBy, cfg.tableName.getOrElse("graft_table"))
-              ()
-            }
-          } finally { persisted.unpersist(); () }
+            if (HudiInterop.completedInstants(batch.sparkSession, cfg.path).nonEmpty)
+              HudiInterop.upsert(combined, cfg.path, key, pre, cfg.partitionBy, name)
+            else if (!combined.isEmpty)
+              HudiInterop.insert(combined, cfg.path, key, pre, cfg.partitionBy, name)
+            ()
+          } finally { combined.unpersist(); () }
         }
       case "iceberg" =>
         (batch, batchId) => {
-          val persisted = batch.persist()
-          try {
-            if (!persisted.isEmpty) {
-              IcebergInterop.write(persisted, cfg.path,
-                txn = Some((appId, batchId)), partitionBy = cfg.partitionBy)
-              ()
-            }
-          } finally { persisted.unpersist(); () }
+          IcebergInterop.write(batch, cfg.path,
+            txn = Some((appId, batchId)), partitionBy = cfg.partitionBy)
+          ()
         }
     }
     // batch DML under the stream-cloned session: restore AQE for the
@@ -313,7 +311,9 @@ object TableSink {
         // key would make this collect the bottleneck — that layout is
         // wrong for upserts anyway (one dir per key).
         val parts = graft.JobLabel(spark, "table: affected-partition probe") {
-          LocalProbe.distinctRows(updates.select(partitionCols.map(col): _*))
+          // exact: bounded by the partition cardinality (see above)
+          LocalProbe.distinctRows(updates.select(partitionCols.map(col): _*),
+            cap = Int.MaxValue)
         }
         require(parts.nonEmpty, "upsert: empty update set")
         val cond = parts.map { row =>

@@ -1368,8 +1368,9 @@ object VersionedTable {
     */
   private def hitPartitionDirs(df: DataFrame, partitionCols: Seq[String]): Set[String] =
     graft.JobLabel(df.sparkSession, "vt: affected-partition probe") {
+      // exact: bounded by the partition cardinality, like the dirs it names
       LocalProbe.distinctRows(df.select(partitionCols.map(c =>
-        col(c).cast(org.apache.spark.sql.types.StringType)): _*))
+        col(c).cast(org.apache.spark.sql.types.StringType)): _*), cap = Int.MaxValue)
     }
       .map { row =>
         partitionCols.zipWithIndex.map { case (c, i) =>
@@ -1697,7 +1698,8 @@ object VersionedTable {
     val byBase = candidates.groupBy(f => f.substring(f.lastIndexOf('/') + 1))
     val affected = graft.JobLabel(spark, "vt.delete: touched-file probe") {
       LocalProbe.distinctStrings(
-        readSet(candidates).filter(predicate).select(input_file_name()))
+        readSet(candidates).filter(predicate).select(input_file_name()),
+        cap = candidates.size) // never more than the candidates
     }.map(relOf(byBase, _)).toIndexedSeq
     if (affected.isEmpty) return latestVersion(spark, path) // nothing matches
     val kept = readSet(affected).filter(!coalesce(predicate, lit(false)))
@@ -1746,7 +1748,7 @@ object VersionedTable {
             .parquet(candidates.map(f => s"$path/$f"): _*)
             .drop(tfs.map(_.name): _*), tfs)
         .filter(predicate)
-        .select(input_file_name()))
+        .select(input_file_name()), cap = candidates.size) // never more than the candidates
     }.map(relOf(byBase, _)).toIndexedSeq
     if (affected.isEmpty) return latestVersion(spark, path) // nothing matches
     val src = logReader

@@ -329,18 +329,8 @@ object IngestPipeline {
     val q = enriched.writeStream
       .option("checkpointLocation", StreamTuning.scratchDir("graft-hmstream-ckpt"))
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.GraftSession.withMicroBatchDml(batch) {
-          val b = batch.persist()
-          // no emptiness probe: upsert's routing-pair collection already
-          // answers it (empty batch → no-op, no commit)
-          try {
-            graft.sinks.HudiMor.upsert(b, path, recordKey = "event_id",
-              precombine = "event_id", partitionBy = Seq("event_date"))
-            ()
-          } finally { b.unpersist(); () }
-        }
-      }
+      .foreachBatch(graft.sinks.HudiMor.streamBatchUpserter(path,
+        recordKey = "event_id", precombine = "event_id", partitionBy = Seq("event_date")))
       .start()
     q.awaitTermination()
     graft.sinks.HudiInterop.read(spark, path)
@@ -397,14 +387,13 @@ object IngestPipeline {
         graft.GraftSession.withMicroBatchDml(batch) {
           val b = batch.dropDuplicates("event_id").persist()
           try {
-            // only the BOOTSTRAP branch probes emptiness (a v0 commit must
-            // not exist for an empty batch); merge answers it itself from
-            // the key-envelope aggregate it runs anyway
-            if (DeltaInterop.latestVersion(b.sparkSession, path) < 0) {
-              if (!b.isEmpty)
-                DeltaInterop.write(b, path, partitionBy = Seq("event_date"),
-                  txn = Some(("graft-delta-merge-stream", batchId)))
-            } else {
+            // no emptiness probe: a txn-stamped write that stages no row
+            // publishes nothing (no v0 from an empty batch), and merge
+            // answers it from the key-envelope aggregate it runs anyway
+            if (DeltaInterop.latestVersion(b.sparkSession, path) < 0)
+              DeltaInterop.write(b, path, partitionBy = Seq("event_date"),
+                txn = Some(("graft-delta-merge-stream", batchId)))
+            else {
               val set = b.columns.filterNot(_ == "event_id").toSeq
                 .map(c => c -> col(s"s.$c")).toMap
               DeltaInterop.merge(b.sparkSession, path, b,
@@ -470,15 +459,14 @@ object IngestPipeline {
           (col("_change_type") === "delete").as("__del"): _*)
         .persist()
       try {
-        // bootstrap branch probes emptiness (no v0 from an empty batch);
-        // the merge branch lets merge's own key envelope answer it
+        // no emptiness probe: a txn-stamped write that stages no row
+        // publishes nothing (no v0 from an empty or delete-only batch),
+        // and merge's own key envelope answers it on the merge branch
         if (DeltaInterop.latestVersion(sparkB, dst) < 0) {
-          if (!last.isEmpty) {
-            DeltaInterop.write(
-              last.filter(!col("__del")).select(dataCols.map(col): _*), dst,
-              txn = Some(("graft-delta-repl", batchId)))
-            ()
-          }
+          DeltaInterop.write(
+            last.filter(!col("__del")).select(dataCols.map(col): _*), dst,
+            txn = Some(("graft-delta-repl", batchId)))
+          ()
         } else {
           val set = dataCols.filterNot(_ == "o_orderkey")
             .map(c => c -> col(s"s.$c")).toMap
@@ -547,13 +535,13 @@ object IngestPipeline {
         graft.GraftSession.withMicroBatchDml(batch) {
           val b = batch.dropDuplicates("event_id").persist()
           try {
-            // bootstrap branch probes emptiness (no empty-table commit);
-            // merge answers it from its own key envelope + staging
-            if (!IcebergInterop.tableExists(b.sparkSession, path)) {
-              if (!b.isEmpty)
-                IcebergInterop.write(b, path,
-                  txn = Some(("graft-iceberg-merge-stream", batchId)))
-            } else {
+            // no emptiness probe: a txn-stamped write that stages no row
+            // publishes nothing (no empty-table commit), and merge answers
+            // it from its own key envelope
+            if (!IcebergInterop.tableExists(b.sparkSession, path))
+              IcebergInterop.write(b, path,
+                txn = Some(("graft-iceberg-merge-stream", batchId)))
+            else {
               val set = b.columns.filterNot(_ == "event_id").toSeq
                 .map(c => c -> col(s"s.$c")).toMap
               IcebergInterop.merge(b.sparkSession, path, b,

@@ -453,6 +453,22 @@ class HudiMorSpec extends SparkSpec {
     assert(e.getMessage.contains("empty batch into an empty table"))
   }
 
+  test("stream body: an empty first batch commits nothing, then batches upsert") {
+    val path = tmp("streamempty")
+    val body = HudiMor.streamBatchUpserter(path, "id", "ts", Seq("cat"))
+    // the first micro-batch of a stream can be empty; the direct upsert
+    // refuses it (no instant to report), the stream body must not
+    body(sample.filter(lit(false)), 0L)
+    assert(HudiInterop.completedInstants(spark, path).isEmpty, "no commit may land")
+    body(sample, 1L)
+    assert(snap(path).size == 4)
+    body(sample.filter(lit(false)), 2L)
+    assert(HudiInterop.completedInstants(spark, path).size == 1,
+      "an empty batch into an existing table commits nothing")
+    body(Seq((1L, "a", 11.0, 200L)).toDF("id", "cat", "v", "ts"), 3L)
+    assert(snap(path) == Map(1L -> 11.0, 2L -> 20.0, 3L -> 30.0, 4L -> 40.0))
+  }
+
   test("asOf read ignores groups bootstrapped after asOf, even once they take log appends") {
     val path = tmp("asofboot")
     val i1 = HudiMor.upsert(Seq((1L, "a", 1.0, 100L)).toDF("id", "cat", "v", "ts"),

@@ -1,0 +1,119 @@
+package graft.sinks
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftSparkShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+import graft.sinks.TableSink.SinkConfig
+
+/** Job budgets of the streaming sink bodies: Spark jobs started per
+  * body call, counted by a `SparkListener`. At micro-batch sizes the
+  * fixed cost per job is the commit's cost, so a probe action that
+  * creeps back in shows here before it shows in a benchmark.
+  */
+class JobBudgetSpec extends SparkSpec {
+  private val ss = SparkSpec.spark
+  import ss.implicits._
+
+  private def tmp(tag: String): String =
+    Files.createTempDirectory(s"graft-budget-$tag").toFile.getAbsolutePath + "/t"
+
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    GraftSparkShim.waitListenerBusEmpty(sc)
+    sc.addSparkListener(counter)
+    try { body; GraftSparkShim.waitListenerBusEmpty(sc); n.get }
+    finally sc.removeSparkListener(counter)
+  }
+
+  private def batch(ids: Seq[Long]): DataFrame =
+    ids.map(i => (i, if (i % 2 == 0) "a" else "b", i * 10.0)).toDF("id", "cat", "v")
+
+  private def empty: DataFrame = batch(Nil)
+
+  /** Commits so far: Delta log versions or Iceberg snapshots. */
+  private def commits(format: String, path: String): Long = format match {
+    case "delta" => DeltaInterop.latestVersion(spark, path) + 1
+    case "iceberg" => IcebergInterop.snapshotChain(spark, path).map(_.size.toLong).getOrElse(0L)
+  }
+
+  Seq("delta", "iceberg").foreach { format =>
+    test(s"$format append body: one job per non-empty batch, at most one and no commit when empty") {
+      val path = tmp(s"$format-append")
+      val body = TableSink.streamBatch(
+        SinkConfig(format, path, partitionBy = Seq("cat")), appId = s"budget-$format")
+      val first = jobsOf(body(empty, 0L))
+      assert(first <= 1, s"empty first batch ran $first jobs")
+      assert(commits(format, path) == 0, "an empty first batch must not create the table")
+      assert(jobsOf(body(batch(Seq(1L, 2L, 3L)), 1L)) == 1)
+      assert(jobsOf(body(batch(Seq(4L, 5L)), 2L)) == 1)
+      assert(commits(format, path) == 2)
+      val idle = jobsOf(body(empty, 3L))
+      assert(idle <= 1, s"empty batch ran $idle jobs")
+      assert(commits(format, path) == 2, "an empty batch must add no log version or snapshot")
+      val rows = TableSink.readBatch(spark, format, path).select("id").as[Long].collect()
+      assert(rows.sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L))
+    }
+  }
+
+  test("hudi copy-on-write body: upsert into an existing table runs 2 jobs, empty batches commit nothing") {
+    val path = tmp("hudi")
+    val body = TableSink.streamBatch(SinkConfig("hudi", path, partitionBy = Seq("cat"),
+      upsertKey = Some("id"), precombine = Some("v")), appId = "budget-hudi")
+    // bootstrap: the one explicit emptiness check left
+    body(empty, 0L)
+    assert(HudiInterop.completedInstants(spark, path).isEmpty,
+      "an empty first batch must not create the table")
+    body(batch(Seq(1L, 2L, 3L)), 1L)
+    // routing-pair probe + staging write; no emptiness or schema job
+    assert(jobsOf(body(batch(Seq(3L, 4L)), 2L)) == 2)
+    assert(HudiInterop.completedInstants(spark, path).size == 2)
+    val idle = jobsOf(body(empty, 3L))
+    assert(idle <= 1, s"empty batch ran $idle jobs")
+    assert(HudiInterop.completedInstants(spark, path).size == 2,
+      "an empty batch must add no instant")
+    val rows = HudiInterop.read(spark, path).select("id").as[Long].collect()
+    assert(rows.sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+  }
+
+  Seq("delta", "iceberg").foreach { format =>
+    test(s"$format merge body runs no standalone emptiness job") {
+      val clauses = Seq(
+        VersionedTable.MatchedUpdate(Map("v" -> col("s.v"))),
+        VersionedTable.NotMatchedInsert())
+      def table(tag: String): String = {
+        val p = tmp(s"$format-merge-$tag")
+        TableSink.writeBatch(batch(Seq(1L, 2L, 3L)), SinkConfig(format, p, partitionBy = Seq("cat")))
+        p
+      }
+      def merge(p: String, src: DataFrame): Unit = format match {
+        case "delta" => DeltaInterop.merge(spark, p, src, Seq("id"), clauses); ()
+        case "iceberg" => IcebergInterop.merge(spark, p, src, Seq("id"), clauses); ()
+      }
+      val bodyPath = table("body")
+      val directPath = table("direct")
+      val body = format match {
+        case "delta" => DeltaInterop.streamBatchMerger(bodyPath, Seq("id"), clauses, "budget-m")
+        case "iceberg" => IcebergInterop.streamBatchMerger(bodyPath, Seq("id"), clauses, "budget-m")
+      }
+      val src = batch(Seq(2L, 4L)).withColumn("v", col("v") + 1.0)
+      val viaBody = jobsOf(body(src, 0L))
+      val direct = jobsOf(graft.GraftSession.withMicroBatchDml(src)(merge(directPath, src)))
+      assert(viaBody == direct, s"body ran $viaBody jobs, the merge alone $direct")
+      // an empty batch stops at the key envelope: one job, no commit
+      val before = commits(format, bodyPath)
+      val idle = jobsOf(body(empty, 1L))
+      assert(idle <= 1, s"empty batch ran $idle jobs")
+      assert(commits(format, bodyPath) == before)
+    }
+  }
+}

@@ -10,7 +10,7 @@ class LocalProbeSpec extends SparkSpec {
   test("distinctRows equals distinct().collect() across partitions") {
     val df = ss.range(0, 1000, 1, 7)
       .select((col("id") % 13).as("a"), (col("id") % 4).cast("int").as("b"))
-    val got = LocalProbe.distinctRows(df).toSet
+    val got = LocalProbe.distinctRows(df, cap = Int.MaxValue).toSet
     val want = df.distinct().collect().toSet
     assert(got == want)
     assert(got.size == 52) // 13 × 4 — below any cap, exact and complete
@@ -20,7 +20,7 @@ class LocalProbeSpec extends SparkSpec {
     val df = ss.range(0, 100, 1, 3)
       .select(when(col("id") % 10 === 0, lit(null))
         .otherwise(concat(lit("v"), col("id") % 5)).cast("string").as("s"))
-    val got = LocalProbe.distinctStrings(df).toSet
+    val got = LocalProbe.distinctStrings(df, cap = Int.MaxValue).toSet
     assert(got == Set(null, "v0", "v1", "v2", "v3", "v4"))
   }
 
