@@ -50,8 +50,6 @@ object DeltaInterop {
   private val LogDir = "_delta_log"
   private val StageDir = "_delta_log/.graft_stage"
   val CheckpointEvery = 10
-  /** Hive's spelling for a null partition value in a dir name. */
-  private val HiveNullDir = "__HIVE_DEFAULT_PARTITION__"
 
   private implicit val formats: Formats = DefaultFormats
 
@@ -805,16 +803,15 @@ object DeltaInterop {
     version
   }
 
-  /** Stage `df`'s files hive-style, move them into the table tree, and
-    * return their AddFile actions with `add.stats` from the staged
-    * footers ([[FileStats.fromFooters]]). Files are invisible until a commit
-    * referencing them publishes (the log is the source of truth); a
-    * failed commit leaves only unreferenced debris.
+  /** Stage `df`'s files hive-style into the table tree
+    * ([[CommitKernel.stage]]) and return their AddFile actions with
+    * `add.stats` from the staged footers. Files are invisible until a
+    * commit referencing them publishes (the log is the source of truth);
+    * a failed commit leaves only unreferenced debris.
     */
   private def stageAdds(df: DataFrame, path: String,
       partitionBy: Seq[String], dataChange: Boolean = true,
       shape: Boolean = true): Seq[AddFile] = {
-    val spark = df.sparkSession
     // ONE writer task per partition dir (VersionedTable.byPartitions —
     // the graft-table write shape, with the same tasksPerPartition salt
     // knob for 100 TB dirs): without it, every upstream task writes a
@@ -823,77 +820,28 @@ object DeltaInterop {
     // into a small-file storm (delta-spark ships the same default as
     // optimized writes). OPTIMIZE passes shape=false: its frames
     // arrive pre-shaped (byte-targeted bins, z-order ranges) and a
-    // reshape here would undo exactly what it computed. Callers that
-    // deliberately range-cluster their input for write-time stats
-    // pruning opt out via `graft.write.shape=false` (session conf).
-    val confShape = spark.conf.getOption("graft.write.shape")
-      .forall(_.trim.toBoolean)
+    // reshape here would undo exactly what it computed.
     val shaped =
-      if (shape && confShape && partitionBy.nonEmpty)
-        VersionedTable.byPartitions(df, partitionBy)
+      if (shape && partitionBy.nonEmpty) VersionedTable.byPartitions(df, partitionBy)
       else df
-    val staged = stageFiles(shaped, path, partitionBy)
-    val now = System.currentTimeMillis()
-    // one distributed pass over the commit's files → add.stats
-    // (numRecords + min/max/nullCount), the protocol's skipping columns
     val dataSchema = StructType(df.schema.filterNot(f => partitionBy.contains(f.name)))
-    val statsByFile =
-      FileStats.fromFooters(spark, staged.map(s => s"$path/${s._1}"), dataSchema)
-    // drop zero-row files before any log action references them: an
-    // empty unpartitioned write still emits one parquet file, and a
-    // zero-row add is protocol noise (schema lives in metaData, not in
-    // data files). Lets callers stage-first and derive emptiness from
-    // what actually landed instead of paying a pre-write probe action.
-    val fs = fsFor(spark, path)
-    staged.flatMap { case (rel, size) =>
-      val st = statsByFile.get(FileStats.canon(s"$path/$rel"))
-      if (st.exists(_.numRecords.contains(0L))) {
-        fs.delete(new Path(s"$path/$rel"), false)
-        None
-      } else Some(
-        AddFile(encodePath(rel), partitionValuesOf(rel, partitionBy), size, now,
-          dataChange = dataChange,
-          stats = st.map(s => statsJson(s.numRecords.getOrElse(0L),
-            dataSchema.fields.toSeq.flatMap(f => s.cols.get(f.name).map(f -> _))))))
+    val now = System.currentTimeMillis()
+    stageFiles(shaped, path, partitionBy).map { s =>
+      AddFile(encodePath(s.path), s.partitionValues, s.bytes, now,
+        dataChange = dataChange,
+        stats = Some(statsJson(s.rows,
+          dataSchema.fields.toSeq.flatMap(f => s.stat.cols.get(f.name).map(f -> _)))))
     }
   }
 
-  /** Write `df`'s files hive-style into the table tree under `prefix`
-    * (empty for data files, `_change_data/` for CDC) and return their
-    * (relative path incl. prefix, size) pairs. Shared tail of
+  /** Stage `df`'s files hive-style into the table tree under `prefix`
+    * (empty for data files, `_change_data/` for CDC). Shared tail of
     * [[stageAdds]] and [[stageCdc]].
     */
   private def stageFiles(df: DataFrame, path: String,
-      partitionBy: Seq[String], prefix: String = ""): Seq[(String, Long)] = {
-    val spark = df.sparkSession
-    val fs = fsFor(spark, path)
-    val stagePath = new Path(s"$path/$StageDir/${java.util.UUID.randomUUID}")
-    graft.JobLabel(spark, s"delta: stage files → $prefix") {
-      df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(stagePath.toString)
-    }
-    val staged = scala.collection.mutable.ArrayBuffer[(Path, String, Long)]()
-    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet")) {
-        val rel = fs.makeQualified(st.getPath).toString
-          .stripPrefix(fs.makeQualified(stagePath).toString + "/")
-        staged += ((st.getPath, prefix + rel, st.getLen))
-      }
-    }
-    walk(stagePath)
-    staged.map(s => new Path(s"$path/${s._2}").getParent).distinct
-      .foreach(d => fs.mkdirs(d))
-    staged.foreach { case (src, rel, _) =>
-      require(fs.rename(src, new Path(s"$path/$rel")), s"move failed: $rel") }
-    fs.delete(stagePath, true)
-    // clean the SHARED stage root only when empty: a blanket recursive
-    // delete would destroy a concurrent writer's mid-stage files and
-    // abort its commit (the per-writer UUID subdir above is ours alone)
-    val stageRoot = new Path(s"$path/$StageDir")
-    try if (fs.listStatus(stageRoot).isEmpty) fs.delete(stageRoot, false)
-    catch { case _: java.io.FileNotFoundException => }
-    staged.map(s => (s._2, s._3)).toSeq
-  }
+      partitionBy: Seq[String], prefix: String = ""): Seq[CommitKernel.Staged] =
+    CommitKernel.stage(df, path, StageDir, s"delta: stage files → $prefix",
+      partitionBy)(src => prefix + src.rel)
 
   /** Adopt data files that already exist OUTSIDE this table's tree as
     * commit 0 — the metadata-only half of a cross-format CONVERT
@@ -957,7 +905,7 @@ object DeltaInterop {
           !a.path.matches("[A-Za-z][A-Za-z0-9+.-]*://.*") && {
             val rel = decodePath(a.path)
             !rel.startsWith("/") &&
-              partitionValuesOf(rel, partCols) == a.partitionValues
+              CommitKernel.partitionValues(rel, partCols) == a.partitionValues
           }
       }
     if (hiveFast) {
@@ -1034,10 +982,12 @@ object DeltaInterop {
       // metric cannot serve here: AQE's empty-relation propagation
       // elides the CollectMetrics node when a full-partition delete
       // stages zero rows. Foreign adds without numRecords fall back to
-      // one probe.
+      // one probe. `numRecords` counts physical rows, footers count
+      // live ones: a touched file's deletion vector is subtracted.
       val adds = stageAdds(frame.filter(!hit), path, partCols)
       val stagedRows = adds.map(a => fileStatOf(a, schema, partCols).numRecords)
-      val touchedRows = touched.map(a => fileStatOf(a, schema, partCols).numRecords)
+      val touchedRows = touched.map(a => fileStatOf(a, schema, partCols).numRecords
+        .map(_ - a.deletionVector.fold(0L)(_.cardinality)))
       val matchedNone =
         if (stagedRows.forall(_.isDefined) && touchedRows.forall(_.isDefined))
           touchedRows.flatten.sum == stagedRows.flatten.sum
@@ -1721,7 +1671,9 @@ object DeltaInterop {
     * default keeps 7 days. Returns the deleted file count.
     *
     * The walk lists the table tree once (driver-side, per maintenance
-    * run — not per query; queries never list).
+    * run — not per query; queries never list). Stage dirs of writes that
+    * crashed mid-stage are reclaimed under the same age gate
+    * ([[CommitKernel.reclaim]]) and count one each.
     */
   def vacuum(spark: SparkSession, path: String,
       retentionMs: Long = 7L * 24 * 3600 * 1000): Int = {
@@ -1749,7 +1701,7 @@ object DeltaInterop {
       }
     }
     walk(new Path(path))
-    deleted
+    deleted + CommitKernel.reclaim(fs, new Path(s"$path/$StageDir"), retentionMs).size
   }
 
   // ---- change data feed (CDF) ----
@@ -1808,13 +1760,11 @@ object DeltaInterop {
     stageFiles(
       if (partCols.nonEmpty) VersionedTable.byPartitions(changes, partCols)
       else changes,
-      path, partCols, prefix = s"$CdcDir/").map {
-      case (rel, size) =>
+      path, partCols, prefix = s"$CdcDir/").map { s =>
         JObject("cdc" -> JObject(
-          "path" -> JString(encodePath(rel)),
-          "partitionValues" -> pvJson(
-            partitionValuesOf(rel.stripPrefix(s"$CdcDir/"), partCols)),
-          "size" -> JLong(size),
+          "path" -> JString(encodePath(s.path)),
+          "partitionValues" -> pvJson(s.partitionValues),
+          "size" -> JLong(s.bytes),
           "dataChange" -> JBool(false)))
     }
 
@@ -2133,42 +2083,6 @@ object DeltaInterop {
       throw new java.util.ConcurrentModificationException(
         s"Delta commit $version already exists (concurrent writer): $dst")
     }
-  }
-
-  /** Decode one hive-escaped dir value: ONLY `%XX` pairs. Spark's
-    * partition-dir escaping (ExternalCatalogUtils.escapePathName) leaves
-    * `+` literal, so URLDecoder — which turns `+` into a space — would
-    * corrupt values like `UTC+8` into `UTC 8` in add.partitionValues,
-    * and reads would then prune against the wrong reconstructed value.
-    * Hive escaping always rewrites literal `%` to `%25`, so consuming
-    * exactly the `%XX` pairs is lossless.
-    */
-  private[sinks] def unescapeHiveDir(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 3 <= s.length)
-        try { sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar); i += 3 }
-        catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  private def partitionValuesOf(rel: String,
-      partitionBy: Seq[String]): Map[String, Option[String]] = {
-    val segs = rel.split("/").dropRight(1)
-    val fromDirs = segs.flatMap { s =>
-      val i = s.indexOf('=')
-      if (i <= 0) None
-      else {
-        val raw = unescapeHiveDir(s.substring(i + 1))
-        Some(s.substring(0, i) ->
-          (if (raw == HiveNullDir) None else Some(raw)))
-      }
-    }.toMap
-    partitionBy.map(c => c -> fromDirs.getOrElse(c, None)).toMap
   }
 
   /** Delta `add.path` is an RFC 2396 percent-encoded RELATIVE path —

@@ -54,6 +54,8 @@ import org.json4s.jackson.JsonMethods
 object HudiInterop {
 
   private[sinks] val MetaDir = ".hoodie"
+  /** Table-relative stage root of [[stageSlices]]' writes. */
+  private val StageDir = s"$MetaDir/.graft_stage"
   private[sinks] val PartitionMeta = ".hoodie_partition_metadata"
   val MetaCols: Seq[String] = Seq("_hoodie_commit_time", "_hoodie_commit_seqno",
     "_hoodie_record_key", "_hoodie_partition_path", "_hoodie_file_name")
@@ -873,38 +875,29 @@ object HudiInterop {
       concat(col("__file_id"), lit("_0-0-0_"), ct, lit(".parquet")).as("_hoodie_file_name")) ++
       dataCols.map(col) :+ col("__dir") :+ col("__bucket")): _*)
 
-    // one writer per file group (dir × bucket), then rename each part
-    // file to its Hudi slice name
-    val stage = new Path(s"$path/$MetaDir/.stage-${java.util.UUID.randomUUID}")
-    ordered.repartition(col("__dir"), col("__bucket"))
-      .write.mode("overwrite").partitionBy("__dir", "__bucket").parquet(stage.toString)
-    val entries = scala.collection.mutable.ArrayBuffer[(String, String, String, Long)]()
-    fs.listStatus(stage).filter(_.isDirectory).foreach { dirStatus =>
-      val dirName = dirStatus.getPath.getName // __dir=<escaped>
-      // %XX-only unescape: Spark's partition-dir escaping leaves '+'
-      // literal, so URLDecoder would corrupt 'UTC+8' into 'UTC 8'
-      val raw = DeltaInterop.unescapeHiveDir(dirName.stripPrefix("__dir="))
-      val dir = if (raw == "__HIVE_DEFAULT_PARTITION__") "" else raw
-      val destDir = if (dir.isEmpty) new Path(path) else new Path(s"$path/$dir")
-      fs.mkdirs(destDir)
-      if (!fs.exists(new Path(destDir, PartitionMeta)))
-        writeFile(fs, new Path(destDir, PartitionMeta),
-          s"#partition metadata\ncommitTime=$instant\npartitionDepth=${partitionBy.size}\n")
-      fs.listStatus(dirStatus.getPath).filter(_.isDirectory).foreach { bStatus =>
-        val b = bStatus.getPath.getName.stripPrefix("__bucket=").toInt
-        val fid = fidByPair((dir, b))
-        val parts = fs.listStatus(bStatus.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-        parts.zipWithIndex.foreach { case (p, i) =>
-          val name = s"${fid}_$i-0-0_$instant.parquet"
-          val dst = new Path(destDir, name)
-          require(fs.rename(p.getPath, dst), s"slice move failed: $dst")
-          entries += ((dir, fid, if (dir.isEmpty) name else s"$dir/$name", p.getLen))
-        }
-      }
+    // one writer per file group (dir × bucket), each part file moved to
+    // its Hudi slice name (`__dir` = null is the table root)
+    def group(pv: Map[String, Option[String]]): (String, Int) =
+      (pv("__dir").getOrElse(""), pv("__bucket").get.toInt)
+    val nth = scala.collection.mutable.Map[(String, Int), Int]().withDefaultValue(0)
+    val staged = CommitKernel.stage(ordered.repartition(col("__dir"), col("__bucket")),
+        path, StageDir, "hudi: stage slices", Seq("__dir", "__bucket")) { src =>
+      val g = group(src.partitionValues)
+      val name = s"${fidByPair(g)}_${nth(g)}-0-0_$instant.parquet"
+      nth(g) += 1
+      if (g._1.isEmpty) name else s"${g._1}/$name"
     }
-    fs.delete(stage, true)
-    entries.toSeq
+    staged.map(s => group(s.partitionValues)._1).distinct.foreach { dir =>
+      val meta = new Path(if (dir.isEmpty) new Path(path) else new Path(s"$path/$dir"),
+        PartitionMeta)
+      if (!fs.exists(meta))
+        writeFile(fs, meta,
+          s"#partition metadata\ncommitTime=$instant\npartitionDepth=${partitionBy.size}\n")
+    }
+    staged.map { s =>
+      val g = group(s.partitionValues)
+      (g._1, fidByPair(g), s.path, s.bytes)
+    }
   }
 
   /** Driver-checked round trip through the wire format: orders bulk-

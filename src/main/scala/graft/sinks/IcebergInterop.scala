@@ -271,8 +271,11 @@ object IcebergInterop {
       {"name":"deleted_data_files_count","type":["null","int"],"default":null,"field-id":506}
     ]}""".replace("\n", ""))
 
+  /** A data file a snapshot adds; `stat` is its footer stats when the
+    * file was staged by this writer.
+    */
   private[sinks] final case class DataFileRef(path: String, records: Long, bytes: Long,
-      partValues: Seq[Option[String]] = Nil)
+      partValues: Seq[Option[String]] = Nil, stat: Option[FileStats.FileStat] = None)
 
   /** Manifest-list record with the v2 fields stamped. `addedSnapshotId`
     * is boxed because carried foreign records may hold null.
@@ -341,74 +344,55 @@ object IcebergInterop {
       ]}}
     ]}""".replace("\n", ""))
 
-  /** Stage `df`'s parquet files, then move them into `data/` under
-    * commit-unique names. NOT dot-prefixed staging: Spark's hidden-path
-    * filter would silently skip a ".stage" dir when reading it back for
-    * the per-file record counts. Partitioned tables stage under a
+  /** Table-relative stage root shared by every staging write
+    * ([[CommitKernel.stage]] adds a per-writer UUID dir under it).
+    */
+  private val StageDir = "metadata/stage"
+
+  /** Stage `df`'s parquet files into `data/` under commit-unique names,
+    * each carrying its footer stats. Partitioned tables stage under a
     * SINGLE synthetic `__pdir` token (url-encoded values joined by
     * ','): only __pdir is dropped from the data files, so identity
     * source columns stay physically present — the layout the spec
     * expects from real writers.
     */
   private def stageDataFiles(df: DataFrame, path: String,
-      partitionBy: Seq[String], fs: FileSystem,
-      shape: Boolean = true): Seq[DataFileRef] = {
-    val spark = df.sparkSession
-    val stage = new Path(s"$path/metadata/stage-${java.util.UUID.randomUUID}")
-    if (partitionBy.isEmpty)
-      df.write.mode("overwrite").parquet(stage.toString)
-    else {
-      val token = concat(lit("v"), concat_ws(",", partitionBy.map(c =>
-        coalesce(url_encode(col(c).cast("string")), lit(NullToken))): _*))
-      // one writer task per partition dir (same shape + tasksPerPartition
-      // salt knob as the Delta/graft-table writers): scattered upstream
-      // tasks would otherwise write N_tasks × N_dirs sliver files, and
-      // every later manifest walk/scan pays for them. OPTIMIZE passes
-      // shape=false — its frames arrive pre-shaped (byte-targeted bins)
-      // and a reshape would undo the binning.
-      val tokened = df.withColumn("__pdir", token)
-      (if (shape) VersionedTable.byPartitions(tokened, Seq("__pdir")) else tokened)
-        .write.mode("overwrite").partitionBy("__pdir").parquet(stage.toString)
-    }
-    val stagedFiles: Seq[(org.apache.hadoop.fs.FileStatus, Seq[Option[String]])] =
-      if (partitionBy.isEmpty)
-        fs.listStatus(stage).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
-          .map(st => (st, Nil))
-      else fs.listStatus(stage).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("__pdir="))
-        .flatMap { d =>
-          val values = decodeToken(
-            d.getPath.getName.stripPrefix("__pdir="), partitionBy.size)
-          fs.listStatus(d.getPath).toSeq
-            .filter(_.getPath.getName.endsWith(".parquet")).map((_, values))
-        }
-    // record counts from the parquet FOOTERS the writer just produced
-    // (KBs per file on an IO thread pool) — a distributed re-scan of the
-    // staged bytes would read every commit's data a SECOND time. Zero-row
-    // files (an empty unpartitioned write still emits one) never reach a
-    // manifest, so callers derive emptiness from what actually landed
-    // instead of paying a probe action first.
-    val counts = FileStats.fromFooters(spark,
-      stagedFiles.map(_._1.getPath.toString), StructType(Nil))
-      .map { case (p, st) => p -> st.numRecords.getOrElse(0L) }
-    def records(st: org.apache.hadoop.fs.FileStatus): Long =
-      counts.getOrElse(FileStats.canon(st.getPath.toString), 0L)
-    val moved = stagedFiles.filter(f => records(f._1) > 0L).zipWithIndex.map {
-        case ((st, values), i) =>
-      val name = f"00000-$i%05d-${java.util.UUID.randomUUID()}.parquet"
+      partitionBy: Seq[String], shape: Boolean = true,
+      label: String = "iceberg: stage data files"): Seq[DataFileRef] = {
+    val tokened =
+      if (partitionBy.isEmpty) df
+      else {
+        val token = concat(lit("v"), concat_ws(",", partitionBy.map(c =>
+          coalesce(url_encode(col(c).cast("string")), lit(NullToken))): _*))
+        // one writer task per partition dir (same shape + tasksPerPartition
+        // salt knob as the Delta/graft-table writers): scattered upstream
+        // tasks would otherwise write N_tasks × N_dirs sliver files, and
+        // every later manifest walk/scan pays for them. OPTIMIZE passes
+        // shape=false — its frames arrive pre-shaped (byte-targeted bins)
+        // and a reshape would undo the binning.
+        val t = df.withColumn("__pdir", token)
+        if (shape) VersionedTable.byPartitions(t, Seq("__pdir")) else t
+      }
+    def values(pv: Map[String, Option[String]]): Seq[Option[String]] =
+      pv.get("__pdir").flatten.map(decodeToken(_, partitionBy.size)).getOrElse(Nil)
+    CommitKernel.stage(tokened, path, StageDir, label,
+        if (partitionBy.isEmpty) Nil else Seq("__pdir")) { src =>
       // cosmetic hive-ish dir per partition tuple (readers use manifests)
-      val subdir = partitionBy.zip(values).map { case (c, v) =>
-        s"$c=${v.map(java.net.URLEncoder.encode(_, "UTF-8")).getOrElse("null")}"
-      }.mkString("/")
-      val dir = if (subdir.isEmpty) s"$path/data" else s"$path/data/$subdir"
-      val dst = new Path(s"$dir/$name")
-      fs.mkdirs(dst.getParent)
-      require(fs.rename(st.getPath, dst), s"move failed: $dst")
-      DataFileRef(s"$dir/$name", records(st), st.getLen, values)
-    }
-    fs.delete(stage, true)
-    moved
+      val subdir = partitionBy.zip(values(src.partitionValues)).map { case (c, v) =>
+        s"/$c=${v.map(java.net.URLEncoder.encode(_, "UTF-8")).getOrElse("null")}"
+      }.mkString
+      f"data$subdir/00000-${src.index}%05d-${java.util.UUID.randomUUID()}.parquet"
+    }.map(s => DataFileRef(s"$path/${s.path}", s.rows, s.bytes,
+      values(s.partitionValues), Some(s.stat)))
   }
+
+  /** Stage one sorted delete parquet (position or equality) as
+    * `data/<prefix>-<uuid>.parquet`; None when it holds no row.
+    */
+  private def stageDeleteFile(rows: DataFrame, path: String, prefix: String,
+      label: String): Option[CommitKernel.Staged] =
+    CommitKernel.stage(rows, path, StageDir, label)(
+      _ => s"data/$prefix-${java.util.UUID.randomUUID()}.parquet").headOption
 
   // ---- identity partitioning plumbing ----
 
@@ -418,30 +402,11 @@ object IcebergInterop {
     */
   private val NullToken = "~"
 
-  /** Decode one hive-escaped path segment (`%XX` pairs, the encoding
-    * Spark's partitioned writer applies to directory names). Safe to
-    * run over our url-encoded token because hive escaping always
-    * rewrites a literal `%` to `%25` — decoding consumes exactly the
-    * pairs escaping produced.
-    */
-  private def unescapeDirName(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 3 <= s.length)
-        try { sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar); i += 3 }
-        catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   /** Staging token → decoded per-column raw string values (None = null).
     * Inverse of the `__pdir` expression built in [[write]].
     */
   private def decodeToken(token: String, n: Int): Seq[Option[String]] = {
-    val parts = unescapeDirName(token).stripPrefix("v").split(",", -1)
+    val parts = token.stripPrefix("v").split(",", -1)
     require(parts.length == n, s"partition token arity ${parts.length} != $n: $token")
     parts.toSeq.map {
       case NullToken => None
@@ -667,7 +632,7 @@ object IcebergInterop {
           return (meta \ "current-snapshot-id").extract[Long]
       }
     }
-    val moved = stageDataFiles(df, path, partitionBy, fs)
+    val moved = stageDataFiles(df, path, partitionBy)
     if (moved.isEmpty && txn.isDefined && !overwrite)
       return prev.map(p => (p._2 \ "current-snapshot-id").extract[Long]).getOrElse(-1L)
     commitRefs(spark, fs, path, df.schema, moved, overwrite, txn, partFields,
@@ -689,7 +654,7 @@ object IcebergInterop {
     val baseId =
       if (overwrite) None
       else prev.map(p => (p._2 \ "current-snapshot-id").extract[Long])
-    val (listPath, newSeq, prevFormat) = writeSnapshotList(spark, fs, path,
+    val (listPath, newSeq, prevFormat) = writeSnapshotList(fs, path,
       schema, partFields, moved, snapshotId, prev.map(_._2), baseId)
 
     publishMetadata(fs, path, prev, schema, partFields,
@@ -703,20 +668,16 @@ object IcebergInterop {
   }
 
   /** Write one append/overwrite snapshot's manifest + manifest list:
-    * ONE distributed stats pass over `moved`, one new manifest stamped
+    * one new manifest (column stats from each ref's `stat`) stamped
     * with the TABLE's format version, and a manifest list carrying
     * `baseSnapshotId`'s live records (None = fresh table / overwrite).
     * The base is a parameter because a branch write carries the BRANCH
     * head's list, not main's. Returns (listPath, newSeq, formatVersion).
     */
-  private def writeSnapshotList(spark: SparkSession, fs: FileSystem,
+  private def writeSnapshotList(fs: FileSystem,
       path: String, schema: StructType, partFields: Seq[StructField],
       moved: Seq[DataFileRef], snapshotId: Long, prevMeta: Option[JValue],
       baseSnapshotId: Option[Long]): (String, Long, Int) = {
-    // one distributed pass over the commit's files → the spec's
-    // column-stats maps (keyed by field-id), the skipping metadata
-    // real Iceberg planners prune on
-    val statsByFile = FileStats.fromFooters(spark, moved.map(_.path), schema)
     // sequence machinery: v1 tables stay seq-free; once a row-level
     // delete upgraded the table to format-version 2, every commit bumps
     // the sequence and stamps its manifest with it (the spec's ordering
@@ -727,8 +688,7 @@ object IcebergInterop {
       .getOrElse(1)
     val manifestPath = s"$path/metadata/${java.util.UUID.randomUUID()}-m0.avro"
     val entrySchema = manifestEntrySchema(partFields)
-    val entries = buildEntries(moved, snapshotId, schema, partFields,
-      statsByFile, entrySchema)
+    val entries = buildEntries(moved, snapshotId, schema, partFields, entrySchema)
     val schemaJ = schemaJson(schema)
     val (specId, specJson) = specStamp(prevMeta, partFields, schema)
     val manifestLen = writeAvro(fs, new Path(manifestPath), entrySchema,
@@ -893,7 +853,10 @@ object IcebergInterop {
       s"IcebergInterop.commitExternal: $path is already an Iceberg table " +
         "(metadata-only adoption targets a fresh location)")
     require(files.nonEmpty, "IcebergInterop.commitExternal: no data files")
-    commitRefs(spark, fs, path, schema, files, overwrite = false, txn = None,
+    val stats = FileStats.fromFooters(spark, files.map(_.path), schema)
+    commitRefs(spark, fs, path, schema,
+      files.map(f => f.copy(stat = stats.get(FileStats.canon(f.path)))),
+      overwrite = false, txn = None,
       partFields = Nil, prev = None, prevProps = Map.empty)
   }
 
@@ -1246,25 +1209,15 @@ object IcebergInterop {
       .filter(coalesce(where, lit(false)))
       .select(normalizedFilePath.as("file_path"),
         col("_metadata.row_index").as("pos"))
-    // the spec requires delete files sorted by (file_path, pos)
-    val stage = new Path(s"$path/metadata/delstage-${java.util.UUID.randomUUID()}")
-    matches.coalesce(1).sortWithinPartitions(col("file_path"), col("pos"))
-      .write.parquet(stage.toString)
-    val part = fs.listStatus(stage).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("delete-file write produced no file"))
-    // row count from the staged file's own FOOTER — the old
-    // read-back count() was one extra Spark action per commit
-    val nDeleted = FileStats.fromFooters(spark, Seq(part.toString),
-        org.apache.spark.sql.types.StructType(Nil))
-      .headOption.flatMap(_._2.numRecords).getOrElse(0L)
-    if (nDeleted == 0L) { fs.delete(stage, true); return curId }
-    val delPath = s"$path/data/delete-${java.util.UUID.randomUUID()}.parquet"
-    fs.mkdirs(new Path(delPath).getParent)
-    require(fs.rename(part, new Path(delPath)), "delete-file rename failed")
-    fs.delete(stage, true)
-    commitDeleteFile(fs, path, version, meta, schema, partFields,
-      listRecs, delPath, nDeleted, contentKind = 1, eqIds = Nil)
+    // the spec requires delete files sorted by (file_path, pos); the
+    // row count comes from the staged file's own footer
+    stageDeleteFile(
+      matches.coalesce(1).sortWithinPartitions(col("file_path"), col("pos")),
+      path, "delete", "iceberg: stage position deletes") match {
+      case None => curId
+      case Some(del) => commitDeleteFile(fs, path, version, meta, schema,
+        partFields, listRecs, del, contentKind = 1, eqIds = Nil)
+    }
   }
 
   /** Shared commit tail of [[deletePositions]] and [[deleteEquality]]:
@@ -1275,19 +1228,18 @@ object IcebergInterop {
     */
   private def commitDeleteFile(fs: FileSystem, path: String, version: Int,
       meta: JValue, schema: StructType, partFields: Seq[StructField],
-      listRecs: Seq[GenericRecord], delPath: String, nRows: Long,
+      listRecs: Seq[GenericRecord], del: CommitKernel.Staged,
       contentKind: Int, eqIds: Seq[Int]): Long = {
-    val delLen = fs.getFileStatus(new Path(delPath)).getLen
     val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
     val dfSchema = DeleteManifestEntrySchema.getField("data_file").schema()
     val dfRec = new GenericData.Record(dfSchema)
     dfRec.put("content", contentKind)
-    dfRec.put("file_path", delPath)
+    dfRec.put("file_path", s"$path/${del.path}")
     dfRec.put("file_format", "PARQUET")
     dfRec.put("partition",
       new GenericData.Record(dfSchema.getField("partition").schema()))
-    dfRec.put("record_count", nRows)
-    dfRec.put("file_size_in_bytes", delLen)
+    dfRec.put("record_count", del.rows)
+    dfRec.put("file_size_in_bytes", del.bytes)
     if (eqIds.nonEmpty)
       dfRec.put("equality_ids",
         scala.jdk.CollectionConverters.SeqHasAsJava(
@@ -1358,28 +1310,16 @@ object IcebergInterop {
     require(eqIds.nonEmpty, "IcebergInterop deleteEquality: no key columns")
     val curId = (meta \ "current-snapshot-id").extract[Long]
     // the spec wants delete files sorted; keys dedup for cleanliness
-    val stage = new Path(s"$path/metadata/eqstage-${java.util.UUID.randomUUID()}")
-    keys.distinct().coalesce(1)
-      .sortWithinPartitions(keys.schema.fieldNames.map(col): _*)
-      .write.parquet(stage.toString)
-    val part = fs.listStatus(stage).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("eq-delete write produced no file"))
-    // footer row count — not a read-back count() action (see deletePositional)
-    val nKeys = FileStats.fromFooters(spark, Seq(part.toString),
-        org.apache.spark.sql.types.StructType(Nil))
-      .headOption.flatMap(_._2.numRecords).getOrElse(0L)
-    if (nKeys == 0L) { fs.delete(stage, true); return curId }
-    val delPath = s"$path/data/eqdelete-${java.util.UUID.randomUUID()}.parquet"
-    fs.mkdirs(new Path(delPath).getParent)
-    require(fs.rename(part, new Path(delPath)), "eq-delete rename failed")
-    fs.delete(stage, true)
+    val del = stageDeleteFile(keys.distinct().coalesce(1)
+        .sortWithinPartitions(keys.schema.fieldNames.map(col): _*),
+      path, "eqdelete", "iceberg: stage equality deletes")
+      .getOrElse(return curId)
     val snap = (meta \ "snapshots").extract[List[JValue]]
       .find(s => (s \ "snapshot-id").extract[Long] == curId)
       .getOrElse(throw new IllegalStateException(s"snapshot $curId not in $path"))
     val listRecs = readAvro(fs, new Path((snap \ "manifest-list").extract[String]))
     commitDeleteFile(fs, path, version, meta, schema, partFields,
-      listRecs, delPath, nKeys, contentKind = 2, eqIds = eqIds)
+      listRecs, del, contentKind = 2, eqIds = eqIds)
   }
 
   /** MERGE INTO on the Iceberg wire format — the MERGE-ON-READ shape
@@ -1472,28 +1412,16 @@ object IcebergInterop {
         // Emptiness and the delete-key count both come from the STAGED
         // WRITES' own parquet footers — no count()/isEmpty probe actions
         // per micro-batch (guide §1: cut actions, not just task work);
-        // stageDataFiles drops zero-row files before any manifest sees them.
-        val moved = graft.JobLabel(spark, "iceberg.merge: stage appends") {
-          stageDataFiles(appendRows, path, partFields.map(_.name), fs)
-        }
-        // sorted equality-delete parquet of the ON-key rows; row count
-        // read back from its footer
-        val delStage = new Path(s"$path/metadata/eqstage-${java.util.UUID.randomUUID()}")
-        graft.JobLabel(spark, "iceberg.merge: stage eq-deletes") {
-          delKeys.coalesce(1).sortWithinPartitions(on.map(col): _*)
-            .write.parquet(delStage.toString)
-        }
-        val delPart = fs.listStatus(delStage).map(_.getPath)
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(
-            "merge eq-delete write produced no file"))
-        val nDel = FileStats.fromFooters(spark, Seq(delPart.toString),
-            StructType(Nil))
-          .headOption.flatMap(_._2.numRecords).getOrElse(0L)
-        if (nDel == 0) fs.delete(delStage, true)
-        if (nDel == 0 && moved.isEmpty) return curId // full no-op
+        // staging drops zero-row files before any manifest sees them.
+        val moved = stageDataFiles(appendRows, path, partFields.map(_.name),
+          label = "iceberg.merge: stage appends")
+        // sorted equality-delete parquet of the ON-key rows
+        val del = stageDeleteFile(
+          delKeys.coalesce(1).sortWithinPartitions(on.map(col): _*),
+          path, "eqdelete", "iceberg.merge: stage eq-deletes")
+        if (del.isEmpty && moved.isEmpty) return curId // full no-op
         val prevFormat = (meta \ "format-version").extract[Int]
-        val fmt = if (nDel > 0) 2 else prevFormat
+        val fmt = if (del.nonEmpty) 2 else prevFormat
         val newSeq = if (fmt >= 2)
           (meta \ "last-sequence-number").extractOrElse[Long](0L) + 1 else 0L
         val snapshotId =
@@ -1506,7 +1434,6 @@ object IcebergInterop {
           new Path((snap \ "manifest-list").extract[String]))
         val fresh = scala.collection.mutable.ArrayBuffer[GenericRecord]()
         if (moved.nonEmpty) {
-          val statsByFile = FileStats.fromFooters(spark, moved.map(_.path), schema)
           val manifestPath = s"$path/metadata/${java.util.UUID.randomUUID()}-m0.avro"
           val entrySchema = manifestEntrySchema(partFields)
           val (specId, specJson) = specStamp(Some(meta), partFields, schema)
@@ -1515,26 +1442,20 @@ object IcebergInterop {
               "partition-spec" -> specJson,
               "partition-spec-id" -> specId,
               "format-version" -> fmt.toString),
-            buildEntries(moved, snapshotId, schema, partFields,
-              statsByFile, entrySchema))
+            buildEntries(moved, snapshotId, schema, partFields, entrySchema))
           fresh += listEntryRecord(manifestPath, len, snapshotId,
             content = 0, seq = newSeq)
         }
-        if (nDel > 0) {
-          val delPath = s"$path/data/eqdelete-${java.util.UUID.randomUUID()}.parquet"
-          fs.mkdirs(new Path(delPath).getParent)
-          require(fs.rename(delPart, new Path(delPath)), "eq-delete rename failed")
-          fs.delete(delStage, true)
-          val delLen = fs.getFileStatus(new Path(delPath)).getLen
+        del.foreach { d =>
           val dfSchema = DeleteManifestEntrySchema.getField("data_file").schema()
           val dfRec = new GenericData.Record(dfSchema)
           dfRec.put("content", 2)
-          dfRec.put("file_path", delPath)
+          dfRec.put("file_path", s"$path/${d.path}")
           dfRec.put("file_format", "PARQUET")
           dfRec.put("partition",
             new GenericData.Record(dfSchema.getField("partition").schema()))
-          dfRec.put("record_count", nDel)
-          dfRec.put("file_size_in_bytes", delLen)
+          dfRec.put("record_count", d.rows)
+          dfRec.put("file_size_in_bytes", d.bytes)
           dfRec.put("equality_ids",
             scala.jdk.CollectionConverters.SeqHasAsJava(
               eqIds.map(Integer.valueOf)).asJava)
@@ -1744,11 +1665,11 @@ object IcebergInterop {
 
   /** ADDED (status 1) manifest entries for freshly staged files: typed
     * partition record + the spec's column-stats maps (field-id keyed)
-    * from the commit's one distributed stats pass.
+    * from each file's footer stats, the skipping metadata real Iceberg
+    * planners prune on.
     */
   private def buildEntries(moved: Seq[DataFileRef], snapshotId: Long,
       schema: StructType, partFields: Seq[StructField],
-      statsByFile: Map[String, FileStats.FileStat],
       entrySchema: org.apache.avro.Schema): Seq[GenericRecord] = {
     val dataFileSchema = entrySchema.getField("data_file").schema()
     def kvItemSchema(field: String) =
@@ -1774,7 +1695,7 @@ object IcebergInterop {
       d.put("record_count", f.records)
       d.put("file_size_in_bytes", f.bytes)
       d.put("block_size_in_bytes", 67108864L)
-      statsByFile.get(FileStats.canon(f.path)).foreach { st =>
+      f.stat.foreach { st =>
         val fields = schema.fields.zipWithIndex
         d.put("value_counts", kvList("value_counts",
           fields.map { case (_, i) => (i + 1) -> st.numRecords.getOrElse(0L) }.toSeq))
@@ -2083,13 +2004,12 @@ object IcebergInterop {
         case None =>
           frame.repartition(multi.size, partFields.map(f => col(f.name)): _*)
       }
-    val moved = stageDataFiles(packed, path, partFields.map(_.name), fs,
+    val moved = stageDataFiles(packed, path, partFields.map(_.name),
       shape = false)
     val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    val statsByFile = FileStats.fromFooters(spark, moved.map(_.path), schema)
     val entrySchema = manifestEntrySchema(partFields)
     val newEntries = buildEntries(moved, snapshotId, schema, partFields,
-      statsByFile, entrySchema) ++
+      entrySchema) ++
       untouched.map { case (old, oldSeq) =>
         val e = new GenericData.Record(entrySchema)
         e.put("status", 0) // EXISTING
@@ -2635,10 +2555,10 @@ object IcebergInterop {
         df.schema.map(f => (f.name, f.dataType)),
       s"IcebergInterop branch append: schema must match the table " +
         s"(table ${schema.simpleString}, batch ${df.schema.simpleString})")
-    val moved = stageDataFiles(df, path, partFields.map(_.name), fs)
+    val moved = stageDataFiles(df, path, partFields.map(_.name))
     val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
     val now = System.currentTimeMillis()
-    val (listPath, newSeq, fmt) = writeSnapshotList(spark, fs, path, schema,
+    val (listPath, newSeq, fmt) = writeSnapshotList(fs, path, schema,
       partFields, moved, snapshotId, Some(meta), baseSnapshotId = Some(head))
     val snapshot = JObject(
       "snapshot-id" -> JLong(snapshotId),

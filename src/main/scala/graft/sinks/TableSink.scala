@@ -12,13 +12,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * options, `S3ToIcebergStreamJob.scala`) as ONE declarative config
   * instead of four copy-pasted jobs.
   *
-  * All four formats are executable WITHOUT connector jars: parquet goes
-  * through the standard datasource, and delta/hudi/iceberg route to the
-  * native wire-format engines ([[DeltaInterop]] / [[HudiInterop]] /
+  * All four formats run without connector jars: parquet goes through
+  * the standard datasource, and delta/hudi/iceberg route to the native
+  * wire-format engines ([[DeltaInterop]] / [[HudiInterop]] /
   * [[IcebergInterop]]) that write the real on-disk formats directly.
-  * `options(cfg)` still produces exactly the connector writer options
-  * each format needs — when a real connector jar IS on the classpath it
-  * wins, with the identical config surface.
   *
   * Scale: `partitionBy` should be LOW-CARDINALITY derived columns (date,
   * category). Hive-style layout keeps reads prune-friendly; pruning is
@@ -80,36 +77,6 @@ object TableSink {
 
   val SupportedFormats: Set[String] = Set("parquet", "delta", "hudi", "iceberg")
 
-  /** Format-specific writer options (pure mapping, no side effects). */
-  def options(cfg: SinkConfig): Map[String, String] = cfg.format match {
-    case "hudi" =>
-      // Option keys per Apache Hudi's Spark datasource docs.
-      Map(
-        "hoodie.table.name" -> cfg.tableName.getOrElse("graft_table"),
-        "hoodie.datasource.write.operation" ->
-          (if (cfg.upsertKey.isDefined) "upsert" else "bulk_insert"),
-        "hoodie.datasource.write.partitionpath.field" -> cfg.partitionBy.mkString(",")) ++
-        cfg.upsertKey.map("hoodie.datasource.write.recordkey.field" -> _) ++
-        cfg.precombine.map("hoodie.datasource.write.precombine.field" -> _)
-    case "iceberg" =>
-      cfg.tableName.map("path" -> _).toMap
-    case _ =>
-      Map.empty // batch save(path) / stream option("path") carry the path
-  }
-
-  /** True when the real connector jar is on the classpath — it then
-    * wins over the native interop modules (full feature surface).
-    */
-  private def connectorPresent(format: String): Boolean = {
-    val cls = format match {
-      case "delta" => "org.apache.spark.sql.delta.sources.DeltaDataSource"
-      case "hudi" => "org.apache.hudi.DefaultSource"
-      case "iceberg" => "org.apache.iceberg.spark.source.IcebergSource"
-      case _ => return true
-    }
-    try { Class.forName(cls); true } catch { case _: ClassNotFoundException => false }
-  }
-
   private def hudiKeys(cfg: SinkConfig): (String, String) = (
     cfg.upsertKey.getOrElse(throw new IllegalArgumentException(
       "hudi sink needs upsertKey (hoodie.datasource.write.recordkey.field)")),
@@ -119,20 +86,13 @@ object TableSink {
   /** Batch write through the config surface. parquet goes through the
     * standard datasource; delta/hudi/iceberg route to the NATIVE
     * wire-format engines ([[DeltaInterop]] / [[HudiInterop]] /
-    * [[IcebergInterop]]) — no connector jar required. When the real
-    * connector IS on the classpath it wins (full feature surface,
-    * identical table layout on disk either way).
+    * [[IcebergInterop]]).
     */
   def writeBatch(df: DataFrame, cfg: SinkConfig): Unit = {
     require(SupportedFormats.contains(cfg.format), s"unknown sink format: ${cfg.format}")
-    if (connectorPresent(cfg.format)) {
-      df.write
-        .format(cfg.format)
-        .options(options(cfg))
-        .partitionBy(cfg.partitionBy: _*)
-        .mode(cfg.mode)
-        .save(cfg.path)
-    } else cfg.format match {
+    cfg.format match {
+      case "parquet" =>
+        df.write.partitionBy(cfg.partitionBy: _*).mode(cfg.mode).parquet(cfg.path)
       case "delta" =>
         DeltaInterop.write(df, cfg.path, cfg.partitionBy,
           overwrite = cfg.mode == "overwrite")
@@ -152,19 +112,17 @@ object TableSink {
     }
   }
 
-  /** Streaming writer through the same config surface (caller starts it
-    * with its checkpoint location). Connector-jar path only — the
-    * native engines stream through [[streamBatch]]'s foreachBatch body
-    * instead (a DataStreamWriter cannot host a custom batch writer by
-    * format name alone).
+  /** Plain-parquet streaming writer through the same config surface
+    * (caller starts it with its checkpoint location). The lakehouse
+    * formats stream through [[streamBatch]]'s foreachBatch body instead
+    * (a DataStreamWriter cannot host a custom batch writer by format
+    * name alone).
     */
   def streamWriter[T](w: DataStreamWriter[T], cfg: SinkConfig, checkpoint: String): DataStreamWriter[T] = {
-    require(SupportedFormats.contains(cfg.format), s"unknown sink format: ${cfg.format}")
-    require(connectorPresent(cfg.format),
-      s"sink format '${cfg.format}' has no connector jar on this classpath — " +
-        "stream through TableSink.streamBatch(cfg, appId) with foreachBatch instead")
-    w.format(cfg.format)
-      .options(options(cfg))
+    require(cfg.format == "parquet",
+      s"streamWriter writes parquet; stream '${cfg.format}' through " +
+        "TableSink.streamBatch(cfg, appId) with foreachBatch instead")
+    w.format("parquet")
       .option("path", cfg.path)
       .partitionBy(cfg.partitionBy: _*)
       .option("checkpointLocation", checkpoint)
@@ -231,17 +189,15 @@ object TableSink {
     * `S3{Parquet,Delta,Hudi,Iceberg}BatchReader` jobs behind one face.
     * `where` reaches each native engine's METADATA pruning (Delta
     * `add.stats`, Iceberg manifest bounds) before any scan task is
-    * planned, and is always re-applied to rows; the parquet/connector
-    * paths get it as a plain pushdown filter. A connector jar on the
-    * classpath wins, same policy as [[writeBatch]].
+    * planned, and is always re-applied to rows; the parquet and hudi
+    * paths get it as a plain pushdown filter.
     */
   def readBatch(spark: SparkSession, format: String, path: String,
       where: Option[Column] = None): DataFrame = {
     require(SupportedFormats.contains(format), s"unknown table format: $format")
     val df =
-      if (format == "parquet") spark.read.parquet(path)
-      else if (connectorPresent(format)) spark.read.format(format).load(path)
-      else format match {
+      format match {
+        case "parquet" => spark.read.parquet(path)
         case "delta" => return DeltaInterop.readWhere(spark, path, where)
         case "hudi" => HudiInterop.read(spark, path)
         case "iceberg" => return IcebergInterop.readWhere(spark, path, where)

@@ -788,8 +788,11 @@ object VersionedTable {
     // no footer reads at planning time, old snapshots keep the schema
     // they were written with, and files predating an added column
     // surface it as null (parquet by-name resolution). Live MOR deltas
-    // are collapsed latest-wins by [[mergedView]].
+    // are collapsed latest-wins by [[mergedView]]. A snapshot without
+    // files (an empty write) reads as no rows of the log schema.
     mergedView(spark, path, upTo)
+      .orElse(snapshotSchema(upTo).map(s => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)))
       .getOrElse(throw new IllegalArgumentException(s"snapshot of $path is empty"))
   }
 
@@ -858,19 +861,13 @@ object VersionedTable {
       byPartitions(
         if (tombstone) effRows else enforced(effRows, enforcedSet),
         effPartitionCols),
-      effPartitionCols, allowEmpty = true)
-    // Key min/max per delta file (footer route — the stats collection
-    // doubles as the emptiness answer, so an empty batch costs staging
-    // only and commits nothing, leaving no empty delta file to break the
-    // bypass for its dir).
+      effPartitionCols)
+    // an empty batch stages no file and commits nothing, leaving no
+    // empty delta file to break the bypass for its dir
+    if (staged.isEmpty) return if (all.isEmpty) 0L else all.last.version
+    // key min/max per delta file (footer route)
     val stats = collectStats(spark, path, staged,
       (key +: activeStatsCols(all)).distinct)
-    val stagedRows = stats.map(_.values.map(_.rows).sum)
-      .getOrElse(if (staged.isEmpty) 0L else 1L)
-    if (staged.isEmpty || stagedRows == 0L) {
-      staged.foreach(rel => fs.delete(new Path(s"$path/$rel"), false))
-      return if (all.isEmpty) 0L else all.last.version
-    }
     val c = publishWithRebase(fs, path, op, Nil, Nil, token,
       // tombstones never evolve the logical schema; data rows merge
       // additively
@@ -878,7 +875,7 @@ object VersionedTable {
         if (tombstone) all => snapshotSchema(all)
         else all => Some(snapshotSchema(all)
           .map(mergeSchemas(_, rows.schema)).getOrElse(rows.schema)),
-      allowRebase = true, deltaAdds = staged,
+      allowRebase = true, deltaAdds = staged.map(_.path),
       mor = Some(MorSpec(key, precombine, effPartitionCols)),
       // Key min/max per delta file: lets merged reads BYPASS the
       // collapse shuffle for base files whose key range provably misses
@@ -936,11 +933,12 @@ object VersionedTable {
       PartitionTransforms.derive(
         mergedView(spark, path, all, restrict).get, activeTransforms(all)),
       spec.partitionCols)
-    val adds = stage(spark, path, merged, spec.partitionCols, allowEmpty = true)
+    val staged = stage(spark, path, merged, spec.partitionCols)
+    val adds = staged.map(_.path)
     publishWithRebase(fs, path, "compact_deltas", adds,
       (affectedBase ++ deltas).distinct, txn = None,
       schemaOf = _ => None, allowRebase = true,
-      stats = collectStats(spark, path, adds,
+      stats = collectStats(spark, path, staged,
         (statsCols ++ activeStatsCols(all)).distinct),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(all))).version
   }
@@ -1066,66 +1064,32 @@ object VersionedTable {
     if (all.isEmpty) 0L else all.last.version
   }
 
-  /** Stage `df` as immutable data files under `path` (hive layout) and
-    * return their table-relative paths. Files land via rename from a
-    * stage dir, so a crashed write leaves only unreferenced garbage —
-    * never a half-visible commit.
+  /** Stage `df` as immutable data files under `path` (hive layout,
+    * [[CommitKernel.stage]]). Files land via rename from a stage dir, so
+    * a crashed write leaves only unreferenced garbage — never a
+    * half-visible commit. An empty frame stages nothing.
     */
   private def stage(spark: SparkSession, path: String, df: DataFrame,
-      partitionCols: Seq[String], allowEmpty: Boolean = false): Seq[String] = {
-    val fs = fsFor(spark, path)
-    val stagePath = new Path(s"$path/$StageDir/${java.util.UUID.randomUUID}")
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(stagePath.toString)
-    collectStaged(fs, path, stagePath, allowEmpty)
-  }
+      partitionCols: Seq[String],
+      maxRecordsPerFile: Option[Long] = None): Seq[CommitKernel.Staged] =
+    CommitKernel.stage(df, path, StageDir, "graft: stage files", partitionCols,
+      maxRecordsPerFile)(_.rel)
 
   /** Recursive parquet-file walk via plain listStatus — NOT
     * listFiles(recursive), which materializes block locations per file
-    * (measured 3+ s over ~500 dirs). `skipInternal` skips the log and
-    * stage trees. Yields (status, root-relative path).
+    * (measured 3+ s over ~500 dirs). Skips the log and stage trees.
+    * Yields (status, root-relative path).
     */
-  private def walkParquet(fs: FileSystem, root: Path, skipInternal: Boolean)(
+  private def walkParquet(fs: FileSystem, root: Path)(
       f: (org.apache.hadoop.fs.FileStatus, String) => Unit): Unit = {
     val rootQ = fs.makeQualified(root).toString
     def go(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
       val rel = fs.makeQualified(st.getPath).toString.stripPrefix(rootQ + "/")
       if (st.isDirectory) {
-        if (!skipInternal || (!rel.startsWith(LogDir) && !rel.startsWith(StageDir)))
-          go(st.getPath)
+        if (!rel.startsWith(LogDir) && !rel.startsWith(StageDir)) go(st.getPath)
       } else if (rel.endsWith(".parquet")) f(st, rel)
     }
     go(root)
-  }
-
-  /** Move the stage dir's data files into the table tree (preserving the
-    * hive subpaths) and return their table-relative paths.
-    */
-  private def collectStaged(fs: FileSystem, path: String, stagePath: Path,
-      allowEmpty: Boolean): Seq[String] = {
-    val pairs = scala.collection.mutable.ArrayBuffer[(Path, String)]()
-    walkParquet(fs, stagePath, skipInternal = false)((st, rel) =>
-      pairs += st.getPath -> rel)
-    // Create dirs and move concurrently: each FS op is ms-scale per-op
-    // latency (worse on an object store), and a wide hive layout stages
-    // hundreds of files — serial, this dominated partitioned commits.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, math.max(1, pairs.size)))
-    try {
-      pairs.map(p => new Path(s"$path/${p._2}").getParent).distinct.map(d =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = { fs.mkdirs(d); () }
-        })).foreach(_.get())
-      pairs.map { case (src, rel) =>
-        val dst = new Path(s"$path/$rel")
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit =
-            require(fs.rename(src, dst), s"stage: failed to move $src -> $dst")
-        })
-      }.foreach(_.get())
-    } finally pool.shutdown()
-    fs.delete(stagePath, true)
-    require(allowEmpty || pairs.nonEmpty, "stage: write produced no data files")
-    pairs.map(_._2).toSeq
   }
 
   /** Every `checkpointEvery` commits, embed the full live-file manifest so
@@ -1293,8 +1257,13 @@ object VersionedTable {
       else byPartitions(stageDf, effTransforms.map(_.name))
     val stagePartCols =
       if (effTransforms.isEmpty) partitionCols else effTransforms.map(_.name)
-    val adds = stage(spark, path, stageShaped, stagePartCols)
-    val stats = collectStats(spark, path, adds,
+    val staged = stage(spark, path, stageShaped, stagePartCols)
+    // an empty frame commits a version with no files, except into a
+    // partitioned layout, which refuses
+    require(staged.nonEmpty || stagePartCols.isEmpty,
+      "stage: write produced no data files")
+    val adds = staged.map(_.path)
+    val stats = collectStats(spark, path, staged,
       (statsCols ++ activeStatsCols(existing)).distinct)
     val blooms = collectBlooms(spark, path, adds,
       activeBloomBits(existing) ++ bloomCols.map(_ -> bloomBits))
@@ -1507,14 +1476,15 @@ object VersionedTable {
       .filter(col("__rn") === 1)
       .drop("__src", "__rn")
     val enforcedSet = currentConstraints(all)
-    val adds = stage(spark, path,
+    val staged = stage(spark, path,
       enforced(byPartitions(resolved, effPartitionCols), enforcedSet),
       effPartitionCols)
+    val adds = staged.map(_.path)
     val c = publishWithRebase(fs, path, "upsert", adds, affected, token,
       schemaOf = all => Some(snapshotSchema(all)
         .map(mergeSchemas(_, updates.schema)).getOrElse(evolved)),
       allowRebase = true,
-      stats = collectStats(spark, path, adds,
+      stats = collectStats(spark, path, staged,
         (statsCols ++ activeStatsCols(all)).distinct),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(all)),
       enforcedConstraints = Some(enforcedSet))
@@ -1703,11 +1673,12 @@ object VersionedTable {
     }.map(relOf(byBase, _)).toIndexedSeq
     if (affected.isEmpty) return latestVersion(spark, path) // nothing matches
     val kept = readSet(affected).filter(!coalesce(predicate, lit(false)))
-    val adds = stage(spark, path, byPartitions(kept, effPartitionCols),
-      effPartitionCols, allowEmpty = true)
+    val staged = stage(spark, path, byPartitions(kept, effPartitionCols),
+      effPartitionCols)
+    val adds = staged.map(_.path)
     val c = publishWithRebase(fs, path, "delete", adds, affected, txn = None,
       schemaOf = _ => None, allowRebase = true,
-      stats = collectStats(spark, path, adds, activeStatsCols(upTo)),
+      stats = collectStats(spark, path, staged, activeStatsCols(upTo)),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(upTo)))
     c.version
   }
@@ -1767,10 +1738,11 @@ object VersionedTable {
     val enforcedSet = currentConstraints(upTo)
     val shaped = byPartitions(
       PartitionTransforms.derive(enforced(out, enforcedSet), tfs), effPartitionCols)
-    val adds = stage(spark, path, shaped, effPartitionCols, allowEmpty = true)
+    val staged = stage(spark, path, shaped, effPartitionCols)
+    val adds = staged.map(_.path)
     publishWithRebase(fs, path, "update", adds, affected, txn = None,
       schemaOf = _ => None, allowRebase = true,
-      stats = collectStats(spark, path, adds, activeStatsCols(upTo)),
+      stats = collectStats(spark, path, staged, activeStatsCols(upTo)),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(upTo)),
       enforcedConstraints = Some(enforcedSet)).version
   }
@@ -1930,25 +1902,22 @@ object VersionedTable {
     resolved = byPartitions(
       PartitionTransforms.derive(resolved, tfs), effPartitionCols)
     val enforcedSet = currentConstraints(all)
-    val adds = stage(spark, path,
-      enforced(resolved, enforcedSet), effPartitionCols, allowEmpty = true)
+    val staged = stage(spark, path,
+      enforced(resolved, enforcedSet), effPartitionCols)
+    val adds = staged.map(_.path)
     val c = publishWithRebase(fs, path, "merge", adds, affected, token,
       schemaOf = all =>
         if (evolveSchema)
           Some(snapshotSchema(all).map(mergeSchemas(_, source.schema)).getOrElse(outSchema))
         else None,
       allowRebase = true,
-      stats = collectStats(spark, path, adds,
+      stats = collectStats(spark, path, staged,
         (statsCols ++ activeStatsCols(all)).distinct),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(all)),
       enforcedConstraints = Some(enforcedSet))
     c.version
   }
 
-  /** Collect per-file min/max/rowcount for `statsCols` over the freshly
-    * staged files — ONE scan of just the new data (never the table), the
-    * same moment Delta computes its add-file stats.
-    */
   /** Per-file min/max/nullCount for the commit's stats columns — the
     * FOOTER route (guide §6; the same move [[DeltaInterop]]'s stageAdds
     * makes): the staged writer already computed per-chunk statistics,
@@ -1965,10 +1934,13 @@ object VersionedTable {
     * to the distributed re-scan when a stats column is not present in
     * the data file footers (e.g. a partition column, whose value lives
     * in the directory name, or an exotic type the scan route supports).
+    * The footers are the ones the staging pass already read.
     */
   private[graft] def collectStats(spark: SparkSession, path: String,
-      rels: Seq[String], statsCols: Seq[String]): Option[Map[String, FileStat]] = {
-    if (statsCols.isEmpty || rels.isEmpty) return None
+      staged: Seq[CommitKernel.Staged],
+      statsCols: Seq[String]): Option[Map[String, FileStat]] = {
+    if (statsCols.isEmpty || staged.isEmpty) return None
+    val rels = staged.map(_.path)
     val conf = spark.sparkContext.hadoopConfiguration
     // Routing on rels.head's footer alone is sound here: every call site
     // passes files STAGED BY ONE WRITE (a single df.write), so all files
@@ -1995,16 +1967,12 @@ object VersionedTable {
       fieldOf(c).dataType == org.apache.spark.sql.types.StringType)
     val allStatCols = numCols ++ strCols
     if (allStatCols.isEmpty) return None
-    val byFile = FileStats.fromFooters(spark, rels.map(r => s"$path/$r"),
-      org.apache.spark.sql.types.StructType(allStatCols.map(fieldOf).toArray))
     def asDouble(v: Any): Option[Double] = v match {
       case n: java.lang.Number => Some(n.doubleValue())
       case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
       case _ => None
     }
-    Some(rels.map { rel =>
-      val st = byFile.getOrElse(FileStats.canon(s"$path/$rel"),
-        FileStats.FileStat(None, Map.empty))
+    Some(staged.map { case CommitKernel.Staged(rel, _, _, st) =>
       def bounds(c: String): Option[(Any, Any)] = st.cols.get(c).flatMap { s =>
         (s.min, s.max) match {
           case (Some(a), Some(b)) => Some((a, b))
@@ -2487,8 +2455,9 @@ object VersionedTable {
         (derived.repartitionByRange(filesPerPartition * nDirs, keys: _*)
           .sortWithinPartitions(keys: _*), names)
       }
-    val adds = stage(spark, path, sorted, effPartCols)
-    val stats = collectStats(spark, path, adds,
+    val staged = stage(spark, path, sorted, effPartCols)
+    val adds = staged.map(_.path)
+    val stats = collectStats(spark, path, staged,
       (sortCols ++ activeStatsCols(all)).distinct)
     val blooms = collectBlooms(spark, path, adds,
       activeBloomBits(all) ++ bloomCols.map(_ -> bloomBits))
@@ -2546,8 +2515,9 @@ object VersionedTable {
           .sortWithinPartitions(keys: _*)
           .drop("__z"), names)
       }
-    val adds = stage(spark, path, sorted, effPartCols)
-    val stats = collectStats(spark, path, adds,
+    val staged = stage(spark, path, sorted, effPartCols)
+    val adds = staged.map(_.path)
+    val stats = collectStats(spark, path, staged,
       (zCols ++ activeStatsCols(commits(fs, path))).distinct)
     val blooms = collectBlooms(spark, path, adds,
       activeBloomBits(commits(fs, path)))
@@ -2610,23 +2580,14 @@ object VersionedTable {
     val shaped =
       if (partCols.isEmpty) df.coalesce(math.max(1, (bytes / targetFileBytes).toInt))
       else df.repartition(partCols.map(col): _*)
-    val adds = stageWithMaxRecords(spark, path, shaped, partCols,
-      (targetFileBytes / avgRow).max(1L))
+    val staged = stage(spark, path, shaped, partCols,
+      Some((targetFileBytes / avgRow).max(1L)))
+    val adds = staged.map(_.path)
     val c = publishWithRebase(fs, path, "optimize", adds, victims, txn = None,
       schemaOf = a => snapshotSchema(a), allowRebase = true,
-      stats = collectStats(spark, path, adds, activeStatsCols(upTo)),
+      stats = collectStats(spark, path, staged, activeStatsCols(upTo)),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(upTo)))
     c.version
-  }
-
-  private def stageWithMaxRecords(spark: SparkSession, path: String, df: DataFrame,
-      partitionCols: Seq[String], maxRecordsPerFile: Long): Seq[String] = {
-    val fs = fsFor(spark, path)
-    val stagePath = new Path(s"$path/$StageDir/${java.util.UUID.randomUUID}")
-    df.write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCols: _*).parquet(stagePath.toString)
-    collectStaged(fs, path, stagePath, allowEmpty = false)
   }
 
   /** Physically delete data files that are not live in ANY retained
@@ -2660,33 +2621,16 @@ object VersionedTable {
     // the same retention-window bet).
     val now = System.currentTimeMillis()
     val orphans = scala.collection.mutable.ArrayBuffer[String]()
-    walkParquet(fs, new Path(path), skipInternal = true) { (st, rel) =>
+    walkParquet(fs, new Path(path)) { (st, rel) =>
       if (!everReferenced.contains(rel) &&
           now - st.getModificationTime > orphanMinAgeMs) {
         fs.delete(st.getPath, false)
         orphans += rel
       }
     }
-    // Stage debris: a write that crashes DURING staging (before the
-    // rename into the tree) leaves its whole stage dir behind, invisible
-    // to the in-tree sweep. Reclaim stage dirs whose NEWEST entry is
-    // older than the gate — an active writer's dir keeps gaining files
-    // well inside any sane retention.
-    val stageRoot = new Path(s"$path/$StageDir")
-    if (fs.exists(stageRoot)) {
-      fs.listStatus(stageRoot).filter(_.isDirectory).foreach { d =>
-        var newest = d.getModificationTime
-        def scan(p: Path): Unit = fs.listStatus(p).foreach { st =>
-          newest = math.max(newest, st.getModificationTime)
-          if (st.isDirectory) scan(st.getPath)
-        }
-        scan(d.getPath)
-        if (now - newest > orphanMinAgeMs) {
-          fs.delete(d.getPath, true)
-          orphans += s"$StageDir/${d.getPath.getName}"
-        }
-      }
-    }
+    // Stage debris of writes that crashed DURING staging, same age gate
+    orphans ++= CommitKernel.reclaim(fs, new Path(s"$path/$StageDir"), orphanMinAgeMs)
+      .map(d => s"$StageDir/$d")
     dead ++ orphans
   }
 
@@ -2745,7 +2689,7 @@ object VersionedTable {
     require(commits(fs, path).isEmpty, s"already a versioned table: $path")
     val files = scala.collection.mutable.ArrayBuffer[String]()
     // skipInternal: never adopt staging debris of crashed writes
-    walkParquet(fs, new Path(path), skipInternal = true)((_, rel) => files += rel)
+    walkParquet(fs, new Path(path))((_, rel) => files += rel)
     require(files.nonEmpty, s"convert: no parquet files under $path")
     val schema = spark.read.option("basePath", path)
       .parquet(files.toSeq.map(f => s"$path/$f"): _*)
@@ -3011,10 +2955,11 @@ object VersionedTable {
     val shaped = byPartitions(
       PartitionTransforms.derive(guarded, tfs)
         .unionByName(preserved, allowMissingColumns = true), effPartitionCols)
-    val adds = stage(spark, path, shaped, effPartitionCols, allowEmpty = true)
+    val staged = stage(spark, path, shaped, effPartitionCols)
+    val adds = staged.map(_.path)
     publishWithRebase(fs, path, "replace_where", adds, affected, txn = None,
       schemaOf = _ => None, allowRebase = true,
-      stats = collectStats(spark, path, adds,
+      stats = collectStats(spark, path, staged,
         (statsCols ++ activeStatsCols(all)).distinct),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(all)),
       enforcedConstraints = Some(enforcedSet)).version

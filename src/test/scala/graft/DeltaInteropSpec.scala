@@ -329,16 +329,13 @@ class DeltaInteropSpec extends SparkSpec {
 
   test("readWhere skips files by stats and partitions, results unchanged") {
     val path = tmp("skip")
-    // range-partitioned by id → disjoint per-file min/max ranges; the
-    // deliberate clustering must survive the write, so the writer's
-    // default one-file-per-dir shaping is opted out of
-    val df = ss.range(0, 1000)
-      .withColumn("cat", when(col("id") % 2 === 0, "even").otherwise("odd"))
-      .withColumn("v", col("id").cast("double"))
-    spark.conf.set("graft.write.shape", "false")
-    try DeltaInterop.write(df.repartitionByRange(8, col("id")), path,
-      partitionBy = Seq("cat"))
-    finally spark.conf.unset("graft.write.shape")
+    // 8 appends of disjoint id ranges → disjoint per-file min/max ranges
+    (0 until 8).foreach { i =>
+      DeltaInterop.write(ss.range(i * 125L, (i + 1) * 125L)
+        .withColumn("cat", when(col("id") % 2 === 0, "even").otherwise("odd"))
+        .withColumn("v", col("id").cast("double")), path,
+        partitionBy = Seq("cat"))
+    }
     val snap = DeltaInterop.snapshot(spark, path)
     val total = snap.adds.size
     assert(total >= 8, s"expected >=8 files, got $total")
@@ -1026,6 +1023,44 @@ class DeltaInteropSpec extends SparkSpec {
     val ow = DeltaInterop.readChangeFeed(spark, path, 3L, 4L)
       .groupBy(col("_change_type")).count().as[(String, Long)].collect().toMap
     assert(ow == Map("delete" -> 3L, "insert" -> 1L))
+  }
+
+  test("DELETE matching only DV-deleted rows publishes nothing; the change feed still reads") {
+    val path = tmp("dv-zero")
+    DeltaInterop.write(sample.coalesce(1), path)                        // v0
+    DeltaInterop.setTableProperties(spark, path,
+      Map("delta.enableChangeDataFeed" -> "true"))                      // v1
+    DeltaInterop.deleteDv(spark, path, col("id") === 2L)                // v2 (soft)
+    // the file's stats still cover id 2, but no LIVE row matches: the
+    // rewrite's survivors equal the file's live rows
+    val r = DeltaInterop.delete(spark, path, col("id") === 2L)
+    assert(r.version == 2L && r.rewrittenFiles == 0)
+    assert(DeltaInterop.latestVersion(spark, path) == 2L)
+    val feed = DeltaInterop.readChangeFeed(spark, path, 1L,
+      DeltaInterop.latestVersion(spark, path))
+    assert(feed.select(col("id"), col("_change_type")).as[(Long, String)]
+      .collect().toSeq == Seq((2L, "delete")))
+  }
+
+  test("vacuum reclaims stage debris of a write that crashed mid-staging") {
+    val path = tmp("stage-debris")
+    DeltaInterop.write(sample, path)
+    val root = new java.io.File(s"$path/_delta_log/.graft_stage")
+    def debris(name: String, ageMs: Long): java.io.File = {
+      val d = new java.io.File(root, name)
+      d.mkdirs()
+      val f = new java.io.File(d, "part-00000-dead.parquet")
+      Files.write(f.toPath, Array[Byte](1, 2, 3))
+      val t = System.currentTimeMillis() - ageMs
+      f.setLastModified(t); d.setLastModified(t)
+      d
+    }
+    val crashed = debris("crashed-uuid", 48L * 3600_000L)
+    val active = debris("active-uuid", 0L)
+    assert(DeltaInterop.vacuum(spark, path, retentionMs = 3600_000L) == 1)
+    assert(!crashed.exists(), "stage debris older than retention must be swept")
+    assert(active.exists(), "a young stage dir may belong to a live writer")
+    assert(DeltaInterop.read(spark, path).count() == 4L)
   }
 
   test("CDF: a pre-enablement rewrite refuses; zero-match DML is a no-op commit-wise") {

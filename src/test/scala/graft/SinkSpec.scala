@@ -193,17 +193,6 @@ class SinkSpec extends SparkSpec {
     assert(got == Set((1L, 2.0, 7L)), got)
   }
 
-  test("hudi config maps upsert keys and partitioning to hudi options") {
-    val opts = TableSink.options(SinkConfig(
-      format = "hudi", path = "/x", partitionBy = Seq("date", "country"),
-      tableName = Some("events"), upsertKey = Some("ingest_id"), precombine = Some("ts")))
-    assert(opts("hoodie.table.name") == "events")
-    assert(opts("hoodie.datasource.write.operation") == "upsert")
-    assert(opts("hoodie.datasource.write.recordkey.field") == "ingest_id")
-    assert(opts("hoodie.datasource.write.precombine.field") == "ts")
-    assert(opts("hoodie.datasource.write.partitionpath.field") == "date,country")
-  }
-
   test("lakehouse formats route to the native wire-format engines, jar-free") {
     import java.nio.file.Files
     val base = Files.createTempDirectory("graft-sink-lake").toFile.getAbsolutePath

@@ -43,11 +43,11 @@ class VersionedTableSpec extends SparkSpec {
       .toDF("k", "s", "d", "oi", "dec")
       .withColumn("allnull", lit(null).cast("string"))
       .withColumn("p", lit("x"))
-    rows.repartition(2).write.partitionBy("p").mode("overwrite").parquet(base)
-    val rels = new java.io.File(base, "p=x").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(f => s"p=x/${f.getName}").toSeq.sorted
+    val staged = graft.sinks.CommitKernel.stage(rows.repartition(2), base, "_stage",
+      "spec: stage", Seq("p"))(_.rel)
+    val rels = staged.map(_.path)
     val cols = Seq("k", "s", "d", "oi", "dec", "allnull")
-    val foot = VersionedTable.collectStats(spark, base, rels, cols).get
+    val foot = VersionedTable.collectStats(spark, base, staged, cols).get
     val scan = VersionedTable.collectStatsScan(spark, base, rels, cols).get
     assert(foot.keySet == scan.keySet)
     foot.keySet.foreach { rel =>
@@ -55,7 +55,7 @@ class VersionedTableSpec extends SparkSpec {
     }
     // a stats column living in the DIRECTORY (partition col) falls back
     // to the scan route and still answers
-    val both = VersionedTable.collectStats(spark, base, rels, Seq("k", "p")).get
+    val both = VersionedTable.collectStats(spark, base, staged, Seq("k", "p")).get
     assert(both.values.forall(_.minStr.get("p").contains("x")))
   }
 

@@ -1,0 +1,148 @@
+package graft.sinks
+
+import java.io.File
+import java.nio.file.{Files, Path => JPath}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.SparkSpec
+import graft.sinks.TableSink.SinkConfig
+
+/** The shared staging path: what lands in the table tree, what the
+  * footer pass reports, and what is left behind.
+  */
+class CommitKernelSpec extends SparkSpec {
+  private val ss = SparkSpec.spark
+  import ss.implicits._
+
+  private def tmp(tag: String): String =
+    Files.createTempDirectory(s"graft-kernel-$tag").toFile.getAbsolutePath + "/t"
+
+  private def walk(root: String): Seq[JPath] =
+    if (!new File(root).exists()) Nil
+    else {
+      val s = Files.walk(new File(root).toPath)
+      try s.toArray.toSeq.map(_.asInstanceOf[JPath]) finally s.close()
+    }
+
+  /** Table-relative paths of every regular file under `root`. */
+  private def files(root: String): Set[String] = walk(root)
+    .filter(Files.isRegularFile(_))
+    .map(p => new File(root).toPath.relativize(p).toString).toSet
+
+  private def stageDirs(root: String): Seq[String] = walk(root)
+    .filter(p => Files.isDirectory(p) && p.getFileName.toString.contains("stage"))
+    .map(_.toString)
+
+  private def rows(ids: Seq[Long]): DataFrame =
+    ids.map(i => (i, if (i % 2 == 0) "a" else "b", i * 10.0)).toDF("id", "cat", "v")
+
+  test("zero-row files are dropped: an empty frame stages nothing and leaves no stage dir") {
+    val t = tmp("empty")
+    val kept = CommitKernel.stage(rows(Nil), t, "_stage", "spec: stage")(_.rel)
+    assert(kept.isEmpty)
+    assert(files(t).isEmpty, files(t))
+    assert(stageDirs(t).isEmpty, stageDirs(t))
+    val some = CommitKernel.stage(rows(Seq(1L, 2L, 3L)).coalesce(1), t, "_stage",
+      "spec: stage")(s => s"data/${s.index}.parquet")
+    assert(some.map(_.path) == Seq("data/0.parquet") && some.head.rows == 3L)
+    assert(files(t) == Set("data/0.parquet"))
+    assert(some.head.bytes == new File(s"$t/data/0.parquet").length())
+  }
+
+  test("footer stats equal FileStats.collect on the same files") {
+    val t = tmp("stats")
+    val df = Seq(
+      (1L, "alpha", Some(1.5), java.sql.Date.valueOf("2024-01-05"), BigDecimal("12.34"), "x"),
+      (7L, "omega", None, java.sql.Date.valueOf("2024-02-10"), BigDecimal("-0.01"), "x"),
+      (-4L, "midst", Some(0.0), java.sql.Date.valueOf("2024-03-15"), BigDecimal("9.99"), "y"))
+      .toDF("k", "s", "d", "day", "dec", "p")
+      .withColumn("allnull", lit(null).cast("string"))
+    val kept = CommitKernel.stage(df.repartition(2), t, "_stage", "spec: stage",
+      Seq("p"))(_.rel)
+    assert(kept.nonEmpty && kept.map(_.rows).sum == 3L)
+    val dataSchema = StructType(df.schema.filterNot(_.name == "p"))
+    val scan = FileStats.collect(spark, kept.map(s => s"$t/${s.path}"), dataSchema)
+    kept.foreach { s =>
+      assert(scan(FileStats.canon(s"$t/${s.path}")) == s.stat,
+        s"footer vs scan stats diverge for ${s.path}")
+    }
+  }
+
+  test("partition values decode null, '+' and '%' values") {
+    val t = tmp("pv")
+    val df = Seq((1L, null: String), (2L, "UTC+8"), (3L, "50%"), (4L, "a b=c"))
+      .toDF("id", "tz")
+    val kept = CommitKernel.stage(df, t, "_stage", "spec: stage", Seq("tz"))(_.rel)
+    val byId = kept.map { s =>
+      spark.read.parquet(s"$t/${s.path}").as[Long].head() -> s.partitionValues
+    }.toMap
+    assert(byId == Map(
+      1L -> Map("tz" -> None), 2L -> Map("tz" -> Some("UTC+8")),
+      3L -> Map("tz" -> Some("50%")), 4L -> Map("tz" -> Some("a b=c"))))
+    assert(CommitKernel.partitionValues("tz=UTC+8/x=%25/part-0.parquet", Seq("tz", "x", "y")) ==
+      Map("tz" -> Some("UTC+8"), "x" -> Some("%"), "y" -> None))
+  }
+
+  test("a concurrent writer's UUID directory survives cleanup") {
+    val t = tmp("concurrent")
+    val other = new File(s"$t/_stage/other-writer")
+    other.mkdirs()
+    Files.write(new File(other, "part-00000.parquet").toPath, Array[Byte](1))
+    CommitKernel.stage(rows(Seq(1L)), t, "_stage", "spec: stage")(_ => "f.parquet")
+    assert(other.exists() && new File(other, "part-00000.parquet").exists())
+    assert(new File(s"$t/_stage").list().toSeq == Seq("other-writer"),
+      "only our own UUID dir is removed")
+    // once the other writer is gone, the shared root goes with the next stage
+    assert(CommitKernel.reclaim(
+      new org.apache.hadoop.fs.Path(t).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(s"$t/_stage"), 3600_000L).isEmpty)
+    other.listFiles().foreach(_.delete()); other.delete()
+    CommitKernel.stage(rows(Seq(2L)), t, "_stage", "spec: stage")(_ => "g.parquet")
+    assert(!new File(s"$t/_stage").exists())
+  }
+
+  test("an empty frame into each engine's write or stream body leaves no file and no stage dir") {
+    def unchanged(name: String, path: String)(body: => Unit): Unit = {
+      val before = files(path)
+      body
+      assert(files(path) == before, s"$name: files changed")
+      assert(stageDirs(path).isEmpty, s"$name: stage dirs left: ${stageDirs(path)}")
+    }
+    val d = tmp("delta"); DeltaInterop.write(rows(Seq(1L)), d)
+    unchanged("delta", d)(DeltaInterop.streamBatchWriter(d, Nil, "app")(rows(Nil), 1L))
+    val i = tmp("iceberg"); IcebergInterop.write(rows(Seq(1L)), i)
+    unchanged("iceberg", i)(
+      TableSink.streamBatch(SinkConfig("iceberg", i), "app")(rows(Nil), 1L))
+    val hudi = SinkConfig("hudi", tmp("hudi"), upsertKey = Some("id"), precombine = Some("v"))
+    TableSink.writeBatch(rows(Seq(1L)), hudi)
+    unchanged("hudi", hudi.path)(TableSink.streamBatch(hudi, "app")(rows(Nil), 1L))
+    val m = tmp("hudi-mor"); HudiMor.upsert(rows(Seq(1L)), m, "id", "v")
+    unchanged("hudi mor", m)(HudiMor.streamBatchUpserter(m, "id", "v")(rows(Nil), 1L))
+    val g = tmp("graft"); VersionedTable.write(spark, g, rows(Seq(1L)), Nil)
+    unchanged("graft mor", g)(VersionedTable.upsertMOR(spark, g, rows(Nil), "id", "v", Nil,
+      txn = Some(("app", 1L))))
+    unchanged("graft upsert", g)(VersionedTable.upsert(spark, g, rows(Nil), "id", "v", Nil,
+      txn = Some(("app", 2L))))
+    assert(VersionedTable.latestVersion(spark, g) == 1L)
+  }
+
+  test("VersionedTable.write of an empty frame: a version with no rows, or a refusal when partitioned") {
+    val t = tmp("vt-empty")
+    assert(VersionedTable.write(spark, t, rows(Nil), Nil) == 1L)
+    assert(VersionedTable.latestVersion(spark, t) == 1L)
+    val back = VersionedTable.read(spark, t)
+    assert(back.count() == 0L)
+    assert(back.schema.fieldNames.toSeq == Seq("id", "cat", "v"))
+    assert(VersionedTable.write(spark, t, rows(Nil), Nil, mode = "append") == 2L)
+    assert(VersionedTable.read(spark, t).count() == 0L)
+    val p = tmp("vt-empty-p")
+    val e = intercept[IllegalArgumentException](
+      VersionedTable.write(spark, p, rows(Nil), Seq("cat")))
+    assert(e.getMessage.contains("write produced no data files"))
+    assert(VersionedTable.latestVersion(spark, p) == 0L)
+    assert(stageDirs(p).isEmpty)
+  }
+}
