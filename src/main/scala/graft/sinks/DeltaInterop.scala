@@ -995,8 +995,7 @@ object DeltaInterop {
       // stats overestimated and nothing actually matches: no-op — also
       // keeps the CDF contract (a change-free commit must write no cdc)
       if (matchedNone) {
-        adds.foreach(a =>
-          fs.delete(new Path(resolveAddPath(path, a.path)), false))
+        discard(fs, path, adds)
         return DeleteResult(snap.version, 0, snap.adds.size)
       }
       val cdc = cdcIfEnabled(snap, path, partCols)(
@@ -1290,8 +1289,7 @@ object DeltaInterop {
       val hits = obs.get.get("hits").fold(0L)(_.asInstanceOf[Long])
       // stats overestimated and nothing matches: no-op (CDF contract)
       if (hits == 0L) {
-        adds.foreach(a =>
-          fs.delete(new Path(resolveAddPath(path, a.path)), false))
+        discard(fs, path, adds)
         return DeleteResult(snap.version, 0, snap.adds.size)
       }
       val cdc = cdcIfEnabled(snap, path, snap.metaData.partitionColumns)(
@@ -1350,6 +1348,10 @@ object DeltaInterop {
           .filter(coalesce(where, lit(false)))
           .withColumn(ChangeTypeCol, lit("delete"))
           .unionByName(ins)
+      }
+      if (unchanged(snap, cdc)) { // no row matched, none came in: no-op
+        discard(fs, path, survivorAdds ++ newAdds)
+        return snap.version
       }
       val now = System.currentTimeMillis()
       val removes = touched.map(a =>
@@ -1469,6 +1471,12 @@ object DeltaInterop {
             .select(mc.notMatchedResult.as("__r")).filter(col("__r").isNotNull)
             .select("__r.*").withColumn(ChangeTypeCol, lit("insert"))
           pre.unionByName(post).unionByName(del).unionByName(ins)
+        }
+        // matched rows but no clause fired: the rewrite only carries
+        // rows over, so nothing is published (the CDF contract)
+        if (unchanged(snap, cdc)) {
+          discard(fs, path, adds)
+          return DeleteResult(snap.version, 0, snap.adds.size)
         }
         val now = System.currentTimeMillis()
         val removes = touched.map(a =>
@@ -1752,8 +1760,10 @@ object DeltaInterop {
     * `_change_type`) under `_change_data/` and return their `cdc`
     * actions. CDC files are partitioned like the table and carry the
     * SAME physical schema as data files plus `_change_type` — the
-    * protocol's layout. No stats pass: CDC files describe changes,
-    * data queries never scan them.
+    * protocol's layout. The kernel's footer pass covers them too (its
+    * stats are unused: data queries never scan CDC files), and so does
+    * its zero-row drop: an empty change set stages no file and returns
+    * Nil, which [[unchanged]] reads as "this commit changes no row".
     */
   private def stageCdc(changes: DataFrame, path: String,
       partCols: Seq[String]): Seq[JObject] =
@@ -1774,6 +1784,18 @@ object DeltaInterop {
   private def cdcIfEnabled(snap: Snapshot, path: String,
       partCols: Seq[String])(changes: => DataFrame): Seq[JObject] =
     if (!cdfEnabled(snap)) Nil else stageCdc(changes, path, partCols)
+
+  /** The feed is on and the staged change set is empty: the commit
+    * changes no row. Publishing its rewrite anyway would leave adds and
+    * removes without `cdc` actions, which [[readChangeFeed]] refuses
+    * and protocol readers misread as deletes plus inserts.
+    */
+  private def unchanged(snap: Snapshot, cdc: Seq[JObject]): Boolean =
+    cdfEnabled(snap) && cdc.isEmpty
+
+  /** Delete staged adds of a commit that will not publish. */
+  private def discard(fs: FileSystem, path: String, adds: Seq[AddFile]): Unit =
+    adds.foreach(a => fs.delete(new Path(resolveAddPath(path, a.path)), false))
 
   private final case class CdcFile(path: String,
       partitionValues: Map[String, Option[String]])
@@ -1975,9 +1997,6 @@ object DeltaInterop {
     val tgtKeys = target.adds.map(key).toSet
     val toAdd = target.adds.filterNot(a => curKeys.contains(key(a)))
     val toRemove = snap.adds.filterNot(a => tgtKeys.contains(key(a)))
-    val now = System.currentTimeMillis()
-    val removes = toRemove.map(a =>
-      RemoveFile(a.path, Some(now), dataChange = true, a.deletionVector))
     // CDC spans BOTH schemas (dropped rows read with the current one,
     // resurrected rows with the target's) — when the restore crosses a
     // schema change, no single-schema CDC file can describe the diff
@@ -1998,11 +2017,18 @@ object DeltaInterop {
             .withColumn(ChangeTypeCol, lit("delete")))
         (ins.toSeq ++ del.toSeq).reduce(_ unionByName _)
       }
+    // the feed on and no change row: every moved file's rows are all
+    // soft-deleted, so the restore only rearranges files (and still
+    // reverts the metaData)
+    val dataChange = !(schemasAgree && unchanged(snap, cdc))
+    val now = System.currentTimeMillis()
+    val removes = toRemove.map(a =>
+      RemoveFile(a.path, Some(now), dataChange, a.deletionVector))
     val newVersion = snap.version + 1
     beforePublish()
     publish(fs, path, newVersion,
       Seq(metaJson(target.metaData)) ++ removes.map(removeJson) ++
-        toAdd.map(a => addJson(a.copy(dataChange = true))) ++ cdc,
+        toAdd.map(a => addJson(a.copy(dataChange = dataChange))) ++ cdc,
       "RESTORE", Map("version" -> version.toString))
     maybeCheckpoint(spark, path, newVersion)
     newVersion

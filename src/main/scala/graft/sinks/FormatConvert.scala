@@ -61,24 +61,8 @@ object FormatConvert {
       "deltaToIceberg: partitioned Delta sources are not metadata-convertible " +
         "(hive layout strips partition columns from data files) — rewrite via " +
         "IcebergInterop.write instead")
-    val withCounts = snap.adds.map { a =>
-      val abs = DeltaInterop.resolveAddPath(deltaPath, a.path)
-      val records = a.stats.flatMap(parseNumRecords)
-      (abs, a.size, records)
-    }
-    // foreign logs may omit add.stats — the stragglers' counts come from
-    // their parquet FOOTERS (KBs each), never a re-scan of the data
-    val missing = withCounts.collect { case (p, _, None) => p }
-    val counted: Map[String, Long] =
-      if (missing.isEmpty) Map.empty
-      else FileStats.fromFooters(spark, missing,
-        org.apache.spark.sql.types.StructType(Nil))
-        .map { case (p, st) => p -> st.numRecords.getOrElse(0L) }
-    val refs = withCounts.map { case (p, size, rec) =>
-      IcebergInterop.DataFileRef(p,
-        rec.orElse(counted.get(FileStats.canon(p))).getOrElse(0L), size)
-    }
-    IcebergInterop.commitExternal(spark, icebergPath, snap.schema, refs)
+    IcebergInterop.commitExternal(spark, icebergPath, snap.schema,
+      snap.adds.map(a => (DeltaInterop.resolveAddPath(deltaPath, a.path), a.size)))
   }
 
   /** CONVERT TO DELTA: adopt an Iceberg table's current snapshot as a
@@ -113,27 +97,14 @@ object FormatConvert {
 
   /** CONVERT a Hudi COW table TO ICEBERG — same adoption contract as
     * [[hudiToDelta]]; per-file record counts (Iceberg manifests carry
-    * them) come from ONE distributed count job over the adopted files.
+    * them) come from the adopted files' footers, read once with their
+    * column stats.
     */
   def hudiToIceberg(spark: SparkSession, hudiPath: String,
       icebergPath: String): Long = {
     val (schema, files) = HudiInterop.currentDataFiles(spark, hudiPath)
-    val counted: Map[String, Long] =
-      FileStats.fromFooters(spark, files.map(_._1),
-        org.apache.spark.sql.types.StructType(Nil))
-        .map { case (p, st) => p -> st.numRecords.getOrElse(0L) }
-    val refs = files.map { case (p, size) =>
-      IcebergInterop.DataFileRef(p, counted.getOrElse(FileStats.canon(p), 0L), size)
-    }
-    IcebergInterop.commitExternal(spark, icebergPath, schema, refs)
+    IcebergInterop.commitExternal(spark, icebergPath, schema, files)
   }
-
-  private def parseNumRecords(stats: String): Option[Long] =
-    try {
-      import org.json4s._
-      implicit val formats: Formats = DefaultFormats
-      (org.json4s.jackson.JsonMethods.parse(stats) \ "numRecords").extractOpt[Long]
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Driver-checked CONVERT TO ICEBERG round trip: orders land as a
     * Delta table, convert metadata-only, then a derived slice APPENDS

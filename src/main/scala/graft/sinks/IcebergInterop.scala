@@ -272,7 +272,7 @@ object IcebergInterop {
     ]}""".replace("\n", ""))
 
   /** A data file a snapshot adds; `stat` is its footer stats when the
-    * file was staged by this writer.
+    * file was staged by this writer or adopted by [[commitExternal]].
     */
   private[sinks] final case class DataFileRef(path: String, records: Long, bytes: Long,
       partValues: Seq[Option[String]] = Nil, stat: Option[FileStats.FileStat] = None)
@@ -840,22 +840,25 @@ object IcebergInterop {
     * its first snapshot — the metadata-only half of a cross-format
     * CONVERT (Iceberg's own `snapshot`/`migrate` procedures): no data
     * is copied; one manifest + manifest list + metadata JSON reference
-    * the donor files by absolute path, and column stats come from ONE
-    * distributed [[FileStats]] pass over them. Fresh locations only —
+    * the donor files by absolute path, and record counts plus column
+    * stats come from ONE footer pass over them. Fresh locations only —
     * adopting into a live table would mix lifecycle owners (the donor
     * format still owns those files; see [[FormatConvert]] for the
     * ownership contract).
     */
   private[sinks] def commitExternal(spark: SparkSession, path: String,
-      schema: StructType, files: Seq[DataFileRef]): Long = {
+      schema: StructType, files: Seq[(String, Long)]): Long = {
     val fs = fsFor(spark, path)
     require(currentVersion(fs, path).isEmpty,
       s"IcebergInterop.commitExternal: $path is already an Iceberg table " +
         "(metadata-only adoption targets a fresh location)")
     require(files.nonEmpty, "IcebergInterop.commitExternal: no data files")
-    val stats = FileStats.fromFooters(spark, files.map(_.path), schema)
+    val stats = FileStats.fromFooters(spark, files.map(_._1), schema)
     commitRefs(spark, fs, path, schema,
-      files.map(f => f.copy(stat = stats.get(FileStats.canon(f.path)))),
+      files.map { case (p, bytes) =>
+        val st = stats.get(FileStats.canon(p))
+        DataFileRef(p, st.flatMap(_.numRecords).getOrElse(0L), bytes, stat = st)
+      },
       overwrite = false, txn = None,
       partFields = Nil, prev = None, prevProps = Map.empty)
   }

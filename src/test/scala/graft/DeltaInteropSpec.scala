@@ -1042,6 +1042,57 @@ class DeltaInteropSpec extends SparkSpec {
       .collect().toSeq == Seq((2L, "delete")))
   }
 
+  test("CDF: a MERGE whose matched rows fire no clause publishes nothing; the feed still reads") {
+    val path = tmp("cdf-merge-keep")
+    DeltaInterop.write(sample.coalesce(1), path)                        // v0
+    DeltaInterop.setTableProperties(spark, path,
+      Map("delta.enableChangeDataFeed" -> "true"))                      // v1
+    // every source row matches, but the precombine-style condition is
+    // false for all of them: the touched file's rows carry over as is
+    val src = Seq((1L, 5.0), (3L, 7.0)).toDF("id", "v")
+    val r = DeltaInterop.merge(spark, path, src, on = Seq("id"), clauses = Seq(
+      graft.sinks.VersionedTable.MatchedUpdate(Map("v" -> col("s.v")),
+        Some(col("s.v") > col("t.v")))))
+    assert(r.version == 1L && r.rewrittenFiles == 0)
+    assert(DeltaInterop.latestVersion(spark, path) == 1L)
+    DeltaInterop.delete(spark, path, col("id") === 2L)                  // v2
+    val feed = DeltaInterop.readChangeFeed(spark, path, 1L,
+      DeltaInterop.latestVersion(spark, path))
+    assert(feed.select(col("id"), col("_change_type")).as[(Long, String)]
+      .collect().toSeq == Seq((2L, "delete")))
+    assert(DeltaInterop.read(spark, path).as[(Long, String, Double)]
+      .collect().toSet == Set((1L, "a", 10.0), (3L, "b", 30.0), (4L, "b", 40.0)))
+  }
+
+  test("CDF: a replaceWhere that matches and inserts no row publishes nothing") {
+    val path = tmp("cdf-rw-none")
+    DeltaInterop.write(sample.coalesce(1), path)                        // v0
+    DeltaInterop.setTableProperties(spark, path,
+      Map("delta.enableChangeDataFeed" -> "true"))                      // v1
+    // the file's id stats cover 2.5, no row equals it
+    val none = sample.filter(lit(false))
+    assert(DeltaInterop.replaceWhere(none, path, col("id") === 2.5) == 1L)
+    assert(DeltaInterop.latestVersion(spark, path) == 1L)
+    assert(DeltaInterop.readChangeFeed(spark, path, -1L, 1L).count() == 4L)
+  }
+
+  test("CDF: a RESTORE that moves only fully soft-deleted files changes no row") {
+    val path = tmp("cdf-restore-dv")
+    DeltaInterop.write(Seq((1L, "a", 1.0)).toDF("id", "cat", "v"), path) // v0
+    DeltaInterop.setTableProperties(spark, path,
+      Map("delta.enableChangeDataFeed" -> "true"))                      // v1
+    DeltaInterop.deleteDv(spark, path, col("id") === 1L)                // v2 {A+dv}
+    DeltaInterop.write(Seq((2L, "a", 2.0)).toDF("id", "cat", "v"), path) // v3
+    DeltaInterop.compact(spark, path)                                   // v4 {B}
+    DeltaInterop.deleteDv(spark, path, col("id") === 2L)                // v5 {B+dv}
+    // v2 and v5 share no file and neither holds a live row
+    assert(DeltaInterop.restore(spark, path, 2L) == 6L)                 // v6
+    assert(DeltaInterop.read(spark, path).count() == 0L)
+    val feed = DeltaInterop.readChangeFeed(spark, path, 4L, 6L)
+    assert(feed.select(col("id"), col("_change_type"), col("_commit_version"))
+      .as[(Long, String, Long)].collect().toSeq == Seq((2L, "delete", 5L)))
+  }
+
   test("vacuum reclaims stage debris of a write that crashed mid-staging") {
     val path = tmp("stage-debris")
     DeltaInterop.write(sample, path)
