@@ -270,9 +270,10 @@ case class ProjectVec(child: Expression, mean: Array[Double],
   * route bit for bit (including keeping the first-seen value among
   * -0.0/0.0 ties; the one divergence is an all-NaN dimension, where
   * Spark would report NaN and the sentinel survives — no graft corpus
-  * produces NaN embeddings). Dimensions no input vector reaches stay
-  * at the (+Inf, -Inf) sentinels; consumers map them to the (0, 0)
-  * affine row the old route's sparse collect produced.
+  * produces NaN embeddings). Null elements are skipped, as Min/Max skip
+  * nulls. Dimensions no input vector reaches (or only null elements
+  * do) stay at the (+Inf, -Inf) sentinels; consumers map them to the
+  * (0, 0) affine row the old route's sparse collect produced.
   */
 case class VecMinMaxAgg(child: Expression, dim: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
@@ -301,10 +302,13 @@ case class VecMinMaxAgg(child: Expression, dim: Int,
       val n = math.min(arr.numElements(), dim)
       var i = 0
       while (i < n) {
-        val x = if (isFloat) arr.getFloat(i)
-          else VectorExpressions.elementAt(arr, i, elem).toFloat
-        if (x < buf(i)) buf(i) = x
-        if (x > buf(dim + i)) buf(dim + i) = x
+        // a null element carries no value: skip it, as Min/Max skip nulls
+        if (!arr.isNullAt(i)) {
+          val x = if (isFloat) arr.getFloat(i)
+            else VectorExpressions.elementAt(arr, i, elem).toFloat
+          if (x < buf(i)) buf(i) = x
+          if (x > buf(dim + i)) buf(dim + i) = x
+        }
         i += 1
       }
     }

@@ -6,19 +6,27 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 
-/** The staging half of every table engine's commit: how a DataFrame
-  * becomes files inside a table tree that no reader can see yet. A
-  * sink's output stays invisible until the log entry referencing it
-  * publishes (the epoch-commit model of Structured Streaming), so a
-  * crash between stage and publish leaves only unreferenced files.
+/** The shared half of every table engine's commit: how a DataFrame
+  * becomes files inside a table tree that no reader can see yet, and
+  * how one log file then makes them visible. A sink's output stays
+  * invisible until the log entry referencing it publishes (the
+  * epoch-commit model of Structured Streaming), so a crash between
+  * stage and publish leaves only unreferenced files.
   *
   * One [[stage]] call writes the frame into a per-writer UUID dir under
   * the caller's stage root, reads every produced file's parquet FOOTER
   * once (row count + column stats for the written schema, zero data
   * bytes re-read), drops zero-row files, moves the rest to the names the
-  * caller chooses and cleans up after itself. Callers keep everything
-  * format-specific: shaping the frame, where their stage root lives,
-  * their on-disk naming, and every log codec, probe and publish.
+  * caller chooses and cleans up after itself.
+  *
+  * [[publish]] makes a log entry visible: Delta and graft log versions,
+  * Iceberg metadata versions and Hudi timeline instants. A writer that
+  * loses the race for a name fails instead of overwriting the winner.
+  * [[replace]] swaps a pointer file (Iceberg's version hint, Delta's
+  * `_last_checkpoint`, catalog and checkpoint markers) for a new one.
+  * Callers keep everything format-specific: shaping the frame, where
+  * their stage root lives, their on-disk naming, every log codec and
+  * probe, and their conflict rules.
   */
 object CommitKernel {
 
@@ -88,6 +96,47 @@ object CommitKernel {
     fs.delete(dir, true)
     removeIfEmpty(fs, root)
     kept.map(_._2)
+  }
+
+  /** Test seam: runs inside [[publish]] once the caller has chosen its
+    * target name, so a spec can land a concurrent writer's entry first.
+    */
+  private[graft] var beforePublish: Path => Unit = _ => ()
+
+  /** Make `bytes` visible at `dst` in one step: write a hidden temp file
+    * beside it, then rename it onto `dst` with a rename that refuses an
+    * existing target. A writer that loses the race for `dst` gets
+    * ConcurrentModificationException and the winner's file stays as it
+    * was.
+    */
+  def publish(fs: FileSystem, dst: Path, bytes: Array[Byte]): Unit = {
+    beforePublish(dst)
+    val tmp = writeTemp(fs, dst, bytes)
+    // the exists guard covers filesystems whose rename overwrites
+    if (fs.exists(dst) || !fs.rename(tmp, dst)) {
+      fs.delete(tmp, false)
+      throw new java.util.ConcurrentModificationException(
+        s"$dst was published concurrently by another writer")
+    }
+  }
+
+  /** Replace the pointer file `dst` with `bytes`: write a temp file and
+    * rename it over `dst`, so readers see the old or the new content,
+    * never a missing or partial file.
+    */
+  def replace(fs: FileSystem, dst: Path, bytes: Array[Byte]): Unit = {
+    val tmp = writeTemp(fs, dst, bytes)
+    org.apache.hadoop.fs.FileContext
+      .getFileContext(fs.makeQualified(dst).toUri, fs.getConf)
+      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+  }
+
+  private def writeTemp(fs: FileSystem, dst: Path, bytes: Array[Byte]): Path = {
+    fs.mkdirs(dst.getParent)
+    val tmp = new Path(dst.getParent, s".${dst.getName}.${java.util.UUID.randomUUID}.tmp")
+    val out = fs.create(tmp, false)
+    try out.write(bytes) finally out.close()
+    tmp
   }
 
   /** Age-gated reclaim of stage debris: a write that crashed DURING

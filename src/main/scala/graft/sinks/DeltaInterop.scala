@@ -659,7 +659,6 @@ object DeltaInterop {
         Seq(protocolJson(p.copy(minWriterVersion = 3)))
       else Nil
     val version = snap.version + 1
-    beforePublish()
     publish(fs, path, version, proto ++ Seq(metaJson(meta)),
       "ADD CONSTRAINT", Map("name" -> name, "expr" -> exprSql))
     maybeCheckpoint(spark, path, version)
@@ -679,7 +678,6 @@ object DeltaInterop {
     val meta = snap.metaData.copy(
       configuration = snap.metaData.configuration - key)
     val version = snap.version + 1
-    beforePublish()
     publish(fs, path, version, Seq(metaJson(meta)),
       "DROP CONSTRAINT", Map("name" -> name))
     maybeCheckpoint(spark, path, version)
@@ -789,7 +787,6 @@ object DeltaInterop {
           .unionByName(ins), path, partitionBy)
       }
     val version = prev.map(_.version + 1).getOrElse(0L)
-    beforePublish()
     val actions: Seq[JObject] =
       (if (prev.isEmpty) Seq(protocolJson(Protocol(1, 2))) else Nil) ++
         (if (prev.isEmpty || overwrite || evolved.isDefined)
@@ -1004,7 +1001,6 @@ object DeltaInterop {
       val removes = touched.map(a =>
         RemoveFile(a.path, Some(now), dataChange = true, a.deletionVector))
       val version = snap.version + 1
-      beforePublish()
       publish(fs, path, version,
         removes.map(removeJson) ++ adds.map(addJson) ++ cdc, "DELETE")
       maybeCheckpoint(spark, path, version)
@@ -1138,7 +1134,6 @@ object DeltaInterop {
         frameOver(spark, path, snap, touched).filter(hit)
           .withColumn(ChangeTypeCol, lit("delete")))
       val version = snap.version + 1
-      beforePublish()
       publish(fs, path, version,
         proto ++ removes.map(removeJson) ++ adds.map(addJson) ++ cdc, "DELETE")
       maybeCheckpoint(spark, path, version)
@@ -1225,7 +1220,6 @@ object DeltaInterop {
           .unionByName(updated
             .withColumn(ChangeTypeCol, lit("update_postimage"))))
       val version = snap.version + 1
-      beforePublish()
       publish(fs, path, version,
         proto ++ removes.map(removeJson) ++ (dvAdds ++ newAdds).map(addJson)
           ++ cdc, "UPDATE")
@@ -1300,7 +1294,6 @@ object DeltaInterop {
       val removes = touched.map(a =>
         RemoveFile(a.path, Some(now), dataChange = true, a.deletionVector))
       val version = snap.version + 1
-      beforePublish()
       publish(fs, path, version,
         removes.map(removeJson) ++ adds.map(addJson) ++ cdc, "UPDATE")
       maybeCheckpoint(spark, path, version)
@@ -1357,7 +1350,6 @@ object DeltaInterop {
       val removes = touched.map(a =>
         RemoveFile(a.path, Some(now), dataChange = true, a.deletionVector))
       val version = snap.version + 1
-      beforePublish()
       publish(fs, path, version,
         removes.map(removeJson) ++ (survivorAdds ++ newAdds).map(addJson) ++ cdc,
         "WRITE", Map("mode" -> "Overwrite", "predicate" -> "replaceWhere"))
@@ -1482,7 +1474,6 @@ object DeltaInterop {
         val removes = touched.map(a =>
           RemoveFile(a.path, Some(now), dataChange = true, a.deletionVector))
         val version = snap.version + 1
-        beforePublish()
         publish(fs, path, version,
           txn.map { case (a, v) => txnJson(Txn(a, v)) }.toSeq ++
             removes.map(removeJson) ++ adds.map(addJson) ++ cdc, "MERGE")
@@ -1664,7 +1655,6 @@ object DeltaInterop {
     val removes = touched.map(a =>
         RemoveFile(a.path, Some(now), dataChange = false, a.deletionVector))
     val version = snap.version + 1
-    beforePublish()
     publish(fs, path, version, removes.map(removeJson) ++ adds.map(addJson),
       "OPTIMIZE")
     maybeCheckpoint(spark, path, version)
@@ -1749,7 +1739,6 @@ object DeltaInterop {
         Seq(protocolJson(p.copy(minWriterVersion = 4)))
       else Nil
     val version = snap.version + 1
-    beforePublish()
     publish(fs, path, version, proto ++ Seq(metaJson(meta)),
       "SET TBLPROPERTIES")
     maybeCheckpoint(spark, path, version)
@@ -1949,7 +1938,6 @@ object DeltaInterop {
       a.copy(path = abs.toUri.toString, dataChange = true)
     }
     val meta = snap.metaData.copy(id = java.util.UUID.randomUUID().toString)
-    beforePublish()
     publish(fs, dst, 0L,
       Seq(protocolJson(snap.protocol), metaJson(meta)) ++ adds.map(addJson),
       "CLONE", Map("source" -> src, "sourceVersion" -> snap.version.toString))
@@ -2025,7 +2013,6 @@ object DeltaInterop {
     val removes = toRemove.map(a =>
       RemoveFile(a.path, Some(now), dataChange, a.deletionVector))
     val newVersion = snap.version + 1
-    beforePublish()
     publish(fs, path, newVersion,
       Seq(metaJson(target.metaData)) ++ removes.map(removeJson) ++
         toAdd.map(a => addJson(a.copy(dataChange = dataChange))) ++ cdc,
@@ -2034,18 +2021,6 @@ object DeltaInterop {
     newVersion
   }
 
-  /** Test-only injection point: runs after the writer resolved its
-    * target version, before publish — lets specs interleave a
-    * concurrent committer deterministically (same hook discipline as
-    * [[VersionedTable]]).
-    */
-  private[graft] var beforePublish: () => Unit = () => ()
-
-  /** Atomic commit: write a temp file, rename onto the reserved version
-    * name — rename-onto-existing fails, so a lost race surfaces as an
-    * error instead of a clobbered log (same discipline as
-    * [[VersionedTable]]'s publish).
-    */
   /** The protocol's `commitInfo` action — optional per PROTOCOL.md but
     * emitted by every real writer, and what DESCRIBE HISTORY reads.
     * Always FIRST in the commit file (the conventional position).
@@ -2093,22 +2068,17 @@ object DeltaInterop {
       StructField("engineInfo", StringType))))
   }
 
+  /** Publish `actions0` as commit `version`, `commitInfo` first; a
+    * concurrent writer that won the version surfaces as
+    * ConcurrentModificationException, never a clobbered log.
+    */
   private def publish(fs: FileSystem, path: String, version: Long,
       actions0: Seq[JObject], operation: String,
       operationParameters: Map[String, String] = Map.empty): Unit = {
     val actions = commitInfoJson(operation, operationParameters) +: actions0
-    val dst = commitFile(path, version)
-    fs.mkdirs(dst.getParent)
-    val tmp = new Path(dst.getParent, s".${dst.getName}.${java.util.UUID.randomUUID}.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(actions.map(a => JsonMethods.compact(JsonMethods.render(a)))
-      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      throw new java.util.ConcurrentModificationException(
-        s"Delta commit $version already exists (concurrent writer): $dst")
-    }
+    CommitKernel.publish(fs, commitFile(path, version),
+      actions.map(a => JsonMethods.compact(JsonMethods.render(a)))
+        .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
   }
 
   /** Delta `add.path` is an RFC 2396 percent-encoded RELATIVE path —
@@ -2213,12 +2183,10 @@ object DeltaInterop {
       .getOrElse(throw new IllegalStateException("checkpoint write produced no file"))
     require(fs.rename(part, checkpointFile(path, version)), "checkpoint rename failed")
     fs.delete(tmp, true)
-    val lc = new Path(s"$path/$LogDir/_last_checkpoint")
-    val out = fs.create(lc, true)
-    try out.write(JsonMethods.compact(JsonMethods.render(JObject(
-      "version" -> JLong(version), "size" -> JLong(rows.size.toLong))))
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    CommitKernel.replace(fs, new Path(s"$path/$LogDir/_last_checkpoint"),
+      JsonMethods.compact(JsonMethods.render(JObject(
+        "version" -> JLong(version), "size" -> JLong(rows.size.toLong))))
+        .getBytes(StandardCharsets.UTF_8))
   }
 
   /** Default ceiling on checkpoint actions replayed onto the driver —

@@ -83,15 +83,32 @@ class FastLocalFileSystem extends LocalFileSystem(new RawLocalFileSystem {
     out.toArray
   }
 
-  /** No-clobber rename, pinned explicitly: every lakehouse publish
-    * protocol here (Delta/graft commit files, Iceberg metadata versions,
-    * Hudi instants) relies on rename-refuses-existing for its optimistic
-    * concurrency, and raw POSIX rename(2) silently overwrites. Same
-    * check-then-act window as stock Hadoop local; the concurrent-writer
-    * specs pin the behavior.
+  /** No-clobber rename, pinned explicitly: every log entry of the four
+    * table formats becomes visible through `CommitKernel.publish`,
+    * whose optimistic concurrency needs a rename that refuses an
+    * existing target, and raw POSIX rename(2) silently overwrites. A
+    * regular file moves by hard link + unlink: link(2) refuses an
+    * existing name atomically, so of N writers racing for one name
+    * exactly one wins. Directories keep the stock rename behind an
+    * exists check.
     */
   override def rename(src: Path, dst: Path): Boolean =
-    if (exists(dst)) false else super.rename(src, dst)
+    if (exists(dst)) false
+    else {
+      val (s, d) = (FastLocalFileSystem.nio(src), FastLocalFileSystem.nio(dst))
+      if (!java.nio.file.Files.isRegularFile(s, java.nio.file.LinkOption.NOFOLLOW_LINKS))
+        super.rename(src, dst)
+      else try {
+        java.nio.file.Files.createLink(d, s)
+        java.nio.file.Files.delete(s)
+        true
+      } catch {
+        case _: java.nio.file.FileAlreadyExistsException => false
+        // no parent dir, or no hard links here: stock rename decides
+        case _: java.io.IOException | _: UnsupportedOperationException =>
+          super.rename(src, dst)
+      }
+    }
 }
 
 object FastLocalFileSystem {
@@ -99,9 +116,11 @@ object FastLocalFileSystem {
   private val DirPerm = new FsPermission(Integer.parseInt("755", 8).toShort)
   private val FilePerm = new FsPermission(Integer.parseInt("644", 8).toShort)
 
+  private[sinks] def nio(f: Path): java.nio.file.Path = java.nio.file.Paths.get(f.toUri.getPath)
+
   private def attributes(f: Path,
       options: java.nio.file.LinkOption*): java.nio.file.attribute.BasicFileAttributes =
-    try java.nio.file.Files.readAttributes(java.nio.file.Paths.get(f.toUri.getPath),
+    try java.nio.file.Files.readAttributes(nio(f),
       classOf[java.nio.file.attribute.BasicFileAttributes], options: _*)
     catch {
       case _: java.nio.file.NoSuchFileException =>
@@ -153,4 +172,18 @@ object FastLocalFileSystem {
   */
 class FastLocalFs(uri: URI, conf: Configuration)
   extends org.apache.hadoop.fs.DelegateToFileSystem(
-    uri, new FastLocalFileSystem, conf, "file", false)
+    uri, new FastLocalFileSystem, conf, "file", false) {
+
+  /** An OVERWRITE rename of a file onto a file is one rename(2), which
+    * replaces the target atomically; the stock path deletes the target
+    * first and leaves a window in which it is missing.
+    */
+  override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit = {
+    val (s, d) = (FastLocalFileSystem.nio(src), FastLocalFileSystem.nio(dst))
+    val nofollow = java.nio.file.LinkOption.NOFOLLOW_LINKS
+    if (overwrite && java.nio.file.Files.isRegularFile(s, nofollow) &&
+        java.nio.file.Files.isRegularFile(d, nofollow))
+      java.nio.file.Files.move(s, d, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    else super.renameInternal(src, dst, overwrite)
+  }
+}

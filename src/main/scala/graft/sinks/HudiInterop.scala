@@ -137,20 +137,14 @@ object HudiInterop {
       timelineInstants(fs, path, ".deltacommit")).sorted
   }
 
-  private[sinks] def writeFile(fs: FileSystem, p: Path, body: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
   private[sinks] def ensureTable(fs: FileSystem, path: String, tableName: String,
-      createGroups: Int = 1): Unit = {
+      createGroups: Int = 1, tableType: String = "COPY_ON_WRITE"): Unit = {
     val props = new Path(s"$path/$MetaDir/hoodie.properties")
-    if (!fs.exists(props)) {
-      fs.mkdirs(props.getParent)
-      writeFile(fs, props,
-        s"""#Properties saved on table creation
+    if (!fs.exists(props))
+      CommitKernel.replace(fs, props,
+        (s"""#Properties saved on table creation
            |hoodie.table.name=$tableName
-           |hoodie.table.type=COPY_ON_WRITE
+           |hoodie.table.type=$tableType
            |hoodie.table.version=6
            |hoodie.timeline.layout.version=1
            |hoodie.datasource.write.hive_style_partitioning=true
@@ -158,7 +152,32 @@ object HudiInterop {
            |""".stripMargin +
           (if (createGroups > 1)
             s"graft.hudi.num.file.groups=$createGroups\n" else ""))
-    }
+          .getBytes(StandardCharsets.UTF_8))
+  }
+
+  /** Run `instant` of `action` through Hudi's timeline states, each on
+    * the one publish path: claim `<instant>.<action>.requested` (a
+    * writer that picked the same instant loses here with
+    * ConcurrentModificationException, before it writes anything), mark
+    * it inflight, run `work`, which writes the instant's files and
+    * returns its commit metadata, then complete the instant. Completing
+    * PUBLISHES the files: a crash before it leaves invisible debris,
+    * never a partial read. The pending states go last. Returns
+    * `instant`.
+    */
+  private[sinks] def runInstant(fs: FileSystem, path: String, instant: String,
+      action: String)(work: => String): String = {
+    def publish(name: String, body: String): Unit = CommitKernel.publish(fs,
+      new Path(s"$path/$MetaDir/$instant.$name"), body.getBytes(StandardCharsets.UTF_8))
+    // the commit action's inflight carries no action infix — Hudi's own
+    // legacy spelling; every other action spells it out
+    val inflight = if (action == "commit") "inflight" else s"$action.inflight"
+    publish(s"$action.requested", "")
+    publish(inflight, "{}")
+    publish(action, work)
+    Seq(inflight, s"$action.requested").foreach(n =>
+      fs.delete(new Path(s"$path/$MetaDir/$instant.$n"), false))
+    instant
   }
 
   /** Parsed `hoodie.properties` — the table's self-description. Real
@@ -429,24 +448,26 @@ object HudiInterop {
           sorted.filter(_.instant < horizon).lastOption.toSeq).map(_.rel).toSet
         sorted.filterNot(s => keep.contains(s.rel))
       }.toSeq
-    // one batched FS pass: the doomed set is computed first, then
-    // deleted with bounded concurrency — serial per-file round trips
-    // are what makes cleaning slow on object stores (which batch
-    // deletes natively; concurrency is the portable spelling)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, math.max(1, doomed.size)))
-    val deleted = try {
-      import scala.jdk.CollectionConverters._
-      pool.invokeAll(doomed.map { s =>
-        new java.util.concurrent.Callable[Boolean] {
-          override def call(): Boolean =
-            fs.delete(new Path(s"$path/${s.rel}"), false)
-        }
-      }.asJava).asScala.count(_.get())
-    } finally pool.shutdown()
-    val instant = nextInstant(timelineInstants(fs, path, ".commit") ++
-      timelineInstants(fs, path, ".clean"))
-    writeFile(fs, new Path(s"$path/$MetaDir/$instant.clean"),
+    val instant = nextInstant(committed ++ timelineInstants(fs, path, ".clean"))
+    // one batched FS pass, run once the instant is claimed: the doomed
+    // set is computed first, then deleted with bounded concurrency —
+    // serial per-file round trips are what makes cleaning slow on object
+    // stores (which batch deletes natively; concurrency is the portable
+    // spelling)
+    lazy val deleted = {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(16, math.max(1, doomed.size)))
+      try {
+        import scala.jdk.CollectionConverters._
+        pool.invokeAll(doomed.map { s =>
+          new java.util.concurrent.Callable[Boolean] {
+            override def call(): Boolean =
+              fs.delete(new Path(s"$path/${s.rel}"), false)
+          }
+        }.asJava).asScala.count(_.get())
+      } finally pool.shutdown()
+    }
+    runInstant(fs, path, instant, "clean")(
       s"""{"earliestInstantRetained":"$horizon","filesDeleted":$deleted}""")
     deleted
   }
@@ -493,16 +514,16 @@ object HudiInterop {
     if (doomedInstants.isEmpty) return 0
     val doomedSet = doomedInstants.toSet
     val doomed = slices(fs, path).filter(s => doomedSet.contains(s.instant))
-    doomed.foreach(s => fs.delete(new Path(s"$path/${s.rel}"), false))
-    doomedInstants.foreach(i =>
-      fs.delete(new Path(s"$path/$MetaDir/$i.commit"), false))
-    val ts = nextInstant(timelineInstants(fs, path, ".commit") ++
-      timelineInstants(fs, path, ".clean") ++
+    val ts = nextInstant(committed ++ timelineInstants(fs, path, ".clean") ++
       timelineInstants(fs, path, ".restore"))
-    writeFile(fs, new Path(s"$path/$MetaDir/$ts.restore"),
+    runInstant(fs, path, ts, "restore") {
+      doomed.foreach(s => fs.delete(new Path(s"$path/${s.rel}"), false))
+      doomedInstants.foreach(i =>
+        fs.delete(new Path(s"$path/$MetaDir/$i.commit"), false))
       s"""{"restoredToInstant":"$instant",""" +
         s""""instantsRolledBack":${doomedInstants.size},""" +
-        s""""filesDeleted":${doomed.size}}""")
+        s""""filesDeleted":${doomed.size}}"""
+    }
     doomed.size
   }
 
@@ -768,22 +789,10 @@ object HudiInterop {
         timelineInstants(fs, path, ".commit.requested") ++
         timelineInstants(fs, path, ".deltacommit") ++
         timelineInstants(fs, path, ".deltacommit.requested"))
-    // timeline state transitions, in Hudi's order (the commit action's
-    // inflight carries no action infix — Hudi's own legacy spelling;
-    // deltacommit spells it out)
-    val inflight = if (action == "commit") s"$instant.inflight"
-      else s"$instant.$action.inflight"
-    writeFile(fs, new Path(s"$path/$MetaDir/$instant.$action.requested"), "")
-    writeFile(fs, new Path(s"$path/$MetaDir/$inflight"), "{}")
-    val entries = stageSlices(df, path, recordKey, precombine, partitionBy,
-      carryOver, instant, knownPairs)
-    // completing the instant PUBLISHES the slices; a crash before this
-    // leaves invisible debris, never a partial read
-    writeFile(fs, new Path(s"$path/$MetaDir/$instant.$action"),
-      writeStatsJson(entries, if (carryOver.isDefined) "UPSERT" else "INSERT"))
-    fs.delete(new Path(s"$path/$MetaDir/$inflight"), false)
-    fs.delete(new Path(s"$path/$MetaDir/$instant.$action.requested"), false)
-    instant
+    runInstant(fs, path, instant, action) {
+      writeStatsJson(stageSlices(df, path, recordKey, precombine, partitionBy,
+        carryOver, instant, knownPairs), if (carryOver.isDefined) "UPSERT" else "INSERT")
+    }
   }
 
   /** The commit-metadata `partitionToWriteStats` body for `entries` of
@@ -891,8 +900,9 @@ object HudiInterop {
       val meta = new Path(if (dir.isEmpty) new Path(path) else new Path(s"$path/$dir"),
         PartitionMeta)
       if (!fs.exists(meta))
-        writeFile(fs, meta,
-          s"#partition metadata\ncommitTime=$instant\npartitionDepth=${partitionBy.size}\n")
+        CommitKernel.replace(fs, meta,
+          s"#partition metadata\ncommitTime=$instant\npartitionDepth=${partitionBy.size}\n"
+            .getBytes(StandardCharsets.UTF_8))
     }
     staged.map { s =>
       val g = group(s.partitionValues)

@@ -589,25 +589,6 @@ object HudiMor {
     HudiInterop.requireV6Timeline(fs, path)
   }
 
-  private def ensureMorTable(fs: FileSystem, path: String, tableName: String,
-      createGroups: Int = 1): Unit = {
-    val props = new Path(s"$path/$MetaDir/hoodie.properties")
-    if (!fs.exists(props)) {
-      fs.mkdirs(props.getParent)
-      HudiInterop.writeFile(fs, props,
-        s"""#Properties saved on table creation
-           |hoodie.table.name=$tableName
-           |hoodie.table.type=MERGE_ON_READ
-           |hoodie.table.version=6
-           |hoodie.timeline.layout.version=1
-           |hoodie.datasource.write.hive_style_partitioning=true
-           |hoodie.populate.meta.fields=true
-           |""".stripMargin +
-          (if (createGroups > 1)
-            s"graft.hudi.num.file.groups=$createGroups\n" else ""))
-    }
-  }
-
   private def allInstants(fs: FileSystem, path: String): Seq[String] =
     Seq(".commit", ".commit.requested", ".deltacommit", ".deltacommit.requested",
       ".clean", ".restore")
@@ -670,7 +651,7 @@ object HudiMor {
     HudiInterop.keyCols(recordKey).foreach(k => require(
       df.schema.fieldNames.contains(k), s"missing key col $k"))
     require(df.schema.fieldNames.contains(precombine), s"missing precombine $precombine")
-    ensureMorTable(fs, path, tableName, numFileGroups)
+    HudiInterop.ensureTable(fs, path, tableName, numFileGroups, "MERGE_ON_READ")
     requireMor(fs, path, "upsert")
     val n = HudiInterop.numFileGroups(fs, path)
     // persisted: consumed up to three times (pair routing, fresh-group
@@ -724,42 +705,36 @@ object HudiMor {
       case ((d, _), fid) => liveByKey.contains((d, fid))
     }
     val instant = HudiInterop.nextInstant(allInstants(fs, path))
-    HudiInterop.writeFile(fs,
-      new Path(s"$path/$MetaDir/$instant.deltacommit.requested"), "")
-    HudiInterop.writeFile(fs,
-      new Path(s"$path/$MetaDir/$instant.deltacommit.inflight"), "{}")
-    var entries = Seq.empty[(String, String, String, Long)]
-    if (freshPairs.nonEmpty) {
-      val fresh = HudiInterop.semiJoinPairs(batch, freshPairs.keys)
-        .drop("__dir", "__bucket")
-      entries ++= HudiInterop.stageSlices(fresh, path, recordKey, precombine,
-        partitionBy, carryOver = None, instant, knownPairs = Some(freshPairs))
-    }
-    if (updatePairs.nonEmpty) {
-      val updates = HudiInterop.semiJoinPairs(batch, updatePairs.keys)
-      val targets = updatePairs.map { case ((d, b), fid) =>
-        (d, b) -> liveByKey((d, fid)) }
-      entries ++= writeLogFiles(updates, path, recordKey, targets, instant,
-        logBlockFor = { (schemaJson, rows, inst, stamped) =>
-          val schema = new Schema.Parser().parse(schemaJson)
-          val recs = rows.map { r =>
-            val rec = new GenericData.Record(schema)
-            stamped.fields.foreach { f =>
-              rec.put(f.name, toAvro(r.getAs[Any](f.name), f.dataType))
+    HudiInterop.runInstant(fs, path, instant, "deltacommit") {
+      var entries = Seq.empty[(String, String, String, Long)]
+      if (freshPairs.nonEmpty) {
+        val fresh = HudiInterop.semiJoinPairs(batch, freshPairs.keys)
+          .drop("__dir", "__bucket")
+        entries ++= HudiInterop.stageSlices(fresh, path, recordKey, precombine,
+          partitionBy, carryOver = None, instant, knownPairs = Some(freshPairs))
+      }
+      if (updatePairs.nonEmpty) {
+        val updates = HudiInterop.semiJoinPairs(batch, updatePairs.keys)
+        val targets = updatePairs.map { case ((d, b), fid) =>
+          (d, b) -> liveByKey((d, fid)) }
+        entries ++= writeLogFiles(updates, path, recordKey, targets, instant,
+          logBlockFor = { (schemaJson, rows, inst, stamped) =>
+            val schema = new Schema.Parser().parse(schemaJson)
+            val recs = rows.map { r =>
+              val rec = new GenericData.Record(schema)
+              stamped.fields.foreach { f =>
+                rec.put(f.name, toAvro(r.getAs[Any](f.name), f.dataType))
+              }
+              HudiLogFormat.encodeAvro(schema, rec)
             }
-            HudiLogFormat.encodeAvro(schema, rec)
-          }
-          LogBlock(AvroDataBlock,
-            Map(HudiLogFormat.InstantTime -> inst,
-              HudiLogFormat.SchemaKey -> schemaJson),
-            HudiLogFormat.avroDataContent(recs))
-        }, stampMeta = true)
+            LogBlock(AvroDataBlock,
+              Map(HudiLogFormat.InstantTime -> inst,
+                HudiLogFormat.SchemaKey -> schemaJson),
+              HudiLogFormat.avroDataContent(recs))
+          }, stampMeta = true)
+      }
+      HudiInterop.writeStatsJson(entries, "UPSERT")
     }
-    HudiInterop.writeFile(fs, new Path(s"$path/$MetaDir/$instant.deltacommit"),
-      HudiInterop.writeStatsJson(entries, "UPSERT"))
-    fs.delete(new Path(s"$path/$MetaDir/$instant.deltacommit.inflight"), false)
-    fs.delete(new Path(s"$path/$MetaDir/$instant.deltacommit.requested"), false)
-    instant
   }
 
   /** `foreachBatch` body for a streaming MOR upsert: each micro-batch
@@ -832,23 +807,17 @@ object HudiMor {
           s"HudiMor.delete: no completed commits in $path"))
     val filtered = HudiInterop.semiJoinPairs(batch, targets.keys)
     val instant = HudiInterop.nextInstant(allInstants(fs, path))
-    HudiInterop.writeFile(fs,
-      new Path(s"$path/$MetaDir/$instant.deltacommit.requested"), "")
-    HudiInterop.writeFile(fs,
-      new Path(s"$path/$MetaDir/$instant.deltacommit.inflight"), "{}")
-    val entries = writeLogFiles(filtered, path, recordKey, targets, instant,
-      logBlockFor = { (_, rows, inst, _) =>
-        LogBlock(DeleteBlock,
-          Map(HudiLogFormat.InstantTime -> inst),
-          HudiLogFormat.deleteContent(rows.map(r =>
-            HudiLogFormat.DeleteRecord(r.getAs[String]("__key"),
-              r.getAs[String]("__dir")))))
-      }, stampMeta = false)
-    HudiInterop.writeFile(fs, new Path(s"$path/$MetaDir/$instant.deltacommit"),
-      HudiInterop.writeStatsJson(entries, "DELETE"))
-    fs.delete(new Path(s"$path/$MetaDir/$instant.deltacommit.inflight"), false)
-    fs.delete(new Path(s"$path/$MetaDir/$instant.deltacommit.requested"), false)
-    instant
+    HudiInterop.runInstant(fs, path, instant, "deltacommit") {
+      val entries = writeLogFiles(filtered, path, recordKey, targets, instant,
+        logBlockFor = { (_, rows, inst, _) =>
+          LogBlock(DeleteBlock,
+            Map(HudiLogFormat.InstantTime -> inst),
+            HudiLogFormat.deleteContent(rows.map(r =>
+              HudiLogFormat.DeleteRecord(r.getAs[String]("__key"),
+                r.getAs[String]("__dir")))))
+        }, stampMeta = false)
+      HudiInterop.writeStatsJson(entries, "DELETE")
+    }
   }
 
   /** Log-block write tail shared by [[upsert]] and [[delete]]: stamps

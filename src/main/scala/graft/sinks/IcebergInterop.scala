@@ -50,12 +50,6 @@ object IcebergInterop {
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def writeFile(fs: FileSystem, p: Path, body: Array[Byte]): Unit = {
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(body) finally out.close()
-  }
-
   // ---- schema: Spark <-> Iceberg JSON (field-ids assigned by position) ----
 
   private def icebergType(dt: DataType): JValue = dt match {
@@ -557,18 +551,41 @@ object IcebergInterop {
   def tableExists(spark: SparkSession, path: String): Boolean =
     currentVersion(fsFor(spark, path), path).isDefined
 
+  /** The hinted version, moved past any newer metadata version that
+    * exists: a writer that crashed between publishing `v{n+1}` and
+    * rewriting the hint must not hide `v{n+1}` from readers, nor wedge
+    * every later commit on it (Iceberg's `HadoopTableOperations` rule).
+    */
   private def currentVersion(fs: FileSystem, path: String): Option[Int] = {
     val hint = new Path(s"$path/metadata/version-hint.text")
     if (!fs.exists(hint)) None
     else {
       val in = fs.open(hint)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt)
-      finally in.close()
+      var v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
+        finally in.close()
+      while (fs.exists(metadataFile(path, v + 1))) v += 1
+      Some(v)
     }
   }
 
+  private def metadataFile(path: String, version: Int): Path =
+    new Path(s"$path/metadata/v$version.metadata.json")
+
+  /** Publish `meta` as `v{version}.metadata.json` (a concurrent writer
+    * that won the version surfaces as ConcurrentModificationException),
+    * then point the version hint at it. Returns `version`.
+    */
+  private def commitMetadata(fs: FileSystem, path: String, version: Int,
+      meta: JValue): Int = {
+    CommitKernel.publish(fs, metadataFile(path, version),
+      JsonMethods.pretty(JsonMethods.render(meta)).getBytes(StandardCharsets.UTF_8))
+    CommitKernel.replace(fs, new Path(s"$path/metadata/version-hint.text"),
+      version.toString.getBytes(StandardCharsets.UTF_8))
+    version
+  }
+
   private def readMetadata(fs: FileSystem, path: String, version: Int): JValue = {
-    val in = fs.open(new Path(s"$path/metadata/v$version.metadata.json"))
+    val in = fs.open(metadataFile(path, version))
     try JsonMethods.parse(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
     finally in.close()
   }
@@ -725,11 +742,6 @@ object IcebergInterop {
     (listPath, newSeq, prevFormat)
   }
 
-  /** The shared metadata-JSON publish tail of every snapshot commit
-    * ([[commitRefs]] appends/overwrites, [[deletePositions]] delete
-    * snapshots): builds the new `vN.metadata.json` + version hint,
-    * refusing a concurrent writer's already-claimed version.
-    */
   /** v3 WRITE gate shared by every metadata publisher: reads serve v3
     * (deletion vectors included), but a commit from this writer would
     * skip v3's row-lineage assignment (first_row_id / next-row-id) and
@@ -743,6 +755,10 @@ object IcebergInterop {
         "have to assign v3 row lineage, use the owning writer")
   }
 
+  /** The metadata JSON of every snapshot commit ([[commitRefs]]
+    * appends/overwrites, [[deletePositions]] delete snapshots), built
+    * from the previous version and published by [[commitMetadata]].
+    */
   private def publishMetadata(fs: FileSystem, path: String,
       prev: Option[(Int, JValue)], schema: StructType,
       partFields: Seq[StructField], props: Map[String, String],
@@ -825,14 +841,7 @@ object IcebergInterop {
         case _ => Nil
       }) :+ JObject("timestamp-ms" -> JLong(now),
         "snapshot-id" -> JLong(snapshotId))).toList))
-    val newVersion = prev.map(_._1 + 1).getOrElse(1)
-    val metaPath = new Path(s"$path/metadata/v$newVersion.metadata.json")
-    require(!fs.exists(metaPath),
-      s"Iceberg metadata v$newVersion already exists (concurrent writer)")
-    writeFile(fs, metaPath, JsonMethods.pretty(JsonMethods.render(meta))
-      .getBytes(StandardCharsets.UTF_8))
-    writeFile(fs, new Path(s"$path/metadata/version-hint.text"),
-      newVersion.toString.getBytes(StandardCharsets.UTF_8))
+    commitMetadata(fs, path, prev.map(_._1 + 1).getOrElse(1), meta)
     snapshotId
   }
 
@@ -1814,15 +1823,7 @@ object IcebergInterop {
           "snapshot-id" -> JLong(snapshotId))): JValue)
       case other => other
     })
-    val newVersion = version + 1
-    val metaPath = new Path(s"$path/metadata/v$newVersion.metadata.json")
-    require(!fs.exists(metaPath),
-      s"Iceberg metadata v$newVersion already exists (concurrent writer)")
-    writeFile(fs, metaPath, JsonMethods.pretty(JsonMethods.render(updated))
-      .getBytes(StandardCharsets.UTF_8))
-    writeFile(fs, new Path(s"$path/metadata/version-hint.text"),
-      newVersion.toString.getBytes(StandardCharsets.UTF_8))
-    newVersion
+    commitMetadata(fs, path, version + 1, updated)
   }
 
   /** The current snapshot's ancestor chain, root-first (the streaming
@@ -2110,14 +2111,7 @@ object IcebergInterop {
       case ("snapshot-log", _) => "snapshot-log" -> (JArray(keptLog): JValue)
       case other => other
     })
-    val newVersion = version + 1
-    val metaPath = new Path(s"$path/metadata/v$newVersion.metadata.json")
-    require(!fs.exists(metaPath),
-      s"Iceberg metadata v$newVersion already exists (concurrent writer)")
-    writeFile(fs, metaPath, JsonMethods.pretty(JsonMethods.render(updated))
-      .getBytes(StandardCharsets.UTF_8))
-    writeFile(fs, new Path(s"$path/metadata/version-hint.text"),
-      newVersion.toString.getBytes(StandardCharsets.UTF_8))
+    commitMetadata(fs, path, version + 1, updated)
     (expired.size, deadFiles.size)
   }
 
@@ -2312,15 +2306,7 @@ object IcebergInterop {
     val updated = if (hadLog) updated0
       else JObject(updated0.obj :+
         ("snapshot-log" -> (JArray(List(logEntry)): JValue)))
-    val newVersion = version + 1
-    val metaPath = new Path(s"$path/metadata/v$newVersion.metadata.json")
-    require(!fs.exists(metaPath),
-      s"Iceberg metadata v$newVersion already exists (concurrent writer)")
-    writeFile(fs, metaPath, JsonMethods.pretty(JsonMethods.render(updated))
-      .getBytes(StandardCharsets.UTF_8))
-    writeFile(fs, new Path(s"$path/metadata/version-hint.text"),
-      newVersion.toString.getBytes(StandardCharsets.UTF_8))
-    newVersion
+    commitMetadata(fs, path, version + 1, updated)
   }
 
   /** Live data bytes at a snapshot from the manifests'
@@ -2467,15 +2453,7 @@ object IcebergInterop {
     })
     val updated = if (hadRefs) updated0
       else JObject(updated0.obj :+ ("refs" -> refsJson(newRefs)))
-    val newVersion = version + 1
-    val metaPath = new Path(s"$path/metadata/v$newVersion.metadata.json")
-    require(!fs.exists(metaPath),
-      s"Iceberg metadata v$newVersion already exists (concurrent writer)")
-    writeFile(fs, metaPath, JsonMethods.pretty(JsonMethods.render(updated))
-      .getBytes(StandardCharsets.UTF_8))
-    writeFile(fs, new Path(s"$path/metadata/version-hint.text"),
-      newVersion.toString.getBytes(StandardCharsets.UTF_8))
-    newVersion
+    commitMetadata(fs, path, version + 1, updated)
   }
 
   private def createRef(spark: SparkSession, path: String, name: String,
@@ -2588,14 +2566,7 @@ object IcebergInterop {
     })
     val updated = if (hadRefs) updated0
       else JObject(updated0.obj :+ ("refs" -> refsJson(newRefs)))
-    val newVersion = version + 1
-    val metaPath = new Path(s"$path/metadata/v$newVersion.metadata.json")
-    require(!fs.exists(metaPath),
-      s"Iceberg metadata v$newVersion already exists (concurrent writer)")
-    writeFile(fs, metaPath, JsonMethods.pretty(JsonMethods.render(updated))
-      .getBytes(StandardCharsets.UTF_8))
-    writeFile(fs, new Path(s"$path/metadata/version-hint.text"),
-      newVersion.toString.getBytes(StandardCharsets.UTF_8))
+    commitMetadata(fs, path, version + 1, updated)
     snapshotId
   }
 

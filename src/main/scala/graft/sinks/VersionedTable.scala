@@ -418,24 +418,13 @@ object VersionedTable {
       .map(s => readCommit(fs, s.getPath))
   }
 
-  /** Atomically publish `c` as version `c.version`: write to a temp name,
-    * rename onto the reserved filename. Rename-onto-existing fails ⇒ a
-    * concurrent writer won that version.
+  /** Publish `c` as version `c.version`; a concurrent writer that won
+    * that version surfaces as ConcurrentModificationException.
     */
-  private def publish(fs: FileSystem, path: String, c: Commit): Unit = {
-    val dst = commitPath(path, c.version)
-    fs.mkdirs(dst.getParent)
-    val tmp = new Path(dst.getParent, s".${dst.getName}.${java.util.UUID.randomUUID}.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(JsonMethods.compact(JsonMethods.render(Extraction.decompose(c)))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(dst) || !fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      throw new java.util.ConcurrentModificationException(
-        s"version ${c.version} was committed concurrently at $dst")
-    }
-  }
+  private def publish(fs: FileSystem, path: String, c: Commit): Unit =
+    CommitKernel.publish(fs, commitPath(path, c.version),
+      JsonMethods.compact(JsonMethods.render(Extraction.decompose(c)))
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Live relative file paths at a snapshot. Replays from the latest
     * checkpointed commit ≤ the snapshot, not from v1.
@@ -1097,12 +1086,6 @@ object VersionedTable {
     */
   val checkpointEvery = 10
 
-  /** Test-only injection point: runs once before the first publish
-    * attempt, after data files are staged — lets specs interleave a
-    * concurrent writer deterministically.
-    */
-  private[graft] var testRaceHook: () => Unit = () => ()
-
   /** Optimistic-concurrency commit loop. Losing a version race (rename
     * onto an existing commit file) triggers a REBASE when the commits
     * that beat us are logically disjoint: every file this commit removes
@@ -1126,7 +1109,6 @@ object VersionedTable {
       blooms: Option[Map[String, Map[String, BloomStat]]] = None,
       partitionSpec: Option[Seq[TransformSpec]] = None,
       enforcedConstraints: Option[Map[String, String]] = None): Commit = {
-    testRaceHook()
     var attempt = 0
     while (true) {
       val all = commits(fs, path)
@@ -1828,12 +1810,13 @@ object VersionedTable {
     val effPartitionCols = if (tfs.isEmpty) partitionCols else tfs.map(_.name)
     val effSource = PartitionTransforms.derive(source, tfs)
     val live = liveFiles(all)
+    // The probe doubles as the emptiness answer (an unpartitioned table
+    // has one dir, ""): an empty source merges nothing and publishes
+    // nothing.
+    val dirs = hitPartitionDirs(effSource, effPartitionCols)
+    if (dirs.isEmpty) return all.last.version
     val affected =
-      if (effPartitionCols.isEmpty) live
-      else {
-        val dirs = hitPartitionDirs(effSource, effPartitionCols)
-        live.filter(f => inDirs(f, dirs))
-      }
+      if (effPartitionCols.isEmpty) live else live.filter(f => inDirs(f, dirs))
     val targetSchema = snapshotSchema(all).getOrElse(
       spark.read.option("basePath", path)
         .parquet(live.map(f => s"$path/$f"): _*).schema)
@@ -2975,14 +2958,21 @@ object VersionedTable {
       appId: String = "graft-stream-merge"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.GraftSession.withMicroBatchDml(batch) {
-          if (!batch.isEmpty)
-            merge(batch.sparkSession, path, batch, key, partitionCols, clauses,
-              txn = Some((appId, batchId)))
-        }
+      .foreachBatch(streamBatchMerger(path, key, partitionCols, clauses, appId))
+
+  /** [[streamMerger]]'s `foreachBatch` body. No separate emptiness
+    * action: [[merge]]'s partition probe answers it, and an empty batch
+    * publishes nothing.
+    */
+  def streamBatchMerger(path: String, key: String, partitionCols: Seq[String],
+      clauses: Seq[MergeClause], appId: String): (DataFrame, Long) => Unit = {
+    (batch, batchId) =>
+      graft.GraftSession.withMicroBatchDml(batch) {
+        merge(batch.sparkSession, path, batch, key, partitionCols, clauses,
+          txn = Some((appId, batchId)))
         ()
       }
+  }
 }
 
 /** Clause evaluation shared by the WIRE-FORMAT MERGE implementations

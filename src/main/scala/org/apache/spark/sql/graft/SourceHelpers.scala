@@ -3,6 +3,8 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
 
+import graft.sinks.CommitKernel
+
 /** Shared plumbing for the graft V1 streaming sources (CDC + table tail). */
 private[graft] object SourceHelpers {
 
@@ -25,18 +27,11 @@ private[graft] object SourceHelpers {
       finally in.close()
     } else {
       val v = default
-      fs.mkdirs(marker.getParent)
-      val tmp = new org.apache.hadoop.fs.Path(marker.getParent,
-        s".${marker.getName}.${java.util.UUID.randomUUID}.tmp")
-      val out = fs.create(tmp, false)
-      try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      // losing the rename race to a concurrent constructor is fine —
+      // losing the publish race to a concurrent constructor is fine —
       // both computed the value before any offset could be logged
-      if (!fs.rename(tmp, marker) && !fs.exists(marker)) {
-        throw new java.io.IOException(s"cannot persist start version at $marker")
-      }
-      fs.delete(tmp, false)
+      try CommitKernel.publish(fs, marker,
+        v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      catch { case _: java.util.ConcurrentModificationException if fs.exists(marker) => }
       v
     }
   }
@@ -46,18 +41,10 @@ private[graft] object SourceHelpers {
     */
   def writeMarker(spark: SparkSession, metadataPath: String, name: String,
       value: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(metadataPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new org.apache.hadoop.fs.Path(metadataPath, name)
-    fs.mkdirs(marker.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(marker.getParent,
-      s".${marker.getName}.${java.util.UUID.randomUUID}.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(marker, false)
-    if (!fs.rename(tmp, marker))
-      throw new java.io.IOException(s"cannot persist marker at $marker")
+    CommitKernel.replace(
+      marker.getFileSystem(spark.sparkContext.hadoopConfiguration), marker,
+      value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   def readMarker(spark: SparkSession, metadataPath: String,

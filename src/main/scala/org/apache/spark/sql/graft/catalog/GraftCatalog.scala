@@ -15,7 +15,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, LiteralValue, Na
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sinks.{PartitionTransforms => PT, VersionedTable}
+import graft.sinks.{CommitKernel, PartitionTransforms => PT, VersionedTable}
 
 /** SQL-catalog face for graft versioned tables (the surface Delta's
   * `DeltaCatalog` provides for the reference's SQL jobs — `CREATE TABLE
@@ -331,22 +331,14 @@ private[graft] object GraftCatalog {
     try JsonMethods.parse(in).extract[Meta] finally in.close()
   }
 
-  def writeMeta(fs: FileSystem, table: Path, meta: Meta): Unit = {
-    val f = new Path(table, MetaFile)
-    fs.mkdirs(table)
-    val tmp = new Path(table, s".$MetaFile.${java.util.UUID.randomUUID}.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(JsonMethods.compact(JsonMethods.render(
-      org.json4s.Extraction.decompose(meta)))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // overwrite-rename keeps the meta file CONTINUOUSLY readable — a
-    // delete-then-rename window would hand a concurrent loadTable an
-    // empty Meta (dropping the table's partition columns mid-insert)
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(fs.makeQualified(f).toUri, fs.getConf)
-      .rename(tmp, f, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  /** Replaced whole, never deleted first: a concurrent loadTable must
+    * not see an empty Meta (dropping the table's partition columns
+    * mid-insert).
+    */
+  def writeMeta(fs: FileSystem, table: Path, meta: Meta): Unit =
+    CommitKernel.replace(fs, new Path(table, MetaFile),
+      JsonMethods.compact(JsonMethods.render(org.json4s.Extraction.decompose(meta)))
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
 }
 
 /** One graft versioned table as seen through the catalog. Reads are

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.sinks.DeltaInterop
+import graft.sinks.{CommitKernel, DeltaInterop}
 
 class DeltaInteropSpec extends SparkSpec {
   private val ss = SparkSpec.spark
@@ -249,14 +249,14 @@ class DeltaInteropSpec extends SparkSpec {
     DeltaInterop.write(sample, path, partitionBy = Seq("cat"))
     // a racer lands version 1 AFTER this writer resolved its target but
     // before it publishes — the deterministic interleaving the hook gives
-    DeltaInterop.beforePublish = () =>
+    CommitKernel.beforePublish = _ =>
       Files.write(java.nio.file.Paths.get(
         s"$path/_delta_log/${"%020d".format(1L)}.json"),
         "{\"add\":{\"path\":\"x.parquet\",\"partitionValues\":{},\"size\":1,\"modificationTime\":1,\"dataChange\":true}}\n"
           .getBytes("UTF-8"))
     try intercept[java.util.ConcurrentModificationException] {
       DeltaInterop.write(Seq((7L, "a", 7.0)).toDF("id", "cat", "v"), path, Seq("cat"))
-    } finally DeltaInterop.beforePublish = () => ()
+    } finally CommitKernel.beforePublish = _ => ()
     // the racer's commit survives untouched
     assert(scala.io.Source.fromFile(
       s"$path/_delta_log/${"%020d".format(1L)}.json", "UTF-8")

@@ -51,6 +51,20 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  test("VecMinMaxAgg skips null vector elements, as Spark's min/max skip nulls") {
+    import org.apache.spark.sql.GraftShim
+    val vecs = Seq(
+      Seq(Some(2f), None, None),
+      Seq(Some(3f), Some(5f), None),
+      Seq(None, Some(7f), None)).toDF("embedding")
+    val buf = vecs.agg(GraftShim.column(graft.functions.VecMinMaxAgg(
+        GraftShim.expression(col("embedding")), 3)
+        .toAggregateExpression()).as("mm"))
+      .collect()(0).getSeq[Float](0)
+    // a dimension only nulls reach keeps the (+Inf, -Inf) sentinels
+    assert(buf == Seq(2f, 5f, Float.PositiveInfinity, 3f, 7f, Float.NegativeInfinity), buf)
+  }
+
   test("graft_cosine matches normalized HOF dot; zero vectors give 0") {
     val vecs = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(-1.0f, 0.5f, 2.0f)),

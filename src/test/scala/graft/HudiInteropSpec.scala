@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sinks.HudiInterop
+import graft.sinks.{CommitKernel, HudiInterop}
 
 class HudiInteropSpec extends SparkSpec {
   private val ss = SparkSpec.spark
@@ -317,5 +317,26 @@ class HudiInteropSpec extends SparkSpec {
       path, "id", "ts", Seq("cat"))
     assert(HudiInterop.clean(spark, path, retainCommits = 1) > 0)
     assert(HudiInterop.read(spark, path).count() == 40)
+  }
+
+  test("an upsert racing a writer that claimed the same instant loses loudly") {
+    val path = tmp("race")
+    val i1 = HudiInterop.insert(sample, path, "id", "ts", Seq("cat"))
+    val claim = "claimed by a concurrent writer".getBytes("UTF-8")
+    var claimed: java.nio.file.Path = null
+    // the racer claims this writer's instant first
+    CommitKernel.beforePublish = dst => if (dst.getName.endsWith(".commit.requested")) {
+      CommitKernel.beforePublish = _ => ()
+      claimed = java.nio.file.Paths.get(dst.toUri.getPath)
+      Files.write(claimed, claim)
+    }
+    try intercept[java.util.ConcurrentModificationException](HudiInterop.upsert(
+      Seq((2L, "a", 99.0, 200L)).toDF("id", "cat", "v", "ts"), path, "id", "ts", Seq("cat")))
+    finally CommitKernel.beforePublish = _ => ()
+    assert(claimed != null && Files.readAllBytes(claimed).sameElements(claim),
+      "the winner's claim stays byte-identical")
+    assert(HudiInterop.completedInstants(spark, path) == Seq(i1))
+    assert(HudiInterop.read(spark, path).filter(col("id") === 2L)
+      .select("v").as[Double].collect().toSeq == Seq(20.0))
   }
 }

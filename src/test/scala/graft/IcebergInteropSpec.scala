@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.sinks.IcebergInterop
+import graft.sinks.{CommitKernel, IcebergInterop}
 
 class IcebergInteropSpec extends SparkSpec {
   private val ss = SparkSpec.spark
@@ -850,5 +850,40 @@ class IcebergInteropSpec extends SparkSpec {
     // readWhere still prunes/reads correctly through the merged manifest
     assert(IcebergInterop.readWhere(spark, path, Some(col("id") === 2L))
       .as[(Long, String)].collect().toSet == Set((2L, "y")))
+  }
+
+  test("a stale version hint is moved past: reads see the newest version, the next append follows it") {
+    val path = tmp("hint")
+    IcebergInterop.write(sample, path)
+    IcebergInterop.write(Seq((4L, "c", 40.0)).toDF("id", "cat", "v"), path)
+    // a writer that crashed after publishing v2, before rewriting the hint
+    val hint = java.nio.file.Paths.get(s"$path/metadata/version-hint.text")
+    Files.write(hint, "1".getBytes("UTF-8"))
+    assert(IcebergInterop.read(spark, path).select("id").as[Long].collect().toSet ==
+      Set(1L, 2L, 3L, 4L))
+    IcebergInterop.write(Seq((5L, "c", 50.0)).toDF("id", "cat", "v"), path)
+    assert(new java.io.File(s"$path/metadata/v3.metadata.json").exists())
+    assert(new String(Files.readAllBytes(hint), "UTF-8").trim == "3")
+    assert(IcebergInterop.read(spark, path).count() == 5)
+  }
+
+  test("an append racing a concurrent commit of the same metadata version loses loudly") {
+    val path = tmp("race")
+    IcebergInterop.write(sample, path)
+    val v2 = java.nio.file.Paths.get(s"$path/metadata/v2.metadata.json")
+    var winner: Array[Byte] = null
+    // a concurrent append lands v2 after this writer chose that name
+    CommitKernel.beforePublish = dst => if (dst.getName == "v2.metadata.json") {
+      CommitKernel.beforePublish = _ => ()
+      IcebergInterop.write(Seq((5L, "c", 50.0)).toDF("id", "cat", "v"), path)
+      winner = Files.readAllBytes(v2)
+    }
+    try intercept[java.util.ConcurrentModificationException](
+      IcebergInterop.write(Seq((4L, "c", 40.0)).toDF("id", "cat", "v"), path))
+    finally CommitKernel.beforePublish = _ => ()
+    assert(winner != null && Files.readAllBytes(v2).sameElements(winner),
+      "the winner's metadata stays byte-identical")
+    assert(IcebergInterop.read(spark, path).select("id").as[Long].collect().toSet ==
+      Set(1L, 2L, 3L, 5L))
   }
 }

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.sinks.VersionedTable
+import graft.sinks.{CommitKernel, VersionedTable}
 
 class VersionedTableSpec extends SparkSpec {
   private val ss = SparkSpec.spark
@@ -341,13 +341,15 @@ class VersionedTableSpec extends SparkSpec {
   test("concurrent commit to the same version is rejected, log stays consistent") {
     val t = table()
     VersionedTable.write(spark, t, df((1L, "a", 1L)), Seq("p"))
-    // Reserve version 2 behind the writer's back.
-    val blocker = new java.io.File(s"$t/_graft_log/v${"%020d".format(2L)}.json")
+    // Reserve version 2 behind the writer's back, once it chose that name.
     val v1 = new java.io.File(s"$t/_graft_log/v${"%020d".format(1L)}.json")
-    Files.copy(v1.toPath, blocker.toPath)
-    intercept[java.util.ConcurrentModificationException] {
-      VersionedTable.write(spark, t, df((2L, "a", 1L)), Seq("p"), mode = "append")
+    CommitKernel.beforePublish = blocker => {
+      CommitKernel.beforePublish = _ => ()
+      Files.copy(v1.toPath, java.nio.file.Paths.get(blocker.toUri.getPath))
     }
+    try intercept[java.util.ConcurrentModificationException] {
+      VersionedTable.write(spark, t, df((2L, "a", 1L)), Seq("p"), mode = "append")
+    } finally CommitKernel.beforePublish = _ => ()
   }
 
   test("concurrent writers on disjoint partitions rebase; same-partition conflict rejected") {
@@ -355,15 +357,15 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.write(spark, t, df((1L, "a", 1L), (2L, "b", 1L)), Seq("p"))
     // A concurrent append to partition b lands between our staging and
     // our commit: the upsert to partition a must rebase and win v3.
-    VersionedTable.testRaceHook = () => {
-      VersionedTable.testRaceHook = () => ()
+    CommitKernel.beforePublish = _ => {
+      CommitKernel.beforePublish = _ => ()
       VersionedTable.write(spark, t, df((5L, "b", 1L)), Seq("p"), mode = "append")
     }
     try {
       val v = VersionedTable.upsert(spark, t, df((1L, "a", 2L)),
         key = "k", precombine = "v", partitionCols = Seq("p"))
       assert(v == 3L, "rebased over the concurrent append")
-    } finally VersionedTable.testRaceHook = () => ()
+    } finally CommitKernel.beforePublish = _ => ()
     assert(VersionedTable.read(spark, t).select("k", "v").as[(Long, Long)].collect().toSet ==
       Set((1L, 2L), (2L, 1L), (5L, 1L)), "both writers' effects visible")
 
@@ -374,19 +376,19 @@ class VersionedTableSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("a", org.apache.spark.sql.types.LongType)))
     val loser = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("b", org.apache.spark.sql.types.StringType)))
-    VersionedTable.testRaceHook = () => {
-      VersionedTable.testRaceHook = () => ()
+    CommitKernel.beforePublish = _ => {
+      CommitKernel.beforePublish = _ => ()
       VersionedTable.createEmpty(spark, ct, winner)
     }
     try {
       intercept[IllegalStateException](VersionedTable.createEmpty(spark, ct, loser))
-    } finally VersionedTable.testRaceHook = () => ()
+    } finally CommitKernel.beforePublish = _ => ()
     assert(VersionedTable.tableSchema(spark, ct) == winner, "winner's schema stands")
     assert(VersionedTable.latestVersion(spark, ct) == 1L)
 
     // A concurrent rewrite of the SAME partition must be a real conflict.
-    VersionedTable.testRaceHook = () => {
-      VersionedTable.testRaceHook = () => ()
+    CommitKernel.beforePublish = _ => {
+      CommitKernel.beforePublish = _ => ()
       VersionedTable.upsert(spark, t, df((2L, "b", 9L)),
         key = "k", precombine = "v", partitionCols = Seq("p"))
     }
@@ -394,7 +396,7 @@ class VersionedTableSpec extends SparkSpec {
       intercept[java.util.ConcurrentModificationException] {
         VersionedTable.delete(spark, t, col("k") === 5L, Seq("p"))
       }
-    } finally VersionedTable.testRaceHook = () => ()
+    } finally CommitKernel.beforePublish = _ => ()
     assert(VersionedTable.read(spark, t).filter(col("k") === 2L)
       .select("v").as[Long].head() == 9L, "the winning writer's commit stands")
   }
@@ -991,14 +993,14 @@ class VersionedTableSpec extends SparkSpec {
     val t = table()
     VersionedTable.write(spark, t, df((1L, "a", 1L)), Seq("p"))
     // inject addConstraint between the writer's validation and its publish
-    VersionedTable.testRaceHook = () => {
-      VersionedTable.testRaceHook = () => ()
+    CommitKernel.beforePublish = _ => {
+      CommitKernel.beforePublish = _ => ()
       VersionedTable.addConstraint(spark, t, "v_pos", "v > 0")
     }
     try {
       intercept[java.util.ConcurrentModificationException](
         VersionedTable.write(spark, t, df((2L, "a", -5L)), Seq("p"), mode = "append"))
-    } finally VersionedTable.testRaceHook = () => ()
+    } finally CommitKernel.beforePublish = _ => ()
     // the violating row never landed; a re-run now validates and fails loudly
     assert(VersionedTable.read(spark, t).count() == 1)
     intercept[Exception](

@@ -145,4 +145,39 @@ class CommitKernelSpec extends SparkSpec {
     assert(VersionedTable.latestVersion(spark, p) == 0L)
     assert(stageDirs(p).isEmpty)
   }
+
+  test("of 8 writers publishing one name exactly one wins, and no temp file is left") {
+    val root = tmp("publish")
+    val dst = new org.apache.hadoop.fs.Path(s"$root/_log/v1.json")
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val won = try {
+      val attempts = (0 until 8).map { i =>
+        pool.submit(new java.util.concurrent.Callable[Boolean] {
+          def call(): Boolean = {
+            start.await()
+            try { CommitKernel.publish(fs, dst, s"writer $i".getBytes("UTF-8")); true }
+            catch { case _: java.util.ConcurrentModificationException => false }
+          }
+        })
+      }
+      start.countDown()
+      attempts.map(_.get()).zipWithIndex.collect { case (true, i) => i }
+    } finally pool.shutdown()
+    assert(won.size == 1, s"winners: $won")
+    assert(new String(Files.readAllBytes(new File(s"$root/_log/v1.json").toPath), "UTF-8") ==
+      s"writer ${won.head}")
+    assert(files(root) == Set("_log/v1.json"))
+  }
+
+  test("replace swaps a pointer file's content in place") {
+    val root = tmp("replace")
+    val dst = new org.apache.hadoop.fs.Path(s"$root/hint")
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    CommitKernel.replace(fs, dst, "1".getBytes("UTF-8"))
+    CommitKernel.replace(fs, dst, "2".getBytes("UTF-8"))
+    assert(new String(Files.readAllBytes(new File(s"$root/hint").toPath), "UTF-8") == "2")
+    assert(files(root) == Set("hint"))
+  }
 }

@@ -116,4 +116,30 @@ class JobBudgetSpec extends SparkSpec {
       assert(commits(format, bodyPath) == before)
     }
   }
+
+  test("graft merge body runs exactly the jobs of a direct merge; an empty batch publishes nothing") {
+    val clauses = Seq(
+      VersionedTable.MatchedUpdate(Map("v" -> col("s.v"))),
+      VersionedTable.NotMatchedInsert())
+    def table(tag: String): String = {
+      val p = tmp(s"graft-merge-$tag")
+      VersionedTable.write(spark, p, batch(Seq(1L, 2L, 3L)), Seq("cat"))
+      p
+    }
+    val bodyPath = table("body")
+    val directPath = table("direct")
+    val body = VersionedTable.streamBatchMerger(bodyPath, "id", Seq("cat"), clauses, "budget-m")
+    // a shuffled source, like a stream's batch: an emptiness action on it
+    // is a job (on a local relation it would run on the driver)
+    val src = batch(Seq(2L, 4L)).withColumn("v", col("v") + 1.0).repartition(2)
+    val viaBody = jobsOf(body(src, 0L))
+    val direct = jobsOf(graft.GraftSession.withMicroBatchDml(src)(
+      VersionedTable.merge(spark, directPath, src, "id", Seq("cat"), clauses)))
+    assert(viaBody == direct, s"body ran $viaBody jobs, the merge alone $direct")
+    // an empty batch stops at the partition probe: one job, no commit
+    val before = VersionedTable.latestVersion(spark, bodyPath)
+    val idle = jobsOf(body(empty.repartition(2), 1L))
+    assert(idle <= 1, s"empty batch ran $idle jobs")
+    assert(VersionedTable.latestVersion(spark, bodyPath) == before)
+  }
 }
