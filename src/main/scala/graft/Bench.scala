@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.GraftSparkShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: every registered query, timed end-to-end at the
@@ -24,61 +20,37 @@ import org.apache.spark.sql.SparkSession
   *  - A failing pass is reported as -1 (never its fast failure latency)
   *    and the error lands in the `errors` map — a thrown plan must not
   *    masquerade as a fast success.
-  *  - `details` carries per-query scheduler metrics from the pass that
-  *    achieved the min (jobs, tasks, summed executor run/GC time, shuffle
-  *    write, disk spill): wall-clock alone cannot distinguish "the query
-  *    does too much work" from "the host stalled the JVM", and the gap
-  *    (wall ≫ task_sec at low task counts) is the host-noise signature.
+  *  - `details` carries the [[QueryTrace]] summary of the pass that
+  *    achieved the min (jobs, tasks, summed executor run/CPU/GC time,
+  *    shuffle write, disk spill, driver time outside jobs, jobs per
+  *    label): wall-clock alone cannot distinguish "the query does too
+  *    much work" from "the host stalled the JVM", and the gap (wall ≫
+  *    task_sec at low task counts) is the host-noise signature.
   */
 object Bench {
 
-  /** Accumulates scheduler-level metrics between `reset()` calls. */
-  private final class MetricsListener extends SparkListener {
-    val jobs = new AtomicLong
-    val tasks = new AtomicLong
-    val runMs = new AtomicLong
-    val deserMs = new AtomicLong
-    val gcMs = new AtomicLong
-    val shuffleWriteBytes = new AtomicLong
-    val spillBytes = new AtomicLong
-    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      tasks.incrementAndGet()
-      val m = t.taskMetrics
-      if (m != null) {
-        runMs.addAndGet(m.executorRunTime)
-        deserMs.addAndGet(m.executorDeserializeTime)
-        gcMs.addAndGet(m.jvmGCTime)
-        shuffleWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spillBytes.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def reset(): Unit =
-      Seq(jobs, tasks, runMs, deserMs, gcMs, shuffleWriteBytes, spillBytes).foreach(_.set(0))
-    def json: String =
-      s"""{"jobs":${jobs.get},"tasks":${tasks.get},""" +
-        s""""task_sec":${runMs.get / 1e3},"deser_sec":${deserMs.get / 1e3},""" +
-        s""""gc_sec":${gcMs.get / 1e3},""" +
-        s""""shuffle_mb":${shuffleWriteBytes.get / 1e6},"spill_mb":${spillBytes.get / 1e6}}"""
+  /** Cores of the measured session: `SPARK_GRAFT_CPUS`, else the host's. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The measured session `Bench` and `tools.Profile` run on. */
+  def session(appName: String): SparkSession = {
+    val spark = GraftSession.tuned(
+      SparkSession.builder().master(s"local[$cpus]").appName(appName), cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = GraftSession.tuned(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"), cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val spark = session("graft-bench")
+    val trace = QueryTrace.attach(spark)
 
     val errors = scala.collection.mutable.Map[String, String]()
 
     // One timed pass; None on failure (recorded in `errors`, reported -1).
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Option[Double], String) = {
-      GraftSparkShim.waitListenerBusEmpty(spark.sparkContext)
-      listener.reset()
+      trace.reset()
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
@@ -88,8 +60,7 @@ object Bench {
           false
         }
       val sec = (System.nanoTime() - t0) / 1e9
-      GraftSparkShim.waitListenerBusEmpty(spark.sparkContext)
-      (if (ok) Some(sec) else None, listener.json)
+      (if (ok) Some(sec) else None, trace.snapshot().summary.json)
     }
 
     // Optional args filter ("runMain graft.Bench q_sim_lsh q_stream_csv")
@@ -111,9 +82,7 @@ object Bench {
     def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = jsonMap(warm.map { case (k, (v, _)) => k -> r3(v) })
     val details = jsonMap(warm.map { case (k, (_, d)) => k -> d })
-    val errJson = jsonMap(errors.toSeq.sortBy(_._1).map { case (k, v) =>
-      k -> ("\"" + v.replaceAll("[\"\\\\\n\r\t]", " ") + "\"")
-    })
+    val errJson = jsonMap(errors.toSeq.sortBy(_._1).map { case (k, v) => k -> Verify.quote(v) })
     val total = warm.map(_._2._1).filter(_ >= 0).sum
     val coldTotal = cold.flatMap(_._2).sum
     // Per-query times, scheduler metrics, and error details go to a SIDE

@@ -34,7 +34,8 @@ object GraftSession {
   /** Apply graft defaults to an arbitrary builder (so Verify/Bench can
     * keep their own master/memory settings).
     */
-  def tuned(builder: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
+  def tuned(builder: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = {
+    quietPlanTruncation
     localDir.foldLeft(builder)((b, d) => b.config("spark.local.dir", d))
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -122,11 +123,24 @@ object GraftSession {
       // off); the big lakehouse plans make that a measurable driver tax
       // per action (A/B on the 15-query lakehouse subset: ~4%). Bound the
       // string everywhere — diagnostics only, zero effect on what queries
-      // compute; plan evidence comes from DumpPlan/explain, which keep
-      // full text. Lives here (not in Bench) so production sessions and
-      // the bench session run identically.
+      // compute; plan evidence comes from `Profile plan`/explain, which
+      // keep full text. Lives here (not in Bench) so production sessions
+      // and the bench session run identically.
       .config("spark.sql.maxPlanStringLength", "2048")
       .config("spark.ui.enabled", "false")
+  }
+
+  /** The cap on plan strings above truncates most lakehouse plans, and
+    * StringUtils logs a WARN for every truncation: that one logger logs
+    * errors only. Spark installs its default log4j configuration on its
+    * first log call, which would drop a level set before it, so this logs
+    * through Spark once first.
+    */
+  private lazy val quietPlanTruncation: Unit = {
+    new org.apache.spark.internal.Logging { log }
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.catalyst.util.StringUtils", org.apache.logging.log4j.Level.ERROR)
+  }
 
   /** Run a foreachBatch/addBatch sink body with AQE DISABLED on the
     * batch's session. AQE executes a multi-shuffle plan stage by stage —
@@ -148,6 +162,10 @@ object GraftSession {
     * BATCH DML on full tables (the same operators called outside a
     * streaming body) keeps AQE: there, inputs are unbounded and
     * skew-splitting / coalescing are the 100 TB posture.
+    * Inside a stream body the batch's session is the stream's own clone
+    * (Spark runs each streaming query on a cloned session), so the setting
+    * reaches neither another stream nor the parent session; StreamingSpec
+    * pins this with two concurrent streams.
     */
   def withMicroBatchDml[T](batch: org.apache.spark.sql.DataFrame)(body: => T): T = {
     val spark = batch.sparkSession

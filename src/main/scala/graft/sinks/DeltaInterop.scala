@@ -594,8 +594,9 @@ object DeltaInterop {
     */
   def write(df: DataFrame, path: String, partitionBy: Seq[String] = Nil,
       overwrite: Boolean = false, txn: Option[(String, Long)] = None,
-      mergeSchema: Boolean = false): Long =
+      mergeSchema: Boolean = false): Long = graft.JobLabel(df.sparkSession, "delta.write") {
     commitStaged(df, path, partitionBy, overwrite, txn, mergeSchema = mergeSchema)
+  }
 
   /** Additive schema union for mergeSchema appends: shared columns must
     * keep their exact type (no widening — refuse loudly), batch-only
@@ -956,7 +957,8 @@ object DeltaInterop {
     * no prunable conjunct degrades to a full rewrite, visible in the
     * returned counts.
     */
-  def delete(spark: SparkSession, path: String, where: Column): DeleteResult = {
+  def delete(spark: SparkSession, path: String,
+      where: Column): DeleteResult = graft.JobLabel(spark, "delta.delete") {
     val fs = fsFor(spark, path)
     val snap = snapshot(spark, path)
     requireUnmapped(snap, "delete")
@@ -1081,7 +1083,8 @@ object DeltaInterop {
     * per-file index arrays land on the driver, bounded loudly by
     * `graft.delta.maxDvRows`.
     */
-  def deleteDv(spark: SparkSession, path: String, where: Column): DeleteResult = {
+  def deleteDv(spark: SparkSession, path: String,
+      where: Column): DeleteResult = graft.JobLabel(spark, "delta.deleteDv") {
     val fs = fsFor(spark, path)
     val snap = snapshot(spark, path)
     requireUnmapped(snap, "deleteDv")
@@ -1152,7 +1155,7 @@ object DeltaInterop {
     * Partition-column updates re-partition hive-style like [[update]].
     */
   def updateDv(spark: SparkSession, path: String, where: Column,
-      set: Map[String, Column]): DeleteResult = {
+      set: Map[String, Column]): DeleteResult = graft.JobLabel(spark, "delta.updateDv") {
     val fs = fsFor(spark, path)
     val snap = snapshot(spark, path)
     requireUnmapped(snap, "updateDv")
@@ -1238,7 +1241,7 @@ object DeltaInterop {
     * `partitionValues`.
     */
   def update(spark: SparkSession, path: String, where: Column,
-      set: Map[String, Column]): DeleteResult = {
+      set: Map[String, Column]): DeleteResult = graft.JobLabel(spark, "delta.update") {
     val fs = fsFor(spark, path)
     val snap = snapshot(spark, path)
     requireUnmapped(snap, "update")
@@ -1308,7 +1311,8 @@ object DeltaInterop {
     * `where` (the API's constraint), checked distributed and refused
     * loudly BEFORE any file moves.
     */
-  def replaceWhere(df: DataFrame, path: String, where: Column): Long = {
+  def replaceWhere(df: DataFrame, path: String,
+      where: Column): Long = graft.JobLabel(df.sparkSession, "delta.replaceWhere") {
     val spark = df.sparkSession
     val fs = fsFor(spark, path)
     val snap = snapshot(spark, path)
@@ -1383,7 +1387,7 @@ object DeltaInterop {
     */
   def merge(spark: SparkSession, path: String, source: DataFrame,
       on: Seq[String], clauses: Seq[VersionedTable.MergeClause],
-      txn: Option[(String, Long)] = None): DeleteResult = {
+      txn: Option[(String, Long)] = None): DeleteResult = graft.JobLabel(spark, "delta.merge") {
     import org.apache.spark.sql.expressions.Window
     require(clauses.nonEmpty, "DeltaInterop merge: no clauses")
     require(on.nonEmpty, "DeltaInterop merge: empty ON key list")

@@ -689,9 +689,11 @@ object HudiInterop {
 
   def insert(df: DataFrame, path: String, recordKey: String,
       precombine: String, partitionBy: Seq[String] = Nil,
-      tableName: String = "graft_table", numFileGroups: Int = 1): String =
+      tableName: String = "graft_table",
+      numFileGroups: Int = 1): String = graft.JobLabel(df.sparkSession, "hudi.insert") {
     commitSlices(df, path, recordKey, precombine, partitionBy, tableName,
       carryOver = None, createGroups = numFileGroups)
+  }
 
   /** Write-time dedup of an incoming batch by (key, precombine) —
     * Hudi's `hoodie.combine.before.insert` semantic: one row per key
@@ -721,7 +723,7 @@ object HudiInterop {
     */
   def upsert(df: DataFrame, path: String, recordKey: String,
       precombine: String, partitionBy: Seq[String] = Nil,
-      tableName: String = "graft_table"): String = {
+      tableName: String = "graft_table"): String = graft.JobLabel(df.sparkSession, "hudi.upsert") {
     val spark = df.sparkSession
     val existing = read(spark, path)
     // rewrite only the file groups holding incoming keys: on a bucketed

@@ -645,7 +645,8 @@ object HudiMor {
     */
   def upsert(df: DataFrame, path: String, recordKey: String,
       precombine: String, partitionBy: Seq[String] = Nil,
-      tableName: String = "graft_table", numFileGroups: Int = 1): String = {
+      tableName: String = "graft_table",
+      numFileGroups: Int = 1): String = graft.JobLabel(df.sparkSession, "hudi.mor.upsert") {
     val spark = df.sparkSession
     val fs = fsFor(spark, path)
     HudiInterop.keyCols(recordKey).foreach(k => require(
@@ -766,7 +767,7 @@ object HudiMor {
     * completed instant instead of writing an empty delta commit.
     */
   def delete(keys: DataFrame, path: String, recordKey: String,
-      partitionBy: Seq[String] = Nil): String = {
+      partitionBy: Seq[String] = Nil): String = graft.JobLabel(keys.sparkSession, "hudi.delete") {
     val spark = keys.sparkSession
     val fs = fsFor(spark, path)
     requireMor(fs, path, "delete")

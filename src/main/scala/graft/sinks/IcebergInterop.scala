@@ -602,7 +602,8 @@ object IcebergInterop {
     */
   def write(df: DataFrame, path: String, overwrite: Boolean = false,
       txn: Option[(String, Long)] = None,
-      partitionBy: Seq[String] = Nil, mergeSchema: Boolean = false): Long = {
+      partitionBy: Seq[String] = Nil,
+      mergeSchema: Boolean = false): Long = graft.JobLabel(df.sparkSession, "iceberg.write") {
     val spark = df.sparkSession
     val fs = fsFor(spark, path)
     val partFields = partitionBy.map { c =>
@@ -1195,7 +1196,8 @@ object IcebergInterop {
     * name-mapping readers resolve it, strict field-id-only readers
     * would not.
     */
-  def deletePositions(spark: SparkSession, path: String, where: Column): Long = {
+  def deletePositions(spark: SparkSession, path: String,
+      where: Column): Long = graft.JobLabel(spark, "iceberg.deletePositions") {
     val fs = fsFor(spark, path)
     val version = currentVersion(fs, path).getOrElse(
       throw new IllegalArgumentException(s"not an Iceberg table: $path"))
@@ -1301,7 +1303,8 @@ object IcebergInterop {
     * on. Like [[deletePositions]], the commit bumps the sequence and
     * upgrades v1 tables to format-version 2.
     */
-  def deleteEquality(spark: SparkSession, path: String, keys: DataFrame): Long = {
+  def deleteEquality(spark: SparkSession, path: String,
+      keys: DataFrame): Long = graft.JobLabel(spark, "iceberg.deleteEquality") {
     val fs = fsFor(spark, path)
     val version = currentVersion(fs, path).getOrElse(
       throw new IllegalArgumentException(s"not an Iceberg table: $path"))
@@ -1356,7 +1359,7 @@ object IcebergInterop {
     */
   def merge(spark: SparkSession, path: String, source: DataFrame,
       on: Seq[String], clauses: Seq[VersionedTable.MergeClause],
-      txn: Option[(String, Long)] = None): Long = {
+      txn: Option[(String, Long)] = None): Long = graft.JobLabel(spark, "iceberg.merge") {
     import org.apache.spark.sql.expressions.Window
     require(clauses.nonEmpty, "IcebergInterop merge: no clauses")
     require(on.nonEmpty, "IcebergInterop merge: empty ON key list")
@@ -2517,7 +2520,8 @@ object IcebergInterop {
     * Sequence numbers stay table-global per the spec. Returns the new
     * snapshot id.
     */
-  def writeToBranch(df: DataFrame, path: String, branch: String): Long = {
+  def writeToBranch(df: DataFrame, path: String,
+      branch: String): Long = graft.JobLabel(df.sparkSession, "iceberg.writeToBranch") {
     val spark = df.sparkSession
     val fs = fsFor(spark, path)
     val version = currentVersion(fs, path).getOrElse(

@@ -796,9 +796,10 @@ object VersionedTable {
     */
   def upsertMOR(spark: SparkSession, path: String, updates: DataFrame,
       key: String, precombine: String, partitionCols: Seq[String],
-      txn: Option[(String, Long)] = None): Long =
+      txn: Option[(String, Long)] = None): Long = graft.JobLabel(spark, "vt.upsertMOR") {
     morWrite(spark, path, updates, key, precombine, partitionCols, txn,
       tombstone = false)
+  }
 
   /** Shared MOR delta-write path for [[upsertMOR]] (data rows) and
     * [[deleteMOR]] (tombstone rows) — one place for txn replay, transform
@@ -890,9 +891,10 @@ object VersionedTable {
     */
   def deleteMOR(spark: SparkSession, path: String, keys: DataFrame,
       key: String, precombine: String, partitionCols: Seq[String],
-      txn: Option[(String, Long)] = None): Long =
+      txn: Option[(String, Long)] = None): Long = graft.JobLabel(spark, "vt.deleteMOR") {
     morWrite(spark, path, keys, key, precombine, partitionCols, txn,
       tombstone = true)
+  }
 
   /** Materialize live delta files into base files: merged read of JUST
     * the partitions holding deltas, rewritten as base, one commit
@@ -1199,7 +1201,7 @@ object VersionedTable {
       statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 17,
       transforms: Seq[PartitionTransforms.Transform] = Nil,
-      txn: Option[(String, Long)] = None): Long = {
+      txn: Option[(String, Long)] = None): Long = graft.JobLabel(spark, "vt.write") {
     require(mode == "overwrite" || mode == "append", s"unsupported mode: $mode")
     requireSimpleNames("partition", partitionCols)
     requireSimpleNames("stats", statsCols)
@@ -1408,7 +1410,8 @@ object VersionedTable {
 
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
       key: String, precombine: String, partitionCols: Seq[String],
-      txn: Option[(String, Long)] = None, statsCols: Seq[String] = Nil): Long = {
+      txn: Option[(String, Long)] = None,
+      statsCols: Seq[String] = Nil): Long = graft.JobLabel(spark, "vt.upsert") {
     import org.apache.spark.sql.expressions.Window
     requireSimpleNames("key/precombine", Seq(key, precombine))
     requireSimpleNames("partition", partitionCols)
@@ -1617,7 +1620,8 @@ object VersionedTable {
     * files. A partition deleted empty simply stages no replacement file.
     */
   def delete(spark: SparkSession, path: String,
-      predicate: org.apache.spark.sql.Column, partitionCols: Seq[String]): Long = {
+      predicate: org.apache.spark.sql.Column,
+      partitionCols: Seq[String]): Long = graft.JobLabel(spark, "vt.delete") {
     val fs = fsFor(spark, path)
     requireNoDeltas(commits(fs, path), "delete")
     val (upTo, live) = snapshot(fs, path, None, None)
@@ -1676,7 +1680,7 @@ object VersionedTable {
   def update(spark: SparkSession, path: String,
       set: Map[String, org.apache.spark.sql.Column],
       predicate: org.apache.spark.sql.Column,
-      partitionCols: Seq[String]): Long = {
+      partitionCols: Seq[String]): Long = graft.JobLabel(spark, "vt.update") {
     require(set.nonEmpty, "update: no assignments")
     requireSimpleNames("update", set.keys.toSeq)
     val fs = fsFor(spark, path)
@@ -1778,7 +1782,8 @@ object VersionedTable {
   def merge(spark: SparkSession, path: String, source: DataFrame,
       key: String, partitionCols: Seq[String], clauses: Seq[MergeClause],
       txn: Option[(String, Long)] = None, statsCols: Seq[String] = Nil,
-      evolveSchema: Boolean = false, extraKeyCols: Seq[String] = Nil): Long = {
+      evolveSchema: Boolean = false,
+      extraKeyCols: Seq[String] = Nil): Long = graft.JobLabel(spark, "vt.merge") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.StructType
     require(clauses.nonEmpty, "merge: no clauses")
@@ -2892,7 +2897,7 @@ object VersionedTable {
     */
   def replaceWhere(spark: SparkSession, path: String, df: DataFrame,
       predicate: org.apache.spark.sql.Column, partitionCols: Seq[String],
-      statsCols: Seq[String] = Nil): Long = {
+      statsCols: Seq[String] = Nil): Long = graft.JobLabel(spark, "vt.replaceWhere") {
     val fs = fsFor(spark, path)
     val all = commits(fs, path)
     require(all.nonEmpty, s"replaceWhere: no versioned table at $path")

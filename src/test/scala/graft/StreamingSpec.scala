@@ -444,4 +444,41 @@ class StreamingSpec extends SparkSpec {
       s"${streamed.length} vs ${batch.length}")
     assert(streamed.zip(batch).forall { case (a, b) => a == b })
   }
+
+  test("withMicroBatchDml turns AQE off for its own stream only") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.streaming.Trigger
+    val aqe = "spark.sql.adaptive.enabled"
+    val dir = java.nio.file.Files.createTempDirectory("graft-two-streams").toFile.getAbsolutePath
+    spark.range(10).toDF("id").write.parquet(s"$dir/in")
+    val held = new CountDownLatch(1) // stream a is inside withMicroBatchDml
+    val seen = new CountDownLatch(1) // stream b and the batch query have looked
+    val inA, inB = new java.util.concurrent.atomic.AtomicReference("")
+    def start(name: String)(body: DataFrame => Unit) =
+      spark.readStream.schema("id BIGINT").parquet(s"$dir/in").writeStream
+        .foreachBatch((b: DataFrame, _: Long) => body(b))
+        .option("checkpointLocation", s"$dir/ckpt-$name")
+        .trigger(Trigger.AvailableNow()).start()
+    val a = start("a") { b =>
+      GraftSession.withMicroBatchDml(b) {
+        inA.set(b.sparkSession.conf.get(aqe))
+        held.countDown()
+        assert(seen.await(60, TimeUnit.SECONDS), "stream b never looked")
+      }
+    }
+    assert(held.await(60, TimeUnit.SECONDS), "stream a never entered its body")
+    val b = start("b") { b => inB.set(b.sparkSession.conf.get(aqe)) }
+    try {
+      b.awaitTermination()
+      val plan = spark.range(100).groupBy(col("id") % 3).count().queryExecution.executedPlan
+      seen.countDown()
+      a.awaitTermination()
+      assert(inA.get == "false")
+      assert(inB.get == "true", "stream b saw stream a's AQE setting")
+      assert(spark.conf.get(aqe) == "true")
+      assert(plan.isInstanceOf[AdaptiveSparkPlanExec], s"batch query planned without AQE:\n$plan")
+    } finally { seen.countDown(); a.stop(); b.stop() }
+  }
 }

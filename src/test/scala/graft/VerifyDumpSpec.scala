@@ -58,4 +58,16 @@ class VerifyDumpSpec extends SparkSpec {
       }
     }
   }
+
+  test("a run filtered to two queries dumps and lists only those two") {
+    val two = Seq("q_enrich", "q_sessionize")
+    val dir = Files.createTempDirectory("graft-verify-two").toFile.getAbsolutePath
+    Verify.dump(spark, sf, dir, two)
+    val dumped = new java.io.File(dir).list().filterNot(_ == "oracle_sql.json").toSet
+    assert(dumped == two.toSet)
+    val oracle = new String(Files.readAllBytes(java.nio.file.Paths.get(dir, "oracle_sql.json")), "UTF-8")
+    val listed = SparkEntry.oracleSql.keys.filter(k => oracle.contains("\"" + k + "\": ")).toSet
+    assert(listed == two.filter(SparkEntry.oracleSql.contains).toSet)
+    assert(listed.nonEmpty)
+  }
 }

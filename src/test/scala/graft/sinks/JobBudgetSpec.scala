@@ -1,10 +1,7 @@
 package graft.sinks
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.GraftSparkShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -12,7 +9,7 @@ import graft.SparkSpec
 import graft.sinks.TableSink.SinkConfig
 
 /** Job budgets of the streaming sink bodies: Spark jobs started per
-  * body call, counted by a `SparkListener`. At micro-batch sizes the
+  * body call, counted by a [[graft.QueryTrace]]. At micro-batch sizes the
   * fixed cost per job is the commit's cost, so a probe action that
   * creeps back in shows here before it shows in a benchmark.
   */
@@ -24,15 +21,9 @@ class JobBudgetSpec extends SparkSpec {
     Files.createTempDirectory(s"graft-budget-$tag").toFile.getAbsolutePath + "/t"
 
   private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger()
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    GraftSparkShim.waitListenerBusEmpty(sc)
-    sc.addSparkListener(counter)
-    try { body; GraftSparkShim.waitListenerBusEmpty(sc); n.get }
-    finally sc.removeSparkListener(counter)
+    val trace = graft.QueryTrace.attach(spark)
+    try { trace.reset(); body; trace.snapshot().jobs.size }
+    finally trace.close()
   }
 
   private def batch(ids: Seq[Long]): DataFrame =
