@@ -753,7 +753,7 @@ object HudiMor {
       partitionBy: Seq[String] = Nil): (DataFrame, Long) => Unit = { (batch, _) =>
     graft.GraftSession.withMicroBatchDml(batch) {
       if (HudiInterop.completedInstants(batch.sparkSession, path).nonEmpty ||
-          !batch.isEmpty)
+          !graft.JobLabel(batch.sparkSession, "hudi.mor.upsert: empty first batch")(batch.isEmpty))
         upsert(batch, path, recordKey, precombine, partitionBy)
       ()
     }

@@ -20,8 +20,8 @@ import graft.{Bench, QueryTrace, SparkEntry}
   *    CPU and deserialization time, the progress of every micro-batch,
   *    the codegen compiles of each pass, and the `Bench` summary.
   *  - `sample <query> [sfDir] [topK]`: samples the stacks of the query
-  *    thread and of the executor task threads every 5 ms during a
-  *    measured pass, and prints the hottest collapsed stacks.
+  *    thread and of the running executor task threads every 5 ms during
+  *    a measured pass, and prints the hottest collapsed stacks.
   *  - `loop <query> [sfDir]`: runs the query until killed, for jstack.
   *  - `plan <outDir> <suffix> <query...|all>`: writes each query's
   *    formatted plan, untruncated, to `<outDir>/<query>_<suffix>.txt`.
@@ -96,8 +96,10 @@ object Profile {
     val sampler = new Thread(() =>
       while (on) {
         Thread.getAllStackTraces.asScala.foreach { case (t, st) =>
-          val who = if (t eq driver) "query"
-            else if (t.getName.startsWith("Executor task launch")) "task" else ""
+          // idle pool threads keep the task-thread name, parked: not work
+          val task = t.getState == Thread.State.RUNNABLE &&
+            t.getName.startsWith("Executor task launch")
+          val who = if (t eq driver) "query" else if (task) "task" else ""
           val frames = st.take(8).map(e => s"${e.getClassName}.${e.getMethodName}")
           if (who.nonEmpty && st.nonEmpty) counts(s"$who: " + frames.mkString(" <- ")) += 1
         }

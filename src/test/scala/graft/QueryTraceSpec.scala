@@ -30,13 +30,15 @@ class QueryTraceSpec extends SparkSpec {
     assert(sum.labels == Map("first" -> 1, "second" -> 1))
     assert(sum.tasks == 4)
     assert(sum.cpuSec > 0)
-    assert(sum.driverSec >= 0 && sum.driverSec <= s.wallSec, s"driver ${sum.driverSec} s, wall ${s.wallSec} s")
+    assert(sum.driverSec >= 0 && sum.driverSec <= s.wallSec,
+      s"driver ${sum.driverSec} s, wall ${s.wallSec} s")
     assert(sum.json.contains(""""labels":{"first":1,"second":1}"""))
   }
 
-  test("direct merges into every format and SQL MERGE INTO run no unlabeled job") {
+  test("every format's merge, SQL MERGE INTO and a MOR stream's first batch run no unlabeled job") {
     val root = Files.createTempDirectory("graft-trace").toFile.getAbsolutePath
-    val base = Seq((1L, "a", 1.0, 1L), (2L, "b", 2.0, 1L), (3L, "a", 3.0, 1L)).toDF("id", "cat", "v", "ts")
+    val base = Seq((1L, "a", 1.0, 1L), (2L, "b", 2.0, 1L), (3L, "a", 3.0, 1L))
+      .toDF("id", "cat", "v", "ts")
     val src = Seq((2L, "b", 20.0, 2L), (4L, "a", 4.0, 2L)).toDF("id", "cat", "v", "ts")
     val gone = Seq((3L, "a", 0.0, 3L)).toDF("id", "cat", "v", "ts")
     DeltaInterop.write(base, s"$root/delta", partitionBy = Seq("cat"))
@@ -62,11 +64,16 @@ class QueryTraceSpec extends SparkSpec {
       VersionedTable.deleteMOR(spark, s"$root/graft", gone, "id", "ts", Seq("cat"))
       spark.sql(s"""MERGE INTO $table t USING trace_src s ON t.id = s.id AND t.cat = s.cat
         WHEN MATCHED THEN UPDATE SET v = s.v, ts = s.ts WHEN NOT MATCHED THEN INSERT *""")
+      // a MOR stream body's empty first batch runs its one emptiness check
+      // (a local or limit-0 frame would be answered on the driver)
+      HudiMor.streamBatchUpserter(s"$root/mor-stream", "id", "ts", Seq("cat"))(
+        spark.range(0, 4, 1, 2).filter(col("id") < 0).toDF(), 0L)
     }
     assert(s.jobs.nonEmpty)
     val unlabeled = s.jobs.filter(_.label.isEmpty)
+    def stageOf(j: QueryTrace.Job) = s.stages.find(st => j.stageIds.contains(st.id)).fold("?")(_.name)
     assert(unlabeled.isEmpty, s"${unlabeled.size} of ${s.jobs.size} jobs carry no label: " +
-      unlabeled.map(j => s.stages.find(st => j.stageIds.contains(st.id)).fold("?")(_.name)).mkString("; "))
+      unlabeled.map(stageOf).mkString("; "))
     assert(spark.table(table).count() == 4)
     assert(VersionedTable.read(spark, s"$root/graft").count() == 3)
   }

@@ -468,10 +468,11 @@ class StreamingSpec extends SparkSpec {
         assert(seen.await(60, TimeUnit.SECONDS), "stream b never looked")
       }
     }
-    assert(held.await(60, TimeUnit.SECONDS), "stream a never entered its body")
-    val b = start("b") { b => inB.set(b.sparkSession.conf.get(aqe)) }
+    var b = Option.empty[org.apache.spark.sql.streaming.StreamingQuery]
     try {
-      b.awaitTermination()
+      assert(held.await(60, TimeUnit.SECONDS), "stream a never entered its body")
+      b = Some(start("b") { b => inB.set(b.sparkSession.conf.get(aqe)) })
+      b.get.awaitTermination()
       val plan = spark.range(100).groupBy(col("id") % 3).count().queryExecution.executedPlan
       seen.countDown()
       a.awaitTermination()
@@ -479,6 +480,6 @@ class StreamingSpec extends SparkSpec {
       assert(inB.get == "true", "stream b saw stream a's AQE setting")
       assert(spark.conf.get(aqe) == "true")
       assert(plan.isInstanceOf[AdaptiveSparkPlanExec], s"batch query planned without AQE:\n$plan")
-    } finally { seen.countDown(); a.stop(); b.stop() }
+    } finally { seen.countDown(); a.stop(); b.foreach(_.stop()) }
   }
 }
