@@ -277,98 +277,21 @@ object DeltaInterop {
 
   // ---- file statistics (the protocol's data-skipping columns) ----
 
-  /** Delta `add.stats`: a JSON string of per-file
-    * numRecords/minValues/maxValues/nullCount. Values are serialized in
-    * the stats JSON's value domain: numbers as numbers, strings as
-    * strings, dates as `yyyy-MM-dd`, timestamps as ISO-8601 instants.
-    * Input min/max are catalyst-internal (from [[FileStats.fromFooters]]).
-    */
-  private def statsJson(numRecords: Long,
-      cols: Seq[(StructField, FileStats.ColStats)]): String = {
-    def valueJson(v: Any, dt: DataType): JValue = dt match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        JLong(v.asInstanceOf[Number].longValue())
-      case FloatType | DoubleType => JDouble(v.asInstanceOf[Number].doubleValue())
-      case _: DecimalType => JDecimal(v.asInstanceOf[Decimal].toBigDecimal)
-      case StringType => JString(v.toString)
-      case DateType => JString(java.time.LocalDate.ofEpochDay(
-        v.asInstanceOf[Int].toLong).toString)
-      case TimestampType =>
-        val us = v.asInstanceOf[Long]
-        JString(java.time.Instant.ofEpochSecond(
-          Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L).toString)
-      case _ => JNothing
-    }
-    def sideJson(side: FileStats.ColStats => Option[Any]): JObject =
-      JObject(cols.toList.flatMap { case (f, s) =>
-        side(s).map(v => f.name -> valueJson(v, f.dataType)).filter(_._2 != JNothing)
-      })
-    JsonMethods.compact(JsonMethods.render(JObject(
-      "numRecords" -> JLong(numRecords),
-      "minValues" -> sideJson(_.min),
-      "maxValues" -> sideJson(_.max),
-      "nullCount" -> JObject(cols.toList.flatMap { case (f, s) =>
-        s.nullCount.map(n => f.name -> (JLong(n): JValue)) }))))
-  }
-
   /** `add.stats` + `partitionValues` → the pruning evaluator's shape.
     * Partition values become exact min==max stats (or all-null); data
-    * columns parse back from the stats JSON — absent or unparseable
-    * stats (foreign writers vary) simply never prune.
+    * columns parse back from the stats JSON ([[FileStats.fileStatOf]]),
+    * keyed by physical name on mapped tables.
     */
   private[graft] def fileStatOf(a: AddFile, schema: StructType,
       partCols: Seq[String]): FileStats.FileStat = {
-    def parseValue(j: JValue, dt: DataType): Option[Any] = try {
-      (j, dt) match {
-        case (JNothing, _) | (JNull, _) => None
-        case (v, ByteType | ShortType | IntegerType | LongType) =>
-          Some(v.extract[Long])
-        case (v, FloatType | DoubleType) => Some(v.extract[Double])
-        case (v, dt: DecimalType) =>
-          Some(Decimal(v.extract[BigDecimal], dt.precision, dt.scale))
-        case (JString(s), StringType) =>
-          Some(org.apache.spark.unsafe.types.UTF8String.fromString(s))
-        case (JString(s), DateType) =>
-          Some(java.time.LocalDate.parse(s).toEpochDay.toInt)
-        case (JString(s), TimestampType) =>
-          val i = java.time.Instant.parse(s)
-          Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-        case _ => None
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-    val parsed = a.stats.flatMap { s =>
-      try Some(JsonMethods.parse(s))
-      catch { case scala.util.control.NonFatal(_) => None }
-    }
-    val numRecords = parsed.flatMap(j => (j \ "numRecords").extractOpt[Long])
-    val dataCols = parsed.toSeq.flatMap { j =>
-      schema.fields.filterNot(f => partCols.contains(f.name)).flatMap { f =>
-        // mapped tables key stats by physical name
-        val k = physicalName(f)
-        val mn = parseValue(j \ "minValues" \ k, f.dataType)
-        val mx = parseValue(j \ "maxValues" \ k, f.dataType)
-        val nc = (j \ "nullCount" \ k).extractOpt[Long]
-        if (mn.isEmpty && mx.isEmpty && nc.isEmpty) None
-        else Some(f.name -> FileStats.ColStats(mn, mx, nc,
-          allNull = nc.isDefined && nc == numRecords))
-      }
-    }
-    val pvCols = partCols.flatMap { c =>
-      schema.fields.find(_.name == c).map { f =>
-        // mapped tables key partitionValues by physical name too
-        a.partitionValues.getOrElse(physicalName(f),
-            a.partitionValues.getOrElse(c, None)) match {
-          case None => c -> FileStats.ColStats(None, None, None, allNull = true)
-          case Some(raw) =>
-            val v = Option(org.apache.spark.sql.catalyst.expressions.Cast(
-              org.apache.spark.sql.catalyst.expressions.Literal(
-                org.apache.spark.unsafe.types.UTF8String.fromString(raw), StringType),
-              f.dataType, Some("UTC")).eval(null))
-            c -> FileStats.ColStats(v, v, Some(0L), allNull = v.isEmpty)
-        }
-      }
-    }
-    FileStats.FileStat(numRecords, (dataCols ++ pvCols).toMap)
+    val (parts, data) = schema.fields.toSeq.partition(f => partCols.contains(f.name))
+    val stat = a.stats.map(FileStats.fileStatOf(_, data, physicalName))
+      .getOrElse(FileStats.FileStat(None, Map.empty))
+    // mapped tables key partitionValues by physical name too
+    val pvCols = parts.map(f => f.name -> FileStats.partitionStat(
+      a.partitionValues.getOrElse(physicalName(f), a.partitionValues.getOrElse(f.name, None)),
+      f.dataType, "UTC", stat.numRecords))
+    stat.copy(cols = stat.cols ++ pvCols)
   }
 
   /** The live files a predicate can possibly match — partition values
@@ -827,8 +750,7 @@ object DeltaInterop {
     stageFiles(shaped, path, partitionBy).map { s =>
       AddFile(encodePath(s.path), s.partitionValues, s.bytes, now,
         dataChange = dataChange,
-        stats = Some(statsJson(s.rows,
-          dataSchema.fields.toSeq.flatMap(f => s.stat.cols.get(f.name).map(f -> _)))))
+        stats = Some(FileStats.statsJson(s.stat, dataSchema.fields.toSeq)))
     }
   }
 
@@ -838,7 +760,8 @@ object DeltaInterop {
     */
   private def stageFiles(df: DataFrame, path: String,
       partitionBy: Seq[String], prefix: String = ""): Seq[CommitKernel.Staged] =
-    CommitKernel.stage(df, path, StageDir, s"delta: stage files → $prefix",
+    CommitKernel.stage(df, path, StageDir,
+      if (prefix.isEmpty) "delta: stage files" else "delta: stage cdc files",
       partitionBy)(src => prefix + src.rel)
 
   /** Adopt data files that already exist OUTSIDE this table's tree as
@@ -863,8 +786,7 @@ object DeltaInterop {
     val adds = files.map { case (abs, size) =>
       val st = statsByFile.get(FileStats.canon(abs))
       AddFile(encodePath(abs), Map.empty, size, now, dataChange = true,
-        stats = st.map(s => statsJson(s.numRecords.getOrElse(0L),
-          schema.fields.toSeq.flatMap(f => s.cols.get(f.name).map(f -> _)))))
+        stats = st.map(FileStats.statsJson(_, schema.fields.toSeq)))
     }
     val meta = MetaData(java.util.UUID.randomUUID().toString,
       schema.json, Nil, Map.empty)

@@ -2,15 +2,18 @@ package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
-/** Per-data-file column statistics + conservative stats-vs-predicate
-  * pruning, shared by the lakehouse wire-format writers/readers
-  * ([[DeltaInterop]] `add.stats`, [[IcebergInterop]] manifest bounds).
+/** Per-data-file column statistics and the one stats-vs-predicate
+  * evaluator for every table log graft writes: [[DeltaInterop]]
+  * `add.stats`, [[IcebergInterop]] manifest bounds and graft's own
+  * `_graft_log` ([[VersionedTable]]), which records each file's stats
+  * in the same `add.stats` shape ([[statsJson]] / [[fileStatOf]]).
   *
   * This is the 100 TB data-skipping path: at scale the win is not
   * row-group skipping inside an opened file (the parquet reader already
@@ -25,11 +28,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * distributed re-scan ([[collect]]) remains for callers whose inputs
   * may carry untrustworthy footers and as the spec's ground truth.
   *
-  * Pruning is CONSERVATIVE by construction: only simple conjuncts of
-  * comparisons between a column and a literal participate; anything
-  * else (functions, OR trees, column-column predicates) keeps the file.
-  * Callers must still apply the full predicate to the rows — pruning
-  * may only ever drop files that cannot match.
+  * Pruning is CONSERVATIVE by construction. [[mayMatch]] walks the
+  * resolved condition: And and Or trees of comparisons, In, IsNull and
+  * IsNotNull between a column and constants are tested against the
+  * bounds, exactly ([[cmp]]). A cast on the column side is seen through
+  * only when it maps every value exactly and in order (int to bigint or
+  * to double, never bigint to double, never `cast(d as int)`). Anything
+  * else (functions, other casts, column-column predicates) keeps the
+  * file. Callers must still apply the full predicate to the rows —
+  * pruning may only ever drop files that cannot match.
   */
 object FileStats {
 
@@ -297,86 +304,188 @@ object FileStats {
   def toInternal(v: Any, dt: DataType): Any =
     CatalystTypeConverters.createToCatalystConverter(dt)(v)
 
-  // ---- predicate model ----
+  // ---- the `add.stats` codec ----
 
-  sealed trait Pred { def colName: String }
-  final case class Cmp(colName: String, op: String, value: Any) extends Pred
-  final case class InSet(colName: String, values: Seq[Any]) extends Pred
-  final case class NullCheck(colName: String, isNull: Boolean) extends Pred
-
-  private def attrName(e: Expression): Option[String] = e match {
-    case a: UnresolvedAttribute => Some(a.nameParts.last)
-    case a: Attribute => Some(a.name)
-    case _ => None
+  /** Delta's `add.stats`, also the per-file stats shape of graft's own
+    * log: a JSON object of numRecords/minValues/maxValues/nullCount for
+    * `fields`, keyed by `key(field)`. Values are written in the stats
+    * JSON's value domain, exactly: integers and decimals as JSON numbers
+    * with every digit, doubles in their shortest round-trip form,
+    * strings as strings, dates as `yyyy-MM-dd` and timestamps as
+    * ISO-8601 instants. A non-finite double records no bound.
+    */
+  def statsJson(stat: FileStat, fields: Seq[StructField],
+      key: StructField => String = _.name): String = {
+    def valueJson(v: Any, dt: DataType): JValue = (dt, v) match {
+      case (ByteType | ShortType | IntegerType | LongType, n: Number) =>
+        JLong(n.longValue())
+      case (FloatType | DoubleType, n: Number) =>
+        val d = n.doubleValue()
+        if (d.isNaN || d.isInfinite) JNothing else JDouble(d)
+      case (_: DecimalType, d: Decimal) => JDecimal(d.toBigDecimal)
+      case (StringType, s) => JString(s.toString)
+      case (DateType, d: Int) => JString(java.time.LocalDate.ofEpochDay(d.toLong).toString)
+      case (TimestampType, us: Long) =>
+        JString(java.time.Instant.ofEpochSecond(
+          Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L).toString)
+      case _ => JNothing
+    }
+    val cols = fields.toList.flatMap(f => stat.cols.get(f.name).map(f -> _))
+    def sideJson(side: ColStats => Option[Any]): JObject =
+      JObject(cols.flatMap { case (f, s) =>
+        side(s).map(v => key(f) -> valueJson(v, f.dataType)).filter(_._2 != JNothing)
+      })
+    JsonMethods.compact(JsonMethods.render(JObject(
+      "numRecords" -> JLong(stat.numRecords.getOrElse(0L)),
+      "minValues" -> sideJson(_.min),
+      "maxValues" -> sideJson(_.max),
+      "nullCount" -> JObject(cols.flatMap { case (f, s) =>
+        s.nullCount.map(n => key(f) -> (JLong(n): JValue)) }))))
   }
 
-  /** A resolved expression whose value is a compile-time constant — a
-    * bare Literal, or the analyzer's implicit Cast around one (e.g. an
-    * Int literal compared to a Long column).
+  /** [[statsJson]] back to catalyst-internal stats for `fields`, each
+    * value in its column type's internal form. Numbers parse as big
+    * decimals, so longs and decimals come back with every digit. Absent
+    * or unparseable stats (foreign writers vary) yield no entry, and no
+    * entry never prunes.
     */
-  private object Const {
-    def unapply(e: Expression): Option[Any] =
-      if (e.foldable) Some(e.eval(null)) else None
+  def fileStatOf(json: String, fields: Seq[StructField],
+      key: StructField => String = _.name): FileStat = {
+    implicit val formats: Formats = DefaultFormats
+    def parseValue(j: JValue, dt: DataType): Option[Any] = try {
+      (j, dt) match {
+        case (JNothing, _) | (JNull, _) => None
+        case (v, ByteType) => Some(v.extract[Byte])
+        case (v, ShortType) => Some(v.extract[Short])
+        case (v, IntegerType) => Some(v.extract[Int])
+        case (v, LongType) => Some(v.extract[Long])
+        case (v, FloatType) => Some(v.extract[Double].toFloat)
+        case (v, DoubleType) => Some(v.extract[Double])
+        case (v, dt: DecimalType) =>
+          Some(Decimal(v.extract[BigDecimal], dt.precision, dt.scale))
+        case (JString(s), StringType) => Some(UTF8String.fromString(s))
+        case (JString(s), DateType) => Some(java.time.LocalDate.parse(s).toEpochDay.toInt)
+        case (JString(s), TimestampType) =>
+          val i = java.time.Instant.parse(s)
+          Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
+        case _ => None
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
+    val parsed =
+      try Some(JsonMethods.parse(json, useBigDecimalForDouble = true))
+      catch { case scala.util.control.NonFatal(_) => None }
+    val numRecords = parsed.flatMap(j => (j \ "numRecords").extractOpt[Long])
+    val cols = parsed.toSeq.flatMap { j =>
+      fields.flatMap { f =>
+        val k = key(f)
+        val mn = parseValue(j \ "minValues" \ k, f.dataType)
+        val mx = parseValue(j \ "maxValues" \ k, f.dataType)
+        val nc = (j \ "nullCount" \ k).extractOpt[Long]
+        if (mn.isEmpty && mx.isEmpty && nc.isEmpty) None
+        else Some(f.name -> ColStats(mn, mx, nc, allNull = nc.isDefined && nc == numRecords))
+      }
+    }
+    FileStat(numRecords, cols.toMap)
   }
 
-  /** Resolve `where` against the table schema (an empty relation — the
-    * analyzer types the literals and inserts the implicit casts, so a
-    * pruning comparison runs in exactly the domain the row filter
-    * would), then keep the conjuncts this evaluator understands;
-    * everything else is silently non-pruning (the caller re-applies the
-    * full predicate to rows).
+  /** A hive-style partition value (`None` is null) of a file holding
+    * `rows` rows as exact stats: min == max, or all-null. The string
+    * casts to `dt` as the reader casts it, in time zone `tz`.
     */
-  def prunablePreds(spark: SparkSession, schema: StructType,
-      where: Column): Seq[Pred] = {
-    val analyzed = org.apache.spark.sql.GraftShim.analyzed(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema).filter(where))
-    val condition = analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+  def partitionStat(raw: Option[String], dt: DataType, tz: String,
+      rows: Option[Long]): ColStats =
+    raw match {
+      case None => ColStats(None, None, rows, allNull = true)
+      case Some(s) =>
+        val v = Option(Cast(Literal(UTF8String.fromString(s), StringType), dt, Some(tz))
+          .eval(null))
+        ColStats(v, v, Some(0L), allNull = v.isEmpty)
     }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
-    condition.toSeq.flatMap(conjuncts).flatMap {
-      case EqualTo(a, Const(v)) => attrName(a).map(Cmp(_, "=", v))
-      case EqualTo(Const(v), a) => attrName(a).map(Cmp(_, "=", v))
-      case LessThan(a, Const(v)) => attrName(a).map(Cmp(_, "<", v))
-      case LessThan(Const(v), a) => attrName(a).map(Cmp(_, ">", v))
-      case LessThanOrEqual(a, Const(v)) => attrName(a).map(Cmp(_, "<=", v))
-      case LessThanOrEqual(Const(v), a) => attrName(a).map(Cmp(_, ">=", v))
-      case GreaterThan(a, Const(v)) => attrName(a).map(Cmp(_, ">", v))
-      case GreaterThan(Const(v), a) => attrName(a).map(Cmp(_, "<", v))
-      case GreaterThanOrEqual(a, Const(v)) => attrName(a).map(Cmp(_, ">=", v))
-      case GreaterThanOrEqual(Const(v), a) => attrName(a).map(Cmp(_, "<=", v))
-      case In(a, vs) if vs.forall(_.foldable) =>
-        attrName(a).map(InSet(_, vs.map(_.eval(null))))
-      case IsNull(a) => attrName(a).map(NullCheck(_, isNull = true))
-      case IsNotNull(a) => attrName(a).map(NullCheck(_, isNull = false))
+
+  // ---- the skipping evaluator ----
+
+  /** `where` resolved against `schema`: the analyzer types the literals
+    * and inserts the implicit casts, so a stats test runs in exactly
+    * the domain the row filter does. No data is touched.
+    */
+  def condition(spark: SparkSession, schema: StructType, where: Column): Expression =
+    org.apache.spark.sql.GraftShim.analyzed(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        .filter(where))
+      .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
+      .getOrElse(Literal.TrueLiteral)
+
+  /** A column reference, seen through casts that map every value of the
+    * column exactly and in order: a bound of the column is then a bound
+    * of the cast. Any other cast (`cast(d as int)`, bigint to double)
+    * is not a column here, so it never prunes.
+    */
+  private object Attr {
+    def unapply(e: Expression): Option[String] = e match {
+      case a: Attribute => Some(a.name)
+      case c: Cast if exactCast(c.child.dataType, c.dataType) => unapply(c.child)
       case _ => None
     }
   }
 
-  /** Could any row of a file with `stat` match every pred? Missing
-    * stats for a column ⇒ that pred cannot prune. Null literals never
-    * prune (SQL null comparison semantics stay with the row filter).
+  private def exactCast(from: DataType, to: DataType): Boolean = {
+    def digits(dt: DataType): Option[Int] = dt match {
+      case ByteType => Some(3)
+      case ShortType => Some(5)
+      case IntegerType => Some(10)
+      case LongType => Some(20)
+      case _ => None
+    }
+    (from, to) match {
+      case (ByteType | ShortType, IntegerType | LongType | FloatType | DoubleType) => true
+      case (ByteType, ShortType) => true
+      case (IntegerType, LongType | DoubleType) => true
+      case (FloatType, DoubleType) => true
+      case (f: DecimalType, t: DecimalType) =>
+        t.scale >= f.scale && t.precision - t.scale >= f.precision - f.scale
+      case (f, t: DecimalType) => digits(f).exists(_ <= t.precision - t.scale)
+      case _ => false
+    }
+  }
+
+  /** A constant: a literal or a foldable expression over literals (the
+    * analyzer's cast of one), evaluated to its catalyst-internal value.
     */
-  def mayMatch(preds: Seq[Pred], stat: FileStat): Boolean = preds.forall {
-    case NullCheck(c, wantNull) => stat.cols.get(c) match {
-      case None => true
-      case Some(s) if wantNull => s.allNull || s.nullCount.forall(_ > 0)
-      case Some(s) => !s.allNull
-    }
-    case Cmp(_, _, null) => true
-    case Cmp(c, op, v) => stat.cols.get(c) match {
-      case None => true
-      case Some(s) if s.allNull => false
-      case Some(s) => rangeMayMatch(op, v, s)
-    }
-    case InSet(c, vs) => stat.cols.get(c) match {
-      case None => true
-      case Some(s) if s.allNull => false
-      case Some(s) => vs.exists(v => v != null && rangeMayMatch("=", v, s))
+  private object Const {
+    def unapply(e: Expression): Option[Any] =
+      if (e.foldable) scala.util.Try(e.eval(null)).toOption else None
+  }
+
+  /** Could any row of a file with `stat` satisfy the resolved
+    * `condition`? And, Or, the five comparisons, In, IsNull and
+    * IsNotNull between a column and constants are tested against the
+    * file's bounds and null counts through [[cmp]]; anything else, a
+    * column without stats, or a null constant keeps the file.
+    */
+  def mayMatch(condition: Expression, stat: FileStat): Boolean = {
+    def range(c: String, op: String, v: Any): Boolean =
+      v == null || stat.cols.get(c).forall(s => !s.allNull && rangeMayMatch(op, v, s))
+    condition match {
+      case And(l, r) => mayMatch(l, stat) && mayMatch(r, stat)
+      case Or(l, r) => mayMatch(l, stat) || mayMatch(r, stat)
+      case EqualTo(Attr(c), Const(v)) => range(c, "=", v)
+      case EqualTo(Const(v), Attr(c)) => range(c, "=", v)
+      case LessThan(Attr(c), Const(v)) => range(c, "<", v)
+      case LessThan(Const(v), Attr(c)) => range(c, ">", v)
+      case LessThanOrEqual(Attr(c), Const(v)) => range(c, "<=", v)
+      case LessThanOrEqual(Const(v), Attr(c)) => range(c, ">=", v)
+      case GreaterThan(Attr(c), Const(v)) => range(c, ">", v)
+      case GreaterThan(Const(v), Attr(c)) => range(c, "<", v)
+      case GreaterThanOrEqual(Attr(c), Const(v)) => range(c, ">=", v)
+      case GreaterThanOrEqual(Const(v), Attr(c)) => range(c, "<=", v)
+      case In(Attr(c), vs) if vs.forall(_.foldable) =>
+        val values = vs.map(Const.unapply)
+        values.exists(_.isEmpty) || stat.cols.get(c).forall(s => !s.allNull &&
+          values.flatten.exists(v => v != null && rangeMayMatch("=", v, s)))
+      case IsNull(Attr(c)) =>
+        stat.cols.get(c).forall(s => s.allNull || s.nullCount.forall(_ > 0))
+      case IsNotNull(Attr(c)) => stat.cols.get(c).forall(!_.allNull)
+      case _ => true
     }
   }
 
@@ -395,20 +504,31 @@ object FileStats {
     }
   }
 
-  /** Compare two catalyst-internal values; None (no pruning) when the
-    * pair is not comparable. Numerics widen through BigDecimal so an
-    * IntegerType literal ranges against a LongType column.
+  /** Compare two catalyst-internal values exactly; None (no pruning)
+    * when the pair is not comparable. Numbers compare by their exact
+    * values, whatever their types: a long above 2^53 against a double
+    * bound, an int against a decimal. NaN compares with nothing.
+    * Strings compare in UTF8String byte order, the order parquet
+    * collects their bounds in.
     */
   def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (x: Number, y: Number) =>
-      Some(BigDecimal(x.toString).compare(BigDecimal(y.toString)))
-    case (x: Decimal, y) => cmp(x.toBigDecimal.underlying(), y)
-    case (x, y: Decimal) => cmp(x, y.toBigDecimal.underlying())
     case (x: UTF8String, y: UTF8String) => Some(x.compareTo(y))
-    case (x: UTF8String, y: String) => Some(x.toString.compareTo(y))
-    case (x: String, y: UTF8String) => Some(x.compareTo(y.toString))
-    case (x: String, y: String) => Some(x.compareTo(y))
-    case (x: Boolean, y: Boolean) => Some(x.compareTo(y))
+    case _ => (exact(a), exact(b), a, b) match {
+      case (Some(x), Some(y), _, _) => Some(x.compareTo(y))
+      // an infinity orders against any other number by their doubles
+      case (_, _, x: Number, y: Number) if !x.doubleValue.isNaN && !y.doubleValue.isNaN =>
+        Some(java.lang.Double.compare(x.doubleValue, y.doubleValue))
+      case _ => None
+    }
+  }
+
+  private def exact(v: Any): Option[java.math.BigDecimal] = v match {
+    case d: Decimal => Some(d.toJavaBigDecimal)
+    case x @ (_: java.lang.Double | _: java.lang.Float) =>
+      val d = x.asInstanceOf[Number].doubleValue
+      if (d.isNaN || d.isInfinite) None else Some(new java.math.BigDecimal(d))
+    case x @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short | _: java.lang.Byte) =>
+      Some(java.math.BigDecimal.valueOf(x.asInstanceOf[Number].longValue))
     case _ => None
   }
 
@@ -420,12 +540,9 @@ object FileStats {
       files: Seq[A], statOf: A => FileStat): (Seq[A], Int) = where match {
     case None => (files, 0)
     case Some(w) =>
-      val preds = prunablePreds(spark, schema, w)
-      if (preds.isEmpty) (files, 0)
-      else {
-        val kept = files.filter(f => mayMatch(preds, statOf(f)))
-        (kept, files.size - kept.size)
-      }
+      val cond = condition(spark, schema, w)
+      val kept = files.filter(f => mayMatch(cond, statOf(f)))
+      (kept, files.size - kept.size)
   }
 
   /** Outcome of [[keyEnvelope]]: can the source's join keys be turned

@@ -311,7 +311,10 @@ object VersionedTable {
       // refuses any floor that would change the resolved delta set.
       checkpointDeltas: Option[Seq[DeltaEntry]] = None,
       schemaJson: Option[String] = None,
-      stats: Option[Map[String, FileStat]] = None,
+      // Per file: its `add.stats` JSON (FileStats.statsJson), typed by
+      // the table schema in effect at this commit. Logs written before
+      // that shape carry a JSON object instead (see statsOf).
+      stats: Option[Map[String, JValue]] = None,
       deltaAdds: Option[Seq[String]] = None,
       // Delta files RE-added by a restore, keeping the version of the
       // commit that ORIGINALLY added them — reassigning them the restore
@@ -376,16 +379,6 @@ object VersionedTable {
 
   // (every table op now composes with hidden partitioning — the former
   // requireNoTransforms guard has no remaining callers)
-
-  /** Per-file column statistics for data skipping, split by type so the
-    * JSON round trip stays typed (numerics compared as Double, strings
-    * lexicographically — parquet's own ordering for both).
-    */
-  private[graft] final case class FileStat(
-      rows: Long,
-      minNum: Map[String, Double], maxNum: Map[String, Double],
-      minStr: Map[String, String], maxStr: Map[String, String],
-      nulls: Option[Map[String, Long]] = None)
 
   /** Per-file, per-column bloom filter recorded in the log for equality /
     * IN pruning on high-cardinality columns min/max can't skip. `dt` pins
@@ -515,17 +508,6 @@ object VersionedTable {
   private def dirOf(f: String): String =
     f.lastIndexOf('/') match { case -1 => ""; case i => f.substring(0, i) }
 
-  /** Compare strings the way Spark collected the min/max stats: UTF8String
-    * byte-wise (UTF-8) order. Java String '<' is UTF-16 code-unit order —
-    * the two diverge for supplementary characters vs U+E000..U+FFFF, and
-    * a pruning/bypass decision under the wrong order drops live rows.
-    */
-  private def strLt(a: String, b: String): Boolean =
-    org.apache.spark.unsafe.types.UTF8String.fromString(a)
-      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
-
-  private def strLe(a: String, b: String): Boolean = !strLt(b, a)
-
   /** Base files that provably hold NO key a delta file in the same dir
     * could update: their recorded key range misses every delta file's
     * range (log stats only, zero I/O). They stream AROUND the MOR
@@ -537,29 +519,17 @@ object VersionedTable {
     * readPruned path already relies on): a range-disjoint file's rows
     * collapse to themselves.
     */
-  private def morBypass(idx: Map[String, FileStat], base: Seq[String],
+  private def morBypass(idx: Map[String, FileStats.FileStat], base: Seq[String],
       deltas: Seq[String], key: String): Set[String] = {
-    type Range = Either[(Double, Double), (String, String)]
-    def range(f: String): Option[Range] = idx.get(f).flatMap { s =>
-      (s.minNum.get(key), s.maxNum.get(key), s.minStr.get(key), s.maxStr.get(key)) match {
-        case (Some(lo), Some(hi), _, _) => Some(Left((lo, hi)))
-        case (_, _, Some(lo), Some(hi)) => Some(Right((lo, hi)))
-        case _ => None
-      }
-    }
+    def range(f: String): Option[(Any, Any)] =
+      idx.get(f).flatMap(_.cols.get(key)).flatMap(s => s.min.zip(s.max))
     // null keys are invisible to min/max: a base file may only bypass
     // when the log PROVES it has none (delta null keys then can't match)
     def noNullKeys(f: String): Boolean = provenNoNullKeys(idx, f, key)
-    // String ranges MUST compare in the order the stats were collected
-    // under — Spark's UTF8String byte-wise order, not Java's UTF-16
-    // code-unit order (they diverge once supplementary characters mix
-    // with U+E000..U+FFFF, and a wrong order here un-merges a live key).
-    def disjoint(a: Range, b: Range): Boolean = (a, b) match {
-      case (Left((alo, ahi)), Left((blo, bhi))) => ahi < blo || bhi < alo
-      case (Right((alo, ahi)), Right((blo, bhi))) =>
-        strLt(ahi, blo) || strLt(bhi, alo)
-      case _ => false
-    }
+    // FileStats.cmp orders exactly (strings in the UTF8String byte order
+    // the bounds were collected in); an incomparable pair is not disjoint
+    def disjoint(a: (Any, Any), b: (Any, Any)): Boolean =
+      FileStats.cmp(a._2, b._1).exists(_ < 0) || FileStats.cmp(b._2, a._1).exists(_ < 0)
     val deltaRangesByDir = deltas.groupBy(dirOf).view.mapValues(_.map(range)).toMap
     base.filter { f =>
       deltaRangesByDir.get(dirOf(f)) match {
@@ -585,8 +555,9 @@ object VersionedTable {
     * invisible to min/max AND to value probes, so both bypass proofs
     * require this (a null base key could collapse with a null delta key).
     */
-  private def provenNoNullKeys(idx: Map[String, FileStat], f: String, key: String): Boolean =
-    idx.get(f).exists(_.nulls.exists(_.get(key).contains(0L)))
+  private def provenNoNullKeys(idx: Map[String, FileStats.FileStat], f: String,
+      key: String): Boolean =
+    idx.get(f).flatMap(_.cols.get(key)).exists(_.nullCount.contains(0L))
 
   /** Second-chance bypass for base files the RANGE test could not clear:
     * when the table bloom-indexes the merge key and the touched dirs'
@@ -601,7 +572,7 @@ object VersionedTable {
     */
   private def morBloomBypass(spark: SparkSession, path: String,
       candidates: Seq[String], deltasByDir: Map[String, Seq[String]],
-      key: String, keyDt: Option[String], idx: Map[String, FileStat],
+      key: String, keyDt: Option[String], idx: Map[String, FileStats.FileStat],
       bIdx: Map[String, Map[String, BloomStat]]): Set[String] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     val withBloom = candidates.filter(f =>
@@ -612,7 +583,7 @@ object VersionedTable {
     var budget = MorBloomProbeTotalKeys
     val eligibleDirs = withBloom.map(dirOf).distinct.sorted.filter { d =>
       val dfs = deltasByDir.getOrElse(d, Nil)
-      val rows = dfs.map(f => idx.get(f).map(_.rows).getOrElse(Long.MaxValue)).sum
+      val rows = dfs.map(f => idx.get(f).flatMap(_.numRecords).getOrElse(Long.MaxValue)).sum
       val ok = dfs.nonEmpty && rows >= 0 && rows <= morBloomProbeMaxKeys &&
         rows <= budget
       if (ok) budget -= rows
@@ -663,7 +634,7 @@ object VersionedTable {
       restrictDirs: Option[Set[String]] = None,
       schemaOverride: Option[org.apache.spark.sql.types.StructType] = None,
       baseKeep: Option[Set[String]] = None,
-      statsIdx: Option[Map[String, FileStat]] = None): Option[DataFrame] = {
+      statsIdx: Option[Map[String, FileStats.FileStat]] = None): Option[DataFrame] = {
     import org.apache.spark.sql.expressions.Window
     def keep(f: String) = restrictDirs.forall(_.contains(dirOf(f)))
     // baseKeep (stats/bloom skipping) applies ONLY to base files, and
@@ -856,8 +827,7 @@ object VersionedTable {
     // empty delta file to break the bypass for its dir
     if (staged.isEmpty) return if (all.isEmpty) 0L else all.last.version
     // key min/max per delta file (footer route)
-    val stats = collectStats(spark, path, staged,
-      (key +: activeStatsCols(all)).distinct)
+    val stats = logStats(staged, (key +: activeStatsCols(all)).distinct) _
     val c = publishWithRebase(fs, path, op, Nil, Nil, token,
       // tombstones never evolve the logical schema; data rows merge
       // additively
@@ -929,8 +899,7 @@ object VersionedTable {
     publishWithRebase(fs, path, "compact_deltas", adds,
       (affectedBase ++ deltas).distinct, txn = None,
       schemaOf = _ => None, allowRebase = true,
-      stats = collectStats(spark, path, staged,
-        (statsCols ++ activeStatsCols(all)).distinct),
+      stats = logStats(staged, (statsCols ++ activeStatsCols(all)).distinct),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(all))).version
   }
 
@@ -1104,7 +1073,7 @@ object VersionedTable {
       adds: Seq[String], removes: Seq[String], txn: Option[Txn],
       schemaOf: Seq[Commit] => Option[org.apache.spark.sql.types.StructType],
       allowRebase: Boolean, maxRetries: Int = 5,
-      stats: Option[Map[String, FileStat]] = None,
+      stats: org.apache.spark.sql.types.StructType => Option[Map[String, JValue]] = _ => None,
       deltaAdds: Seq[String] = Nil, mor: Option[MorSpec] = None,
       deltaReadds: Seq[DeltaEntry] = Nil,
       constraints: Option[Map[String, String]] = None,
@@ -1160,9 +1129,11 @@ object VersionedTable {
       val ckptDeltas = ckpt.map(_ =>
         liveDeltaEntries(all).filterNot(e => removes.contains(e.file)) ++
           deltaAdds.map(DeltaEntry(_, version)) ++ deltaReadds)
+      val schema = schemaOf(all)
       val c0 = Commit(version, System.currentTimeMillis(), op, adds, removes,
         ckpt, txn, checkpointDeltas = ckptDeltas,
-        schemaJson = schemaOf(all).map(_.json), stats = stats,
+        schemaJson = schema.map(_.json),
+        stats = schema.orElse(snapshotSchema(all)).flatMap(stats),
         deltaAdds = if (deltaAdds.isEmpty) None else Some(deltaAdds), mor = mor,
         deltaReadds = if (deltaReadds.isEmpty) None else Some(deltaReadds),
         constraints = constraints, blooms = blooms, partitionSpec = partitionSpec)
@@ -1247,8 +1218,7 @@ object VersionedTable {
     require(staged.nonEmpty || stagePartCols.isEmpty,
       "stage: write produced no data files")
     val adds = staged.map(_.path)
-    val stats = collectStats(spark, path, staged,
-      (statsCols ++ activeStatsCols(existing)).distinct)
+    val stats = logStats(staged, (statsCols ++ activeStatsCols(existing)).distinct) _
     val blooms = collectBlooms(spark, path, adds,
       activeBloomBits(existing) ++ bloomCols.map(_ -> bloomBits))
     val removes =
@@ -1469,8 +1439,7 @@ object VersionedTable {
       schemaOf = all => Some(snapshotSchema(all)
         .map(mergeSchemas(_, updates.schema)).getOrElse(evolved)),
       allowRebase = true,
-      stats = collectStats(spark, path, staged,
-        (statsCols ++ activeStatsCols(all)).distinct),
+      stats = logStats(staged, (statsCols ++ activeStatsCols(all)).distinct),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(all)),
       enforcedConstraints = Some(enforcedSet))
     c.version
@@ -1664,7 +1633,7 @@ object VersionedTable {
     val adds = staged.map(_.path)
     val c = publishWithRebase(fs, path, "delete", adds, affected, txn = None,
       schemaOf = _ => None, allowRebase = true,
-      stats = collectStats(spark, path, staged, activeStatsCols(upTo)),
+      stats = logStats(staged, activeStatsCols(upTo)),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(upTo)))
     c.version
   }
@@ -1728,7 +1697,7 @@ object VersionedTable {
     val adds = staged.map(_.path)
     publishWithRebase(fs, path, "update", adds, affected, txn = None,
       schemaOf = _ => None, allowRebase = true,
-      stats = collectStats(spark, path, staged, activeStatsCols(upTo)),
+      stats = logStats(staged, activeStatsCols(upTo)),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(upTo)),
       enforcedConstraints = Some(enforcedSet)).version
   }
@@ -1899,126 +1868,29 @@ object VersionedTable {
           Some(snapshotSchema(all).map(mergeSchemas(_, source.schema)).getOrElse(outSchema))
         else None,
       allowRebase = true,
-      stats = collectStats(spark, path, staged,
-        (statsCols ++ activeStatsCols(all)).distinct),
+      stats = logStats(staged, (statsCols ++ activeStatsCols(all)).distinct),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(all)),
       enforcedConstraints = Some(enforcedSet))
     c.version
   }
 
-  /** Per-file min/max/nullCount for the commit's stats columns — the
-    * FOOTER route (guide §6; the same move [[DeltaInterop]]'s stageAdds
-    * makes): the staged writer already computed per-chunk statistics,
-    * and re-scanning the commit to recompute them cost one distributed
-    * job per commit (2-3 AQE-stage jobs of pure fixed latency at any
-    * commit size, plus a full re-read of the commit's data bytes at
-    * 100 TB). Footers are KBs per file, read on a driver thread pool.
-    *
-    * Bounds semantics are unchanged where it matters: parquet binary
-    * bounds may be truncated (min rounds DOWN, max rounds UP), and a
-    * chunk without trustworthy stats yields no bounds — both only WIDEN
-    * a file's range, and every consumer ([[morBypass]], [[mayMatch]])
-    * treats ranges conservatively. Numeric bounds are exact. Falls back
-    * to the distributed re-scan when a stats column is not present in
-    * the data file footers (e.g. a partition column, whose value lives
-    * in the directory name, or an exotic type the scan route supports).
-    * The footers are the ones the staging pass already read.
+  /** The log's stats for `statsCols` of a staged write, typed by the
+    * commit's table schema: each file's footer stats, which the staging
+    * pass already read ([[CommitKernel.Staged]]), and for a partition
+    * column the file's directory value (min == max). No Spark job runs.
+    * Parquet may truncate string bounds (min rounds down, max rounds
+    * up), which only widens a file's range.
     */
-  private[graft] def collectStats(spark: SparkSession, path: String,
-      staged: Seq[CommitKernel.Staged],
-      statsCols: Seq[String]): Option[Map[String, FileStat]] = {
-    if (statsCols.isEmpty || staged.isEmpty) return None
-    val rels = staged.map(_.path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    // Routing on rels.head's footer alone is sound here: every call site
-    // passes files STAGED BY ONE WRITE (a single df.write), so all files
-    // of a commit share the writer's schema. If a divergent file ever
-    // slipped in, readFooterStats degrades per file to "no bounds for
-    // the missing column" — conservative (pruning keeps the file), never
-    // wrong.
-    val fileSchema =
-      try FileStats.footerSchema(conf, s"$path/${rels.head}")
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          return collectStatsScan(spark, path, rels, statsCols)
-      }
-    val wanted = statsCols.distinct
-    if (!wanted.forall(fileSchema.fieldNames.contains))
-      return collectStatsScan(spark, path, rels, statsCols)
-    val fieldOf = fileSchema.fields.map(f => f.name -> f).toMap
-    // same column eligibility as the scan route: numerics as Double,
-    // strings lexicographic (parquet's unsigned byte order = Spark's
-    // UTF8String order); other types record no bounds
-    val numCols = wanted.filter(c =>
-      fieldOf(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-    val strCols = wanted.filter(c =>
-      fieldOf(c).dataType == org.apache.spark.sql.types.StringType)
-    val allStatCols = numCols ++ strCols
-    if (allStatCols.isEmpty) return None
-    def asDouble(v: Any): Option[Double] = v match {
-      case n: java.lang.Number => Some(n.doubleValue())
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case _ => None
-    }
-    Some(staged.map { case CommitKernel.Staged(rel, _, _, st) =>
-      def bounds(c: String): Option[(Any, Any)] = st.cols.get(c).flatMap { s =>
-        (s.min, s.max) match {
-          case (Some(a), Some(b)) => Some((a, b))
-          case _ => None
-        }
-      }
-      val numBounds = numCols.flatMap(c => bounds(c).flatMap { case (a, b) =>
-        (asDouble(a), asDouble(b)) match {
-          case (Some(lo), Some(hi)) => Some(c -> (lo, hi))
-          case _ => None
-        }
-      })
-      val strBounds = strCols.flatMap(c => bounds(c).collect {
-        case (a: org.apache.spark.unsafe.types.UTF8String,
-            b: org.apache.spark.unsafe.types.UTF8String) =>
-          c -> (a.toString, b.toString)
-      })
-      val nulls = allStatCols.flatMap(c =>
-        st.cols.get(c).flatMap(_.nullCount).map(c -> _)).toMap
-      rel -> FileStat(st.numRecords.getOrElse(0L),
-        numBounds.map { case (c, (lo, _)) => c -> lo }.toMap,
-        numBounds.map { case (c, (_, hi)) => c -> hi }.toMap,
-        strBounds.map { case (c, (lo, _)) => c -> lo }.toMap,
-        strBounds.map { case (c, (_, hi)) => c -> hi }.toMap,
-        nulls = Some(nulls))
-    }.toMap)
-  }
-
-  /** The distributed re-scan route — fallback for stats columns outside
-    * the file footers, and the spec's ground truth for the footer route.
-    */
-  private[graft] def collectStatsScan(spark: SparkSession, path: String,
-      rels: Seq[String], statsCols: Seq[String]): Option[Map[String, FileStat]] = {
-    if (statsCols.isEmpty || rels.isEmpty) return None
-    val df = spark.read.option("basePath", path).parquet(rels.map(r => s"$path/$r"): _*)
-    val fields = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val (numCols, strCols) = statsCols.filter(fields.contains).partition(c =>
-      fields(c).isInstanceOf[org.apache.spark.sql.types.NumericType])
-    val allStatCols = numCols ++ strCols
-    val aggs =
-      Seq(count(lit(1)).as("__rows")) ++
-        numCols.flatMap(c => Seq(
-          min(col(c)).cast("double").as(s"__minN_$c"), max(col(c)).cast("double").as(s"__maxN_$c"))) ++
-        strCols.flatMap(c => Seq(
-          min(col(c)).as(s"__minS_$c"), max(col(c)).as(s"__maxS_$c"))) ++
-        allStatCols.map(c => (count(lit(1)) - count(col(c))).as(s"__nulls_$c"))
-    val rows = df.groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    val relIdx = relIndex(rels)
-    Some(rows.map { r =>
-      val rel = relOf(relIdx, r.getString(0))
-      def numMap(pre: String) = numCols.flatMap(c =>
-        Option(r.getAs[Any](s"__$pre" + "_" + c)).map(v => c -> v.asInstanceOf[Double])).toMap
-      def strMap(pre: String) = strCols.flatMap(c =>
-        Option(r.getAs[String](s"__$pre" + "_" + c)).map(c -> _)).toMap
-      rel -> FileStat(r.getAs[Long]("__rows"),
-        numMap("minN"), numMap("maxN"), strMap("minS"), strMap("maxS"),
-        nulls = Some(allStatCols.map(c => c -> r.getAs[Long](s"__nulls_$c")).toMap))
+  private def logStats(staged: Seq[CommitKernel.Staged], statsCols: Seq[String])(
+      schema: org.apache.spark.sql.types.StructType): Option[Map[String, JValue]] = {
+    val fields = schema.fields.toSeq.filter(f => statsCols.contains(f.name))
+    if (fields.isEmpty || staged.isEmpty) return None
+    val tz = org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
+    Some(staged.map { s =>
+      val parts = fields.flatMap(f => s.partitionValues.get(f.name).map(v =>
+        f.name -> FileStats.partitionStat(v, f.dataType, tz, s.stat.numRecords)))
+      s.path -> (JString(FileStats.statsJson(
+        s.stat.copy(cols = s.stat.cols ++ parts), fields)): JValue)
     }.toMap)
   }
 
@@ -2127,19 +1999,51 @@ object VersionedTable {
     }
   }
 
-  /** Cumulative file→stats index at a snapshot (later commits win). */
-  private def statsIndex(upTo: Seq[Commit]): Map[String, FileStat] =
-    upTo.flatMap(_.stats.getOrElse(Map.empty)).toMap
+  /** Cumulative file→stats index at a snapshot (later commits win),
+    * each entry decoded with the table schema in effect at the commit
+    * that recorded it.
+    */
+  private def statsIndex(upTo: Seq[Commit]): Map[String, FileStats.FileStat] = {
+    val schemas = upTo.scanLeft(Seq.empty[org.apache.spark.sql.types.StructField]) {
+      (prev, c) => c.schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fields.toSeq).getOrElse(prev)
+    }.tail
+    upTo.zip(schemas).flatMap { case (c, fields) =>
+      c.stats.getOrElse(Map.empty).map { case (f, j) => f -> (j, fields) }
+    }.toMap.map { case (f, (j, fields)) => f -> statsOf(j, fields) }
+  }
 
-  /** The columns the table's log already carries min/max stats for —
-    * rewrite ops re-collect these so skipping stays effective under
-    * churn instead of decaying to conservative scans.
+  /** One file's log stats: the `add.stats` JSON string, or (read-only)
+    * the JSON object logs carried before that shape, of row count,
+    * numeric and string bounds and null counts. Its numeric bounds were
+    * rounded to doubles when written, so each moves out to the
+    * neighbouring double to stay a bound.
+    */
+  private def statsOf(j: JValue,
+      fields: Seq[org.apache.spark.sql.types.StructField]): FileStats.FileStat = j match {
+    case JString(json) => FileStats.fileStatOf(json, fields)
+    case old =>
+      val rows = (old \ "rows").extract[Long]
+      def side[A: Manifest](k: String) = (old \ k).extractOpt[Map[String, A]].getOrElse(Map.empty)
+      val utf8 = org.apache.spark.unsafe.types.UTF8String.fromString _
+      val num = side[Double]("minNum").flatMap { case (c, lo) =>
+        side[Double]("maxNum").get(c).map(hi => c -> (Math.nextDown(lo): Any, Math.nextUp(hi): Any)) }
+      val str = side[String]("minStr").flatMap { case (c, lo) =>
+        side[String]("maxStr").get(c).map(hi => c -> (utf8(lo): Any, utf8(hi): Any)) }
+      val bounds = num ++ str
+      val nulls = side[Long]("nulls")
+      FileStats.FileStat(Some(rows), (bounds.keySet ++ nulls.keySet).map { c =>
+        c -> FileStats.ColStats(bounds.get(c).map(_._1), bounds.get(c).map(_._2),
+          nulls.get(c), allNull = nulls.get(c).contains(rows))
+      }.toMap)
+  }
+
+  /** The columns the table's log already carries stats for — rewrite
+    * ops re-collect these so skipping stays effective under churn
+    * instead of decaying to conservative scans.
     */
   private def activeStatsCols(upTo: Seq[Commit]): Seq[String] =
-    statsIndex(upTo).values
-      .flatMap(fs => fs.minNum.keys ++ fs.minStr.keys ++
-        fs.nulls.map(_.keys).getOrElse(Nil))
-      .toSeq.distinct.sorted
+    statsIndex(upTo).values.flatMap(_.cols.keys).toSeq.distinct.sorted
 
   /** The columns the log bloom-indexes, with their bit widths (max m wins
     * if widths ever differ across commits).
@@ -2147,107 +2051,6 @@ object VersionedTable {
   private def activeBloomBits(upTo: Seq[Commit]): Map[String, Int] =
     bloomIndex(upTo).values.flatten.toSeq.groupBy(_._1)
       .map { case (c, kvs) => c -> kvs.map(_._2.m).max }
-
-  /** Conservative file-level predicate check: may this file contain a
-    * matching row, given its min/max? Supports comparisons between a
-    * stats column and a literal under And/Or; anything else — unknown
-    * columns, casts, functions — returns true (scan it). Nulls inside a
-    * file are invisible to min/max, so IsNull-style predicates are NOT
-    * prunable and fall into the conservative branch.
-    */
-  private def mayMatch(fstat: FileStat, e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    def name(x: Expression): Option[String] = x match {
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case c: Cast => name(c.child) // analyzer-inserted literal/col casts
-      case _ => None
-    }
-    // Cast-free resolver for predicates whose semantics a cast CHANGES
-    // (null production), unlike order comparisons where the analyzer's
-    // widening casts are value-preserving.
-    def bareName(x: Expression): Option[String] = x match {
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    // Foldable-side evaluation (covers bare literals AND analyzer-inserted
-    // casts of literals, e.g. the Cast(5: int → bigint) an int literal
-    // gets next to a bigint column, and IN-list element casts).
-    def litNum(x: Expression): Option[Double] = x match {
-      case _: AttributeReference | _: UnresolvedAttribute => None
-      case l if l.foldable => l.eval(null) match {
-        case n: Number => Some(n.doubleValue())
-        case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-        case _ => None
-      }
-      case _ => None
-    }
-    def litStr(x: Expression): Option[String] = x match {
-      case l if l.foldable => l.eval(null) match {
-        case s: org.apache.spark.unsafe.types.UTF8String => Some(s.toString)
-        case _ => None
-      }
-      case _ => None
-    }
-    // interval test for col ? lit, in both argument orders
-    def cmp(colE: Expression, v: Expression,
-        num: (Double, Double, Double) => Boolean,
-        str: (String, String, String) => Boolean): Boolean =
-      name(colE).map { c =>
-        (litNum(v), litStr(v)) match {
-          case (Some(n), _) if fstat.minNum.contains(c) =>
-            num(fstat.minNum(c), fstat.maxNum(c), n)
-          case (_, Some(s)) if fstat.minStr.contains(c) =>
-            str(fstat.minStr(c), fstat.maxStr(c), s)
-          case _ => true
-        }
-      }.getOrElse(true)
-    e match {
-      case And(l, r) => mayMatch(fstat, l) && mayMatch(fstat, r)
-      case Or(l, r) => mayMatch(fstat, l) || mayMatch(fstat, r)
-      // String bounds compare under UTF8String byte order (strLt/strLe) —
-      // the order the stats were aggregated under; Java '<' diverges on
-      // supplementary characters and would prune files that match.
-      case EqualTo(a, b) =>
-        cmp(a, b, (lo, hi, v) => lo <= v && v <= hi,
-          (lo, hi, v) => strLe(lo, v) && strLe(v, hi)) &&
-          cmp(b, a, (lo, hi, v) => lo <= v && v <= hi,
-            (lo, hi, v) => strLe(lo, v) && strLe(v, hi))
-      case GreaterThan(a, b) =>
-        cmp(a, b, (_, hi, v) => hi > v, (_, hi, v) => strLt(v, hi)) &&
-          cmp(b, a, (lo, _, v) => lo < v, (lo, _, v) => strLt(lo, v))
-      case GreaterThanOrEqual(a, b) =>
-        cmp(a, b, (_, hi, v) => hi >= v, (_, hi, v) => strLe(v, hi)) &&
-          cmp(b, a, (lo, _, v) => lo <= v, (lo, _, v) => strLe(lo, v))
-      case LessThan(a, b) =>
-        cmp(a, b, (lo, _, v) => lo < v, (lo, _, v) => strLt(lo, v)) &&
-          cmp(b, a, (_, hi, v) => hi > v, (_, hi, v) => strLt(v, hi))
-      case LessThanOrEqual(a, b) =>
-        cmp(a, b, (lo, _, v) => lo <= v, (lo, _, v) => strLe(lo, v)) &&
-          cmp(b, a, (_, hi, v) => hi >= v, (_, hi, v) => strLe(v, hi))
-      // IN = disjunction of equalities: prune only when EVERY element is
-      // provably outside the file's range
-      case In(a, list) if list.nonEmpty && list.forall(_.foldable) =>
-        list.exists(v => mayMatch(fstat, EqualTo(a, v)))
-      // Null predicates prune from the recorded per-file null counts
-      // (min/max are blind to nulls); files from commits without null
-      // stats scan conservatively. BARE attributes only — never through
-      // Cast: under non-ANSI semantics cast(col) yields null for
-      // unconvertible NON-null values, so a zero null count for col does
-      // not bound cast(col)'s nulls (same conservatism as the bloom
-      // probe).
-      case IsNull(a) =>
-        bareName(a).forall(c => fstat.nulls.forall(_.getOrElse(c, 1L) > 0))
-      case IsNotNull(a) =>
-        bareName(a).forall(c => fstat.nulls match {
-          case Some(n) if n.contains(c) => fstat.rows - n(c) > 0
-          case _ => true
-        })
-      case _ => true
-    }
-  }
 
   /** Data-skipping read: resolve the snapshot's live files, drop every
     * file whose log-recorded min/max/null-count/bloom prove it cannot
@@ -2278,13 +2081,11 @@ object VersionedTable {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
       activeTransforms(upTo))
-    val cond = probe.filter(predicate).queryExecution.analyzed
-      .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
-      .getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
+    val cond = FileStats.condition(spark, probe.schema, predicate)
     val idx = statsIndex(upTo)
     val bIdx = bloomIndex(upTo)
     prunedByTransforms(spark, upTo, files, cond).filter(f =>
-      idx.get(f).forall(mayMatch(_, cond)) &&
+      idx.get(f).forall(FileStats.mayMatch(cond, _)) &&
       bIdx.get(f).forall(bloomMayMatch(_, cond)))
   }
 
@@ -2294,18 +2095,13 @@ object VersionedTable {
     val fs = fsFor(spark, path)
     val (upTo, files) = snapshot(fs, path, asOfVersion, None)
     val idx = statsIndex(upTo)
-    // Resolve the predicate against an empty frame carrying the log
-    // schema: a raw Column is an unresolved node tree in Spark 4 — the
-    // analyzer rewrites it into comparable Catalyst comparisons (and
-    // inserts the casts `mayMatch` unwraps). No data is touched.
+    // Resolve the predicate against the log schema: a raw Column is an
+    // unresolved node tree in Spark 4, and the analyzer types it the way
+    // the row filter will run. No data is touched.
     val schema = snapshotSchema(upTo).getOrElse(
       spark.read.option("basePath", path)
         .parquet(files.map(f => s"$path/$f"): _*).schema)
-    val probe = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val cond = probe.filter(predicate).queryExecution.analyzed
-      .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
-      .getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
+    val cond = FileStats.condition(spark, schema, predicate)
     val bIdx = bloomIndex(upTo)
     // Hidden partitioning prunes FIRST and from the log alone: the raw
     // predicate implies partition predicates through the recorded
@@ -2330,7 +2126,7 @@ object VersionedTable {
       }
     val kept = afterDirs.filter(f =>
       (deltaDirs.contains(dirOf(f)) && !bypass.contains(f)) ||
-      (idx.get(f).forall(mayMatch(_, cond)) &&
+      (idx.get(f).forall(FileStats.mayMatch(cond, _)) &&
         bIdx.get(f).forall(bloomMayMatch(_, cond))))
     // MOR tables skip too: delta-free dirs prune by stats/bloom, every
     // live delta still merges (see mergedView.baseKeep for why exact).
@@ -2445,8 +2241,7 @@ object VersionedTable {
       }
     val staged = stage(spark, path, sorted, effPartCols)
     val adds = staged.map(_.path)
-    val stats = collectStats(spark, path, staged,
-      (sortCols ++ activeStatsCols(all)).distinct)
+    val stats = logStats(staged, (sortCols ++ activeStatsCols(all)).distinct) _
     val blooms = collectBlooms(spark, path, adds,
       activeBloomBits(all) ++ bloomCols.map(_ -> bloomBits))
     // read() above merged the deltas live AT PLANNING TIME into the
@@ -2505,8 +2300,7 @@ object VersionedTable {
       }
     val staged = stage(spark, path, sorted, effPartCols)
     val adds = staged.map(_.path)
-    val stats = collectStats(spark, path, staged,
-      (zCols ++ activeStatsCols(commits(fs, path))).distinct)
+    val stats = logStats(staged, (zCols ++ activeStatsCols(commits(fs, path))).distinct) _
     val blooms = collectBlooms(spark, path, adds,
       activeBloomBits(commits(fs, path)))
     // As in [[cluster]]: only the deltas merged at planning time are
@@ -2573,7 +2367,7 @@ object VersionedTable {
     val adds = staged.map(_.path)
     val c = publishWithRebase(fs, path, "optimize", adds, victims, txn = None,
       schemaOf = a => snapshotSchema(a), allowRebase = true,
-      stats = collectStats(spark, path, staged, activeStatsCols(upTo)),
+      stats = logStats(staged, activeStatsCols(upTo)),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(upTo)))
     c.version
   }
@@ -2624,8 +2418,9 @@ object VersionedTable {
 
   /** File-level metadata of a snapshot as a relation (Iceberg's `files`
     * metadata table / Delta's DESCRIBE DETAIL): one row per live file
-    * with its partition dir, MOR role, log-recorded row count, min/max
-    * stats (JSON) and bloom-indexed columns. Everything comes from the
+    * with its partition dir, MOR role, log-recorded row count, stats
+    * (Delta's `add.stats` JSON, [[FileStats.statsJson]]) and
+    * bloom-indexed columns. Everything comes from the
     * log — no listing, no footers. SQL: `graft_files(path[, version])`.
     */
   def filesMeta(spark: SparkSession, path: String,
@@ -2634,13 +2429,13 @@ object VersionedTable {
     val (upTo, live) = snapshot(fs, path, asOfVersion, None)
     val idx = statsIndex(upTo)
     val bIdx = bloomIndex(upTo)
+    val fields = snapshotSchema(upTo).map(_.fields.toSeq).getOrElse(Nil)
     val rows = (live.map(_ -> false) ++ liveDeltaFiles(upTo).map(_ -> true)).map {
       case (f, isDelta) =>
         val st = idx.get(f)
         org.apache.spark.sql.Row(f, dirOf(f), isDelta,
-          st.map(s => java.lang.Long.valueOf(s.rows)).orNull,
-          st.map(s => JsonMethods.compact(JsonMethods.render(
-            Extraction.decompose(s)))).orNull,
+          st.flatMap(_.numRecords).map(java.lang.Long.valueOf).orNull,
+          st.map(FileStats.statsJson(_, fields)).orNull,
           bIdx.get(f).map(_.keys.toSeq.sorted).getOrElse(Nil))
     }
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -2947,8 +2742,7 @@ object VersionedTable {
     val adds = staged.map(_.path)
     publishWithRebase(fs, path, "replace_where", adds, affected, txn = None,
       schemaOf = _ => None, allowRebase = true,
-      stats = collectStats(spark, path, staged,
-        (statsCols ++ activeStatsCols(all)).distinct),
+      stats = logStats(staged, (statsCols ++ activeStatsCols(all)).distinct),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(all)),
       enforcedConstraints = Some(enforcedSet)).version
   }

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.sinks.{CommitKernel, VersionedTable}
+import graft.sinks.{CommitKernel, FileStats, VersionedTable}
 
 class VersionedTableSpec extends SparkSpec {
   private val ss = SparkSpec.spark
@@ -31,11 +31,12 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("footer-route stats equal the distributed scan route across the type battery") {
-    // the commit-time stats pass reads parquet FOOTERS on the driver
-    // (collectStats); the distributed re-scan (collectStatsScan) is the
-    // ground truth it must match — null counts, row counts, numeric and
-    // string min/max, null-only columns, and decimal/float/long widths
-    val base = Files.createTempDirectory("graft-vt-stats").toFile.getAbsolutePath
+    // the log records each file's footer stats from the staging pass;
+    // FileStats.collect, a distributed re-scan, is the ground truth it
+    // must match through the log's add.stats codec — null counts, row
+    // counts, numeric and string min/max, null-only columns, and
+    // decimal/float/long widths
+    val t = table()
     val rows = Seq(
       (1L, "alpha", 1.5d, Some(3), BigDecimal("12.34")),
       (7L, "omega", -2.25d, None, BigDecimal("-0.01")),
@@ -43,20 +44,115 @@ class VersionedTableSpec extends SparkSpec {
       .toDF("k", "s", "d", "oi", "dec")
       .withColumn("allnull", lit(null).cast("string"))
       .withColumn("p", lit("x"))
-    val staged = graft.sinks.CommitKernel.stage(rows.repartition(2), base, "_stage",
-      "spec: stage", Seq("p"))(_.rel)
-    val rels = staged.map(_.path)
     val cols = Seq("k", "s", "d", "oi", "dec", "allnull")
-    val foot = VersionedTable.collectStats(spark, base, staged, cols).get
-    val scan = VersionedTable.collectStatsScan(spark, base, rels, cols).get
-    assert(foot.keySet == scan.keySet)
-    foot.keySet.foreach { rel =>
-      assert(foot(rel) == scan(rel), s"footer vs scan stats diverge for $rel")
+    val trace = graft.QueryTrace.attach(spark)
+    val labels =
+      try {
+        trace.reset()
+        VersionedTable.write(spark, t, rows.repartition(2), Seq("p"),
+          statsCols = cols :+ "p")
+        trace.snapshot().summary.labels
+      } finally trace.close()
+    // a stats column living in the DIRECTORY (partition col) takes its
+    // value from the path: the staging write is the only job
+    assert(labels.keySet == Set("graft: stage files"), labels)
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    val logged = spark.sql(s"SELECT file, stats_json FROM graft_files('$t')")
+      .as[(String, String)].collect()
+    val schema = VersionedTable.tableSchema(spark, t)
+    val dataSchema = org.apache.spark.sql.types.StructType(schema.filter(_.name != "p"))
+    val scan = FileStats.collect(spark, logged.map(r => s"$t/${r._1}").toSeq, dataSchema)
+    assert(logged.length == 2 && scan.size == 2)
+    logged.foreach { case (rel, json) =>
+      val foot = FileStats.fileStatOf(json, schema.fields.toSeq)
+      val truth = scan(FileStats.canon(s"$t/$rel"))
+      assert(foot.numRecords == truth.numRecords, s"row count of $rel")
+      cols.foreach(c => assert(foot.cols.get(c) == truth.cols.get(c),
+        s"footer vs scan stats diverge for $c in $rel"))
+      val x = org.apache.spark.unsafe.types.UTF8String.fromString("x")
+      assert(foot.cols("p") == FileStats.ColStats(Some(x), Some(x), Some(0L), allNull = false))
     }
-    // a stats column living in the DIRECTORY (partition col) falls back
-    // to the scan route and still answers
-    val both = VersionedTable.collectStats(spark, base, staged, Seq("k", "p")).get
-    assert(both.values.forall(_.minStr.get("p").contains("x")))
+  }
+
+  test("stats skip exactly for longs above 2^53: readPruned and DELETE keep the row") {
+    // 2^53 + 1 has no double: a bound or literal rounded to a double
+    // reads 2^53 and `hi > 2^53` would wrongly prune the file
+    val t = table()
+    val big = 9007199254740993L
+    VersionedTable.write(spark, t, Seq((big, "a", 1L)).toDF("k", "p", "v"), Nil,
+      statsCols = Seq("k"))
+    val (hit, scanned, total) =
+      VersionedTable.readPruned(spark, t, col("k") > 9007199254740992L)
+    assert(hit.select("k").as[Long].collect().toSeq == Seq(big) && scanned == 1)
+    assert(VersionedTable.readPruned(spark, t, col("k") > big)._2 == 0 && total == 1,
+      "a predicate the bound disproves still prunes")
+    VersionedTable.delete(spark, t, col("k") > 9007199254740992L, Nil)
+    assert(VersionedTable.read(spark, t).count() == 0)
+  }
+
+  test("a user cast on a stats column never prunes; an exact widening still does") {
+    // cast(d as int) = 5 holds for d = 5.5, though [5.5, 5.5] misses 5
+    val t = table()
+    VersionedTable.write(spark, t, Seq((1L, 5.5d, 7)).toDF("k", "d", "i"), Nil,
+      statsCols = Seq("d", "i"))
+    val userCast = col("d").cast("int") === 5
+    val (hit, scanned, _) = VersionedTable.readPruned(spark, t, userCast)
+    assert(hit.count() == 1 && scanned == 1)
+    assert(VersionedTable.readPruned(spark, t, col("i") > 5L)._2 == 1)
+    assert(VersionedTable.readPruned(spark, t, col("i") > 7L)._2 == 0,
+      "cast(i as bigint) maps every int exactly, so i's bounds prune")
+    VersionedTable.update(spark, t, Map("k" -> lit(2L)), userCast, Nil)
+    assert(VersionedTable.read(spark, t).select("k").as[Long].collect().toSeq == Seq(2L))
+    VersionedTable.delete(spark, t, userCast, Nil)
+    assert(VersionedTable.read(spark, t).count() == 0)
+  }
+
+  test("a table whose log carries the older stats shape reads and skips soundly") {
+    // commits written before the add.stats shape recorded numeric bounds
+    // rounded to doubles and string bounds as plain strings
+    val t = table()
+    val rows = Seq((1L, "a"), (5L, "b"), (10L, "x"), (9007199254740993L, "y"))
+      .toDF("k", "s")
+    def plant(name: String, part: org.apache.spark.sql.DataFrame): Unit = {
+      val tmp = s"$t-stage-$name"
+      part.coalesce(1).write.parquet(tmp)
+      val f = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+      Files.createDirectories(java.nio.file.Paths.get(t))
+      Files.move(f.toPath, java.nio.file.Paths.get(s"$t/$name.parquet"))
+    }
+    plant("a", rows.filter(col("k") <= 5L))
+    plant("b", rows.filter(col("k") > 5L))
+    val schemaJson = org.json4s.JString(rows.schema.json)
+    val commit = s"""{"version":1,"tsMs":0,"op":"overwrite",
+      |"adds":["a.parquet","b.parquet"],"removes":[],
+      |"schemaJson":${org.json4s.jackson.JsonMethods.compact(schemaJson)},
+      |"stats":{
+      |"a.parquet":{"rows":2,"minNum":{"k":1.0},"maxNum":{"k":5.0},
+      |"minStr":{"s":"a"},"maxStr":{"s":"b"},"nulls":{"k":0,"s":0}},
+      |"b.parquet":{"rows":2,"minNum":{"k":10.0},"maxNum":{"k":9.007199254740992E15},
+      |"minStr":{"s":"x"},"maxStr":{"s":"y"},"nulls":{"k":0,"s":0}}}}""".stripMargin
+    Files.createDirectories(java.nio.file.Paths.get(s"$t/_graft_log"))
+    Files.write(java.nio.file.Paths.get(s"$t/_graft_log/v${"%020d".format(1L)}.json"),
+      commit.getBytes("UTF-8"))
+    assert(VersionedTable.read(spark, t).select("k").as[Long].collect().toSet ==
+      Set(1L, 5L, 10L, 9007199254740993L))
+    // ranges the old bounds prove still skip
+    val (low, lowScanned, _) = VersionedTable.readPruned(spark, t, col("k") > 6L)
+    assert(lowScanned == 1 && low.count() == 2)
+    assert(VersionedTable.readPruned(spark, t, col("s") === "a")._2 == 1)
+    assert(VersionedTable.readPruned(spark, t, col("k").isNull)._2 == 0)
+    // a strict predicate whose literal equals a rounded bound keeps the file
+    val (edge, edgeScanned, _) =
+      VersionedTable.readPruned(spark, t, col("k") > 9007199254740992L)
+    assert(edgeScanned == 1 && edge.select("k").as[Long].collect().toSeq ==
+      Seq(9007199254740993L))
+    assert(VersionedTable.readPruned(spark, t, col("k") < 1L)._2 == 1,
+      "a lower bound equal to the literal keeps its file too")
+    // graft_files shows the older entries in the add.stats shape
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    val shown = spark.sql(s"SELECT stats_json FROM graft_files('$t')").as[String].collect()
+    assert(shown.forall(j => FileStats.fileStatOf(j, rows.schema.fields.toSeq)
+      .numRecords.contains(2L)), shown.mkString("\n"))
   }
 
   test("write/append/upsert build a version history; every snapshot stays readable") {

@@ -122,4 +122,130 @@ class FileStatsSpec extends SparkSpec {
       }
     }
   }
+
+  test("a user cast keeps its file and an exact widening prunes, on Delta and Iceberg") {
+    // d = 5.5: cast(d as int) = 5 holds, but d's bounds [5.5, 5.5] say
+    // nothing about the cast; i = 7: i > 5L is cast(i as bigint) > 5,
+    // and that cast maps every int exactly
+    val rows = Seq((1L, 5.5d, 7)).toDF("k", "d", "i")
+    val userCast = col("d").cast("int") === 5
+    val delta = Files.createTempDirectory("graft-cast-delta").toString + "/t"
+    DeltaInterop.write(rows, delta)
+    def deltaKept(where: org.apache.spark.sql.Column) =
+      DeltaInterop.pruneAdds(spark, DeltaInterop.snapshot(spark, delta), Some(where)).size
+    assert(deltaKept(userCast) == 1)
+    assert(deltaKept(col("i") > 5L) == 1 && deltaKept(col("i") > 7L) == 0)
+    DeltaInterop.update(spark, delta, userCast, Map("k" -> lit(2L)))
+    assert(DeltaInterop.read(spark, delta).select("k").as[Long].collect().toSeq == Seq(2L))
+    DeltaInterop.delete(spark, delta, userCast)
+    assert(DeltaInterop.read(spark, delta).count() == 0)
+
+    val ice = Files.createTempDirectory("graft-cast-iceberg").toString + "/t"
+    IcebergInterop.write(rows, ice)
+    def iceKept(where: org.apache.spark.sql.Column) =
+      IcebergInterop.liveFilesWhere(spark, ice, Some(where)).size
+    assert(iceKept(userCast) == 1)
+    assert(iceKept(col("i") > 5L) == 1 && iceKept(col("i") > 7L) == 0)
+    IcebergInterop.deletePositions(spark, ice, userCast)
+    assert(IcebergInterop.read(spark, ice).count() == 0)
+  }
+
+  test("seeded differential: the evaluator never drops a file holding a matching row") {
+    val rnd = new scala.util.Random(20261019L)
+    val two53 = 1L << 53
+    val longs = (-2L to 2L).flatMap(o => Seq(two53 + o, -two53 + o)) ++
+      Seq(0L, 1L, -1L, Long.MaxValue, Long.MinValue)
+    val decs = Seq("0.00", "-0.01", "12.34", "12.35", "-99999.99",
+      "123456789012345678.91", "123456789012345678.90").map(BigDecimal(_))
+    val doubles = Seq(0.0, -0.0, 0.1, 5.5, -1.5, 1e300, two53.toDouble,
+      Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN)
+    // UTF-16 and UTF-8 order disagree between supplementary characters
+    // and U+E000..U+FFFF
+    val strings = Seq("", "a", "ab", "\uE000", "\uFFFD", "\uFF21x",
+      "\uD83D\uDE00", "\uD800\uDC00", "a\uD83D\uDE00", "a\uFFFD")
+    val ints = (-3 to 3) ++ Seq(Int.MaxValue, Int.MinValue)
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+    def maybe[A](v: => A): Option[A] = if (rnd.nextInt(6) == 0) None else Some(v)
+    val nFiles = 40
+    val data = (0 until nFiles).flatMap { fid =>
+      // each file draws from a slice of every pool, so ranges differ
+      def slice[A](xs: Seq[A]): Seq[A] = {
+        val from = rnd.nextInt(xs.size)
+        xs.slice(from, from + 1 + rnd.nextInt(3))
+      }
+      val (ls, ds, dbs, ss, is) =
+        (slice(longs), slice(decs), slice(doubles), slice(strings), slice(ints))
+      Seq.fill(1 + rnd.nextInt(4))((fid, maybe(pick(ls)), maybe(pick(ds)),
+        maybe(pick(dbs)), maybe(pick(ss)), maybe(pick(is))))
+    }
+    val df = data.toDF("fid", "l", "dec", "d", "s", "i")
+      .withColumn("dec", col("dec").cast("decimal(20,2)"))
+    val dir = Files.createTempDirectory("graft-diff").toString
+    df.repartition(col("fid")).write.mode("overwrite").partitionBy("fid").parquet(dir)
+    val dataSchema = StructType(df.schema.filter(_.name != "fid"))
+    val files = (0 until nFiles).map { fid =>
+      fid -> new java.io.File(s"$dir/fid=$fid").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
+    }
+    assert(files.forall(_._2.size == 1), "one file per fid")
+    val footers = FileStats.fromFooters(spark, files.map(_._2.head), dataSchema)
+    // through the log codec, as every graft and Delta log stores them
+    val stats = files.map { case (fid, Seq(f)) =>
+      fid -> FileStats.fileStatOf(
+        FileStats.statsJson(footers(FileStats.canon(f)), dataSchema.fields.toSeq),
+        dataSchema.fields.toSeq)
+    }.toMap
+
+    def column(): (org.apache.spark.sql.Column, () => org.apache.spark.sql.Column) =
+      rnd.nextInt(11) match {
+        case 0 => col("l") -> (() => lit(pick(longs)))
+        case 1 => col("l") -> (() => lit(pick(longs).toInt))
+        case 2 => col("l").try_cast("double") -> (() => lit(pick(longs).toDouble))
+        case 3 => col("dec") -> (() => lit(pick(decs)))
+        case 4 => col("dec").try_cast("int") -> (() => lit(pick(decs).toInt))
+        case 5 => col("d") -> (() => lit(pick(doubles)))
+        case 6 => col("d").try_cast("int") -> (() => lit(pick(ints)))
+        case 7 => col("s") -> (() => lit(pick(strings)))
+        case 8 => col("i").cast("long") -> (() => lit(pick(longs)))
+        case 9 => col("i").cast("double") -> (() => lit(pick(doubles)))
+        case _ => col("i") -> (() => lit(pick(ints)))
+      }
+    def atom(): org.apache.spark.sql.Column = {
+      val (c, v) = column()
+      rnd.nextInt(9) match {
+        case 0 => c === v()
+        case 1 => c < v()
+        case 2 => c <= v()
+        case 3 => c > v()
+        case 4 => c >= v()
+        case 5 => v() < c
+        case 6 => c.isin(Seq.fill(1 + rnd.nextInt(3))(v()): _*)
+        case 7 => c.isNull
+        case _ => c.isNotNull
+      }
+    }
+    def pred(depth: Int): org.apache.spark.sql.Column =
+      if (depth == 0 || rnd.nextInt(3) == 0) atom()
+      else if (rnd.nextBoolean()) pred(depth - 1) && pred(depth - 1)
+      else pred(depth - 1) || pred(depth - 1)
+    val preds = Seq.fill(900)(pred(3))
+    // which files hold a row matching each predicate: 200 per job
+    val truth = preds.grouped(200).map { ps =>
+      df.groupBy("fid").agg(max(when(ps.head, 1).otherwise(0)),
+        ps.tail.map(p => max(when(p, 1).otherwise(0))): _*)
+        .collect().map(r => r.getInt(0) -> (1 to ps.size).map(r.getInt(_) == 1)).toMap
+    }.reduce((a, b) => a.map { case (fid, hits) => fid -> (hits ++ b(fid)) })
+    var pruned = 0
+    preds.zipWithIndex.foreach { case (p, i) =>
+      val cond = FileStats.condition(spark, dataSchema, p)
+      (0 until nFiles).foreach { fid =>
+        val keep = FileStats.mayMatch(cond, stats(fid))
+        assert(keep || !truth(fid)(i), s"file $fid holds a row matching $p but was pruned")
+        assert(FileStats.mayMatch(cond, footers(FileStats.canon(files(fid)._2.head))) || !truth(fid)(i),
+          s"footer stats of file $fid prune $p")
+        if (!keep) pruned += 1
+      }
+    }
+    assert(pruned > preds.size, s"only $pruned (file, predicate) pairs pruned")
+  }
 }
