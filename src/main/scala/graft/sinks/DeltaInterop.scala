@@ -301,7 +301,7 @@ object DeltaInterop {
       where: Option[Column]): Seq[AddFile] = {
     val partCols = snap.metaData.partitionColumns
     FileStats.prune(spark, snap.schema, where, snap.adds,
-      (a: AddFile) => fileStatOf(a, snap.schema, partCols))._1
+      (a: AddFile) => fileStatOf(a, snap.schema, partCols))
   }
 
   /** Replay the log to `versionAsOf` (or latest). Starts from the

@@ -532,17 +532,13 @@ object FileStats {
     case _ => None
   }
 
-  /** Apply `where` to a file list: keep files whose stats may match.
-    * Returns (kept, prunedCount) so callers can surface skipping
-    * effectiveness.
-    */
+  /** Apply `where` to a file list: keep files whose stats may match. */
   def prune[A](spark: SparkSession, schema: StructType, where: Option[Column],
-      files: Seq[A], statOf: A => FileStat): (Seq[A], Int) = where match {
-    case None => (files, 0)
+      files: Seq[A], statOf: A => FileStat): Seq[A] = where match {
+    case None => files
     case Some(w) =>
       val cond = condition(spark, schema, w)
-      val kept = files.filter(f => mayMatch(cond, statOf(f)))
-      (kept, files.size - kept.size)
+      files.filter(f => mayMatch(cond, statOf(f)))
   }
 
   /** Outcome of [[keyEnvelope]]: can the source's join keys be turned

@@ -998,7 +998,7 @@ object IcebergInterop {
     val seqByPath = dataFilesWithSeq
       .map { case (d, q) => d.get("file_path").toString -> q }.toMap
     val partFields = partFieldsOf(meta, schema)
-    val (kept, _) = FileStats.prune(spark, schema, where, dataFilesWithSeq.map(_._1),
+    val kept = FileStats.prune(spark, schema, where, dataFilesWithSeq.map(_._1),
       (d: GenericRecord) => fileStatOf(d, schema, partFields))
     val files = kept.map(_.get("file_path").toString)
     // row-level delete files from content=1 manifests: each ENTRY says
@@ -1215,7 +1215,7 @@ object IcebergInterop {
           e.get("data_file").asInstanceOf[GenericRecord]
       }
     }
-    val (pruned, _) = FileStats.prune(spark, schema, Some(where), dataFiles,
+    val pruned = FileStats.prune(spark, schema, Some(where), dataFiles,
       (d: GenericRecord) => fileStatOf(d, schema, partFields))
     if (pruned.isEmpty) return curId // no file can match: no-op
     val files = pruned.map(_.get("file_path").toString)
@@ -1544,7 +1544,7 @@ object IcebergInterop {
     val dataFiles = liveEntries(fs, snap)
       .map(_.get("data_file").asInstanceOf[GenericRecord])
     FileStats.prune(spark, schema, where, dataFiles,
-      (d: GenericRecord) => fileStatOf(d, schema, partFieldsOf(meta, schema)))._1
+      (d: GenericRecord) => fileStatOf(d, schema, partFieldsOf(meta, schema)))
       .map(_.get("file_path").toString)
   }
 
