@@ -306,16 +306,21 @@ object FileStats {
 
   // ---- the `add.stats` codec ----
 
-  /** Delta's `add.stats`, also the per-file stats shape of graft's own
-    * log: a JSON object of numRecords/minValues/maxValues/nullCount for
-    * `fields`, keyed by `key(field)`. Values are written in the stats
-    * JSON's value domain, exactly: integers and decimals as JSON numbers
-    * with every digit, doubles in their shortest round-trip form,
-    * strings as strings, dates as `yyyy-MM-dd` and timestamps as
-    * ISO-8601 instants. A non-finite double records no bound.
-    */
+  /** Delta's `add.stats` string: [[statsValue]] rendered. */
   def statsJson(stat: FileStat, fields: Seq[StructField],
-      key: StructField => String = _.name): String = {
+      key: StructField => String = _.name): String =
+    JsonMethods.compact(JsonMethods.render(statsValue(stat, fields, key)))
+
+  /** The `add.stats` object, also the per-file stats of graft's own log:
+    * numRecords/minValues/maxValues/nullCount for `fields`, keyed by
+    * `key(field)`. Values are written in the stats JSON's value domain,
+    * exactly: integers and decimals as JSON numbers with every digit,
+    * doubles in their shortest round-trip form, strings as strings,
+    * dates as `yyyy-MM-dd` and timestamps as ISO-8601 instants. A
+    * non-finite double records no bound.
+    */
+  def statsValue(stat: FileStat, fields: Seq[StructField],
+      key: StructField => String = _.name): JObject = {
     def valueJson(v: Any, dt: DataType): JValue = (dt, v) match {
       case (ByteType | ShortType | IntegerType | LongType, n: Number) =>
         JLong(n.longValue())
@@ -335,21 +340,30 @@ object FileStats {
       JObject(cols.flatMap { case (f, s) =>
         side(s).map(v => key(f) -> valueJson(v, f.dataType)).filter(_._2 != JNothing)
       })
-    JsonMethods.compact(JsonMethods.render(JObject(
+    JObject(
       "numRecords" -> JLong(stat.numRecords.getOrElse(0L)),
       "minValues" -> sideJson(_.min),
       "maxValues" -> sideJson(_.max),
       "nullCount" -> JObject(cols.flatMap { case (f, s) =>
-        s.nullCount.map(n => key(f) -> (JLong(n): JValue)) }))))
+        s.nullCount.map(n => key(f) -> (JLong(n): JValue)) }))
   }
 
-  /** [[statsJson]] back to catalyst-internal stats for `fields`, each
-    * value in its column type's internal form. Numbers parse as big
-    * decimals, so longs and decimals come back with every digit. Absent
-    * or unparseable stats (foreign writers vary) yield no entry, and no
-    * entry never prunes.
+  /** [[statsJson]] back to catalyst-internal stats for `fields`.
+    * Numbers parse as big decimals, so longs and decimals come back with
+    * every digit. Unparseable stats (foreign writers vary) yield none.
     */
   def fileStatOf(json: String, fields: Seq[StructField],
+      key: StructField => String = _.name): FileStat =
+    fileStatOfValue(
+      try JsonMethods.parse(json, useBigDecimalForDouble = true)
+      catch { case scala.util.control.NonFatal(_) => JNothing },
+      fields, key)
+
+  /** A parsed [[statsValue]] back to catalyst-internal stats for
+    * `fields`, each value in its column type's internal form. Absent or
+    * undecodable values yield no entry, and no entry never prunes.
+    */
+  def fileStatOfValue(stats: JValue, fields: Seq[StructField],
       key: StructField => String = _.name): FileStat = {
     implicit val formats: Formats = DefaultFormats
     def parseValue(j: JValue, dt: DataType): Option[Any] = try {
@@ -371,21 +385,15 @@ object FileStats {
         case _ => None
       }
     } catch { case scala.util.control.NonFatal(_) => None }
-    val parsed =
-      try Some(JsonMethods.parse(json, useBigDecimalForDouble = true))
-      catch { case scala.util.control.NonFatal(_) => None }
-    val numRecords = parsed.flatMap(j => (j \ "numRecords").extractOpt[Long])
-    val cols = parsed.toSeq.flatMap { j =>
-      fields.flatMap { f =>
-        val k = key(f)
-        val mn = parseValue(j \ "minValues" \ k, f.dataType)
-        val mx = parseValue(j \ "maxValues" \ k, f.dataType)
-        val nc = (j \ "nullCount" \ k).extractOpt[Long]
-        if (mn.isEmpty && mx.isEmpty && nc.isEmpty) None
-        else Some(f.name -> ColStats(mn, mx, nc, allNull = nc.isDefined && nc == numRecords))
-      }
-    }
-    FileStat(numRecords, cols.toMap)
+    val numRecords = (stats \ "numRecords").extractOpt[Long]
+    FileStat(numRecords, fields.flatMap { f =>
+      val k = key(f)
+      val mn = parseValue(stats \ "minValues" \ k, f.dataType)
+      val mx = parseValue(stats \ "maxValues" \ k, f.dataType)
+      val nc = (stats \ "nullCount" \ k).extractOpt[Long]
+      if (mn.isEmpty && mx.isEmpty && nc.isEmpty) None
+      else Some(f.name -> ColStats(mn, mx, nc, allNull = nc.isDefined && nc == numRecords))
+    }.toMap)
   }
 
   /** A hive-style partition value (`None` is null) of a file holding

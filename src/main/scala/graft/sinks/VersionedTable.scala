@@ -311,9 +311,9 @@ object VersionedTable {
       // refuses any floor that would change the resolved delta set.
       checkpointDeltas: Option[Seq[DeltaEntry]] = None,
       schemaJson: Option[String] = None,
-      // Per file: its `add.stats` JSON (FileStats.statsJson), typed by
+      // Per file: its `add.stats` object (FileStats.statsValue), typed by
       // the table schema in effect at this commit. Logs written before
-      // that shape carry a JSON object instead (see statsOf).
+      // that shape carry an older object instead (see statsOf).
       stats: Option[Map[String, JValue]] = None,
       deltaAdds: Option[Seq[String]] = None,
       // Delta files RE-added by a restore, keeping the version of the
@@ -397,7 +397,8 @@ object VersionedTable {
 
   private def readCommit(fs: FileSystem, p: Path): Commit = {
     val in = fs.open(p)
-    try JsonMethods.parse(in).extract[Commit]
+    // big decimals keep every digit of a decimal stats bound
+    try JsonMethods.parse(in, useBigDecimalForDouble = true).extract[Commit]
     finally in.close()
   }
 
@@ -1889,8 +1890,7 @@ object VersionedTable {
     Some(staged.map { s =>
       val parts = fields.flatMap(f => s.partitionValues.get(f.name).map(v =>
         f.name -> FileStats.partitionStat(v, f.dataType, tz, s.stat.numRecords)))
-      s.path -> (JString(FileStats.statsJson(
-        s.stat.copy(cols = s.stat.cols ++ parts), fields)): JValue)
+      s.path -> (FileStats.statsValue(s.stat.copy(cols = s.stat.cols ++ parts), fields): JValue)
     }.toMap)
   }
 
@@ -2013,18 +2013,18 @@ object VersionedTable {
     }.toMap.map { case (f, (j, fields)) => f -> statsOf(j, fields) }
   }
 
-  /** One file's log stats: the `add.stats` JSON string, or (read-only)
-    * the JSON object logs carried before that shape, of row count,
-    * numeric and string bounds and null counts. Its numeric bounds were
-    * rounded to doubles when written, so each moves out to the
-    * neighbouring double to stay a bound.
+  /** One file's log stats: the `add.stats` object, or (read-only) the
+    * object logs carried before that shape, of row count, numeric and
+    * string bounds and null counts. Its numeric bounds were rounded to
+    * doubles when written, so each moves out to the neighbouring double
+    * to stay a bound.
     */
   private def statsOf(j: JValue,
-      fields: Seq[org.apache.spark.sql.types.StructField]): FileStats.FileStat = j match {
-    case JString(json) => FileStats.fileStatOf(json, fields)
-    case old =>
-      val rows = (old \ "rows").extract[Long]
-      def side[A: Manifest](k: String) = (old \ k).extractOpt[Map[String, A]].getOrElse(Map.empty)
+      fields: Seq[org.apache.spark.sql.types.StructField]): FileStats.FileStat = j \ "rows" match {
+    case JNothing => FileStats.fileStatOfValue(j, fields)
+    case r =>
+      val rows = r.extract[Long]
+      def side[A: Manifest](k: String) = (j \ k).extractOpt[Map[String, A]].getOrElse(Map.empty)
       val utf8 = org.apache.spark.unsafe.types.UTF8String.fromString _
       val num = side[Double]("minNum").flatMap { case (c, lo) =>
         side[Double]("maxNum").get(c).map(hi => c -> (Math.nextDown(lo): Any, Math.nextUp(hi): Any)) }
