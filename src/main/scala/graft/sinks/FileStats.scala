@@ -13,7 +13,7 @@ import org.json4s.jackson.JsonMethods
   * evaluator for every table log graft writes: [[DeltaInterop]]
   * `add.stats`, [[IcebergInterop]] manifest bounds and graft's own
   * `_graft_log` ([[VersionedTable]]), which records each file's stats
-  * in the same `add.stats` shape ([[statsJson]] / [[fileStatOf]]).
+  * in the same `add.stats` shape ([[statsValue]] / [[fileStatOfValue]]).
   *
   * This is the 100 TB data-skipping path: at scale the win is not
   * row-group skipping inside an opened file (the parquet reader already
