@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.util.concurrent.{Callable, Executors}
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 
@@ -26,7 +26,13 @@ import org.apache.spark.sql.types.StructType
   * `_last_checkpoint`, catalog and checkpoint markers) for a new one.
   * Callers keep everything format-specific: shaping the frame, where
   * their stage root lives, their on-disk naming, every log codec and
-  * probe, and their conflict rules.
+  * their conflict rules.
+  *
+  * File identity lives here too. [[fileKey]] is the one way to name a
+  * file: the driver keys its maps from log entries with it, and looks
+  * the paths Spark reports up as they are. [[walk]] is the one listing
+  * of a table tree, and [[touched]] the one probe for the files that
+  * hold a matching row.
   */
 object CommitKernel {
 
@@ -63,24 +69,15 @@ object CommitKernel {
       maxRecordsPerFile.fold(w)(n => w.option("maxRecordsPerFile", n))
         .parquet(dir.toString)
     }
-    // Plain listStatus walk, not listFiles(recursive): that materializes
-    // block locations per file (measured 3+ s over ~500 dirs).
-    val dirQ = fs.makeQualified(dir).toString + "/"
-    val written = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]()
-    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet")) written += st
-    }
-    walk(dir)
-    val stats = FileStats.fromFooters(spark, written.map(_.getPath.toString).toSeq,
+    val written = walk(fs, dir).filter(_._2.endsWith(".parquet"))
+    val stats = FileStats.fromFooters(spark, written.map(_._1.getPath.toString),
       StructType(df.schema.filterNot(f => partitionBy.contains(f.name))))
     // Zero-row files never reach a log: an empty unpartitioned write
     // still emits one, and callers read emptiness off what was kept.
-    val kept = written.toSeq.flatMap { st =>
-      stats.get(FileStats.canon(st.getPath.toString))
-        .filter(_.numRecords.forall(_ > 0)).map(st -> _)
-    }.zipWithIndex.map { case ((st, stat), i) =>
-      val rel = fs.makeQualified(st.getPath).toString.stripPrefix(dirQ)
+    val kept = written.flatMap { case (st, rel) =>
+      stats.get(st.getPath.toString)
+        .filter(_.numRecords.forall(_ > 0)).map(stat => (st, rel, stat))
+    }.zipWithIndex.map { case ((st, rel, stat), i) =>
       val values = partitionValues(rel, partitionBy)
       (st.getPath, Staged(name(Source(rel, i, values)), st.getLen, values, stat))
     }
@@ -96,6 +93,61 @@ object CommitKernel {
     fs.delete(dir, true)
     removeIfEmpty(fs, root)
     kept.map(_._2)
+  }
+
+  /** The identity of the file at `p`: its qualified URI string, which
+    * is exactly what Spark reports for it in `_metadata.file_path`. A
+    * hive dir `cat=a%3Ab` on disk is `cat=a%253Ab` here, and `c d` is
+    * `c%20d`; Spark's strings need no decoding. The URI is spelled from
+    * its parts, so the local filesystem's empty authority (`file:///x`)
+    * drops out as it does in a listing (`file:/x`). `input_file_name()`
+    * keeps `file:///x` for a file read by its explicit path, so it is
+    * not a key.
+    */
+  def fileKey(fs: FileSystem, p: Path): String = {
+    val u = fs.makeQualified(p).toUri
+    new java.net.URI(u.getScheme, u.getAuthority, u.getPath, null, u.getFragment).toString
+  }
+
+  /** `xs` by the [[fileKey]] of each one's file. */
+  def byKey[A](fs: FileSystem, xs: Seq[A])(pathOf: A => Path): Map[String, A] =
+    xs.map(a => fileKey(fs, pathOf(a)) -> a).toMap
+
+  /** Every file under `root` with its on-disk name relative to `root`,
+    * entering only the directories whose relative name `descend`
+    * accepts. A plain listStatus walk, not listFiles(recursive): that
+    * materializes block locations per file (measured 3+ s over ~500
+    * dirs).
+    */
+  def walk(fs: FileSystem, root: Path,
+      descend: String => Boolean = _ => true): Seq[(FileStatus, String)] = {
+    val out = scala.collection.mutable.ArrayBuffer[(FileStatus, String)]()
+    def go(dir: Path, prefix: String): Unit = fs.listStatus(dir).foreach { st =>
+      val rel = prefix + st.getPath.getName
+      if (!st.isDirectory) out += st -> rel
+      else if (descend(rel)) go(st.getPath, rel + "/")
+    }
+    go(root, "")
+    out.toSeq
+  }
+
+  /** The `candidates` that hold a row of a DML's matching rows, in one
+    * job labelled `label`. `files` is the matching rows' file as Spark
+    * reports it (`_metadata.file_path`), one column; its distinct values
+    * map back through [[fileKey]]. The probe can never see more files
+    * than the candidates, so their count is its cap, and a file outside
+    * them fails loudly rather than being dropped.
+    */
+  def touched[A](files: DataFrame, candidates: Seq[A], pathOf: A => Path,
+      label: String): Seq[A] = {
+    if (candidates.isEmpty) return Nil
+    val spark = files.sparkSession
+    val fs = pathOf(candidates.head).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val byFile = byKey(fs, candidates)(pathOf)
+    graft.JobLabel(spark, label) {
+      LocalProbe.distinctStrings(files, cap = candidates.size)
+    }.toSeq.map(f => byFile.getOrElse(f,
+      throw new IllegalStateException(s"$label: $f is not a candidate file")))
   }
 
   /** Test seam: runs inside [[publish]] once the caller has chosen its

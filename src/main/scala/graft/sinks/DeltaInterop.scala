@@ -441,8 +441,8 @@ object DeltaInterop {
     * physical row identity and anti-join the deleted (file, row) pairs
     * away. Positions decode on EXECUTORS (one task per DV'd file) so DV
     * work distributes with the files; AQE broadcasts the usually-small
-    * deleted side. `_metadata.file_path` is the qualified FileStatus
-    * path — the same string `makeQualified` yields on the driver.
+    * deleted side, keyed by [[CommitKernel.fileKey]], the string Spark
+    * reports as `_metadata.file_path`.
     * `files` must all share one partition tuple and one DV-presence
     * state is NOT required: the split happens here.
     */
@@ -475,7 +475,7 @@ object DeltaInterop {
         val fsq = fsFor(spark, path)
         val root = path
         val tasks = dvFiles.map(a =>
-          (fsq.makeQualified(new Path(resolveAddPath(path, a.path))).toString,
+          (CommitKernel.fileKey(fsq, new Path(resolveAddPath(path, a.path))),
             a.deletionVector.get))
         // ship the SESSION Hadoop conf — a bare `new Configuration()` on
         // the executor would drop custom FS settings (endpoints,
@@ -784,7 +784,7 @@ object DeltaInterop {
     val now = System.currentTimeMillis()
     val statsByFile = FileStats.fromFooters(spark, files.map(_._1), schema)
     val adds = files.map { case (abs, size) =>
-      val st = statsByFile.get(FileStats.canon(abs))
+      val st = statsByFile.get(abs)
       AddFile(encodePath(abs), Map.empty, size, now, dataChange = true,
         stats = st.map(FileStats.statsJson(_, schema.fields.toSeq)))
     }
@@ -1010,18 +1010,46 @@ object DeltaInterop {
     val fs = fsFor(spark, path)
     val snap = snapshot(spark, path)
     requireUnmapped(snap, "deleteDv")
-    val schema = snap.schema
     val partCols = snap.metaData.partitionColumns
-    val dataSchema = StructType(schema.filterNot(f => partCols.contains(f.name)))
     val touched = pruneAdds(spark, snap, Some(where))
     if (touched.isEmpty)
       return DeleteResult(snap.version, 0, snap.adds.size)
-    def qualified(a: AddFile): String =
-      fs.makeQualified(new Path(resolveAddPath(path, a.path))).toString
-    val byQual = touched.map(a => qualified(a) -> a).toMap
-    // scan WITHOUT applying existing DVs: an already-deleted row that
-    // matches again just re-enters the set union below
     val hit = coalesce(where, lit(false))
+    val matches = matchedPositions(spark, path, snap, touched, hit, "deleteDv",
+      "use the rewriting delete() for bulk deletes")
+    if (matches.isEmpty)
+      return DeleteResult(snap.version, 0, snap.adds.size)
+    val (removes, adds, proto) = dvSwapActions(fs, path, snap, matches)
+    if (removes.isEmpty) // every match was already soft-deleted
+      return DeleteResult(snap.version, 0, snap.adds.size)
+    // CDC: the DV-APPLIED frame, so rows an earlier soft delete
+    // already removed are not re-reported as deleted
+    val cdc = cdcIfEnabled(snap, path, partCols)(
+      frameOver(spark, path, snap, touched).filter(hit)
+        .withColumn(ChangeTypeCol, lit("delete")))
+    val version = snap.version + 1
+    publish(fs, path, version,
+      proto ++ removes.map(removeJson) ++ adds.map(addJson) ++ cdc, "DELETE")
+    maybeCheckpoint(spark, path, version)
+    DeleteResult(version, removes.size, snap.adds.size - removes.size)
+  }
+
+  /** The physical row indexes where `hit` holds in each of `touched`,
+    * scanned WITHOUT applying existing DVs: an already-deleted row that
+    * matches again just re-enters [[dvSwapActions]]' set union. One
+    * scan per partition tuple carries `_metadata.row_index`; only the
+    * per-file index arrays reach the driver, and more than
+    * `graft.delta.maxDvRows` of them refuse with `bulkHint`. Empty when
+    * nothing matches.
+    */
+  private def matchedPositions(spark: SparkSession, path: String, snap: Snapshot,
+      touched: Seq[AddFile], hit: Column, op: String,
+      bulkHint: String): Seq[(AddFile, Array[Long])] = {
+    val schema = snap.schema
+    val partCols = snap.metaData.partitionColumns
+    val dataSchema = StructType(schema.filterNot(f => partCols.contains(f.name)))
+    val byFile = CommitKernel.byKey(fsFor(spark, path), touched)(a =>
+      new Path(resolveAddPath(path, a.path)))
     val scans = touched.groupBy(_.partitionValues).toSeq.map { case (pv, files) =>
       val base = spark.read.schema(dataSchema)
         .parquet(files.map(f => resolveAddPath(path, f.path)): _*)
@@ -1040,29 +1068,14 @@ object DeltaInterop {
         .map(_.toLong).getOrElse(DefaultMaxDvRows)
       val total = matching.count()
       require(total <= bound,
-        s"DeltaInterop deleteDv: $total matching rows exceeds $bound " +
-          "(graft.delta.maxDvRows) — use the rewriting delete() for bulk deletes")
-      if (total == 0L)
-        return DeleteResult(snap.version, 0, snap.adds.size)
-      val matches = matching
+        s"DeltaInterop $op: $total matching rows exceeds $bound " +
+          s"(graft.delta.maxDvRows) — $bulkHint")
+      if (total == 0L) Nil
+      else matching
         .groupBy(col("__dv_file"))
         .agg(sort_array(collect_list(col("__dv_row"))).as("rows"))
-        .collect()
-      val (removes, adds, proto) = dvSwapActions(fs, path, snap,
-        matches.toSeq.map(r =>
-          (byQual(r.getString(0)), r.getSeq[Long](1).toArray)))
-      if (removes.isEmpty) // every match was already soft-deleted
-        return DeleteResult(snap.version, 0, snap.adds.size)
-      // CDC: the DV-APPLIED frame, so rows an earlier soft delete
-      // already removed are not re-reported as deleted
-      val cdc = cdcIfEnabled(snap, path, partCols)(
-        frameOver(spark, path, snap, touched).filter(hit)
-          .withColumn(ChangeTypeCol, lit("delete")))
-      val version = snap.version + 1
-      publish(fs, path, version,
-        proto ++ removes.map(removeJson) ++ adds.map(addJson) ++ cdc, "DELETE")
-      maybeCheckpoint(spark, path, version)
-      DeleteResult(version, removes.size, snap.adds.size - removes.size)
+        .collect().toSeq
+        .map(r => (byFile(r.getString(0)), r.getSeq[Long](1).toArray))
     } finally { matching.unpersist(); () }
   }
 
@@ -1086,28 +1099,10 @@ object DeltaInterop {
       s"DeltaInterop updateDv: unknown column $c"))
     require(set.nonEmpty, "DeltaInterop updateDv: empty SET")
     val partCols = snap.metaData.partitionColumns
-    val dataSchema = StructType(schema.filterNot(f => partCols.contains(f.name)))
     val touched = pruneAdds(spark, snap, Some(where))
     if (touched.isEmpty)
       return DeleteResult(snap.version, 0, snap.adds.size)
-    def qualified(a: AddFile): String =
-      fs.makeQualified(new Path(resolveAddPath(path, a.path))).toString
-    val byQual = touched.map(a => qualified(a) -> a).toMap
     val hit = coalesce(where, lit(false))
-    // DV side: scan WITHOUT existing DVs (the set union absorbs overlap)
-    val scans = touched.groupBy(_.partitionValues).toSeq.map { case (pv, files) =>
-      val base = spark.read.schema(dataSchema)
-        .parquet(files.map(f => resolveAddPath(path, f.path)): _*)
-        .withColumn("__dv_file", col("_metadata.file_path"))
-        .withColumn("__dv_row", col("_metadata.row_index"))
-      partCols.foldLeft(base) { (df, c) =>
-        val dt = schema(c).dataType
-        val v = pv.getOrElse(c, None)
-        df.withColumn(c, v.map(s => lit(s).cast(dt)).getOrElse(lit(null).cast(dt)))
-      }
-    }
-    val matching = scans.reduce(_ unionByName _).filter(hit)
-      .select(col("__dv_file"), col("__dv_row")).persist()
     // append side: DV-APPLIED frame → matched rows with SET applied
     val updated = frameOver(spark, path, snap, touched).filter(hit).select(
       schema.fields.toSeq.map { f =>
@@ -1117,21 +1112,11 @@ object DeltaInterop {
         }
       }: _*).persist()
     try {
-      val bound = spark.conf.getOption("graft.delta.maxDvRows")
-        .map(_.toLong).getOrElse(DefaultMaxDvRows)
-      val total = matching.count()
-      require(total <= bound,
-        s"DeltaInterop updateDv: $total matching rows exceeds $bound " +
-          "(graft.delta.maxDvRows) — use the rewriting update() for bulk updates")
-      if (total == 0L)
+      val matches = matchedPositions(spark, path, snap, touched, hit, "updateDv",
+        "use the rewriting update() for bulk updates")
+      if (matches.isEmpty)
         return DeleteResult(snap.version, 0, snap.adds.size)
-      val matches = matching
-        .groupBy(col("__dv_file"))
-        .agg(sort_array(collect_list(col("__dv_row"))).as("rows"))
-        .collect()
-      val (removes, dvAdds, proto) = dvSwapActions(fs, path, snap,
-        matches.toSeq.map(r =>
-          (byQual(r.getString(0)), r.getSeq[Long](1).toArray)))
+      val (removes, dvAdds, proto) = dvSwapActions(fs, path, snap, matches)
       if (removes.isEmpty) // every match was already soft-deleted, and
         // the DV-applied update frame is therefore empty too
         return DeleteResult(snap.version, 0, snap.adds.size)
@@ -1150,7 +1135,7 @@ object DeltaInterop {
           ++ cdc, "UPDATE")
       maybeCheckpoint(spark, path, version)
       DeleteResult(version, removes.size, snap.adds.size - removes.size)
-    } finally { matching.unpersist(); updated.unpersist(); () }
+    } finally { updated.unpersist(); () }
   }
 
   /** UPDATE … SET on the wire format: rows where `where` is TRUE get
@@ -1310,7 +1295,6 @@ object DeltaInterop {
   def merge(spark: SparkSession, path: String, source: DataFrame,
       on: Seq[String], clauses: Seq[VersionedTable.MergeClause],
       txn: Option[(String, Long)] = None): DeleteResult = graft.JobLabel(spark, "delta.merge") {
-    import org.apache.spark.sql.expressions.Window
     require(clauses.nonEmpty, "DeltaInterop merge: no clauses")
     require(on.nonEmpty, "DeltaInterop merge: empty ON key list")
     val fs = fsFor(spark, path)
@@ -1341,33 +1325,19 @@ object DeltaInterop {
       val srcKeys = src.select(on.map(col): _*).distinct()
       val touched: Seq[AddFile] =
         if (candidates.isEmpty) Nil
-        else {
-          val byPath = candidates.map(a =>
-            fs.makeQualified(new Path(resolveAddPath(path, a.path)))
-              .toUri.getPath -> a).toMap
-          graft.JobLabel(spark, "delta.merge: touched-file probe") {
-            LocalProbe.distinctStrings(
-              frameOver(spark, path, snap, candidates, fileCol = Some("__file"))
-                .join(srcKeys, on, "left_semi")
-                .select(col("__file")), cap = candidates.size) // never more than the candidates
-          }.flatMap(f => byPath.get(new Path(f).toUri.getPath))
-            .toSeq
-        }
+        else CommitKernel.touched(
+          frameOver(spark, path, snap, candidates, fileCol = Some("__file"))
+            .join(srcKeys, on, "left_semi").select(col("__file")),
+          candidates, (a: AddFile) => new Path(resolveAddPath(path, a.path)),
+          "delta.merge: touched-file probe")
       val t0 =
         if (touched.isEmpty)
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
         else frameOver(spark, path, snap, touched)
-      val t = t0.withColumn("__te", lit(1)).alias("t")
-      val s = src
-        .withColumn("__scnt", count(lit(1)).over(
-          Window.partitionBy(on.map(col): _*)))
-        .withColumn("__se", lit(1)).alias("s")
-      val j = t.join(s,
-        on.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _),
-        "full_outer").persist()
+      val j = MergeKernel.join(t0, src, on).persist()
       try {
-        val mc = MergeKernel.columns(schema, sourceCols, on, clauses,
-          "DeltaInterop merge")
+        val mc = MergeKernel.columns(schema, schema.fieldNames.toSet, sourceCols, on,
+          clauses, "DeltaInterop merge")
         val resolved = j.select(mc.picked.as("__r"))
           .filter(col("__r").isNotNull).select("__r.*")
         if (touched.isEmpty && resolved.isEmpty)
@@ -1604,28 +1574,18 @@ object DeltaInterop {
     require(retentionMs >= 0, "vacuum: negative retention")
     val fs = fsFor(spark, path)
     val snap = snapshot(spark, path)
-    val live: Set[String] = snap.adds.map(a => decodePath(a.path)).toSet ++
-      // deletion-vector .bin files referenced by the current snapshot
-      snap.adds.flatMap(_.deletionVector.flatMap(_.filePath(path)))
-        .map(p => fs.makeQualified(new Path(p)).toString
-          .stripPrefix(fs.makeQualified(new Path(path)).toString + "/"))
+    // data files and the deletion-vector .bin files they reference
+    val live = (snap.adds.map(a => resolveAddPath(path, a.path)) ++
+      snap.adds.flatMap(_.deletionVector.flatMap(_.filePath(path))))
+      .map(p => CommitKernel.fileKey(fs, new Path(p))).toSet
     val cutoff = System.currentTimeMillis() - retentionMs
-    val base = fs.makeQualified(new Path(path)).toString
-    var deleted = 0
-    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
+    val dead = CommitKernel.walk(fs, new Path(path), _ != LogDir).map(_._1).filter { st =>
       val name = st.getPath.getName
-      if (st.isDirectory) { if (name != LogDir) walk(st.getPath) }
-      else if (name.endsWith(".parquet") ||
-          name.startsWith("deletion_vector_")) {
-        val rel = fs.makeQualified(st.getPath).toString.stripPrefix(base + "/")
-        if (!live.contains(rel) && st.getModificationTime < cutoff) {
-          fs.delete(st.getPath, false)
-          deleted += 1
-        }
-      }
-    }
-    walk(new Path(path))
-    deleted + CommitKernel.reclaim(fs, new Path(s"$path/$StageDir"), retentionMs).size
+      (name.endsWith(".parquet") || name.startsWith("deletion_vector_")) &&
+        !live.contains(CommitKernel.fileKey(fs, st.getPath)) && st.getModificationTime < cutoff
+    }.map(_.getPath)
+    dead.foreach(fs.delete(_, false))
+    dead.size + CommitKernel.reclaim(fs, new Path(s"$path/$StageDir"), retentionMs).size
   }
 
   // ---- change data feed (CDF) ----
@@ -2031,8 +1991,12 @@ object DeltaInterop {
       // full absolute URI: keep scheme AND authority — stripping to
       // getPath would turn s3://bucket/key into /key and read the wrong
       // filesystem. Local empty-authority forms (file:///x) collapse to
-      // the bare path; [[FileStats.canon]] is exactly this rule.
-      FileStats.canon(p)
+      // the bare path.
+      try {
+        val u = java.net.URI.create(p)
+        Option(u.getAuthority).filter(_.nonEmpty)
+          .fold(u.getPath)(a => s"${u.getScheme}://$a${u.getPath}")
+      } catch { case _: IllegalArgumentException => p }
     } else {
       val d = decodePath(p)
       if (d.startsWith("/")) d else s"$tableRoot/$d"

@@ -61,17 +61,20 @@ object FileStats {
 
   /** One Spark job over `files` (all sharing `schema`, no partition
     * columns): per file, row count + min/max/nullCount for every
-    * bound-eligible column. Keys are CANONICAL FULL PATHS ([[canon]]) —
-    * basenames are NOT unique when the file list mixes hive partition
-    * dirs or donor files gathered from arbitrary commits (a task reuses
-    * its part filename in every partition dir it touches), and a
-    * basename collision would cross-assign stats, making stats-based
-    * pruning silently drop matching rows. Look results up with
-    * `statsByFile.get(FileStats.canon(path))`.
+    * bound-eligible column. Keys are the paths as given, mapped from
+    * what Spark reports through [[CommitKernel.fileKey]] — full paths,
+    * because basenames are NOT unique when the file list mixes hive
+    * partition dirs or donor files gathered from arbitrary commits (a
+    * task reuses its part filename in every partition dir it touches),
+    * and a basename collision would cross-assign stats, making
+    * stats-based pruning silently drop matching rows.
     */
   def collect(spark: SparkSession, files: Seq[String],
       schema: StructType): Map[String, FileStat] = {
     if (files.isEmpty) return Map.empty
+    val fs = new org.apache.hadoop.fs.Path(files.head)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val byFile = CommitKernel.byKey(fs, files)(new org.apache.hadoop.fs.Path(_))
     val statCols = schema.fields.filter(f => boundEligible(f.dataType)).toSeq
     val aggs = count(lit(1)).as("_nrec") +: statCols.flatMap { f =>
       Seq(min(col(f.name)).as(s"_min_${f.name}"),
@@ -79,7 +82,7 @@ object FileStats {
         sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"_nc_${f.name}"))
     }
     spark.read.schema(schema).parquet(files: _*)
-      .groupBy(input_file_name().as("_file"))
+      .groupBy(col("_metadata.file_path").as("_file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect() // one row per staged file — bounded by the commit's file count
       .map { r =>
@@ -92,7 +95,7 @@ object FileStats {
             .map(v => toInternal(v, f.dataType))
           f.name -> ColStats(mn, mx, Some(nc), allNull = nc == n)
         }.toMap
-        canon(r.getAs[String]("_file")) -> FileStat(Some(n), cols)
+        byFile(r.getAs[String]("_file")) -> FileStat(Some(n), cols)
       }.toMap
   }
 
@@ -111,7 +114,7 @@ object FileStats {
     * pruning then keeps the file. Truncated binary bounds are still
     * valid bounds (parquet rounds the max UP), so pruning stays sound.
     * A spec pins this route equal to [[collect]] across the type
-    * battery.
+    * battery. Keys are the paths as given.
     */
   def fromFooters(spark: SparkSession, files: Seq[String],
       schema: StructType): Map[String, FileStat] = {
@@ -125,7 +128,7 @@ object FileStats {
       pool.invokeAll(files.map { f =>
         new java.util.concurrent.Callable[(String, FileStat)] {
           override def call(): (String, FileStat) =
-            canon(f) -> readFooterStats(conf, f, statCols)
+            f -> readFooterStats(conf, f, statCols)
         }
       }.asJava).asScala.map(_.get()).toMap
     } finally pool.shutdown()
@@ -279,23 +282,6 @@ object FileStats {
       case _ => None
     }
   }
-
-  /** Canonical form of a file path for stats-map keying: URI forms
-    * percent-decode their path; scheme+authority survive when present
-    * (s3://bucket/key stays bucket-qualified), while local URI shapes
-    * (`file:///x`, `file:/x`) and bare paths all collapse to `/x` — so
-    * `input_file_name()`'s URI spelling and a caller's plain path
-    * spelling of the same file agree. Undecodable strings pass through
-    * verbatim.
-    */
-  def canon(p: String): String =
-    if (p.matches("[A-Za-z][A-Za-z0-9+.-]*:/.*"))
-      try {
-        val u = java.net.URI.create(p)
-        val auth = Option(u.getAuthority).getOrElse("")
-        if (auth.isEmpty) u.getPath else s"${u.getScheme}://$auth${u.getPath}"
-      } catch { case _: IllegalArgumentException => p }
-    else p
 
   /** External (Row) value → catalyst internal value, the domain all
     * comparisons run in (UTF8String for strings, days for dates,

@@ -250,22 +250,12 @@ object HudiInterop {
   private[sinks] final case class Slice(dir: String, fileId: String, instant: String,
       rel: String)
 
-  private[sinks] def slices(fs: FileSystem, path: String): Seq[Slice] = {
-    val rootQ = fs.makeQualified(new Path(path)).toString
-    val out = scala.collection.mutable.ArrayBuffer[Slice]()
-    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
-      val rel = fs.makeQualified(st.getPath).toString.stripPrefix(rootQ + "/")
-      if (st.isDirectory) { if (!rel.startsWith(MetaDir)) walk(st.getPath) }
-      else st.getPath.getName match {
-        case SliceName(fileId, _, instant) =>
-          val dir = rel.split("/").dropRight(1).mkString("/")
-          out += Slice(dir, fileId, instant, rel)
-        case _ => ()
-      }
+  private[sinks] def slices(fs: FileSystem, path: String): Seq[Slice] =
+    CommitKernel.walk(fs, new Path(path), !_.startsWith(MetaDir)).collect {
+      case (st, rel) if SliceName.matches(st.getPath.getName) =>
+        val SliceName(fileId, _, instant) = st.getPath.getName
+        Slice(rel.split("/").dropRight(1).mkString("/"), fileId, instant, rel)
     }
-    walk(new Path(path))
-    out.toSeq
-  }
 
   /** Latest committed slice per file group at `asOf` (or latest). */
   private[sinks] def liveSlices(spark: SparkSession, path: String,
@@ -356,10 +346,11 @@ object HudiInterop {
     val live = liveSlices(spark, path, None)
     val files = live.map { s =>
       val p = fs.makeQualified(new Path(s"$path/${s.rel}"))
-      // FileStats.canon keeps scheme+authority of non-local filesystems
-      // (s3a://bucket/…) — toUri.getPath would strip them and the
-      // adopting format's metadata would point at the wrong filesystem
-      (FileStats.canon(p.toString), fs.getFileStatus(p).getLen)
+      // a plain path on the local filesystem; elsewhere scheme and
+      // authority stay (s3a://bucket/…), or the adopting format's
+      // metadata would point at the wrong filesystem
+      (if (p.toUri.getScheme == "file") p.toUri.getPath else p.toString,
+        fs.getFileStatus(p).getLen)
     }
     // the DATA schema: meta columns stay physically in the donor files
     // but an adopting format's schema simply omits them — by-name
@@ -601,11 +592,27 @@ object HudiInterop {
     * the ceiling the result is exact and complete.
     */
   private[sinks] def collectPairsLocal(df: DataFrame, dirCol: String,
-      bucketCol: String, cap: Int): Array[(String, Int)] =
-    graft.JobLabel(df.sparkSession, "hudi: routing-pair probe") {
+      bucketCol: String, cap: Int): Array[(String, Int)] = {
+    val pairs = graft.JobLabel(df.sparkSession, "hudi: routing-pair probe") {
       LocalProbe.distinctRows(
         df.select(col(dirCol).cast("string"), col(bucketCol).cast("int")), cap)
     }.map(r => (r.getString(0), r.getInt(1)))
+    pairs.foreach { case (dir, _) => requireListable(dir) }
+    pairs
+  }
+
+  /** Hudi partition dirs carry raw values (`cat=2024-01-01 10:00`), and
+    * a Hadoop path cannot hold a `:` in a directory name: such a dir
+    * would be written, then fail every later listing of the table. The
+    * writers refuse it here, before anything is staged.
+    */
+  private def requireListable(dir: String): Unit =
+    dir.split("/").find(_.contains(':')).foreach { seg =>
+      val (c, v) = seg.splitAt(math.max(seg.indexOf('='), 0))
+      throw new IllegalArgumentException(s"HudiInterop: partition column $c " +
+        s"value '${v.stripPrefix("=")}' holds a ':', which a Hadoop path " +
+        "cannot hold in a directory name")
+    }
 
   private[sinks] def semiJoinPairs(df: DataFrame,
       pairs: Iterable[(String, Int)]): DataFrame =
@@ -791,9 +798,11 @@ object HudiInterop {
         timelineInstants(fs, path, ".commit.requested") ++
         timelineInstants(fs, path, ".deltacommit") ++
         timelineInstants(fs, path, ".deltacommit.requested"))
+    // routed before the instant opens, so a refused write leaves no trace
+    val pairs = knownPairs.getOrElse(routePairs(df, fs, path, recordKey, partitionBy))
     runInstant(fs, path, instant, action) {
       writeStatsJson(stageSlices(df, path, recordKey, precombine, partitionBy,
-        carryOver, instant, knownPairs), if (carryOver.isDefined) "UPSERT" else "INSERT")
+        carryOver, instant, pairs), if (carryOver.isDefined) "UPSERT" else "INSERT")
     }
   }
 
@@ -816,11 +825,7 @@ object HudiInterop {
     JsonMethods.pretty(JsonMethods.render(statsJson))
   }
 
-  /** Stage new base slices for `df`'s (dir, bucket) file groups under
-    * `instant` WITHOUT touching the timeline — the caller owns the
-    * instant lifecycle, so a MOR upsert can publish base bootstraps and
-    * log appends under ONE atomic delta commit. Returns one
-    * (dir, fileId, relPath, bytes) entry per written slice file.
+  /** The (dir, bucket) -> fileId routing of `df`'s rows, one probe job.
     *
     * Group assignment: bucket = hash(record key) % N
     * (`graft.hudi.num.file.groups`, graft's bucket-index analog),
@@ -833,29 +838,35 @@ object HudiInterop {
     * carried row duplicated); unroutable foreign layouts refuse loudly
     * in [[routeGroup]].
     */
+  private def routePairs(df: DataFrame, fs: FileSystem, path: String,
+      recordKey: String, partitionBy: Seq[String]): Map[(String, Int), String] = {
+    val n = numFileGroups(fs, path)
+    val committedSet = (timelineInstants(fs, path, ".commit") ++
+      timelineInstants(fs, path, ".deltacommit")).toSet
+    val liveGroupByDir = slices(fs, path)
+      .filter(s => committedSet.contains(s.instant))
+      .groupBy(_.dir).map { case (d, ss) => d -> ss.map(_.fileId).distinct }
+    collectPairsLocal(
+        df.select(hivePath(partitionBy).as("__dir"), bucketExpr(recordKey, n).as("__bucket")),
+        "__dir", "__bucket", cap = Int.MaxValue) // exact: one entry per written group
+      .map { case (d, b) => (d, b) -> routeGroup(liveGroupByDir, n, d, b) }.toMap
+  }
+
+  /** Stage new base slices for `df`'s (dir, bucket) file groups under
+    * `instant` WITHOUT touching the timeline — the caller owns the
+    * instant lifecycle, so a MOR upsert can publish base bootstraps and
+    * log appends under ONE atomic delta commit. `fidByPair` is the
+    * groups' routing ([[routePairs]]). Returns one
+    * (dir, fileId, relPath, bytes) entry per written slice file.
+    */
   private[sinks] def stageSlices(df: DataFrame, path: String, recordKey: String,
       precombine: String, partitionBy: Seq[String],
       carryOver: Option[Unit], instant: String,
-      knownPairs: Option[Map[(String, Int), String]] = None): Seq[(String, String, String, Long)] = {
+      fidByPair: Map[(String, Int), String]): Seq[(String, String, String, Long)] = {
     val spark = df.sparkSession
     val fs = fsFor(spark, path)
     val n = numFileGroups(fs, path)
     val dirCol = hivePath(partitionBy)
-    // the (dir, bucket) -> fileId routing: reuse the caller's resolved
-    // map when it already ran the distinct (a MOR upsert routes the
-    // whole batch before splitting fresh/update) — the distinct+collect
-    // is a full Spark job per call otherwise
-    val fidByPair: Map[(String, Int), String] = knownPairs.getOrElse {
-      val committedSet = (timelineInstants(fs, path, ".commit") ++
-        timelineInstants(fs, path, ".deltacommit")).toSet
-      val liveGroupByDir = slices(fs, path)
-        .filter(s => committedSet.contains(s.instant))
-        .groupBy(_.dir).map { case (d, ss) => d -> ss.map(_.fileId).distinct }
-      collectPairsLocal(
-          df.select(dirCol.as("__dir"), bucketExpr(recordKey, n).as("__bucket")),
-          "__dir", "__bucket", cap = Int.MaxValue) // exact: one entry per written group
-        .map { case (d, b) => (d, b) -> routeGroup(liveGroupByDir, n, d, b) }.toMap
-    }
     val isCarry = carryOver.isDefined && df.schema.fieldNames.contains("__is_incoming")
     // fileId is a pure function of (dir, bucket): a literal map keeps
     // the stamp codegen'd (no UDF); huge pair sets route through the

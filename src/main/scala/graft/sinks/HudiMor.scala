@@ -79,22 +79,13 @@ object HudiMor {
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def logFiles(fs: FileSystem, path: String): Seq[LogFile] = {
-    val rootQ = fs.makeQualified(new Path(path)).toString
-    val out = scala.collection.mutable.ArrayBuffer[LogFile]()
-    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
-      val rel = fs.makeQualified(st.getPath).toString.stripPrefix(rootQ + "/")
-      if (st.isDirectory) { if (!rel.startsWith(MetaDir)) walk(st.getPath) }
-      else st.getPath.getName match {
-        case LogName(fileId, baseInstant, version, _) =>
-          val dir = rel.split("/").dropRight(1).mkString("/")
-          out += LogFile(dir, fileId, baseInstant, version.toInt, rel)
-        case _ => ()
-      }
+  private def logFiles(fs: FileSystem, path: String): Seq[LogFile] =
+    CommitKernel.walk(fs, new Path(path), !_.startsWith(MetaDir)).collect {
+      case (st, rel) if LogName.matches(st.getPath.getName) =>
+        val LogName(fileId, baseInstant, version, _) = st.getPath.getName
+        LogFile(rel.split("/").dropRight(1).mkString("/"), fileId, baseInstant,
+          version.toInt, rel)
     }
-    walk(new Path(path))
-    out.toSeq
-  }
 
   private def completed(fs: FileSystem, path: String,
       asOf: Option[String]): Set[String] =
@@ -712,7 +703,7 @@ object HudiMor {
         val fresh = HudiInterop.semiJoinPairs(batch, freshPairs.keys)
           .drop("__dir", "__bucket")
         entries ++= HudiInterop.stageSlices(fresh, path, recordKey, precombine,
-          partitionBy, carryOver = None, instant, knownPairs = Some(freshPairs))
+          partitionBy, carryOver = None, instant, freshPairs)
       }
       if (updatePairs.nonEmpty) {
         val updates = HudiInterop.semiJoinPairs(batch, updatePairs.keys)

@@ -866,7 +866,7 @@ object IcebergInterop {
     val stats = FileStats.fromFooters(spark, files.map(_._1), schema)
     commitRefs(spark, fs, path, schema,
       files.map { case (p, bytes) =>
-        val st = stats.get(FileStats.canon(p))
+        val st = stats.get(p)
         DataFileRef(p, st.flatMap(_.numRecords).getOrElse(0L), bytes, stat = st)
       },
       overwrite = false, txn = None,
@@ -1082,7 +1082,7 @@ object IcebergInterop {
             val fsx = new org.apache.hadoop.fs.Path(pp)
               .getFileSystem(sconf.value)
             IcebergDv.positions(fsx, pp, off, len)
-              .map(pos => (normPathStr(ref), pos, q))
+              .map(pos => (ref, pos, q))
           }.toDF("__del_fp", "__del_pos", "__mseq"))
       }
     val out =
@@ -1091,7 +1091,7 @@ object IcebergInterop {
           schema)
       else if (posDeletes.isEmpty && eqDeletes.isEmpty && dvDf.isEmpty)
         spark.read.schema(schema).parquet(files: _*)
-      else applyRowDeletes(spark, schema, files,
+      else applyRowDeletes(spark, fs, schema, files,
         files.map(f => f -> seqByPath.getOrElse(f, 0L)).toMap,
         posDeletes, eqDeletes, dvDf)
     where.map(out.filter).getOrElse(out)
@@ -1105,49 +1105,35 @@ object IcebergInterop {
     StructField("file_path", StringType, nullable = false),
     StructField("pos", LongType, nullable = false)))
 
-  /** ONE path-normalization rule for every side of the merge-on-read
-    * join (`_metadata.file_path` URIs, manifest strings, delete-file
-    * columns): the merge anti-join silently skips deletes if any side
-    * spells a path differently, so the rule exists exactly once, in a
-    * column and a string spelling sharing the same regex. (This is the
-    * column-expressible subset of [[FileStats.canon]] — local `file:`
-    * URIs collapse to plain paths; object-store URIs pass through
-    * verbatim on every side, staying consistent.)
-    */
-  private val LocalUriPrefix = "^file:/+"
-  private def normPathCol(c: Column): Column =
-    regexp_replace(c, LocalUriPrefix, "/")
-  private def normPathStr(s: String): String =
-    s.replaceFirst(LocalUriPrefix, "/")
-  private def normalizedFilePath: Column =
-    normPathCol(col("_metadata.file_path"))
-
   /** Merge-on-read: anti-join the data rows against the position
     * deletes on (file path, row position), scoped by the spec's
     * sequence rule — a delete applies only to files whose data
     * sequence is <= the delete's. Row positions come from Spark's
     * `_metadata.row_index` (exact parquet row ordinals); the delete
     * set rides a broadcast (bounded: deletes are maintenance-compacted
-    * away, never corpus-sized).
+    * away, never corpus-sized). Delete files name a data file as the
+    * manifest spells it; the broadcast per-file table maps Spark's
+    * spelling ([[CommitKernel.fileKey]]) to that one.
     */
-  private def applyRowDeletes(spark: SparkSession, schema: StructType,
+  private def applyRowDeletes(spark: SparkSession, fs: FileSystem, schema: StructType,
       files: Seq[String], dataSeqByPath: Map[String, Long],
       posDeletes: Seq[(String, Long)],
       eqDeletes: Seq[(String, Long, Seq[String])],
       dvDeletes: Option[DataFrame] = None): DataFrame = {
     val base = spark.read.schema(schema).parquet(files: _*)
-      .withColumn("__fp", normalizedFilePath)
+      .withColumn("__fk", col("_metadata.file_path"))
       .withColumn("__pos", col("_metadata.row_index"))
     val seqDf = spark.createDataFrame(
       dataSeqByPath.toSeq.map { case (p, q) =>
-        org.apache.spark.sql.Row(normPathStr(p), q) }.asJava,
-      StructType(Seq(StructField("__fp", StringType), StructField("__dseq", LongType))))
-    val seqd = base.join(broadcast(seqDf), Seq("__fp"), "left")
+        org.apache.spark.sql.Row(CommitKernel.fileKey(fs, new Path(p)), p, q) }.asJava,
+      StructType(Seq(StructField("__fk", StringType), StructField("__fp", StringType),
+        StructField("__dseq", LongType))))
+    val seqd = base.join(broadcast(seqDf), Seq("__fk"), "left")
     // position deletes and v3 deletion vectors share one anti-join:
     // both name (file, row ordinal, delete sequence) tuples
     val posFrames = posDeletes.map { case (p, q) =>
       spark.read.schema(DeleteFileSchema).parquet(p)
-        .select(normPathCol(col("file_path")).as("__del_fp"),
+        .select(col("file_path").as("__del_fp"),
           col("pos").as("__del_pos"), lit(q).as("__mseq"))
     } ++ dvDeletes.toSeq
     val afterPos =
@@ -1219,9 +1205,11 @@ object IcebergInterop {
       (d: GenericRecord) => fileStatOf(d, schema, partFields))
     if (pruned.isEmpty) return curId // no file can match: no-op
     val files = pruned.map(_.get("file_path").toString)
+    // a delete names its data file as the manifest spells it
+    val manifestPath = typedLit(CommitKernel.byKey(fs, files)(new Path(_)))
     val matches = spark.read.schema(schema).parquet(files: _*)
       .filter(coalesce(where, lit(false)))
-      .select(normalizedFilePath.as("file_path"),
+      .select(element_at(manifestPath, col("_metadata.file_path")).as("file_path"),
         col("_metadata.row_index").as("pos"))
     // the spec requires delete files sorted by (file_path, pos); the
     // row count comes from the staged file's own footer
@@ -1360,7 +1348,6 @@ object IcebergInterop {
   def merge(spark: SparkSession, path: String, source: DataFrame,
       on: Seq[String], clauses: Seq[VersionedTable.MergeClause],
       txn: Option[(String, Long)] = None): Long = graft.JobLabel(spark, "iceberg.merge") {
-    import org.apache.spark.sql.expressions.Window
     require(clauses.nonEmpty, "IcebergInterop merge: no clauses")
     require(on.nonEmpty, "IcebergInterop merge: empty ON key list")
     val fs = fsFor(spark, path)
@@ -1395,25 +1382,13 @@ object IcebergInterop {
     }
     val src = source.persist()
     try {
-      val t = t0.withColumn("__te", lit(1)).alias("t")
-      val s = src
-        .withColumn("__scnt", count(lit(1)).over(
-          Window.partitionBy(on.map(col): _*)))
-        .withColumn("__se", lit(1)).alias("s")
-      val j = t.join(s,
-        on.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _),
-        "full_outer").persist()
-      val mc = MergeKernel.columns(schema, source.columns.toSet, on, clauses,
-        "IcebergInterop merge")
+      val j = MergeKernel.join(t0, src, on).persist()
+      val mc = MergeKernel.columns(schema, schema.fieldNames.toSet, source.columns.toSet,
+        on, clauses, "IcebergInterop merge")
       // keys to equality-delete: every matched row some clause acted on
       // (the filter's guard raises on duplicate source rows even when
       // nothing is appended — delete-only merges still validate)
-      val dupGuard = when(col("s.__scnt") > 1,
-        raise_error(concat(
-          lit("IcebergInterop merge: multiple source rows match target key "),
-          concat_ws(",", on.map(k => col(s"s.$k").cast("string")): _*)))
-          .cast("boolean")).otherwise(lit(true))
-      val delKeys = j.filter(mc.matched && mc.matchTag =!= "keep" && dupGuard)
+      val delKeys = j.filter(mc.matched && mc.matchTag =!= "keep" && mc.guard)
         .select(on.map(k => col(s"t.$k").as(k)): _*).distinct()
       try {
         // append set: updated matched rows + inserted rows (the dup
@@ -2226,8 +2201,7 @@ object IcebergInterop {
     val fs = fsFor(spark, path)
     require(currentVersion(fs, path).isDefined,
       s"not an Iceberg table (no metadata/version-hint.text): $path")
-    def keyOf(p: String): String =
-      FileStats.canon(fs.makeQualified(new Path(p)).toString)
+    def keyOf(p: String): String = CommitKernel.fileKey(fs, new Path(p))
     val reachable = scala.collection.mutable.Set[String]()
     val visitedManifests = scala.collection.mutable.Set[String]()
     val metaDir = new Path(s"$path/metadata")
@@ -2259,19 +2233,13 @@ object IcebergInterop {
     // files the manifests marked visited already contributed their
     // entries; now walk the tree for unreferenced candidates
     val cutoff = System.currentTimeMillis() - olderThanMs
-    var deleted = 0
-    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory) walk(st.getPath)
-      else if ((name.endsWith(".parquet") || name.endsWith(".avro")) &&
-          !reachable.contains(keyOf(st.getPath.toString)) &&
-          st.getModificationTime < cutoff) {
-        fs.delete(st.getPath, false)
-        deleted += 1
-      }
+    val orphans = CommitKernel.walk(fs, new Path(path)).collect {
+      case (st, rel) if (rel.endsWith(".parquet") || rel.endsWith(".avro")) &&
+          !reachable.contains(CommitKernel.fileKey(fs, st.getPath)) &&
+          st.getModificationTime < cutoff => st.getPath
     }
-    walk(new Path(path))
-    deleted
+    orphans.foreach(fs.delete(_, false))
+    orphans.size
   }
 
   /** `rollback_to_snapshot`: a metadata-only new version whose

@@ -563,7 +563,7 @@ object VersionedTable {
   /** Second-chance bypass for base files the RANGE test could not clear:
     * when the table bloom-indexes the merge key and the touched dirs'
     * log-recorded delta row counts are small, the delta KEYS are read in
-    * ONE bounded job (keys attributed to their dir via input_file_name)
+    * ONE bounded job (keys attributed to their dir via their file)
     * and probed against each base file's log bloom — a file containing
     * none of the touched keys skips the collapse window even when ranges
     * overlap, which is exactly the scattered-update workload where
@@ -595,12 +595,12 @@ object VersionedTable {
     val allFiles = eligibleDirs.flatMap(deltasByDir)
     val frame = spark.read.option("basePath", path)
       .parquet(allFiles.map(f => s"$path/$f"): _*)
-      .select(input_file_name().as("__f"), col(key).as("__k")).distinct()
+      .select(col("_metadata.file_path").as("__f"), col(key).as("__k")).distinct()
     val dt = frame.schema.fields(1).dataType
     if (keyDt.exists(_ != dt.catalogString)) return Set.empty
-    val relIdx = relIndex(allFiles)
+    val byFile = CommitKernel.byKey(fsFor(spark, path), allFiles)(f => new Path(s"$path/$f"))
     val keysByDir = frame.collect().filter(!_.isNullAt(1))
-      .groupBy(r => dirOf(relOf(relIdx, r.getString(0))))
+      .groupBy(r => dirOf(byFile(r.getString(0))))
       .view.mapValues(_.map(_.get(1)).distinct.map { v =>
         val litE = Literal.create(v, dt)
         (XxHash64(Seq(litE), 42L).eval(null).asInstanceOf[Long],
@@ -1036,22 +1036,12 @@ object VersionedTable {
     CommitKernel.stage(df, path, StageDir, "graft: stage files", partitionCols,
       maxRecordsPerFile)(_.rel)
 
-  /** Recursive parquet-file walk via plain listStatus — NOT
-    * listFiles(recursive), which materializes block locations per file
-    * (measured 3+ s over ~500 dirs). Skips the log and stage trees.
-    * Yields (status, root-relative path).
+  /** The table tree's parquet files with their table-relative names,
+    * outside the log and stage trees.
     */
-  private def walkParquet(fs: FileSystem, root: Path)(
-      f: (org.apache.hadoop.fs.FileStatus, String) => Unit): Unit = {
-    val rootQ = fs.makeQualified(root).toString
-    def go(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
-      val rel = fs.makeQualified(st.getPath).toString.stripPrefix(rootQ + "/")
-      if (st.isDirectory) {
-        if (!rel.startsWith(LogDir) && !rel.startsWith(StageDir)) go(st.getPath)
-      } else if (rel.endsWith(".parquet")) f(st, rel)
-    }
-    go(root)
-  }
+  private def dataFiles(fs: FileSystem, path: String): Seq[(org.apache.hadoop.fs.FileStatus, String)] =
+    CommitKernel.walk(fs, new Path(path), d => !d.startsWith(LogDir) && !d.startsWith(StageDir))
+      .filter(_._2.endsWith(".parquet"))
 
   /** Every `checkpointEvery` commits, embed the full live-file manifest so
     * snapshot resolution replays a bounded number of log files.
@@ -1621,12 +1611,9 @@ object VersionedTable {
     // HOLDING a matching row are rewritten; co-resident files in the
     // same dir keep their bytes. Dir-level scoping would rewrite a whole
     // partition for one clustered row — fatal at 100 TB.
-    val byBase = candidates.groupBy(f => f.substring(f.lastIndexOf('/') + 1))
-    val affected = graft.JobLabel(spark, "vt.delete: touched-file probe") {
-      LocalProbe.distinctStrings(
-        readSet(candidates).filter(predicate).select(input_file_name()),
-        cap = candidates.size) // never more than the candidates
-    }.map(relOf(byBase, _)).toIndexedSeq
+    val affected = CommitKernel.touched(
+      readSet(candidates).filter(predicate).select(col("_metadata.file_path")),
+      candidates, (f: String) => new Path(s"$path/$f"), "vt.delete: touched-file probe")
     if (affected.isEmpty) return latestVersion(spark, path) // nothing matches
     val kept = readSet(affected).filter(!coalesce(predicate, lit(false)))
     val staged = stage(spark, path, byPartitions(kept, effPartitionCols),
@@ -1668,15 +1655,13 @@ object VersionedTable {
     val logReader = snapshotSchema(upTo).map(spark.read.schema(_)).getOrElse(spark.read)
     val candidates = prunedCandidates(spark, path, upTo, live, predicate)
     if (candidates.isEmpty) return latestVersion(spark, path) // nothing can match
-    val byBase = candidates.groupBy(f => f.substring(f.lastIndexOf('/') + 1))
-    val affected = graft.JobLabel(spark, "vt.update: touched-file probe") {
-      LocalProbe.distinctStrings(PartitionTransforms.derive(
+    val affected = CommitKernel.touched(
+      PartitionTransforms.derive(
           logReader.option("basePath", path)
             .parquet(candidates.map(f => s"$path/$f"): _*)
             .drop(tfs.map(_.name): _*), tfs)
-        .filter(predicate)
-        .select(input_file_name()), cap = candidates.size) // never more than the candidates
-    }.map(relOf(byBase, _)).toIndexedSeq
+        .filter(predicate).select(col("_metadata.file_path")),
+      candidates, (f: String) => new Path(s"$path/$f"), "vt.update: touched-file probe")
     if (affected.isEmpty) return latestVersion(spark, path) // nothing matches
     val src = logReader
       .option("basePath", path)
@@ -1754,7 +1739,6 @@ object VersionedTable {
       txn: Option[(String, Long)] = None, statsCols: Seq[String] = Nil,
       evolveSchema: Boolean = false,
       extraKeyCols: Seq[String] = Nil): Long = graft.JobLabel(spark, "vt.merge") {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.StructType
     require(clauses.nonEmpty, "merge: no clauses")
     requireSimpleNames("key", Seq(key))
@@ -1797,9 +1781,6 @@ object VersionedTable {
         .parquet(live.map(f => s"$path/$f"): _*).schema)
     val outSchema: StructType =
       if (evolveSchema) mergeSchemas(targetSchema, source.schema) else targetSchema
-    val outType = StructType(outSchema.fields)
-    val targetCols = targetSchema.fieldNames.toSet
-    val sourceCols = source.columns.toSet
     val base0 =
       if (affected.isEmpty)
         spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), targetSchema)
@@ -1808,57 +1789,11 @@ object VersionedTable {
     val base = PartitionTransforms.derive(
       base0.drop(tfs.map(_.name): _*), tfs)
     val joinKeys = ((effPartitionCols ++ extraKeyCols) :+ key).distinct
-    // Presence markers distinguish "no row on this side" from null data;
-    // the windowed count catches multiple source rows per join key.
-    val t = base.withColumn("__te", lit(1)).alias("t")
-    val s = effSource
-      .withColumn("__scnt", count(lit(1)).over(
-        Window.partitionBy(joinKeys.map(col): _*)))
-      .withColumn("__se", lit(1)).alias("s")
-    val j = t.join(s,
-      joinKeys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _),
-      "full_outer")
-    def fromTarget: org.apache.spark.sql.Column = struct(outSchema.fields.toSeq.map { f =>
-      (if (targetCols(f.name)) col(s"t.${f.name}")
-       else lit(null).cast(f.dataType)).as(f.name)
-    }: _*)
-    def fromMap(m: Map[String, org.apache.spark.sql.Column],
-        default: String => org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-      val unknown = m.keySet.filterNot(outSchema.fieldNames.contains)
-      require(unknown.isEmpty, s"merge: unknown target columns $unknown")
-      struct(outSchema.fields.toSeq.map { f =>
-        m.getOrElse(f.name, default(f.name)).cast(f.dataType).as(f.name)
-      }: _*)
-    }
-    def fromSource(name: String): org.apache.spark.sql.Column =
-      if (sourceCols(name)) col(s"s.$name") else lit(null)
-    val dropRow = lit(null).cast(outType)
-    val matchedResult = clauses.foldRight(fromTarget) {
-      case (MatchedUpdate(set, cond), acc) =>
-        when(cond.getOrElse(lit(true)),
-          fromMap(set, c => if (targetCols(c)) col(s"t.$c") else lit(null))).otherwise(acc)
-      case (MatchedDelete(cond), acc) =>
-        when(cond.getOrElse(lit(true)), dropRow).otherwise(acc)
-      case (_, acc) => acc
-    }
-    val notMatchedResult = clauses.foldRight(dropRow) {
-      case (NotMatchedInsert(values, cond), acc) =>
-        when(cond.getOrElse(lit(true)),
-          fromMap(values.getOrElse(Map.empty), fromSource)).otherwise(acc)
-      case (_, acc) => acc
-    }
-    val matched = col("t.__te").isNotNull && col("s.__se").isNotNull
-    val picked =
-      when(matched && col("s.__scnt") > 1,
-        raise_error(concat(lit("merge: multiple source rows match target key "),
-          col(s"s.$key").cast("string"))).cast(outType))
-        .when(matched, matchedResult)
-        .when(col("t.__te").isNotNull, fromTarget)
-        .otherwise(notMatchedResult)
-    var resolved = j.select(picked.as("__r"))
-      .filter(col("__r").isNotNull).select("__r.*")
-    resolved = byPartitions(
-      PartitionTransforms.derive(resolved, tfs), effPartitionCols)
+    val mc = MergeKernel.columns(outSchema, targetSchema.fieldNames.toSet,
+      source.columns.toSet, Seq(key), clauses, "merge")
+    val resolved = byPartitions(PartitionTransforms.derive(
+      MergeKernel.join(base, effSource, joinKeys).select(mc.picked.as("__r"))
+        .filter(col("__r").isNotNull).select("__r.*"), tfs), effPartitionCols)
     val enforcedSet = currentConstraints(all)
     val staged = stage(spark, path,
       enforced(resolved, enforcedSet), effPartitionCols)
@@ -1894,28 +1829,6 @@ object VersionedTable {
     }.toMap)
   }
 
-  /** Map an `input_file_name()` URI back to its table-relative path by
-    * FULL-path suffix. Basename alone is NOT unique: a task writing a
-    * hive-partitioned frame reuses its part filename in every partition
-    * dir it touches (p=a/part-00000-X and p=b/part-00000-X), so keying
-    * stats or blooms by basename would cross-assign them between
-    * partitions — and wrong stats prune wrongly. The URI is URL-encoded
-    * (hive-escaped partition values encode again: ':' → %3A → %253A),
-    * so it is decoded before matching; basenames shortlist candidates,
-    * keeping the match linear in file count.
-    */
-  private def relIndex(rels: Seq[String]): Map[String, Seq[String]] =
-    rels.groupBy(r => r.substring(r.lastIndexOf('/') + 1))
-
-  private def relOf(index: Map[String, Seq[String]], fileUri: String): String = {
-    val decoded =
-      try java.net.URI.create(fileUri).getPath
-      catch { case _: IllegalArgumentException => fileUri }
-    val base = decoded.substring(decoded.lastIndexOf('/') + 1)
-    index.getOrElse(base, Nil).find(r => decoded.endsWith("/" + r)).getOrElse(
-      throw new IllegalStateException(s"index scan saw unexpected file $fileUri"))
-  }
-
   /** Per-file blooms over `bloomCols` for the staged files, built in ONE
     * distributed pass: codegen'd xxhash64 pair per row → [[BloomBitsAgg]]
     * per (file, column) → m/8 bytes per file to the driver, base64'd into
@@ -1939,13 +1852,12 @@ object VersionedTable {
           org.apache.spark.sql.GraftShim.expression(xxhash64(col(c), lit(1))),
           colBits(c), k).toAggregateExpression()).as(s"__bloom_$c")
     }
-    val rows = df.groupBy(input_file_name().as("__file"))
+    val rows = df.groupBy(col("_metadata.file_path").as("__file"))
       .agg(aggs.head, aggs.tail: _*).collect()
     val enc = java.util.Base64.getEncoder
-    val relIdx = relIndex(rels)
+    val byFile = CommitKernel.byKey(fsFor(spark, path), rels)(r => new Path(s"$path/$r"))
     Some(rows.map { r =>
-      val rel = relOf(relIdx, r.getString(0))
-      rel -> cols.map(c => c -> BloomStat(colBits(c), k, fields(c).catalogString,
+      byFile(r.getString(0)) -> cols.map(c => c -> BloomStat(colBits(c), k, fields(c).catalogString,
         enc.encodeToString(r.getAs[Array[Byte]](s"__bloom_$c")))).toMap
     }.toMap)
   }
@@ -2403,7 +2315,7 @@ object VersionedTable {
     // the same retention-window bet).
     val now = System.currentTimeMillis()
     val orphans = scala.collection.mutable.ArrayBuffer[String]()
-    walkParquet(fs, new Path(path)) { (st, rel) =>
+    dataFiles(fs, path).foreach { case (st, rel) =>
       if (!everReferenced.contains(rel) &&
           now - st.getModificationTime > orphanMinAgeMs) {
         fs.delete(st.getPath, false)
@@ -2470,9 +2382,8 @@ object VersionedTable {
       transforms: Seq[PartitionTransforms.Transform] = Nil): Long = {
     val fs = fsFor(spark, path)
     require(commits(fs, path).isEmpty, s"already a versioned table: $path")
-    val files = scala.collection.mutable.ArrayBuffer[String]()
-    // skipInternal: never adopt staging debris of crashed writes
-    walkParquet(fs, new Path(path))((_, rel) => files += rel)
+    // never adopt staging debris of crashed writes
+    val files = dataFiles(fs, path).map(_._2)
     require(files.nonEmpty, s"convert: no parquet files under $path")
     val schema = spark.read.option("basePath", path)
       .parquet(files.toSeq.map(f => s"$path/$f"): _*)
@@ -2774,36 +2685,53 @@ object VersionedTable {
   }
 }
 
-/** Clause evaluation shared by the WIRE-FORMAT MERGE implementations
-  * ([[DeltaInterop.merge]], [[IcebergInterop.merge]]) over the
-  * convention both build: target aliased `t` with presence marker
-  * `__te`, source aliased `s` with `__se` and a windowed per-key count
-  * `__scnt`, full-outer joined on the ON keys. All results are COLUMNS
-  * over that join — clause application stays one declarative plan, the
+/** Clause evaluation shared by every MERGE ([[VersionedTable.merge]],
+  * [[DeltaInterop.merge]], [[IcebergInterop.merge]]) over the one join
+  * [[join]] builds: target aliased `t` with presence marker `__te`,
+  * source aliased `s` with `__se` and a windowed per-key count `__scnt`,
+  * full-outer joined on the match keys. All results are COLUMNS over
+  * that join — clause application stays one declarative plan, the
   * multiple-source-rows guard is an in-plan `raise_error`.
-  * ([[VersionedTable.merge]] itself keeps its own copy: its output
-  * schema can evolve past the table's, a shape the wire formats
-  * don't support.)
   */
 private[sinks] object MergeKernel {
-  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
   import org.apache.spark.sql.types.StructType
   import VersionedTable.{MatchedDelete, MatchedUpdate, MergeClause, NotMatchedInsert}
 
+  /** `target` full-outer joined to `source` on equal `keys`. */
+  def join(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
+    val t = target.withColumn("__te", lit(1)).alias("t")
+    val s = source
+      .withColumn("__scnt", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .withColumn("__se", lit(1)).alias("s")
+    t.join(s, keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _), "full_outer")
+  }
+
+  /** `guard` is true, or raises the multiple-source-rows error on a
+    * source row whose key occurs more than once.
+    */
   final case class Cols(matched: Column, matchedResult: Column,
       notMatchedResult: Column, fromTarget: Column, matchTag: Column,
-      picked: Column)
+      picked: Column, guard: Column)
 
-  def columns(schema: StructType, sourceCols: Set[String], on: Seq[String],
-      clauses: Seq[MergeClause], errPrefix: String): Cols = {
-    val outType = StructType(schema.fields)
-    def fromTarget: Column = struct(schema.fields.toSeq.map(f =>
-      col(s"t.${f.name}").as(f.name)): _*)
+  /** Clause results as rows of `out`, the merge's output schema. A
+    * column of `out` that is not in `targetCols` (a schema the merge
+    * evolves) reads null on the target side. `errKeys` are the key
+    * columns the duplicate-source error prints.
+    */
+  def columns(out: StructType, targetCols: Set[String], sourceCols: Set[String],
+      errKeys: Seq[String], clauses: Seq[MergeClause], errPrefix: String): Cols = {
+    val outType = StructType(out.fields)
+    def fromTargetCol(c: String): Column = if (targetCols(c)) col(s"t.$c") else lit(null)
+    def fromTarget: Column = struct(out.fields.toSeq.map(f =>
+      (if (targetCols(f.name)) col(s"t.${f.name}")
+       else lit(null).cast(f.dataType)).as(f.name)): _*)
     def fromMap(m: Map[String, Column], default: String => Column): Column = {
-      val unknown = m.keySet.filterNot(schema.fieldNames.contains)
+      val unknown = m.keySet.filterNot(out.fieldNames.contains)
       require(unknown.isEmpty, s"$errPrefix: unknown target columns $unknown")
-      struct(schema.fields.toSeq.map { f =>
+      struct(out.fields.toSeq.map { f =>
         m.getOrElse(f.name, default(f.name)).cast(f.dataType).as(f.name)
       }: _*)
     }
@@ -2812,8 +2740,7 @@ private[sinks] object MergeKernel {
     val dropRow = lit(null).cast(outType)
     val matchedResult = clauses.foldRight(fromTarget) {
       case (MatchedUpdate(set, cond), acc) =>
-        when(cond.getOrElse(lit(true)),
-          fromMap(set, c => col(s"t.$c"))).otherwise(acc)
+        when(cond.getOrElse(lit(true)), fromMap(set, fromTargetCol)).otherwise(acc)
       case (MatchedDelete(cond), acc) =>
         when(cond.getOrElse(lit(true)), dropRow).otherwise(acc)
       case (_, acc) => acc
@@ -2833,15 +2760,18 @@ private[sinks] object MergeKernel {
       case (_, acc) => acc
     }
     val matched = col("t.__te").isNotNull && col("s.__se").isNotNull
+    val keyText = errKeys match {
+      case Seq(k) => col(s"s.$k").cast("string")
+      case ks => concat_ws(",", ks.map(k => col(s"s.$k").cast("string")): _*)
+    }
+    val dupError = raise_error(concat(
+      lit(s"$errPrefix: multiple source rows match target key "), keyText))
     val picked =
-      when(matched && col("s.__scnt") > 1,
-        raise_error(concat(
-          lit(s"$errPrefix: multiple source rows match target key "),
-          concat_ws(",", on.map(k => col(s"s.$k").cast("string")): _*)))
-          .cast(outType))
+      when(matched && col("s.__scnt") > 1, dupError.cast(outType))
         .when(matched, matchedResult)
         .when(col("t.__te").isNotNull, fromTarget)
         .otherwise(notMatchedResult)
-    Cols(matched, matchedResult, notMatchedResult, fromTarget, matchTag, picked)
+    val guard = when(col("s.__scnt") > 1, dupError.cast("boolean")).otherwise(lit(true))
+    Cols(matched, matchedResult, notMatchedResult, fromTarget, matchTag, picked, guard)
   }
 }

@@ -66,7 +66,7 @@ class CommitKernelSpec extends SparkSpec {
     val dataSchema = StructType(df.schema.filterNot(_.name == "p"))
     val scan = FileStats.collect(spark, kept.map(s => s"$t/${s.path}"), dataSchema)
     kept.foreach { s =>
-      assert(scan(FileStats.canon(s"$t/${s.path}")) == s.stat,
+      assert(scan(s"$t/${s.path}") == s.stat,
         s"footer vs scan stats diverge for ${s.path}")
     }
   }
@@ -84,6 +84,132 @@ class CommitKernelSpec extends SparkSpec {
       3L -> Map("tz" -> Some("50%")), 4L -> Map("tz" -> Some("a b=c"))))
     assert(CommitKernel.partitionValues("tz=UTC+8/x=%25/part-0.parquet", Seq("tz", "x", "y")) ==
       Map("tz" -> Some("UTC+8"), "x" -> Some("%"), "y" -> None))
+  }
+
+  /** Partition values whose directory names need URI encoding: `:` and
+    * `%` are hive-escaped on disk (`a%3Ab`, `e%25f`) and encoded again in
+    * the URI Spark reports (`a%253Ab`); a space is encoded once (`c%20d`).
+    */
+  private val odd = Seq("a:b", "c d", "e%f")
+
+  private def oddRows: DataFrame =
+    (1L to 6L).map(i => (i, odd(((i - 1) / 2).toInt), i * 10.0)).toDF("id", "cat", "v")
+
+  test("fileKey is the string Spark reports for a file, in any directory name") {
+    val t = tmp("filekey")
+    oddRows.write.partitionBy("cat").parquet(t)
+    val fs = new org.apache.hadoop.fs.Path(t).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val onDisk = CommitKernel.walk(fs, new org.apache.hadoop.fs.Path(t))
+      .collect { case (st, rel) if rel.endsWith(".parquet") => (st.getPath, rel) }
+    assert(onDisk.map(_._2.takeWhile(_ != '/')).toSet ==
+      Set("cat=a%3Ab", "cat=c d", "cat=e%25f"), "walk yields on-disk names")
+    def reported(df: DataFrame): Set[String] =
+      df.select(col("_metadata.file_path")).as[String].collect().toSet
+    val keys = onDisk.map(f => CommitKernel.fileKey(fs, f._1)).toSet
+    // the same string whether Spark lists the dir or is given each file
+    assert(reported(spark.read.parquet(t)) == keys)
+    assert(reported(spark.read.parquet(onDisk.map(f => s"$t/${f._2}"): _*)) == keys)
+    assert(keys.exists(_.contains("/cat=a%253Ab/")) && keys.exists(_.contains("/cat=c%20d/")), keys)
+    // a plain path and its qualified spellings name one file
+    val p = onDisk.head._1
+    assert(CommitKernel.fileKey(fs, new org.apache.hadoop.fs.Path(p.toUri.getPath)) ==
+      CommitKernel.fileKey(fs, p))
+  }
+
+  test("file identity: every engine maps ':', ' ' and '%' partition dirs to the log entries they name") {
+    val upsert = Seq(VersionedTable.MatchedUpdate(Map("v" -> col("s.v"))),
+      VersionedTable.NotMatchedInsert())
+    def source(ids: Long*): DataFrame =
+      oddRows.filter(col("id").isin(ids: _*)).withColumn("v", lit(999.0))
+    def rowsOf(df: DataFrame): Seq[(Long, Double)] =
+      df.select("id", "v").as[(Long, Double)].collect().sorted.toSeq
+    def expect(deleted: Set[Long] = Set.empty, updated: Set[Long] = Set.empty) =
+      (1L to 6L).filterNot(deleted).map(i => i -> (if (updated(i)) 999.0 else i * 10.0))
+    def delta(t: String): Unit = { DeltaInterop.write(oddRows, t, partitionBy = Seq("cat")); () }
+    def iceberg(t: String): Unit = { IcebergInterop.write(oddRows, t, partitionBy = Seq("cat")); () }
+    def graft(t: String): Unit = { VersionedTable.write(spark, t, oddRows, Seq("cat")); () }
+    def readDelta(t: String) = DeltaInterop.read(spark, t)
+    def readIceberg(t: String) = IcebergInterop.read(spark, t)
+    def readGraft(t: String) = VersionedTable.read(spark, t)
+    def deltaMerge(key: Long)(t: String): Unit = {
+      val r = DeltaInterop.merge(spark, t, source(key), Seq("id"), upsert)
+      assert(r.rewrittenFiles == 1, s"merge rewrote ${r.rewrittenFiles} files: $r")
+    }
+    // Delta paths are relative: a moved table must still apply its DVs
+    def movedDvTable(t: String): String = {
+      DeltaInterop.write(oddRows, t)
+      DeltaInterop.deleteDv(spark, t, col("id") === 2L)
+      val moved = new File(new File(t).getParentFile, "x y")
+      moved.mkdirs()
+      Files.move(new File(t).toPath, new File(moved, "t").toPath)
+      s"${moved.getPath}/t"
+    }
+    // a position delete names the data file as the manifest spells it
+    def posDeleteNamesManifestPaths(t: String): Unit = {
+      IcebergInterop.deletePositions(spark, t, col("id") === 2L)
+      val data = IcebergInterop.metadataTable(spark, t, "files")
+        .select("file_path").as[String].collect().toSet
+      val named = files(t).filter(_.contains("delete-")).flatMap(f =>
+        spark.read.parquet(s"$t/$f").select("file_path").as[String].collect())
+      assert(named.nonEmpty && named.subsetOf(data), s"delete file names $named, manifest has $data")
+    }
+    case class Case(name: String, setup: String => Unit, op: String => Unit,
+        read: String => DataFrame, expected: Seq[(Long, Double)], root: String => String = identity)
+    val cases = Seq(
+      Case("delta merge into a:b", delta, deltaMerge(2L), readDelta, expect(updated = Set(2L))),
+      Case("delta merge into c d", delta, deltaMerge(3L), readDelta, expect(updated = Set(3L))),
+      Case("delta deleteDv", delta, t => { DeltaInterop.deleteDv(spark, t, col("id") === 2L); () },
+        readDelta, expect(deleted = Set(2L))),
+      Case("delta updateDv", delta,
+        t => { DeltaInterop.updateDv(spark, t, col("id") === 5L, Map("v" -> lit(999.0))); () },
+        readDelta, expect(updated = Set(5L))),
+      Case("delta DV read after the root moves to 'x y'", _ => (), _ => (), readDelta,
+        expect(deleted = Set(2L)), root = movedDvTable),
+      Case("iceberg merge", iceberg,
+        t => { IcebergInterop.merge(spark, t, source(2L, 5L), Seq("id"), upsert); () },
+        readIceberg, expect(updated = Set(2L, 5L))),
+      Case("iceberg deletePositions", iceberg, posDeleteNamesManifestPaths, readIceberg,
+        expect(deleted = Set(2L))),
+      Case("graft delete", graft,
+        t => { VersionedTable.delete(spark, t, col("id") === 2L, Seq("cat")); () },
+        readGraft, expect(deleted = Set(2L))),
+      Case("graft update", graft,
+        t => { VersionedTable.update(spark, t, Map("v" -> lit(999.0)), col("id") === 3L, Seq("cat")); () },
+        readGraft, expect(updated = Set(3L))),
+      Case("graft merge-on-read", graft,
+        t => { VersionedTable.upsertMOR(spark, t, source(5L), "id", "v", Seq("cat")); () },
+        readGraft, expect(updated = Set(5L))))
+    val failures = cases.flatMap { c =>
+      val t = c.root(tmp("identity"))
+      scala.util.Try {
+        c.setup(t); c.op(t)
+        val got = rowsOf(c.read(t))
+        assert(got == c.expected, s"read back $got")
+      }.failed.toOption.map(e => s"${c.name}: ${e.getClass.getSimpleName}: ${e.getMessage}")
+    }
+    assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+  }
+
+  test("hudi refuses a partition value a Hadoop path cannot hold, leaving the table readable") {
+    val bad = Seq((9L, "2024-01-01 10:00", 90.0)).toDF("id", "cat", "v")
+    def refused(name: String, t: String, read: => DataFrame)(write: => Unit): Unit = {
+      val before = files(t)
+      val e = intercept[IllegalArgumentException](write)
+      assert(e.getMessage.contains("cat") && e.getMessage.contains("2024-01-01 10:00"),
+        s"$name: ${e.getMessage}")
+      assert(files(t) == before, s"$name: files changed")
+      assert(read.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L), name)
+    }
+    val cow = tmp("hudi-colon")
+    HudiInterop.insert(rows(Seq(1L, 2L, 3L)), cow, "id", "v", partitionBy = Seq("cat"))
+    refused("cow insert", cow, HudiInterop.read(spark, cow))(
+      HudiInterop.insert(bad, cow, "id", "v", partitionBy = Seq("cat")))
+    refused("cow upsert", cow, HudiInterop.read(spark, cow))(
+      HudiInterop.upsert(bad, cow, "id", "v", partitionBy = Seq("cat")))
+    val mor = tmp("hudi-mor-colon")
+    HudiMor.upsert(rows(Seq(1L, 2L, 3L)), mor, "id", "v", partitionBy = Seq("cat"))
+    refused("mor upsert", mor, HudiMor.read(spark, mor))(
+      HudiMor.upsert(bad, mor, "id", "v", partitionBy = Seq("cat")))
   }
 
   test("a concurrent writer's UUID directory survives cleanup") {

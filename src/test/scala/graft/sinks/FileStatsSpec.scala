@@ -17,18 +17,6 @@ class FileStatsSpec extends SparkSpec {
   private val ss = SparkSpec.spark
   import ss.implicits._
 
-  test("canon unifies URI and plain spellings, keeps bucket authority") {
-    assert(FileStats.canon("/plain/path/x.parquet") == "/plain/path/x.parquet")
-    assert(FileStats.canon("file:///tmp/d/x.parquet") == "/tmp/d/x.parquet")
-    assert(FileStats.canon("file:/tmp/d/x.parquet") == "/tmp/d/x.parquet")
-    assert(FileStats.canon("file:///tmp/a%20b/x.parquet") == "/tmp/a b/x.parquet")
-    // absolute object-store URI keeps scheme AND authority: two buckets
-    // with the same key must not collide
-    assert(FileStats.canon("s3://bucket/key/x.parquet") == "s3://bucket/key/x.parquet")
-    assert(FileStats.canon("s3://bucket/k%3Dv/x.parquet") == "s3://bucket/k=v/x.parquet")
-    assert(FileStats.canon("s3://other/key/x.parquet") != FileStats.canon("s3://bucket/key/x.parquet"))
-  }
-
   test("collect keys by full path: basename collisions get their own stats") {
     val dir = Files.createTempDirectory("graft-filestats").toFile.getAbsolutePath
     def plant(sub: String, ids: Seq[Long]): String = {
@@ -48,8 +36,8 @@ class FileStatsSpec extends SparkSpec {
     val schema = StructType(Seq(StructField("id", LongType)))
     val stats = FileStats.collect(spark, Seq(fa, fb), schema)
     assert(stats.size == 2, s"one entry per file, got ${stats.keySet}")
-    val sa = stats(FileStats.canon(fa))
-    val sb = stats(FileStats.canon(fb))
+    val sa = stats(fa)
+    val sb = stats(fb)
     assert(sa.numRecords.contains(3L) && sb.numRecords.contains(2L))
     assert(sa.cols("id").min.contains(1L) && sa.cols("id").max.contains(3L))
     assert(sb.cols("id").min.contains(100L) && sb.cols("id").max.contains(200L))
@@ -192,7 +180,7 @@ class FileStatsSpec extends SparkSpec {
     // through the log codec, as every graft and Delta log stores them
     val stats = files.map { case (fid, Seq(f)) =>
       fid -> FileStats.fileStatOf(
-        FileStats.statsJson(footers(FileStats.canon(f)), dataSchema.fields.toSeq),
+        FileStats.statsJson(footers(f), dataSchema.fields.toSeq),
         dataSchema.fields.toSeq)
     }.toMap
 
@@ -241,7 +229,7 @@ class FileStatsSpec extends SparkSpec {
       (0 until nFiles).foreach { fid =>
         val keep = FileStats.mayMatch(cond, stats(fid))
         assert(keep || !truth(fid)(i), s"file $fid holds a row matching $p but was pruned")
-        assert(FileStats.mayMatch(cond, footers(FileStats.canon(files(fid)._2.head))) || !truth(fid)(i),
+        assert(FileStats.mayMatch(cond, footers(files(fid)._2.head)) || !truth(fid)(i),
           s"footer stats of file $fid prune $p")
         if (!keep) pruned += 1
       }

@@ -133,4 +133,48 @@ class JobBudgetSpec extends SparkSpec {
     assert(idle <= 1, s"empty batch ran $idle jobs")
     assert(VersionedTable.latestVersion(spark, bodyPath) == before)
   }
+
+  test("batch DML job budgets on a small partitioned table") {
+    val clauses = Seq(
+      VersionedTable.MatchedUpdate(Map("v" -> col("s.v"))),
+      VersionedTable.NotMatchedInsert())
+    val src = batch(Seq(2L, 7L)).withColumn("v", col("v") + 1.0)
+    def table(format: String): String = {
+      val p = tmp(s"dml-$format")
+      format match {
+        case "graft" => VersionedTable.write(spark, p, batch(1L to 6L), Seq("cat"))
+        case f => TableSink.writeBatch(batch(1L to 6L), SinkConfig(f, p, partitionBy = Seq("cat")))
+      }
+      p
+    }
+    def jobs(format: String)(op: String => Unit): Int = {
+      val p = table(format)
+      jobsOf(op(p))
+    }
+    val measured = Seq(
+      "VersionedTable.delete" -> jobs("graft")(p =>
+        VersionedTable.delete(spark, p, col("id") === 2L, Seq("cat"))),
+      "VersionedTable.update" -> jobs("graft")(p =>
+        VersionedTable.update(spark, p, Map("v" -> lit(0.0)), col("id") === 2L, Seq("cat"))),
+      "DeltaInterop.merge" -> jobs("delta")(p =>
+        DeltaInterop.merge(spark, p, src, Seq("id"), clauses)),
+      "DeltaInterop.deleteDv" -> jobs("delta")(p =>
+        DeltaInterop.deleteDv(spark, p, col("id") === 2L)),
+      "DeltaInterop.updateDv" -> jobs("delta")(p =>
+        DeltaInterop.updateDv(spark, p, col("id") === 2L, Map("v" -> lit(0.0)))),
+      "IcebergInterop.deletePositions" -> jobs("iceberg")(p =>
+        IcebergInterop.deletePositions(spark, p, col("id") === 2L)),
+      "IcebergInterop.merge" -> jobs("iceberg")(p =>
+        IcebergInterop.merge(spark, p, src, Seq("id"), clauses)))
+    // measured before the file-identity refactor; the counts must not move
+    val budget = Seq(
+      "VersionedTable.delete" -> 3,
+      "VersionedTable.update" -> 3,
+      "DeltaInterop.merge" -> 11,
+      "DeltaInterop.deleteDv" -> 5,
+      "DeltaInterop.updateDv" -> 8,
+      "IcebergInterop.deletePositions" -> 1,
+      "IcebergInterop.merge" -> 10)
+    assert(measured == budget)
+  }
 }
