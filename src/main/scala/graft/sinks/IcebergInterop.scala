@@ -274,17 +274,25 @@ object IcebergInterop {
   /** Manifest-list record with the v2 fields stamped. `addedSnapshotId`
     * is boxed because carried foreign records may hold null.
     */
-  private def listEntryRecord(path: String, len: Long,
-      addedSnapshotId: java.lang.Long, content: Int, seq: Long): GenericRecord = {
+  private def listRecord(path: String, len: Long, specId: Int, content: Int, seq: Long,
+      addedSnapshotId: java.lang.Long): GenericRecord = {
     val r = new GenericData.Record(ManifestFileSchema)
     r.put("manifest_path", path)
     r.put("manifest_length", len)
-    r.put("partition_spec_id", 0)
+    r.put("partition_spec_id", specId)
     r.put("content", content)
     r.put("sequence_number", seq)
     r.put("added_snapshot_id", addedSnapshotId)
     r
   }
+
+  /** A base record carried into a new manifest list as it was: its own
+    * spec id, content kind, sequence number and adding snapshot.
+    */
+  private def carry(r: GenericRecord): GenericRecord =
+    listRecord(r.get("manifest_path").toString, r.get("manifest_length").asInstanceOf[Long],
+      r.get("partition_spec_id").asInstanceOf[Int], listContentOf(r), listSeqOf(r),
+      r.get("added_snapshot_id").asInstanceOf[java.lang.Long])
 
   /** content of a manifest-list record: null/absent (v1) reads as 0 = data. */
   private def listContentOf(r: GenericRecord): Int =
@@ -455,14 +463,11 @@ object IcebergInterop {
     * field set they were written under. Returns
     * (specs list, default-spec-id, current fields JSON, last-partition-id).
     */
-  private def specLineage(prev: Option[JValue], partFields: Seq[StructField],
+  private def specLineage(meta: JValue, partFields: Seq[StructField],
       schema: StructType): (List[JValue], Int, JArray, Int) = {
-    val prevSpecs = prev.toSeq.flatMap(m =>
-      (m \ "partition-specs").extractOrElse[List[JValue]](Nil)).toList
-    val prevDefault = prev.flatMap(m =>
-      (m \ "default-spec-id").extractOpt[Int]).getOrElse(0)
-    val prevLastId = prev.flatMap(m =>
-      (m \ "last-partition-id").extractOpt[Int]).getOrElse(999)
+    val prevSpecs = (meta \ "partition-specs").extractOrElse[List[JValue]](Nil)
+    val prevDefault = (meta \ "default-spec-id").extractOrElse[Int](0)
+    val prevLastId = (meta \ "last-partition-id").extractOrElse[Int](999)
     // match on (name, transform) — NOT field/source ids: a foreign
     // writer's ids are arbitrary, and an unchanged foreign default spec
     // must be reused verbatim (ids intact), never re-minted
@@ -488,15 +493,45 @@ object IcebergInterop {
     }
   }
 
-  /** Manifest header stamp for the CURRENT spec: (spec-id, fields JSON)
-    * through [[specLineage]], so the id a manifest declares always
-    * matches the spec the published metadata will resolve it to — both
-    * sides derive it from the same prior metadata.
+  /** The schema and spec a commit stamps, and the metadata fields it
+    * sets: `fields` is empty unless `schema` or `partFields` differ
+    * from the document's current ones.
     */
-  private def specStamp(meta: Option[JValue], partFields: Seq[StructField],
-      schema: StructType): (String, String) = {
-    val lineage = specLineage(meta, partFields, schema)
-    (lineage._2.toString, JsonMethods.compact(JsonMethods.render(lineage._3)))
+  private final case class Lineage(schemaId: Int, schema: JValue, specId: Int,
+      specFields: JArray, fields: List[JField])
+
+  /** Schema lineage: an unchanged schema keeps the prior `schemas` list
+    * verbatim; a changed one (additive evolution, or overwrite's schema
+    * replace) APPENDS under a fresh schema-id and points
+    * current-schema-id at it — old snapshots keep their resolvable
+    * history, the way real writers evolve. Specs follow [[specLineage]].
+    */
+  private def lineage(meta: JValue, schema: StructType,
+      partFields: Seq[StructField]): Lineage = {
+    val schemas = (meta \ "schemas").extractOrElse[List[JValue]](Nil) match {
+      case Nil => List(meta \ "schema").filter(_ != JNothing)
+      case xs => xs
+    }
+    val sameSchema = currentSchema(meta).map(f => (f.name, f.dataType)) ==
+      schema.map(f => (f.name, f.dataType))
+    val (schemaId, schemaJ, schemaFields) =
+      if (sameSchema)
+        ((meta \ "current-schema-id").extractOpt[Int].getOrElse(0), currentSchemaJson(meta),
+          Nil)
+      else {
+        val id = schemas.flatMap(s => (s \ "schema-id").extractOpt[Int])
+          .foldLeft(-1)(_ max _) + 1
+        val j = schemaJson(schema, id)
+        (id, j, List[JField]("schema" -> j, "schemas" -> JArray(schemas :+ j),
+          "current-schema-id" -> JInt(id), "last-column-id" -> JInt(
+            math.max((meta \ "last-column-id").extractOrElse[Int](0), schema.size))))
+      }
+    val (specs, specId, specFields, lastPartId) = specLineage(meta, partFields, schema)
+    val specChanged = specs != (meta \ "partition-specs").extractOrElse[List[JValue]](Nil)
+    Lineage(schemaId, schemaJ, specId, specFields, schemaFields ++ (
+      if (!specChanged) Nil
+      else List[JField]("partition-spec" -> specFields, "partition-specs" -> JArray(specs),
+        "default-spec-id" -> JInt(specId), "last-partition-id" -> JInt(lastPartId))))
   }
 
   /** Identity partition fields of the table's default spec, resolved
@@ -590,6 +625,237 @@ object IcebergInterop {
     finally in.close()
   }
 
+  /** A loaded table: its metadata version and document. */
+  private final case class Table(version: Int, meta: JValue) {
+    lazy val schema: StructType = currentSchema(meta)
+    lazy val partFields: Seq[StructField] = partFieldsOf(meta, schema)
+    def current: Long = (meta \ "current-snapshot-id").extract[Long]
+    def format: Int = (meta \ "format-version").extractOrElse[Int](1)
+    def props: Map[String, String] =
+      (meta \ "properties").extractOrElse[Map[String, String]](Map.empty)
+  }
+
+  /** The table at `path`, if there is one. Formats this reader does not
+    * know refuse here; with `write`, so does every format this writer
+    * cannot commit to ([[requireWritableFormat]]) — before any file is
+    * staged.
+    */
+  private def load(fs: FileSystem, path: String, write: Boolean = false): Option[Table] =
+    currentVersion(fs, path).map { v =>
+      val t = Table(v, readMetadata(fs, path, v))
+      require(t.format <= 3, s"IcebergInterop: unknown format-version ${t.format}")
+      if (write) requireWritableFormat(t.meta)
+      t
+    }
+
+  private def open(fs: FileSystem, path: String, write: Boolean = false): Table =
+    load(fs, path, write).getOrElse(throw new IllegalArgumentException(
+      s"not an Iceberg table (no metadata/version-hint.text): $path"))
+
+  /** v3 WRITE gate shared by every commit: reads serve v3 (deletion
+    * vectors included), but a commit from this writer would skip v3's
+    * row-lineage assignment (first_row_id / next-row-id) and real v3
+    * readers would see corrupt lineage — refuse by name.
+    */
+  private def requireWritableFormat(meta: JValue): Unit = {
+    val pf = (meta \ "format-version").extractOrElse[Int](1)
+    require(pf <= 2,
+      s"IcebergInterop: format-version $pf table — reads serve v3 " +
+        "(deletion vectors included); writes and maintenance would " +
+        "have to assign v3 row lineage, use the owning writer")
+  }
+
+  private def snapshots(meta: JValue): List[JValue] =
+    (meta \ "snapshots").extractOrElse[List[JValue]](Nil)
+
+  private def snapshotsById(meta: JValue): Map[Long, JValue] =
+    snapshots(meta).map(s => (s \ "snapshot-id").extract[Long] -> s).toMap
+
+  private def snapshot(meta: JValue, id: Long): JValue =
+    snapshotsById(meta).getOrElse(id, throw new IllegalArgumentException(
+      s"snapshot $id not found in " +
+        (meta \ "location").extractOrElse[String]("the table metadata")))
+
+  /** The manifest-list records of snapshot `id`. */
+  private def manifestList(fs: FileSystem, meta: JValue, id: Long): Seq[GenericRecord] =
+    readAvro(fs, new Path((snapshot(meta, id) \ "manifest-list").extract[String]))
+
+  /** The snapshot `ref` points at; None on a table with no snapshot. */
+  private def head(meta: JValue, ref: String): Option[Long] =
+    refsOf(meta).get(ref).map(_._1).filter(_ >= 0)
+
+  /** What a new table's first commit edits: version 0, a document with
+    * one schema, one spec and no snapshot.
+    */
+  private def newTable(path: String, schema: StructType,
+      partFields: Seq[StructField]): Table = {
+    val spec = specFieldsJson(partFields, schema)
+    Table(0, JObject(
+      "format-version" -> JInt(1),
+      "table-uuid" -> JString(java.util.UUID.randomUUID().toString),
+      "location" -> JString(path),
+      "last-updated-ms" -> JLong(0L),
+      "last-sequence-number" -> JLong(0L),
+      "last-column-id" -> JInt(schema.size),
+      "schema" -> schemaJson(schema),
+      "schemas" -> JArray(List(schemaJson(schema))),
+      "current-schema-id" -> JInt(0),
+      "partition-spec" -> spec,
+      "partition-specs" -> JArray(List(JObject("spec-id" -> JInt(0), "fields" -> spec))),
+      "default-spec-id" -> JInt(0),
+      "last-partition-id" -> JInt(999 + partFields.size),
+      "sort-orders" -> JArray(List(JObject(
+        "order-id" -> JInt(0), "fields" -> JArray(Nil)))),
+      "default-sort-order-id" -> JInt(0),
+      "properties" -> JObject(),
+      "current-snapshot-id" -> JLong(-1L),
+      "refs" -> JObject(),
+      "snapshots" -> JArray(Nil),
+      "snapshot-log" -> JArray(Nil)))
+  }
+
+  /** What a commit's new manifests are stamped with: the snapshot, its
+    * sequence number, and the table's format, schema and spec.
+    */
+  private final case class Stamp(fs: FileSystem, path: String, schema: StructType,
+      partFields: Seq[StructField], lineage: Lineage, fmt: Int, snapshotId: Long,
+      seq: Long) {
+    lazy val entrySchema: org.apache.avro.Schema = manifestEntrySchema(partFields)
+  }
+
+  /** Write one data (`content` 0) or delete (1) manifest under the
+    * stamp's header and return its manifest-list record, stamped with
+    * the same spec id, content kind, sequence number and snapshot.
+    */
+  private def writeManifest(s: Stamp, content: Int,
+      entries: Seq[GenericRecord]): GenericRecord = {
+    val p = s"${s.path}/metadata/${java.util.UUID.randomUUID()}-" +
+      (if (content == 0) "m0.avro" else "d0.avro")
+    val len = writeAvro(s.fs, new Path(p),
+      if (content == 0) s.entrySchema else DeleteManifestEntrySchema,
+      Map("schema" -> JsonMethods.compact(JsonMethods.render(s.lineage.schema)),
+        "partition-spec" -> JsonMethods.compact(JsonMethods.render(s.lineage.specFields)),
+        "partition-spec-id" -> s.lineage.specId.toString,
+        "format-version" -> s.fmt.toString,
+        "content" -> (if (content == 0) "data" else "deletes")),
+      entries)
+    listRecord(p, len, s.lineage.specId, content, s.seq, s.snapshotId)
+  }
+
+  /** The ADDED entry of a staged delete parquet: `kind` 1 = position
+    * deletes, 2 = equality deletes on the `eqIds` fields.
+    */
+  private def deleteEntry(s: Stamp, del: CommitKernel.Staged, kind: Int,
+      eqIds: Seq[Int] = Nil): GenericRecord = {
+    val dfSchema = DeleteManifestEntrySchema.getField("data_file").schema()
+    val d = new GenericData.Record(dfSchema)
+    d.put("content", kind)
+    d.put("file_path", s"${s.path}/${del.path}")
+    d.put("file_format", "PARQUET")
+    d.put("partition", new GenericData.Record(dfSchema.getField("partition").schema()))
+    d.put("record_count", del.rows)
+    d.put("file_size_in_bytes", del.bytes)
+    if (eqIds.nonEmpty) d.put("equality_ids", eqIds.map(Integer.valueOf).asJava)
+    val e = new GenericData.Record(DeleteManifestEntrySchema)
+    e.put("status", 1) // ADDED
+    e.put("snapshot_id", s.snapshotId)
+    e.put("data_file", d)
+    e
+  }
+
+  /** The spec's snapshot-summary counts of the files a commit adds, from
+    * the row counts and sizes staging read off their footers: data files,
+    * and delete files by kind (1 = position, 2 = equality). Zero counts
+    * are left out, as the reference writer does.
+    */
+  private def addedSummary(data: Seq[DataFileRef],
+      deletes: Seq[(Int, CommitKernel.Staged)] = Nil): Seq[(String, String)] = {
+    def ofKind(kind: Int, name: String) = deletes.filter(_._1 == kind) match {
+      case Nil => Nil
+      case ds => Seq(s"added-$name-delete-files" -> ds.size.toLong,
+        s"added-$name-deletes" -> ds.map(_._2.rows).sum)
+    }
+    val counts = Seq("added-data-files" -> data.size.toLong,
+      "added-records" -> data.map(_.records).sum,
+      "added-delete-files" -> deletes.size.toLong) ++
+      ofKind(1, "position") ++ ofKind(2, "equality") :+
+      ("added-files-size" -> (data.map(_.bytes).sum + deletes.map(_._2.bytes).sum))
+    counts.collect { case (k, n) if n > 0 => k -> n.toString }
+  }
+
+  /** The one snapshot commit every write, delete, merge, maintenance and
+    * branch op ends in. It mints the snapshot id and (format 2) the next
+    * table-global sequence number, lets `manifests` write the new
+    * manifests under that [[Stamp]], writes the manifest list (the new
+    * records, then `carried` as they were), and publishes a snapshot
+    * whose parent is `ref`'s head through [[publish]]. `schema` and
+    * `partFields` differ from the table's only on the write path, where
+    * they evolve its lineage. Sequences are table-global per the spec,
+    * so branch commits bump the same counter as main commits; v1 tables
+    * stay sequence-free. Returns the snapshot id.
+    */
+  private def commit(fs: FileSystem, path: String, t: Table, schema: StructType,
+      partFields: Seq[StructField], operation: String, fmt: Int,
+      carried: Seq[GenericRecord], summary: Seq[(String, String)] = Nil,
+      props: Map[String, String] = Map.empty, ref: String = "main")(
+      manifests: Stamp => Seq[GenericRecord]): Long = {
+    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
+    val seq =
+      if (fmt >= 2) (t.meta \ "last-sequence-number").extractOrElse[Long](0L) + 1 else 0L
+    val lin = lineage(t.meta, schema, partFields)
+    val listPath = s"$path/metadata/snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro"
+    writeAvro(fs, new Path(listPath), ManifestFileSchema, Map("format-version" -> fmt.toString),
+      manifests(Stamp(fs, path, schema, partFields, lin, fmt, snapshotId, seq)) ++
+        carried.map(carry))
+    val now = System.currentTimeMillis()
+    val snap = JObject(
+      "snapshot-id" -> JLong(snapshotId),
+      "timestamp-ms" -> JLong(now),
+      "summary" -> JObject(("operation" -> JString(operation)) ::
+        summary.toList.map { case (k, v) => k -> (JString(v): JValue) }),
+      "manifest-list" -> JString(listPath),
+      "schema-id" -> JInt(lin.schemaId)) ~~
+      head(t.meta, ref).map(p => JObject("parent-snapshot-id" -> JLong(p))) ~~
+      (if (fmt >= 2) Some(JObject("sequence-number" -> JLong(seq))) else None)
+    val allProps = t.props ++ props + ("schema.name-mapping.default" -> nameMapping(schema))
+    publish(fs, path, t, refsOf(t.meta) + (ref -> (snapshotId, "branch")), now,
+      add = Some(snap), set = lin.fields ++ List[JField](
+        "format-version" -> JInt(fmt),
+        "properties" -> JObject(allProps.toList.map { case (k, v) => k -> (JString(v): JValue) })) ++
+        (if (fmt >= 2) List[JField]("last-sequence-number" -> JLong(seq)) else Nil))
+    snapshotId
+  }
+
+  /** The one metadata edit, shared by snapshot and metadata-only commits:
+    * the prior document with `refs` in place (when `main` moves, so do
+    * current-snapshot-id and the snapshot log — the spec keeps `main` =
+    * current), `add` appended to the snapshots, `drop` removed from them
+    * and from the log, and the `set` fields replaced (appended when
+    * absent). Every field no commit owns (metadata-log, statistics,
+    * sort orders, unknown properties) carries through verbatim.
+    * Publishes the next version and returns it.
+    */
+  private def publish(fs: FileSystem, path: String, t: Table,
+      refs: Map[String, (Long, String)], now: Long = System.currentTimeMillis(),
+      add: Option[JValue] = None, drop: Set[Long] = Set.empty,
+      set: List[JField] = Nil): Int = {
+    def kept(field: String): List[JValue] = (t.meta \ field).extractOrElse[List[JValue]](Nil)
+      .filterNot(s => drop.contains((s \ "snapshot-id").extract[Long]))
+    val moved = refs.get("main").map(_._1).filterNot(head(t.meta, "main").contains)
+    val edits = set ++ List[JField](
+      "last-updated-ms" -> JLong(now),
+      "refs" -> refsJson(refs),
+      "snapshots" -> JArray(kept("snapshots") ++ add),
+      "snapshot-log" -> JArray(kept("snapshot-log") ++ moved.map(id =>
+        JObject("timestamp-ms" -> JLong(now), "snapshot-id" -> JLong(id))))) ++
+      moved.map(id => "current-snapshot-id" -> (JLong(id): JValue))
+    val prior = t.meta.asInstanceOf[JObject].obj
+    val byName = edits.toMap
+    commitMetadata(fs, path, t.version + 1, JObject(
+      prior.map { case (k, v) => k -> byName.getOrElse(k, v) } ++
+        edits.filterNot(e => prior.exists(_._1 == e._1))))
+  }
+
   /** Append or overwrite `df` as a new snapshot. Returns snapshot id.
     * `txn` = (appId, version) exactly-once token for streaming writers,
     * carried as a `graft.txn.<appId>` table property (the same
@@ -604,8 +870,7 @@ object IcebergInterop {
       txn: Option[(String, Long)] = None,
       partitionBy: Seq[String] = Nil,
       mergeSchema: Boolean = false): Long = graft.JobLabel(df.sparkSession, "iceberg.write") {
-    val spark = df.sparkSession
-    val fs = fsFor(spark, path)
+    val fs = fsFor(df.sparkSession, path)
     val partFields = partitionBy.map { c =>
       val f = df.schema.fields.find(_.name == c).getOrElse(
         throw new IllegalArgumentException(
@@ -615,9 +880,9 @@ object IcebergInterop {
     }
     require(!df.schema.fieldNames.contains("__pdir"),
       "IcebergInterop: __pdir is reserved for the staging layout")
-    val prev = currentVersion(fs, path).map(v => (v, readMetadata(fs, path, v)))
-    prev.foreach { case (_, meta) =>
-      val existing = currentSchema(meta)
+    val prev = load(fs, path, write = true)
+    prev.foreach { t =>
+      val existing = t.schema
       // mergeSchema accepts STRICTLY ADDITIVE drift: the table schema is
       // a prefix of the batch's and every new field is nullable (old
       // data files read the new columns as null). Appending at the end
@@ -635,216 +900,35 @@ object IcebergInterop {
           s"(table ${existing.simpleString}, batch ${df.schema.simpleString})" +
           (if (mergeSchema) " — mergeSchema accepts only nullable fields APPENDED at the end"
            else ""))
-      require(overwrite ||
-          partFieldsOf(meta, existing).map(_.name) == partitionBy,
+      require(overwrite || t.partFields.map(_.name) == partitionBy,
         s"IcebergInterop append: partitionBy (${partitionBy.mkString(",")}) " +
           "must match the table's partition spec " +
-          s"(${partFieldsOf(meta, existing).map(_.name).mkString(",")})")
-    }
-    val prevProps: Map[String, String] = prev.map(p =>
-      (p._2 \ "properties").extractOrElse[Map[String, String]](Map.empty))
-      .getOrElse(Map.empty)
-    txn.foreach { case (appId, v) =>
-      prev.foreach { case (_, meta) =>
-        if (prevProps.get(s"graft.txn.$appId").exists(_.toLong >= v))
-          return (meta \ "current-snapshot-id").extract[Long]
+          s"(${t.partFields.map(_.name).mkString(",")})")
+      txn.foreach { case (appId, v) =>
+        if (t.props.get(s"graft.txn.$appId").exists(_.toLong >= v)) return t.current
       }
     }
     val moved = stageDataFiles(df, path, partitionBy)
-    if (moved.isEmpty && txn.isDefined && !overwrite)
-      return prev.map(p => (p._2 \ "current-snapshot-id").extract[Long]).getOrElse(-1L)
-    commitRefs(spark, fs, path, df.schema, moved, overwrite, txn, partFields,
-      prev, prevProps)
+    if (moved.isEmpty && txn.isDefined && !overwrite) return prev.fold(-1L)(_.current)
+    commitFiles(fs, path, prev.getOrElse(newTable(path, df.schema, partFields)),
+      df.schema, partFields, moved, overwrite, txnProps(txn))
   }
 
-  /** Commit a set of already-materialized data files as the next
-    * snapshot — the shared metadata tail of [[write]] (which stages
-    * `df`'s files first) and [[commitExternal]] (which adopts files
-    * that already exist elsewhere, the metadata-only CONVERT path).
+  private def txnProps(txn: Option[(String, Long)]): Map[String, String] =
+    txn.map { case (a, v) => s"graft.txn.$a" -> v.toString }.toMap
+
+  /** Commit materialized data files as an append (carrying `ref`'s head)
+    * or an overwrite (carrying nothing) — the tail of [[write]],
+    * [[writeToBranch]] and [[commitExternal]]: one manifest whose column
+    * stats come from each ref's `stat`.
     */
-  private def commitRefs(spark: SparkSession, fs: FileSystem, path: String,
-      schema: StructType, moved: Seq[DataFileRef], overwrite: Boolean,
-      txn: Option[(String, Long)], partFields: Seq[StructField],
-      prev: Option[(Int, JValue)], prevProps: Map[String, String]): Long = {
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    val now = System.currentTimeMillis()
-    val schemaJ = schemaJson(schema)
-    val baseId =
-      if (overwrite) None
-      else prev.map(p => (p._2 \ "current-snapshot-id").extract[Long])
-    val (listPath, newSeq, prevFormat) = writeSnapshotList(fs, path,
-      schema, partFields, moved, snapshotId, prev.map(_._2), baseId)
-
-    publishMetadata(fs, path, prev, schema, partFields,
-      prevProps ++ txn.map { case (a, v) => s"graft.txn.$a" -> v.toString },
-      prevFormat, newSeq, snapshotId, now, listPath,
-      if (overwrite) "overwrite" else "append",
-      summaryExtra = Map(
-        "added-data-files" -> moved.size.toString,
-        "added-records" -> moved.map(_.records).sum.toString,
-        "added-files-size" -> moved.map(_.bytes).sum.toString))
-  }
-
-  /** Write one append/overwrite snapshot's manifest + manifest list:
-    * one new manifest (column stats from each ref's `stat`) stamped
-    * with the TABLE's format version, and a manifest list carrying
-    * `baseSnapshotId`'s live records (None = fresh table / overwrite).
-    * The base is a parameter because a branch write carries the BRANCH
-    * head's list, not main's. Returns (listPath, newSeq, formatVersion).
-    */
-  private def writeSnapshotList(fs: FileSystem,
-      path: String, schema: StructType, partFields: Seq[StructField],
-      moved: Seq[DataFileRef], snapshotId: Long, prevMeta: Option[JValue],
-      baseSnapshotId: Option[Long]): (String, Long, Int) = {
-    // sequence machinery: v1 tables stay seq-free; once a row-level
-    // delete upgraded the table to format-version 2, every commit bumps
-    // the sequence and stamps its manifest with it (the spec's ordering
-    // rule that scopes deletes to files that existed before them).
-    // Sequences are TABLE-global (the spec's rule), so branch commits
-    // bump the same counter as main commits.
-    val prevFormat = prevMeta.map(m => (m \ "format-version").extract[Int])
-      .getOrElse(1)
-    val manifestPath = s"$path/metadata/${java.util.UUID.randomUUID()}-m0.avro"
-    val entrySchema = manifestEntrySchema(partFields)
-    val entries = buildEntries(moved, snapshotId, schema, partFields, entrySchema)
-    val schemaJ = schemaJson(schema)
-    val (specId, specJson) = specStamp(prevMeta, partFields, schema)
-    val manifestLen = writeAvro(fs, new Path(manifestPath), entrySchema,
-      Map("schema" -> JsonMethods.compact(JsonMethods.render(schemaJ)),
-        "partition-spec" -> specJson,
-        "partition-spec-id" -> specId,
-        "format-version" -> prevFormat.toString),
-      entries)
-    val newSeq = if (prevFormat >= 2)
-      prevMeta.map(m => (m \ "last-sequence-number").extractOrElse[Long](0L))
-        .getOrElse(0L) + 1
-    else 0L
-    // manifest list: this manifest + every live manifest of the base
-    // snapshot, each carried record keeping its content kind and
-    // sequence number
-    val carried: Seq[GenericRecord] = (prevMeta, baseSnapshotId) match {
-      case (Some(meta), Some(base)) =>
-        (meta \ "snapshots").extract[List[JValue]]
-          .find(s => (s \ "snapshot-id").extract[Long] == base)
-          .toSeq.flatMap(s =>
-            readAvro(fs, new Path((s \ "manifest-list").extract[String])))
-      case _ => Nil
-    }
-    val listPath = s"$path/metadata/snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro"
-    val added = listEntryRecord(manifestPath, manifestLen, snapshotId,
-      content = 0, seq = newSeq)
-    val listRecords = added +: carried.map(r => listEntryRecord(
-      r.get("manifest_path").toString,
-      r.get("manifest_length").asInstanceOf[Long],
-      r.get("added_snapshot_id").asInstanceOf[java.lang.Long],
-      content = listContentOf(r), seq = listSeqOf(r)))
-    writeAvro(fs, new Path(listPath), ManifestFileSchema,
-      Map("format-version" -> prevFormat.toString), listRecords)
-    (listPath, newSeq, prevFormat)
-  }
-
-  /** v3 WRITE gate shared by every metadata publisher: reads serve v3
-    * (deletion vectors included), but a commit from this writer would
-    * skip v3's row-lineage assignment (first_row_id / next-row-id) and
-    * real v3 readers would see corrupt lineage — refuse by name.
-    */
-  private def requireWritableFormat(meta: JValue): Unit = {
-    val pf = (meta \ "format-version").extractOrElse[Int](1)
-    require(pf <= 2,
-      s"IcebergInterop: format-version $pf table — reads serve v3 " +
-        "(deletion vectors included); writes and maintenance would " +
-        "have to assign v3 row lineage, use the owning writer")
-  }
-
-  /** The metadata JSON of every snapshot commit ([[commitRefs]]
-    * appends/overwrites, [[deletePositions]] delete snapshots), built
-    * from the previous version and published by [[commitMetadata]].
-    */
-  private def publishMetadata(fs: FileSystem, path: String,
-      prev: Option[(Int, JValue)], schema: StructType,
-      partFields: Seq[StructField], props: Map[String, String],
-      formatVersion: Int, newSeq: Long, snapshotId: Long, now: Long,
-      listPath: String, operation: String,
-      summaryExtra: Map[String, String] = Map.empty): Long = {
-    prev.foreach(p => requireWritableFormat(p._2))
-    // schema lineage: an unchanged schema carries the prior `schemas`
-    // list verbatim; a changed one (additive evolution, or overwrite's
-    // schema replace) APPENDS under a fresh schema-id and points
-    // current-schema-id at it — old snapshots keep their resolvable
-    // history, the way real writers evolve
-    val prevSchemaList = prev.toSeq.flatMap { p =>
-      (p._2 \ "schemas").extractOrElse[List[JValue]](Nil) match {
-        case Nil => (p._2 \ "schema") match {
-          case JNothing => Nil
-          case s => List(s)
-        }
-        case xs => xs
-      }
-    }
-    val unchanged = prev.exists(p => currentSchema(p._2)
-      .map(f => (f.name, f.dataType)) == schema.map(f => (f.name, f.dataType)))
-    val (schemasJ, curSchemaId, schemaJ) =
-      if (unchanged && prevSchemaList.nonEmpty) {
-        val id = prev.flatMap(p =>
-          (p._2 \ "current-schema-id").extractOpt[Int]).getOrElse(0)
-        (prevSchemaList, id, currentSchemaJson(prev.get._2))
-      } else if (prevSchemaList.nonEmpty) {
-        val id = prevSchemaList
-          .flatMap(s => (s \ "schema-id").extractOpt[Int]).foldLeft(-1)(_ max _) + 1
-        val j = schemaJson(schema, id)
-        (prevSchemaList :+ (j: JValue), id, j: JValue)
-      } else (List(schemaJson(schema): JValue), 0, schemaJson(schema): JValue)
-    val specLineageTuple = specLineage(prev.map(_._2), partFields, schema)
-    val prevSnapshots = prev.toSeq.flatMap(_._2 \ "snapshots" match {
-      case JArray(xs) => xs
-      case _ => Nil
-    })
-    val parentId = prev.map(p => (p._2 \ "current-snapshot-id").extract[Long])
-    val snapshot = JObject(
-      "snapshot-id" -> JLong(snapshotId),
-      "timestamp-ms" -> JLong(now),
-      "summary" -> JObject(("operation" -> JString(operation)) ::
-        summaryExtra.toList.map { case (k, v) => k -> (JString(v): JValue) }),
-      "manifest-list" -> JString(listPath),
-      "schema-id" -> JInt(curSchemaId)) ~~ parentId.map(p =>
-        JObject("parent-snapshot-id" -> JLong(p))) ~~
-      (if (formatVersion >= 2) Some(JObject("sequence-number" -> JLong(newSeq)))
-       else None)
-    val meta = JObject(
-      "format-version" -> JInt(formatVersion),
-      "table-uuid" -> JString(prev.map(p => (p._2 \ "table-uuid").extract[String])
-        .getOrElse(java.util.UUID.randomUUID().toString)),
-      "location" -> JString(path),
-      "last-updated-ms" -> JLong(now),
-      "last-sequence-number" -> JLong(newSeq),
-      "last-column-id" -> JInt(schema.size),
-      "schema" -> schemaJ,
-      "schemas" -> JArray(schemasJ.toList),
-      "current-schema-id" -> JInt(curSchemaId),
-      "partition-spec" -> specLineageTuple._3,
-      "partition-specs" -> JArray(specLineageTuple._1),
-      "default-spec-id" -> JInt(specLineageTuple._2),
-      "last-partition-id" -> JInt(specLineageTuple._4),
-      "sort-orders" -> JArray(List(JObject(
-        "order-id" -> JInt(0), "fields" -> JArray(Nil)))),
-      "default-sort-order-id" -> JInt(0),
-      "properties" -> JObject(
-        (props + ("schema.name-mapping.default" -> nameMapping(schema)))
-          .toList.map { case (k, v) => k -> (JString(v): JValue) }),
-      "current-snapshot-id" -> JLong(snapshotId),
-      // refs: carry branches/tags through, main follows the commit
-      // (the spec keeps `main` = current snapshot)
-      "refs" -> refsJson(prev.map(p => refsOf(p._2))
-        .getOrElse(Map.empty) + ("main" -> (snapshotId, "branch"))),
-      "snapshots" -> JArray((prevSnapshots :+ snapshot).toList),
-      "snapshot-log" -> JArray((prev.toSeq.flatMap(_._2 \ "snapshot-log" match {
-        case JArray(xs) => xs
-        case _ => Nil
-      }) :+ JObject("timestamp-ms" -> JLong(now),
-        "snapshot-id" -> JLong(snapshotId))).toList))
-    commitMetadata(fs, path, prev.map(_._1 + 1).getOrElse(1), meta)
-    snapshotId
-  }
+  private def commitFiles(fs: FileSystem, path: String, t: Table, schema: StructType,
+      partFields: Seq[StructField], moved: Seq[DataFileRef], overwrite: Boolean,
+      props: Map[String, String] = Map.empty, ref: String = "main"): Long =
+    commit(fs, path, t, schema, partFields, if (overwrite) "overwrite" else "append",
+      t.format, if (overwrite) Nil
+      else head(t.meta, ref).toSeq.flatMap(manifestList(fs, t.meta, _)),
+      addedSummary(moved), props, ref)(s => Seq(writeManifest(s, 0, buildEntries(moved, s))))
 
   /** Adopt data files that already exist OUTSIDE this table's tree as
     * its first snapshot — the metadata-only half of a cross-format
@@ -864,13 +948,11 @@ object IcebergInterop {
         "(metadata-only adoption targets a fresh location)")
     require(files.nonEmpty, "IcebergInterop.commitExternal: no data files")
     val stats = FileStats.fromFooters(spark, files.map(_._1), schema)
-    commitRefs(spark, fs, path, schema,
+    commitFiles(fs, path, newTable(path, schema, Nil), schema, Nil,
       files.map { case (p, bytes) =>
         val st = stats.get(p)
         DataFileRef(p, st.flatMap(_.numRecords).getOrElse(0L), bytes, stat = st)
-      },
-      overwrite = false, txn = None,
-      partFields = Nil, prev = None, prevProps = Map.empty)
+      }, overwrite = false)
   }
 
   /** The current snapshot's live data files as (path, records, bytes),
@@ -882,24 +964,16 @@ object IcebergInterop {
   private[graft] def currentDataFiles(spark: SparkSession,
       path: String): (StructType, Seq[DataFileRef]) = {
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"not an Iceberg table (no metadata/version-hint.text): $path"))
-    val meta = readMetadata(fs, path, version)
-    val target = (meta \ "current-snapshot-id").extract[Long]
-    val snap = (meta \ "snapshots").extract[List[JValue]]
-      .find(s => (s \ "snapshot-id").extract[Long] == target)
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot $target not found in $path"))
-    val schema = currentSchema(meta)
-    requireNoDeleteManifests(fs, snap, "convert") // adoption is verbatim
-    val refs = liveEntries(fs, snap).map { e =>
+    val t = open(fs, path)
+    val list = manifestList(fs, t.meta, t.current)
+    requireNoDeleteManifests(list, "convert") // adoption is verbatim
+    val refs = liveEntries(fs, list).map { e =>
       val d = e.get("data_file").asInstanceOf[GenericRecord]
       DataFileRef(d.get("file_path").toString,
         d.get("record_count").asInstanceOf[Long],
         d.get("file_size_in_bytes").asInstanceOf[Long])
     }
-    (schema, refs)
+    (t.schema, refs)
   }
 
   private implicit class JObjOps(private val o: JObject) {
@@ -973,20 +1047,16 @@ object IcebergInterop {
   def readWhere(spark: SparkSession, path: String, where: Option[Column],
       snapshotId: Option[Long] = None): DataFrame = {
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"not an Iceberg table (no metadata/version-hint.text): $path"))
-    val meta = readMetadata(fs, path, version)
-    require((meta \ "format-version").extract[Int] <= 3,
-      "IcebergInterop: unknown format-version " +
-        (meta \ "format-version").extract[Int])
-    val target = snapshotId.getOrElse((meta \ "current-snapshot-id").extract[Long])
-    val snap = (meta \ "snapshots").extract[List[JValue]]
-      .find(s => (s \ "snapshot-id").extract[Long] == target)
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot $target not found in $path"))
-    val schema = currentSchema(meta)
-    val listRecs = readAvro(fs, new Path((snap \ "manifest-list").extract[String]))
+    val t = open(fs, path)
+    scan(spark, fs, t, manifestList(fs, t.meta, snapshotId.getOrElse(t.current)), where)
+  }
+
+  /** [[readWhere]] over a snapshot's already-read manifest list: a merge
+    * scans the list it then carries, reading it once.
+    */
+  private def scan(spark: SparkSession, fs: FileSystem, t: Table,
+      listRecs: Seq[GenericRecord], where: Option[Column]): DataFrame = {
+    val schema = t.schema
     val (delRecs, dataRecs) = listRecs.partition(r => listContentOf(r) == 1)
     val dataFilesWithSeq = dataRecs.flatMap { r =>
       val seq = listSeqOf(r)
@@ -997,9 +1067,8 @@ object IcebergInterop {
     }
     val seqByPath = dataFilesWithSeq
       .map { case (d, q) => d.get("file_path").toString -> q }.toMap
-    val partFields = partFieldsOf(meta, schema)
     val kept = FileStats.prune(spark, schema, where, dataFilesWithSeq.map(_._1),
-      (d: GenericRecord) => fileStatOf(d, schema, partFields))
+      (d: GenericRecord) => fileStatOf(d, schema, t.partFields))
     val files = kept.map(_.get("file_path").toString)
     // row-level delete files from content=1 manifests: each ENTRY says
     // whether it is a POSITION delete (data_file.content=1: a
@@ -1061,7 +1130,7 @@ object IcebergInterop {
     val eqDeletes = delEntries.collect { case (p2, q, 2, ids, _) =>
       require(ids.nonEmpty,
         s"IcebergInterop: equality delete $p2 lists no equality_ids")
-      val idMap = fieldIdToName(meta)
+      val idMap = fieldIdToName(t.meta)
       (p2, q, ids.map(id => idMap.getOrElse(id,
         throw new IllegalArgumentException(
           s"IcebergInterop: equality delete $p2 references unknown field id $id"))))
@@ -1185,29 +1254,21 @@ object IcebergInterop {
   def deletePositions(spark: SparkSession, path: String,
       where: Column): Long = graft.JobLabel(spark, "iceberg.deletePositions") {
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    val schema = currentSchema(meta)
-    val partFields = partFieldsOf(meta, schema)
-    val curId = (meta \ "current-snapshot-id").extract[Long]
-    val snap = (meta \ "snapshots").extract[List[JValue]]
-      .find(s => (s \ "snapshot-id").extract[Long] == curId)
-      .getOrElse(throw new IllegalStateException(s"snapshot $curId not in $path"))
-    val listRecs = readAvro(fs, new Path((snap \ "manifest-list").extract[String]))
+    val t = open(fs, path, write = true)
+    val listRecs = manifestList(fs, t.meta, t.current)
     val dataFiles = listRecs.filter(listContentOf(_) == 0).flatMap { r =>
       readAvro(fs, new Path(r.get("manifest_path").toString)).collect {
         case e if e.get("status").asInstanceOf[Int] != 2 =>
           e.get("data_file").asInstanceOf[GenericRecord]
       }
     }
-    val pruned = FileStats.prune(spark, schema, Some(where), dataFiles,
-      (d: GenericRecord) => fileStatOf(d, schema, partFields))
-    if (pruned.isEmpty) return curId // no file can match: no-op
+    val pruned = FileStats.prune(spark, t.schema, Some(where), dataFiles,
+      (d: GenericRecord) => fileStatOf(d, t.schema, t.partFields))
+    if (pruned.isEmpty) return t.current // no file can match: no-op
     val files = pruned.map(_.get("file_path").toString)
     // a delete names its data file as the manifest spells it
     val manifestPath = typedLit(CommitKernel.byKey(fs, files)(new Path(_)))
-    val matches = spark.read.schema(schema).parquet(files: _*)
+    val matches = spark.read.schema(t.schema).parquet(files: _*)
       .filter(coalesce(where, lit(false)))
       .select(element_at(manifestPath, col("_metadata.file_path")).as("file_path"),
         col("_metadata.row_index").as("pos"))
@@ -1216,66 +1277,11 @@ object IcebergInterop {
     stageDeleteFile(
       matches.coalesce(1).sortWithinPartitions(col("file_path"), col("pos")),
       path, "delete", "iceberg: stage position deletes") match {
-      case None => curId
-      case Some(del) => commitDeleteFile(fs, path, version, meta, schema,
-        partFields, listRecs, del, contentKind = 1, eqIds = Nil)
+      case None => t.current
+      case Some(del) =>
+        commit(fs, path, t, t.schema, t.partFields, "delete", 2, listRecs,
+          addedSummary(Nil, Seq(1 -> del)))(s => Seq(writeManifest(s, 1, Seq(deleteEntry(s, del, 1)))))
     }
-  }
-
-  /** Shared commit tail of [[deletePositions]] and [[deleteEquality]]:
-    * one content=1 manifest referencing the freshly written delete
-    * parquet (`contentKind` 1 = position, 2 = equality with its
-    * `equality_ids`), the carried manifest list, a bumped sequence, and
-    * the format-version-2 metadata publish.
-    */
-  private def commitDeleteFile(fs: FileSystem, path: String, version: Int,
-      meta: JValue, schema: StructType, partFields: Seq[StructField],
-      listRecs: Seq[GenericRecord], del: CommitKernel.Staged,
-      contentKind: Int, eqIds: Seq[Int]): Long = {
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    val dfSchema = DeleteManifestEntrySchema.getField("data_file").schema()
-    val dfRec = new GenericData.Record(dfSchema)
-    dfRec.put("content", contentKind)
-    dfRec.put("file_path", s"$path/${del.path}")
-    dfRec.put("file_format", "PARQUET")
-    dfRec.put("partition",
-      new GenericData.Record(dfSchema.getField("partition").schema()))
-    dfRec.put("record_count", del.rows)
-    dfRec.put("file_size_in_bytes", del.bytes)
-    if (eqIds.nonEmpty)
-      dfRec.put("equality_ids",
-        scala.jdk.CollectionConverters.SeqHasAsJava(
-          eqIds.map(Integer.valueOf)).asJava)
-    val entry = new GenericData.Record(DeleteManifestEntrySchema)
-    entry.put("status", 1) // ADDED
-    entry.put("snapshot_id", snapshotId)
-    entry.put("data_file", dfRec)
-    val manifestPath = s"$path/metadata/${java.util.UUID.randomUUID()}-d0.avro"
-    val (specId, specJson) = specStamp(Some(meta), partFields, schema)
-    val manifestLen = writeAvro(fs, new Path(manifestPath),
-      DeleteManifestEntrySchema,
-      Map("schema" -> JsonMethods.compact(JsonMethods.render(schemaJson(schema))),
-        "partition-spec" -> specJson,
-        "partition-spec-id" -> specId,
-        "format-version" -> "2",
-        "content" -> "deletes"),
-      Seq(entry))
-    val newSeq = (meta \ "last-sequence-number").extractOrElse[Long](0L) + 1
-    val listPath =
-      s"$path/metadata/snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro"
-    val added = listEntryRecord(manifestPath, manifestLen, snapshotId,
-      content = 1, seq = newSeq)
-    val carried = listRecs.map(r => listEntryRecord(
-      r.get("manifest_path").toString,
-      r.get("manifest_length").asInstanceOf[Long],
-      r.get("added_snapshot_id").asInstanceOf[java.lang.Long],
-      content = listContentOf(r), seq = listSeqOf(r)))
-    writeAvro(fs, new Path(listPath), ManifestFileSchema,
-      Map("format-version" -> "2"), added +: carried)
-    val prevProps = (meta \ "properties").extractOrElse[Map[String, String]](Map.empty)
-    publishMetadata(fs, path, Some((version, meta)), schema, partFields,
-      prevProps, formatVersion = 2, newSeq, snapshotId,
-      System.currentTimeMillis(), listPath, "delete")
   }
 
   /** EQUALITY-delete write — the CDC-keyed DELETE, and the whole point
@@ -1294,14 +1300,10 @@ object IcebergInterop {
   def deleteEquality(spark: SparkSession, path: String,
       keys: DataFrame): Long = graft.JobLabel(spark, "iceberg.deleteEquality") {
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    val schema = currentSchema(meta)
-    val partFields = partFieldsOf(meta, schema)
-    val idByName = fieldIdToName(meta).map(_.swap)
+    val t = open(fs, path, write = true)
+    val idByName = fieldIdToName(t.meta).map(_.swap)
     val eqIds = keys.schema.fields.toSeq.map { f =>
-      val tf = schema.fields.find(_.name == f.name).getOrElse(
+      val tf = t.schema.fields.find(_.name == f.name).getOrElse(
         throw new IllegalArgumentException(
           s"IcebergInterop deleteEquality: key column ${f.name} not in table schema"))
       require(tf.dataType == f.dataType,
@@ -1311,18 +1313,14 @@ object IcebergInterop {
         s"no field id for ${f.name}"))
     }
     require(eqIds.nonEmpty, "IcebergInterop deleteEquality: no key columns")
-    val curId = (meta \ "current-snapshot-id").extract[Long]
     // the spec wants delete files sorted; keys dedup for cleanliness
     val del = stageDeleteFile(keys.distinct().coalesce(1)
         .sortWithinPartitions(keys.schema.fieldNames.map(col): _*),
       path, "eqdelete", "iceberg: stage equality deletes")
-      .getOrElse(return curId)
-    val snap = (meta \ "snapshots").extract[List[JValue]]
-      .find(s => (s \ "snapshot-id").extract[Long] == curId)
-      .getOrElse(throw new IllegalStateException(s"snapshot $curId not in $path"))
-    val listRecs = readAvro(fs, new Path((snap \ "manifest-list").extract[String]))
-    commitDeleteFile(fs, path, version, meta, schema, partFields,
-      listRecs, del, contentKind = 2, eqIds = eqIds)
+      .getOrElse(return t.current)
+    commit(fs, path, t, t.schema, t.partFields, "delete", 2,
+      manifestList(fs, t.meta, t.current), addedSummary(Nil, Seq(2 -> del)))(s =>
+      Seq(writeManifest(s, 1, Seq(deleteEntry(s, del, 2, eqIds)))))
   }
 
   /** MERGE INTO on the Iceberg wire format — the MERGE-ON-READ shape
@@ -1351,34 +1349,30 @@ object IcebergInterop {
     require(clauses.nonEmpty, "IcebergInterop merge: no clauses")
     require(on.nonEmpty, "IcebergInterop merge: empty ON key list")
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    val schema = currentSchema(meta)
-    val partFields = partFieldsOf(meta, schema)
-    val curId = (meta \ "current-snapshot-id").extract[Long]
+    val t = open(fs, path, write = true)
+    val schema = t.schema
     // replayed streaming batch → no-op (graft.txn table property,
     // the same exactly-once token [[write]] stamps)
-    val metaProps =
-      (meta \ "properties").extractOrElse[Map[String, String]](Map.empty)
     txn.foreach { case (appId, v) =>
-      if (metaProps.get(s"graft.txn.$appId").exists(_.toLong >= v))
-        return curId
+      if (t.props.get(s"graft.txn.$appId").exists(_.toLong >= v))
+        return t.current
     }
     on.foreach(c => require(schema.fieldNames.contains(c),
       s"IcebergInterop merge: ON column $c not in table schema"))
     on.foreach(c => require(source.columns.contains(c),
       s"IcebergInterop merge: ON column $c not in source"))
-    val idByName = fieldIdToName(meta).map(_.swap)
+    val idByName = fieldIdToName(t.meta).map(_.swap)
     val eqIds = on.map(c => idByName.getOrElse(c,
       throw new IllegalStateException(s"no field id for $c")))
+    // the base list, read once: scanned for matches, then carried
+    lazy val listRecs = manifestList(fs, t.meta, t.current)
     val t0 = FileStats.keyEnvelope(source.select(on.map(col): _*), on) match {
-      case FileStats.Empty => return curId // full no-op
+      case FileStats.Empty => return t.current // full no-op
       case FileStats.Unmatchable =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      case FileStats.Unbounded => readWhere(spark, path, None)
-      case FileStats.Bounds(p) => readWhere(spark, path, Some(p))
+      case FileStats.Unbounded => scan(spark, fs, t, listRecs, None)
+      case FileStats.Bounds(p) => scan(spark, fs, t, listRecs, Some(p))
     }
     val src = source.persist()
     try {
@@ -1403,83 +1397,19 @@ object IcebergInterop {
         // WRITES' own parquet footers — no count()/isEmpty probe actions
         // per micro-batch (guide §1: cut actions, not just task work);
         // staging drops zero-row files before any manifest sees them.
-        val moved = stageDataFiles(appendRows, path, partFields.map(_.name),
+        val moved = stageDataFiles(appendRows, path, t.partFields.map(_.name),
           label = "iceberg.merge: stage appends")
         // sorted equality-delete parquet of the ON-key rows
         val del = stageDeleteFile(
           delKeys.coalesce(1).sortWithinPartitions(on.map(col): _*),
           path, "eqdelete", "iceberg.merge: stage eq-deletes")
-        if (del.isEmpty && moved.isEmpty) return curId // full no-op
-        val prevFormat = (meta \ "format-version").extract[Int]
-        val fmt = if (del.nonEmpty) 2 else prevFormat
-        val newSeq = if (fmt >= 2)
-          (meta \ "last-sequence-number").extractOrElse[Long](0L) + 1 else 0L
-        val snapshotId =
-          math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-        val snap = (meta \ "snapshots").extract[List[JValue]]
-          .find(x => (x \ "snapshot-id").extract[Long] == curId)
-          .getOrElse(throw new IllegalStateException(
-            s"snapshot $curId not in $path"))
-        val listRecs = readAvro(fs,
-          new Path((snap \ "manifest-list").extract[String]))
-        val fresh = scala.collection.mutable.ArrayBuffer[GenericRecord]()
-        if (moved.nonEmpty) {
-          val manifestPath = s"$path/metadata/${java.util.UUID.randomUUID()}-m0.avro"
-          val entrySchema = manifestEntrySchema(partFields)
-          val (specId, specJson) = specStamp(Some(meta), partFields, schema)
-          val len = writeAvro(fs, new Path(manifestPath), entrySchema,
-            Map("schema" -> JsonMethods.compact(JsonMethods.render(schemaJson(schema))),
-              "partition-spec" -> specJson,
-              "partition-spec-id" -> specId,
-              "format-version" -> fmt.toString),
-            buildEntries(moved, snapshotId, schema, partFields, entrySchema))
-          fresh += listEntryRecord(manifestPath, len, snapshotId,
-            content = 0, seq = newSeq)
+        if (del.isEmpty && moved.isEmpty) return t.current // full no-op
+        commit(fs, path, t, schema, t.partFields, "overwrite",
+          if (del.nonEmpty) 2 else t.format, listRecs,
+          addedSummary(moved, del.toSeq.map(2 -> _)), txnProps(txn)) { s =>
+          (if (moved.isEmpty) Nil else Seq(writeManifest(s, 0, buildEntries(moved, s)))) ++
+            del.map(d => writeManifest(s, 1, Seq(deleteEntry(s, d, 2, eqIds))))
         }
-        del.foreach { d =>
-          val dfSchema = DeleteManifestEntrySchema.getField("data_file").schema()
-          val dfRec = new GenericData.Record(dfSchema)
-          dfRec.put("content", 2)
-          dfRec.put("file_path", s"$path/${d.path}")
-          dfRec.put("file_format", "PARQUET")
-          dfRec.put("partition",
-            new GenericData.Record(dfSchema.getField("partition").schema()))
-          dfRec.put("record_count", d.rows)
-          dfRec.put("file_size_in_bytes", d.bytes)
-          dfRec.put("equality_ids",
-            scala.jdk.CollectionConverters.SeqHasAsJava(
-              eqIds.map(Integer.valueOf)).asJava)
-          val entry = new GenericData.Record(DeleteManifestEntrySchema)
-          entry.put("status", 1) // ADDED
-          entry.put("snapshot_id", snapshotId)
-          entry.put("data_file", dfRec)
-          val manifestPath = s"$path/metadata/${java.util.UUID.randomUUID()}-d0.avro"
-          val (dSpecId, dSpecJson) = specStamp(Some(meta), partFields, schema)
-          val len = writeAvro(fs, new Path(manifestPath),
-            DeleteManifestEntrySchema,
-            Map("schema" -> JsonMethods.compact(JsonMethods.render(schemaJson(schema))),
-              "partition-spec" -> dSpecJson,
-              "partition-spec-id" -> dSpecId,
-              "format-version" -> "2",
-              "content" -> "deletes"),
-            Seq(entry))
-          fresh += listEntryRecord(manifestPath, len, snapshotId,
-            content = 1, seq = newSeq)
-        }
-        val carried = listRecs.map(r => listEntryRecord(
-          r.get("manifest_path").toString,
-          r.get("manifest_length").asInstanceOf[Long],
-          r.get("added_snapshot_id").asInstanceOf[java.lang.Long],
-          content = listContentOf(r), seq = listSeqOf(r)))
-        val listPath =
-          s"$path/metadata/snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro"
-        writeAvro(fs, new Path(listPath), ManifestFileSchema,
-          Map("format-version" -> fmt.toString), fresh.toSeq ++ carried)
-        publishMetadata(fs, path, Some((version, meta)), schema, partFields,
-          metaProps ++
-            txn.map { case (a, v) => s"graft.txn.$a" -> v.toString },
-          fmt, newSeq, snapshotId, System.currentTimeMillis(),
-          listPath, "overwrite")
       } finally { j.unpersist(); () }
     } finally { src.unpersist(); () }
   }
@@ -1510,16 +1440,11 @@ object IcebergInterop {
   private[graft] def liveFilesWhere(spark: SparkSession, path: String,
       where: Option[Column]): Seq[String] = {
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).get
-    val meta = readMetadata(fs, path, version)
-    val target = (meta \ "current-snapshot-id").extract[Long]
-    val snap = (meta \ "snapshots").extract[List[JValue]]
-      .find(s => (s \ "snapshot-id").extract[Long] == target).get
-    val schema = currentSchema(meta)
-    val dataFiles = liveEntries(fs, snap)
+    val t = open(fs, path)
+    val dataFiles = liveEntries(fs, manifestList(fs, t.meta, t.current))
       .map(_.get("data_file").asInstanceOf[GenericRecord])
-    FileStats.prune(spark, schema, where, dataFiles,
-      (d: GenericRecord) => fileStatOf(d, schema, partFieldsOf(meta, schema)))
+    FileStats.prune(spark, t.schema, where, dataFiles,
+      (d: GenericRecord) => fileStatOf(d, t.schema, t.partFields))
       .map(_.get("file_path").toString)
   }
 
@@ -1658,10 +1583,8 @@ object IcebergInterop {
     * from each file's footer stats, the skipping metadata real Iceberg
     * planners prune on.
     */
-  private def buildEntries(moved: Seq[DataFileRef], snapshotId: Long,
-      schema: StructType, partFields: Seq[StructField],
-      entrySchema: org.apache.avro.Schema): Seq[GenericRecord] = {
-    val dataFileSchema = entrySchema.getField("data_file").schema()
+  private def buildEntries(moved: Seq[DataFileRef], s: Stamp): Seq[GenericRecord] = {
+    val dataFileSchema = s.entrySchema.getField("data_file").schema()
     def kvItemSchema(field: String) =
       dataFileSchema.getField(field).schema().getTypes.get(1).getElementType
     def kvList(field: String, pairs: Seq[(Int, Any)]): java.util.List[GenericRecord] =
@@ -1670,15 +1593,15 @@ object IcebergInterop {
         r.put("key", k); r.put("value", v); r: GenericRecord
       }.asJava
     moved.map { f =>
-      val e = new GenericData.Record(entrySchema)
+      val e = new GenericData.Record(s.entrySchema)
       e.put("status", 1) // ADDED
-      e.put("snapshot_id", snapshotId)
+      e.put("snapshot_id", s.snapshotId)
       val d = new GenericData.Record(dataFileSchema)
       d.put("file_path", f.path)
       d.put("file_format", "PARQUET")
       val partRec = new GenericData.Record(
         dataFileSchema.getField("partition").schema())
-      partFields.zip(f.partValues).foreach { case (pf, v) =>
+      s.partFields.zip(f.partValues).foreach { case (pf, v) =>
         partRec.put(pf.name, v.map(partAvroValue(_, pf.dataType)).orNull)
       }
       d.put("partition", partRec)
@@ -1686,7 +1609,7 @@ object IcebergInterop {
       d.put("file_size_in_bytes", f.bytes)
       d.put("block_size_in_bytes", 67108864L)
       f.stat.foreach { st =>
-        val fields = schema.fields.zipWithIndex
+        val fields = s.schema.fields.zipWithIndex
         d.put("value_counts", kvList("value_counts",
           fields.map { case (_, i) => (i + 1) -> st.numRecords.getOrElse(0L) }.toSeq))
         d.put("null_value_counts", kvList("null_value_counts",
@@ -1706,19 +1629,18 @@ object IcebergInterop {
     }
   }
 
-  /** The live (status != DELETED) data-file entries of a snapshot,
-    * with their manifest-entry records.
+  /** The live (status != DELETED) data-file entries of a manifest
+    * list, with their manifest-entry records.
     */
-  private def liveEntries(fs: FileSystem, snap: JValue): Seq[GenericRecord] =
-    liveEntriesWithSeq(fs, snap).map(_._1)
+  private def liveEntries(fs: FileSystem, list: Seq[GenericRecord]): Seq[GenericRecord] =
+    liveEntriesWithSeq(fs, list).map(_._1)
 
   /** Live entries paired with their DATA sequence (entry-level override
     * or list-level inheritance) — what a v2 rewrite must carry forward.
     */
-  private def liveEntriesWithSeq(fs: FileSystem, snap: JValue)
+  private def liveEntriesWithSeq(fs: FileSystem, list: Seq[GenericRecord])
       : Seq[(GenericRecord, Long)] =
-    readAvro(fs, new Path((snap \ "manifest-list").extract[String]))
-      .filter(listContentOf(_) == 0) // data manifests only, never content=1
+    list.filter(listContentOf(_) == 0) // data manifests only, never content=1
       .flatMap { r =>
         val seq = listSeqOf(r)
         readAvro(fs, new Path(r.get("manifest_path").toString))
@@ -1726,16 +1648,14 @@ object IcebergInterop {
       }
       .filter(_._1.get("status").asInstanceOf[Int] != 2)
 
-  /** Refuse loudly when a v2 snapshot carries position-delete manifests:
-    * callers that rewrite or adopt data files wholesale (compaction,
-    * metadata-only CONVERT) would orphan the deletes and resurrect
-    * deleted rows — silent corruption. The delete-aware read path
-    * ([[readIceberg]]) applies them instead of refusing.
+  /** Refuse loudly when a v2 manifest list carries position-delete
+    * manifests: callers that rewrite or adopt data files wholesale
+    * (compaction, metadata-only CONVERT) would orphan the deletes and
+    * resurrect deleted rows — silent corruption. The delete-aware read
+    * path ([[readWhere]]) applies them instead of refusing.
     */
-  private def requireNoDeleteManifests(fs: FileSystem, snap: JValue,
-      what: String): Unit = {
-    val dels = readAvro(fs, new Path((snap \ "manifest-list").extract[String]))
-      .count(listContentOf(_) == 1)
+  private def requireNoDeleteManifests(list: Seq[GenericRecord], what: String): Unit = {
+    val dels = list.count(listContentOf(_) == 1)
     require(dels == 0,
       s"IcebergInterop $what: snapshot carries $dels position-delete " +
         "manifest(s) (v2 content=1); rewrite the table through the " +
@@ -1755,73 +1675,20 @@ object IcebergInterop {
       })
   }
 
-  /** Append a snapshot to the EXISTING table metadata (no schema/spec
-    * change — maintenance commits), returning the new version. The
-    * metadata JSON is the previous one with snapshot bookkeeping
-    * updated, so every other field round-trips byte-compatible.
-    */
-  private def commitMaintenance(fs: FileSystem, path: String, version: Int,
-      meta: JValue, snapshotId: Long, listPath: String,
-      operation: String, dropSnapshotIds: Set[Long] = Set.empty,
-      newSeq: Option[Long] = None): Int = {
-    requireWritableFormat(meta)
-    val now = System.currentTimeMillis()
-    val parent = (meta \ "current-snapshot-id").extract[Long]
-    val snapshot = JObject(
-      "snapshot-id" -> JLong(snapshotId),
-      "parent-snapshot-id" -> JLong(parent),
-      "timestamp-ms" -> JLong(now),
-      "summary" -> JObject("operation" -> JString(operation)),
-      "manifest-list" -> JString(listPath),
-      "schema-id" -> JInt(0)) ~~
-      // v2 requires a sequence-number on every snapshot
-      newSeq.map(q => JObject("sequence-number" -> JLong(q)))
-    val keptSnaps = (meta \ "snapshots").extract[List[JValue]]
-      .filterNot(s => dropSnapshotIds.contains((s \ "snapshot-id").extract[Long]))
-    val keptLog = (meta \ "snapshot-log").extractOrElse[List[JValue]](Nil)
-      .filterNot(s => dropSnapshotIds.contains((s \ "snapshot-id").extract[Long]))
-    refsOf(meta).foreach { case (name, (id, _)) =>
-      require(name == "main" || !dropSnapshotIds.contains(id),
-        s"IcebergInterop: maintenance would drop snapshot $id still " +
-          s"referenced by ref '$name' — dropRef first")
-    }
-    val updated = JObject(meta.asInstanceOf[JObject].obj.map {
-      case ("last-updated-ms", _) => "last-updated-ms" -> (JLong(now): JValue)
-      case ("last-sequence-number", v) =>
-        "last-sequence-number" -> newSeq.map(q => JLong(q): JValue).getOrElse(v)
-      case ("current-snapshot-id", _) =>
-        "current-snapshot-id" -> (JLong(snapshotId): JValue)
-      case ("refs", _) => // `main` follows current (spec rule)
-        "refs" -> refsJson(refsOf(meta) + ("main" -> (snapshotId, "branch")))
-      case ("snapshots", _) =>
-        "snapshots" -> (JArray(keptSnaps :+ snapshot): JValue)
-      case ("snapshot-log", _) =>
-        "snapshot-log" -> (JArray(keptLog :+ JObject(
-          "timestamp-ms" -> JLong(now),
-          "snapshot-id" -> JLong(snapshotId))): JValue)
-      case other => other
-    })
-    commitMetadata(fs, path, version + 1, updated)
-  }
-
   /** The current snapshot's ancestor chain, root-first (the streaming
     * tail's clock: position = depth). None for an empty/absent table.
     */
-  def snapshotChain(spark: SparkSession, path: String): Option[Seq[Long]] = {
-    val fs = fsFor(spark, path)
-    currentVersion(fs, path).map { version =>
-      val meta = readMetadata(fs, path, version)
-      val byId = (meta \ "snapshots").extract[List[JValue]]
-        .map(s => (s \ "snapshot-id").extract[Long] -> s).toMap
+  def snapshotChain(spark: SparkSession, path: String): Option[Seq[Long]] =
+    load(fsFor(spark, path), path).map { t =>
+      val byId = snapshotsById(t.meta)
       val chain = scala.collection.mutable.ArrayBuffer[Long]()
-      var cursor: Option[Long] = Some((meta \ "current-snapshot-id").extract[Long])
+      var cursor: Option[Long] = Some(t.current)
       while (cursor.isDefined && byId.contains(cursor.get)) {
         chain.prepend(cursor.get)
         cursor = (byId(cursor.get) \ "parent-snapshot-id").extractOpt[Long]
       }
       chain.toSeq
     }
-  }
 
   /** Rows ADDED by the snapshots in `(fromSnapshot, toSnapshot]`,
     * resolved by walking the parent chain back from `toSnapshot` — the
@@ -1835,12 +1702,8 @@ object IcebergInterop {
       fromSnapshot: Option[Long], toSnapshot: Long,
       ignoreChanges: Boolean = false): DataFrame = {
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    val schema = currentSchema(meta)
-    val byId = (meta \ "snapshots").extract[List[JValue]]
-      .map(s => (s \ "snapshot-id").extract[Long] -> s).toMap
+    val t = open(fs, path)
+    val byId = snapshotsById(t.meta)
     // walk to the range start; collect in commit order
     val chain = scala.collection.mutable.ArrayBuffer[JValue]()
     var cursor: Option[Long] = Some(toSnapshot)
@@ -1872,8 +1735,8 @@ object IcebergInterop {
     }
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema)
-    else spark.read.schema(schema).parquet(files.distinct: _*)
+        t.schema)
+    else spark.read.schema(t.schema).parquet(files.distinct: _*)
   }
 
   /** rewrite_data_files (bin-packing compaction): every partition tuple
@@ -1895,14 +1758,9 @@ object IcebergInterop {
     * [[deletePositions]]/[[deleteEquality]]: soft deletes accumulate
     * cheaply between collapses, then one rewrite amortizes them.
     */
-  def collapseDeletes(spark: SparkSession, path: String): Long = {
-    val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    val partCols = partFieldsOf(meta, currentSchema(meta)).map(_.name)
-    write(read(spark, path), path, overwrite = true, partitionBy = partCols)
-  }
+  def collapseDeletes(spark: SparkSession, path: String): Long =
+    write(read(spark, path), path, overwrite = true,
+      partitionBy = open(fsFor(spark, path), path).partFields.map(_.name))
 
   def compact(spark: SparkSession, path: String): Long =
     compact(spark, path, zorderBy = Nil)
@@ -1917,29 +1775,20 @@ object IcebergInterop {
       filesPerPartition: Int = 16,
       targetFileBytes: Option[Long] = None): Long = {
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    val schema = currentSchema(meta)
-    val partFields = partFieldsOf(meta, schema)
+    val t = open(fs, path, write = true)
+    val (schema, partFields) = (t.schema, t.partFields)
     zorderBy.foreach(c => require(
       schema.fieldNames.contains(c) && !partFields.exists(_.name == c),
       s"compact zorderBy: $c must be a non-partition data column"))
-    val current = (meta \ "current-snapshot-id").extract[Long]
-    val snap = (meta \ "snapshots").extract[List[JValue]]
-      .find(s => (s \ "snapshot-id").extract[Long] == current).get
-    requireNoDeleteManifests(fs, snap, "compact") // rewrite orphans deletes
-    val prevFormat = (meta \ "format-version").extract[Int]
-    val newSeq = if (prevFormat >= 2)
-      (meta \ "last-sequence-number").extractOrElse[Long](0L) + 1 else 0L
-    val entries = liveEntriesWithSeq(fs, snap)
-    val grouped = entries.groupBy(e => partKeyOf(e._1, partFields))
+    val list = manifestList(fs, t.meta, t.current)
+    requireNoDeleteManifests(list, "compact") // rewrite orphans deletes
+    val grouped = liveEntriesWithSeq(fs, list).groupBy(e => partKeyOf(e._1, partFields))
     // z-order re-clusters EVERYTHING; plain bin-packing touches only
     // partitions that can pack smaller
     val multi =
       if (zorderBy.nonEmpty) grouped
       else grouped.filter(_._2.size > 1)
-    if (multi.isEmpty) return current
+    if (multi.isEmpty) return t.current
     val untouched = grouped.filterNot(g => multi.contains(g._1)).values.flatten.toSeq
     val touchedPaths = multi.values.flatten.toSeq.map(
       _._1.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString)
@@ -1988,41 +1837,26 @@ object IcebergInterop {
       }
     val moved = stageDataFiles(packed, path, partFields.map(_.name),
       shape = false)
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    val entrySchema = manifestEntrySchema(partFields)
-    val newEntries = buildEntries(moved, snapshotId, schema, partFields,
-      entrySchema) ++
-      untouched.map { case (old, oldSeq) =>
-        val e = new GenericData.Record(entrySchema)
-        e.put("status", 0) // EXISTING
-        e.put("snapshot_id", old.get("snapshot_id"))
-        // entry-level sequence: an EXISTING entry carried into the
-        // rewritten manifest must keep its ORIGINAL data sequence, or
-        // v2 readers would inflate it to the new list-level sequence
-        // and skip the deletes that legitimately target it (the rule
-        // the foreign fixture pins)
-        if (prevFormat >= 2) {
-          e.put("sequence_number", oldSeq)
-          e.put("file_sequence_number", oldSeq)
-        }
-        e.put("data_file", old.get("data_file"))
-        e
-      }
-    val manifestPath = s"$path/metadata/${java.util.UUID.randomUUID()}-m0.avro"
-    val (specId, specJson) = specStamp(Some(meta), partFields, schema)
-    val manifestLen = writeAvro(fs, new Path(manifestPath), entrySchema,
-      Map("schema" -> JsonMethods.compact(JsonMethods.render(schemaJson(schema))),
-        "partition-spec" -> specJson,
-        "partition-spec-id" -> specId, "format-version" -> prevFormat.toString),
-      newEntries)
-    val listPath = s"$path/metadata/snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro"
-    val listRec = listEntryRecord(manifestPath, manifestLen, snapshotId,
-      content = 0, seq = newSeq)
-    writeAvro(fs, new Path(listPath), ManifestFileSchema,
-      Map("format-version" -> prevFormat.toString), Seq(listRec))
-    commitMaintenance(fs, path, version, meta, snapshotId, listPath, "replace",
-      newSeq = if (prevFormat >= 2) Some(newSeq) else None)
-    snapshotId
+    commit(fs, path, t, schema, partFields, "replace", t.format, Nil,
+      addedSummary(moved)) { s =>
+      Seq(writeManifest(s, 0, buildEntries(moved, s) ++
+        untouched.map { case (old, oldSeq) =>
+          val e = new GenericData.Record(s.entrySchema)
+          e.put("status", 0) // EXISTING
+          e.put("snapshot_id", old.get("snapshot_id"))
+          // entry-level sequence: an EXISTING entry carried into the
+          // rewritten manifest must keep its ORIGINAL data sequence, or
+          // v2 readers would inflate it to the new list-level sequence
+          // and skip the deletes that legitimately target it (the rule
+          // the foreign fixture pins)
+          if (s.fmt >= 2) {
+            e.put("sequence_number", oldSeq)
+            e.put("file_sequence_number", oldSeq)
+          }
+          e.put("data_file", old.get("data_file"))
+          e
+        }))
+    }
   }
 
   /** expire_snapshots: drop all but the newest `keepLast` snapshots
@@ -2036,20 +1870,17 @@ object IcebergInterop {
       keepLast: Int): (Int, Int) = {
     require(keepLast >= 1, "expireSnapshots: keepLast must be >= 1")
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    requireWritableFormat(meta)
+    val t = open(fs, path, write = true)
     // foreign metadata lists snapshots in ARBITRARY order (the foreign
     // fixture pins one out of order) — "last" means newest by sequence
     // then timestamp, never list position
-    val all = (meta \ "snapshots").extract[List[JValue]]
+    val all = snapshots(t.meta)
       .sortBy(s => ((s \ "sequence-number").extractOrElse[Long](0L),
         (s \ "timestamp-ms").extractOrElse[Long](0L)))
     if (all.size <= keepLast) return (0, 0)
     // branch heads / tags survive expiry regardless of age — a ref is a
     // promise the snapshot stays readable until the ref itself drops
-    val refHeads = refsOf(meta).values.map(_._1).toSet
+    val refHeads = refsOf(t.meta).values.map(_._1).toSet
     val (keepRefd, rest) = all.partition(s =>
       refHeads.contains((s \ "snapshot-id").extract[Long]))
     val keep = (keepRefd ++ rest.takeRight(
@@ -2060,8 +1891,7 @@ object IcebergInterop {
     val expired = all.filterNot(s =>
       keepIds.contains((s \ "snapshot-id").extract[Long]))
     if (expired.isEmpty) return (0, 0)
-    val current = (meta \ "current-snapshot-id").extract[Long]
-    require(keep.exists(s => (s \ "snapshot-id").extract[Long] == current),
+    require(keepIds.contains(t.current),
       "expireSnapshots: the current snapshot must survive")
     def listsOf(snaps: Seq[JValue]): Seq[String] =
       snaps.map(s => (s \ "manifest-list").extract[String])
@@ -2078,18 +1908,9 @@ object IcebergInterop {
     deadFiles.foreach(f => fs.delete(new Path(f), false))
     deadManifests.foreach(m => fs.delete(new Path(m), false))
     listsOf(expired).foreach(l => fs.delete(new Path(l), false))
-    val expiredIds = expired.map(s => (s \ "snapshot-id").extract[Long]).toSet
     // a metadata-only commit: same current snapshot, expired ones gone
-    val keptLog = (meta \ "snapshot-log").extractOrElse[List[JValue]](Nil)
-      .filterNot(s => expiredIds.contains((s \ "snapshot-id").extract[Long]))
-    val updated = JObject(meta.asInstanceOf[JObject].obj.map {
-      case ("last-updated-ms", _) =>
-        "last-updated-ms" -> (JLong(System.currentTimeMillis()): JValue)
-      case ("snapshots", _) => "snapshots" -> (JArray(keep.toList): JValue)
-      case ("snapshot-log", _) => "snapshot-log" -> (JArray(keptLog): JValue)
-      case other => other
-    })
-    commitMetadata(fs, path, version + 1, updated)
+    publish(fs, path, t, refsOf(t.meta),
+      drop = expired.map(s => (s \ "snapshot-id").extract[Long]).toSet)
     (expired.size, deadFiles.size)
   }
 
@@ -2117,65 +1938,32 @@ object IcebergInterop {
     */
   def rewriteManifests(spark: SparkSession, path: String): Int = {
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    val schema = currentSchema(meta)
-    val partFields = partFieldsOf(meta, schema)
-    val curId = (meta \ "current-snapshot-id").extract[Long]
-    val snap = (meta \ "snapshots").extract[List[JValue]]
-      .find(s => (s \ "snapshot-id").extract[Long] == curId)
-      .getOrElse(throw new IllegalStateException(s"snapshot $curId not in $path"))
-    val listRecs = readAvro(fs, new Path((snap \ "manifest-list").extract[String]))
-    val (delRecs, dataRecs) = listRecs.partition(r => listContentOf(r) == 1)
+    val t = open(fs, path, write = true)
+    val (delRecs, dataRecs) =
+      manifestList(fs, t.meta, t.current).partition(r => listContentOf(r) == 1)
     if (dataRecs.size <= 1) return 0
-    val entrySchema = manifestEntrySchema(partFields)
-    val dfSchema = entrySchema.getField("data_file").schema()
     val gd = org.apache.avro.generic.GenericData.get()
-    val merged: Seq[GenericRecord] = dataRecs.flatMap { r =>
-      val inherited = listSeqOf(r)
-      readAvro(fs, new Path(r.get("manifest_path").toString)).collect {
-        case e if e.get("status").asInstanceOf[Int] != 2 => // not DELETED
-          val ne = new GenericData.Record(entrySchema)
-          ne.put("status", 0) // EXISTING
-          ne.put("snapshot_id", e.get("snapshot_id"))
-          ne.put("sequence_number", entrySeqOf(e, inherited))
-          ne.put("data_file",
-            try gd.deepCopy(dfSchema,
-              e.get("data_file").asInstanceOf[GenericRecord])
-            catch { case ex: Exception => throw new IllegalArgumentException(
-              "IcebergInterop rewriteManifests: foreign manifest entry " +
-                s"shape diverges from the table schema (${ex.getMessage}) — " +
-                "refusing rather than dropping fields", ex) })
-          ne: GenericRecord
-      }
+    commit(fs, path, t, t.schema, t.partFields, "replace", t.format, delRecs) { s =>
+      val dfSchema = s.entrySchema.getField("data_file").schema()
+      Seq(writeManifest(s, 0, dataRecs.flatMap { r =>
+        val inherited = listSeqOf(r)
+        readAvro(fs, new Path(r.get("manifest_path").toString)).collect {
+          case e if e.get("status").asInstanceOf[Int] != 2 => // not DELETED
+            val ne = new GenericData.Record(s.entrySchema)
+            ne.put("status", 0) // EXISTING
+            ne.put("snapshot_id", e.get("snapshot_id"))
+            ne.put("sequence_number", entrySeqOf(e, inherited))
+            ne.put("data_file",
+              try gd.deepCopy(dfSchema,
+                e.get("data_file").asInstanceOf[GenericRecord])
+              catch { case ex: Exception => throw new IllegalArgumentException(
+                "IcebergInterop rewriteManifests: foreign manifest entry " +
+                  s"shape diverges from the table schema (${ex.getMessage}) — " +
+                  "refusing rather than dropping fields", ex) })
+            ne: GenericRecord
+        }
+      }))
     }
-    val fmt = (meta \ "format-version").extract[Int]
-    val manifestPath = s"$path/metadata/${java.util.UUID.randomUUID()}-m0.avro"
-    val (specId, specJson) = specStamp(Some(meta), partFields, schema)
-    val manifestLen = writeAvro(fs, new Path(manifestPath), entrySchema,
-      Map("schema" -> JsonMethods.compact(JsonMethods.render(schemaJson(schema))),
-        "partition-spec" -> specJson,
-        "partition-spec-id" -> specId,
-        "format-version" -> fmt.toString),
-      merged)
-    val newSeq = if (fmt >= 2)
-      Some((meta \ "last-sequence-number").extractOrElse[Long](0L) + 1)
-    else None
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    val listPath =
-      s"$path/metadata/snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro"
-    val mergedEntry = listEntryRecord(manifestPath, manifestLen, snapshotId,
-      content = 0, seq = newSeq.getOrElse(0L))
-    val carried = delRecs.map(r => listEntryRecord(
-      r.get("manifest_path").toString,
-      r.get("manifest_length").asInstanceOf[Long],
-      r.get("added_snapshot_id").asInstanceOf[java.lang.Long],
-      content = listContentOf(r), seq = listSeqOf(r)))
-    writeAvro(fs, new Path(listPath), ManifestFileSchema,
-      Map("format-version" -> fmt.toString), mergedEntry +: carried)
-    commitMaintenance(fs, path, version, meta, snapshotId, listPath,
-      "replace", newSeq = newSeq)
     dataRecs.size
   }
 
@@ -2199,8 +1987,7 @@ object IcebergInterop {
       olderThanMs: Long = 3L * 24 * 3600 * 1000): Int = {
     require(olderThanMs >= 0, "removeOrphanFiles: negative grace period")
     val fs = fsFor(spark, path)
-    require(currentVersion(fs, path).isDefined,
-      s"not an Iceberg table (no metadata/version-hint.text): $path")
+    open(fs, path)
     def keyOf(p: String): String = CommitKernel.fileKey(fs, new Path(p))
     val reachable = scala.collection.mutable.Set[String]()
     val visitedManifests = scala.collection.mutable.Set[String]()
@@ -2210,7 +1997,7 @@ object IcebergInterop {
       .map(_.stripPrefix("v").stripSuffix(".metadata.json").toInt).sorted
     versions.foreach { v =>
       val meta = readMetadata(fs, path, v)
-      (meta \ "snapshots").extractOrElse[List[JValue]](Nil).foreach { s =>
+      snapshots(meta).foreach { s =>
         val list = (s \ "manifest-list").extract[String]
         reachable += keyOf(list)
         // an OLD metadata version may reference lists/manifests a later
@@ -2250,34 +2037,12 @@ object IcebergInterop {
     */
   def rollbackTo(spark: SparkSession, path: String, snapshotId: Long): Int = {
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    requireWritableFormat(meta)
-    val ids = (meta \ "snapshots").extractOrElse[List[JValue]](Nil)
-      .map(s => (s \ "snapshot-id").extract[Long])
+    val t = open(fs, path, write = true)
+    val ids = snapshots(t.meta).map(s => (s \ "snapshot-id").extract[Long])
     require(ids.contains(snapshotId),
       s"rollbackTo: snapshot $snapshotId not retained " +
         s"(have ${ids.mkString(", ")})")
-    val now = System.currentTimeMillis()
-    val logEntry: JValue = JObject(
-      "timestamp-ms" -> JLong(now), "snapshot-id" -> JLong(snapshotId))
-    val hadLog = (meta \ "snapshot-log") != JNothing
-    val updated0 = JObject(meta.asInstanceOf[JObject].obj.map {
-      case ("last-updated-ms", _) =>
-        "last-updated-ms" -> (JLong(now): JValue)
-      case ("current-snapshot-id", _) =>
-        "current-snapshot-id" -> (JLong(snapshotId): JValue)
-      case ("refs", _) => // `main` follows current (spec rule)
-        "refs" -> refsJson(refsOf(meta) + ("main" -> (snapshotId, "branch")))
-      case ("snapshot-log", v) => "snapshot-log" ->
-        (JArray(v.extractOrElse[List[JValue]](Nil) :+ logEntry): JValue)
-      case other => other
-    })
-    val updated = if (hadLog) updated0
-      else JObject(updated0.obj :+
-        ("snapshot-log" -> (JArray(List(logEntry)): JValue)))
-    commitMetadata(fs, path, version + 1, updated)
+    publish(fs, path, t, refsOf(t.meta) + ("main" -> (snapshotId, "branch")))
   }
 
   /** Live data bytes at a snapshot from the manifests'
@@ -2287,16 +2052,11 @@ object IcebergInterop {
   def liveBytes(spark: SparkSession, path: String,
       snapshotId: Option[Long] = None): Long = {
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    val target = snapshotId.getOrElse((meta \ "current-snapshot-id").extract[Long])
-    (meta \ "snapshots").extract[List[JValue]]
-      .find(s => (s \ "snapshot-id").extract[Long] == target)
-      .map(snap => liveEntries(fs, snap).map(_.get("data_file")
-        .asInstanceOf[GenericRecord].get("file_size_in_bytes")
-        .asInstanceOf[Long]).sum)
-      .getOrElse(0L)
+    val t = open(fs, path)
+    val target = snapshotId.getOrElse(t.current)
+    if (target < 0) 0L // a table with no snapshot yet
+    else liveEntries(fs, manifestList(fs, t.meta, target)).map(_.get("data_file")
+      .asInstanceOf[GenericRecord].get("file_size_in_bytes").asInstanceOf[Long]).sum
   }
 
   /** Iceberg's INSPECTION tables (`t.snapshots`, `t.files`,
@@ -2310,12 +2070,9 @@ object IcebergInterop {
   def metadataTable(spark: SparkSession, path: String, table: String): DataFrame = {
     import spark.implicits._
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    val curId = (meta \ "current-snapshot-id").extract[Long]
-    def snaps = (meta \ "snapshots").extractOrElse[List[JValue]](Nil)
-    def currentSnap = snaps.find(s => (s \ "snapshot-id").extract[Long] == curId)
+    val meta = open(fs, path).meta
+    val snaps = snapshots(meta)
+    def currentList = head(meta, "main").toSeq.flatMap(manifestList(fs, meta, _))
     table match {
       case "snapshots" =>
         snaps.map { s =>
@@ -2324,9 +2081,10 @@ object IcebergInterop {
             (s \ "timestamp-ms").extractOrElse[Long](0L),
             (s \ "summary" \ "operation").extractOrElse[String]("append"),
             (s \ "sequence-number").extractOpt[Long],
-            (s \ "manifest-list").extract[String])
+            (s \ "manifest-list").extract[String],
+            (s \ "summary").extractOrElse[Map[String, String]](Map.empty) - "operation")
         }.toDF("snapshot_id", "parent_id", "committed_at_ms", "operation",
-          "sequence_number", "manifest_list")
+          "sequence_number", "manifest_list", "summary")
           .orderBy(col("committed_at_ms"), col("snapshot_id"))
       case "history" =>
         (meta \ "snapshot-log").extractOrElse[List[JValue]](Nil).map { e =>
@@ -2340,18 +2098,16 @@ object IcebergInterop {
         refsOf(meta).toSeq.sortBy(_._1).map { case (n, (id, t)) => (n, t, id) }
           .toDF("name", "type", "snapshot_id")
       case "manifests" =>
-        currentSnap.toSeq.flatMap { s =>
-          readAvro(fs, new Path((s \ "manifest-list").extract[String])).map { r =>
-            (r.get("manifest_path").toString,
-              r.get("manifest_length").asInstanceOf[Long],
-              listContentOf(r), listSeqOf(r),
-              Option(r.get("added_snapshot_id"))
-                .map(_.asInstanceOf[Long]).getOrElse(0L))
-          }
+        currentList.map { r =>
+          (r.get("manifest_path").toString,
+            r.get("manifest_length").asInstanceOf[Long],
+            listContentOf(r), listSeqOf(r),
+            Option(r.get("added_snapshot_id"))
+              .map(_.asInstanceOf[Long]).getOrElse(0L))
         }.toDF("path", "length", "content", "sequence_number",
           "added_snapshot_id").orderBy(col("path"))
       case "files" =>
-        currentSnap.toSeq.flatMap(s => liveEntries(fs, s)).map { e =>
+        liveEntries(fs, currentList).map { e =>
           val d = e.get("data_file").asInstanceOf[GenericRecord]
           (d.get("file_path").toString,
             d.get("record_count").asInstanceOf[Long],
@@ -2393,58 +2149,22 @@ object IcebergInterop {
     })
 
   /** All refs of the table, `main` included. */
-  def refs(spark: SparkSession, path: String): Map[String, (Long, String)] = {
-    val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    refsOf(readMetadata(fs, path, version))
-  }
-
-  /** Field-preserving metadata-only commit that replaces the refs map —
-    * the shared tail of create/drop/fast-forward. `alsoCurrent`
-    * additionally flips current-snapshot-id + snapshot-log (the
-    * fast-forward spelling).
-    */
-  private def commitRefsOnly(fs: FileSystem, path: String, version: Int,
-      meta: JValue, newRefs: Map[String, (Long, String)],
-      alsoCurrent: Option[Long]): Int = {
-    requireWritableFormat(meta)
-    val now = System.currentTimeMillis()
-    val hadRefs = (meta \ "refs") != JNothing
-    val logEntry = alsoCurrent.map(id => JObject(
-      "timestamp-ms" -> JLong(now), "snapshot-id" -> JLong(id)))
-    val updated0 = JObject(meta.asInstanceOf[JObject].obj.map {
-      case ("last-updated-ms", _) => "last-updated-ms" -> (JLong(now): JValue)
-      case ("refs", _) => "refs" -> refsJson(newRefs)
-      case ("current-snapshot-id", v) => "current-snapshot-id" ->
-        alsoCurrent.map(id => JLong(id): JValue).getOrElse(v)
-      case ("snapshot-log", v) => "snapshot-log" -> (JArray(
-        v.extractOrElse[List[JValue]](Nil) ++ logEntry.toList): JValue)
-      case other => other
-    })
-    val updated = if (hadRefs) updated0
-      else JObject(updated0.obj :+ ("refs" -> refsJson(newRefs)))
-    commitMetadata(fs, path, version + 1, updated)
-  }
+  def refs(spark: SparkSession, path: String): Map[String, (Long, String)] =
+    refsOf(open(fsFor(spark, path), path).meta)
 
   private def createRef(spark: SparkSession, path: String, name: String,
       tpe: String, at: Option[Long]): Long = {
     require(name.nonEmpty && name != "main",
       s"IcebergInterop: cannot create ref '$name'")
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    val existing = refsOf(meta)
+    val t = open(fs, path, write = true)
+    val existing = refsOf(t.meta)
     require(!existing.contains(name),
       s"IcebergInterop: ref '$name' already exists")
-    val target = at.getOrElse((meta \ "current-snapshot-id").extract[Long])
-    val ids = (meta \ "snapshots").extractOrElse[List[JValue]](Nil)
-      .map(s => (s \ "snapshot-id").extract[Long])
-    require(ids.contains(target),
+    val target = at.getOrElse(t.current)
+    require(snapshotsById(t.meta).contains(target),
       s"IcebergInterop: snapshot $target not retained; cannot ref it")
-    commitRefsOnly(fs, path, version, meta,
-      existing + (name -> (target, tpe)), alsoCurrent = None)
+    publish(fs, path, t, existing + (name -> (target, tpe)))
     target
   }
 
@@ -2462,13 +2182,10 @@ object IcebergInterop {
   def dropRef(spark: SparkSession, path: String, name: String): Unit = {
     require(name != "main", "IcebergInterop: cannot drop 'main'")
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    val existing = refsOf(meta)
+    val t = open(fs, path, write = true)
+    val existing = refsOf(t.meta)
     require(existing.contains(name), s"IcebergInterop: no ref '$name'")
-    commitRefsOnly(fs, path, version, meta, existing - name,
-      alsoCurrent = None)
+    publish(fs, path, t, existing - name)
     ()
   }
 
@@ -2490,56 +2207,19 @@ object IcebergInterop {
     */
   def writeToBranch(df: DataFrame, path: String,
       branch: String): Long = graft.JobLabel(df.sparkSession, "iceberg.writeToBranch") {
-    val spark = df.sparkSession
-    val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"not an Iceberg table: $path (bootstrap main with write first)"))
-    val meta = readMetadata(fs, path, version)
-    val allRefs = refsOf(meta)
-    val (head, tpe) = allRefs.getOrElse(branch,
+    val fs = fsFor(df.sparkSession, path)
+    val t = open(fs, path, write = true)
+    val (_, tpe) = refsOf(t.meta).getOrElse(branch,
       throw new IllegalArgumentException(
         s"IcebergInterop: no branch '$branch' (createBranch first)"))
     require(tpe == "branch", s"IcebergInterop: ref '$branch' is a $tpe — " +
       "tags are immutable")
-    val schema = currentSchema(meta)
-    val partFields = partFieldsOf(meta, schema)
-    require(schema.map(f => (f.name, f.dataType)) ==
+    require(t.schema.map(f => (f.name, f.dataType)) ==
         df.schema.map(f => (f.name, f.dataType)),
       s"IcebergInterop branch append: schema must match the table " +
-        s"(table ${schema.simpleString}, batch ${df.schema.simpleString})")
-    val moved = stageDataFiles(df, path, partFields.map(_.name))
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    val now = System.currentTimeMillis()
-    val (listPath, newSeq, fmt) = writeSnapshotList(fs, path, schema,
-      partFields, moved, snapshotId, Some(meta), baseSnapshotId = Some(head))
-    val snapshot = JObject(
-      "snapshot-id" -> JLong(snapshotId),
-      "parent-snapshot-id" -> JLong(head),
-      "timestamp-ms" -> JLong(now),
-      "summary" -> JObject(
-        "operation" -> JString("append"),
-        "added-data-files" -> JString(moved.size.toString),
-        "added-records" -> JString(moved.map(_.records).sum.toString),
-        "added-files-size" -> JString(moved.map(_.bytes).sum.toString)),
-      "manifest-list" -> JString(listPath),
-      "schema-id" -> JInt(0)) ~~
-      (if (fmt >= 2) Some(JObject("sequence-number" -> JLong(newSeq))) else None)
-    val hadRefs = (meta \ "refs") != JNothing
-    val newRefs = allRefs + (branch -> (snapshotId, "branch"))
-    val updated0 = JObject(meta.asInstanceOf[JObject].obj.map {
-      case ("last-updated-ms", _) => "last-updated-ms" -> (JLong(now): JValue)
-      case ("last-sequence-number", v) => "last-sequence-number" ->
-        (if (fmt >= 2) JLong(newSeq): JValue else v)
-      case ("snapshots", v) => "snapshots" -> (JArray(
-        v.extractOrElse[List[JValue]](Nil) :+ (snapshot: JValue)): JValue)
-      case ("refs", _) => "refs" -> refsJson(newRefs)
-      case other => other
-    })
-    val updated = if (hadRefs) updated0
-      else JObject(updated0.obj :+ ("refs" -> refsJson(newRefs)))
-    commitMetadata(fs, path, version + 1, updated)
-    snapshotId
+        s"(table ${t.schema.simpleString}, batch ${df.schema.simpleString})")
+    commitFiles(fs, path, t, t.schema, t.partFields,
+      stageDataFiles(df, path, t.partFields.map(_.name)), overwrite = false, ref = branch)
   }
 
   /** PUBLISH a branch: fast-forward `main` to the branch head —
@@ -2550,17 +2230,14 @@ object IcebergInterop {
     */
   def fastForward(spark: SparkSession, path: String, branch: String): Long = {
     val fs = fsFor(spark, path)
-    val version = currentVersion(fs, path).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $path"))
-    val meta = readMetadata(fs, path, version)
-    val allRefs = refsOf(meta)
+    val t = open(fs, path, write = true)
+    val allRefs = refsOf(t.meta)
     val (head, tpe) = allRefs.getOrElse(branch,
       throw new IllegalArgumentException(s"IcebergInterop: no ref '$branch'"))
     require(tpe == "branch", s"IcebergInterop: '$branch' is a $tpe")
-    val current = (meta \ "current-snapshot-id").extract[Long]
+    val current = t.current
     if (head == current) return current // already published
-    val byId = (meta \ "snapshots").extractOrElse[List[JValue]](Nil)
-      .map(s => (s \ "snapshot-id").extract[Long] -> s).toMap
+    val byId = snapshotsById(t.meta)
     var cursor = Option(head)
     var isAncestor = false
     while (cursor.isDefined && !isAncestor) {
@@ -2571,8 +2248,7 @@ object IcebergInterop {
     require(isAncestor,
       s"IcebergInterop fastForward: main ($current) is not an ancestor of " +
         s"'$branch' ($head) — diverged histories need a real merge")
-    commitRefsOnly(fs, path, version, meta,
-      allRefs + ("main" -> (head, "branch")), alsoCurrent = Some(head))
+    publish(fs, path, t, allRefs + ("main" -> (head, "branch")))
     head
   }
 

@@ -5,9 +5,12 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.GraftSparkShim
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.{Bench, QueryTrace, SparkEntry}
@@ -24,10 +27,11 @@ import graft.{Bench, QueryTrace, SparkEntry}
   *    a measured pass, and prints the hottest collapsed stacks.
   *  - `loop <query> [sfDir]`: runs the query until killed, for jstack.
   *  - `plan <outDir> <suffix> <query...|all>`: writes each query's
-  *    formatted plan, untruncated, to `<outDir>/<query>_<suffix>.txt`.
-  *    This is the compile-time plan; a query that runs actions inside
-  *    (staging writes, stream round trips, commits) shows only its final
-  *    read-back plan, which is still the plan the noop sink times.
+  *    formatted plan, untruncated, to `<outDir>/<query>_<suffix>.txt`:
+  *    first the compile-time plan (the read-back the noop sink times),
+  *    then the physical plan of every SQL execution the query ran while
+  *    it was built (staging writes, commits, stream batches), each under
+  *    its `JobLabel`.
   *  - `fixed [sfDir]`: this host's fixed costs (same-plan and fresh-plan
   *    jobs, empty stages, tiny shuffles, reads and writes), so that an
   *    optimization targets the layer that costs.
@@ -119,14 +123,36 @@ object Profile {
       names: Seq[String]): Unit = {
     spark.conf.set("spark.sql.maxPlanStringLength", (Int.MaxValue - 15).toString)
     Files.createDirectories(Paths.get(outDir))
+    // (label, plan) of each SQL execution, in start order: the execution
+    // start event carries the action's job description, which a
+    // QueryExecutionListener (called later, off the action's thread) cannot
+    val executed = mutable.ArrayBuffer.empty[(String, String)]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executed.synchronized {
+          executed += (s.description.takeWhile(_ != '\n') -> s.physicalPlanDescription); ()
+        }
+        case _ => ()
+      }
+    }
+    def drain(): Seq[(String, String)] = {
+      GraftSparkShim.waitListenerBusEmpty(spark.sparkContext)
+      executed.synchronized { try executed.toList finally executed.clear() }
+    }
+    spark.sparkContext.addSparkListener(listener)
     val all = if (names == Seq("all")) SparkEntry.queries.keys.toSeq.sorted else names
-    all.foreach { name =>
+    try all.foreach { name =>
+      drain()
       val text =
-        try query(name)(spark, DefaultSf).queryExecution.explainString(FormattedMode)
-        catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
+        try {
+          val compiled = query(name)(spark, DefaultSf).queryExecution.explainString(FormattedMode)
+          compiled + drain().zipWithIndex.map { case ((label, p), i) =>
+            s"\n== action ${i + 1}: $label ==\n$p"
+          }.mkString
+        } catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
       Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), text)
       println(s"[plan] wrote $outDir/${name}_$suffix.txt")
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def fixed(spark: SparkSession, sf: String): Unit = {

@@ -886,4 +886,163 @@ class IcebergInteropSpec extends SparkSpec {
     assert(IcebergInterop.read(spark, path).select("id").as[Long].collect().toSet ==
       Set(1L, 2L, 3L, 5L))
   }
+
+  /** The table's newest metadata document (the one the hint names). */
+  private def latestMeta(path: String): JValue = {
+    val hint = scala.io.Source.fromFile(s"$path/metadata/version-hint.text").mkString.trim
+    JsonMethods.parse(scala.io.Source.fromFile(s"$path/metadata/v$hint.metadata.json").mkString)
+  }
+
+  private def avroRecords(file: String)
+      : (List[org.apache.avro.generic.GenericRecord], String => String) = {
+    import scala.jdk.CollectionConverters._
+    val r = new org.apache.avro.file.DataFileReader(new java.io.File(file),
+      new org.apache.avro.generic.GenericDatumReader[org.apache.avro.generic.GenericRecord]())
+    try (r.iterator().asScala.toList, r.getMetaString _) finally r.close()
+  }
+
+  private def parquetFiles(dir: String): Seq[String] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+    walk(new java.io.File(dir)).map(_.getPath).filter(_.endsWith(".parquet"))
+  }
+
+  test("compact, rewriteManifests and writeToBranch stamp the current schema-id after evolution") {
+    implicit val fmts: Formats = DefaultFormats
+    val path = tmp("schema-id")
+    IcebergInterop.write(sample, path)
+    def rows(id: Long, src: Option[String]) =
+      Seq((id, "a", id * 10.0, src)).toDF("id", "cat", "v", "src")
+    IcebergInterop.write(rows(4L, Some("web")), path, mergeSchema = true)
+    IcebergInterop.write(rows(5L, None), path)
+    IcebergInterop.createBranch(spark, path, "audit")
+    val branched = IcebergInterop.writeToBranch(rows(6L, Some("api")), path, "audit")
+    assert(IcebergInterop.rewriteManifests(spark, path) == 3)
+    val rewritten = (latestMeta(path) \ "current-snapshot-id").extract[Long]
+    val compacted = IcebergInterop.compact(spark, path)
+    assert(compacted != rewritten, "three files in one partition compact")
+    val meta = latestMeta(path)
+    val current = (meta \ "current-schema-id").extract[Int]
+    assert(current == 1)
+    val schemaIds = (meta \ "snapshots").extract[List[JValue]].map(s =>
+      (s \ "snapshot-id").extract[Long] -> (s \ "schema-id").extract[Int]).toMap
+    Seq("writeToBranch" -> branched, "rewriteManifests" -> rewritten,
+        "compact" -> compacted).foreach { case (op, id) =>
+      assert(schemaIds(id) == current, s"$op stamped schema-id ${schemaIds(id)}")
+    }
+    assert(IcebergInterop.read(spark, path).count() == 5)
+    assert(IcebergInterop.readRef(spark, path, "audit").count() == 6)
+  }
+
+  test("every manifest-list record carries its manifest header's partition-spec-id") {
+    implicit val fmts: Formats = DefaultFormats
+    val path = tmp("spec-id")
+    IcebergInterop.write(sample, path)
+    IcebergInterop.write(sample, path, overwrite = true, partitionBy = Seq("cat"))
+    IcebergInterop.write(Seq((4L, "c", 40.0)).toDF("id", "cat", "v"), path,
+      partitionBy = Seq("cat"))
+    def check(): Unit = {
+      val meta = latestMeta(path)
+      val cur = (meta \ "current-snapshot-id").extract[Long]
+      val list = (meta \ "snapshots").extract[List[JValue]]
+        .find(s => (s \ "snapshot-id").extract[Long] == cur).get
+      val (records, _) = avroRecords((list \ "manifest-list").extract[String])
+      assert(records.nonEmpty)
+      records.foreach { r =>
+        val (_, header) = avroRecords(r.get("manifest_path").toString)
+        assert(r.get("partition_spec_id").toString == header("partition-spec-id"),
+          s"${r.get("manifest_path")}: list ${r.get("partition_spec_id")}, " +
+            s"header ${header("partition-spec-id")}")
+        assert(header("partition-spec-id") == "1")
+      }
+    }
+    check()
+    IcebergInterop.deletePositions(spark, path, col("id") === 1L)
+    check()
+  }
+
+  test("a format-version 3 table refuses every write before staging a file") {
+    val path = tmp("v3-gate")
+    IcebergInterop.write(sample, path, partitionBy = Seq("cat"))
+    IcebergInterop.write(Seq((4L, "a", 40.0)).toDF("id", "cat", "v"), path,
+      partitionBy = Seq("cat"))
+    IcebergInterop.createBranch(spark, path, "audit")
+    val hint = scala.io.Source.fromFile(s"$path/metadata/version-hint.text").mkString.trim
+    val metaFile = java.nio.file.Paths.get(s"$path/metadata/v$hint.metadata.json")
+    val doc = latestMeta(path).asInstanceOf[JObject]
+    Files.write(metaFile, JsonMethods.compact(JsonMethods.render(JObject(doc.obj.map {
+      case ("format-version", _) => "format-version" -> JInt(3)
+      case other => other
+    }))).getBytes("UTF-8"))
+    val files = parquetFiles(s"$path/data").size
+    val batch = Seq((5L, "b", 50.0)).toDF("id", "cat", "v")
+    val ops: Seq[(String, () => Any)] = Seq(
+      "write" -> (() => IcebergInterop.write(batch, path, partitionBy = Seq("cat"))),
+      "merge" -> (() => IcebergInterop.merge(spark, path, batch, Seq("id"), Seq(
+        graft.sinks.VersionedTable.MatchedUpdate(Map("v" -> col("s.v"))),
+        graft.sinks.VersionedTable.NotMatchedInsert()))),
+      "deletePositions" -> (() => IcebergInterop.deletePositions(spark, path, col("id") === 1L)),
+      "compact" -> (() => IcebergInterop.compact(spark, path)),
+      "writeToBranch" -> (() => IcebergInterop.writeToBranch(batch, path, "audit")))
+    ops.foreach { case (op, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("row lineage"), s"$op: ${e.getMessage}")
+      assert(scala.io.Source.fromFile(s"$path/metadata/version-hint.text").mkString.trim == hint,
+        s"$op published a metadata version")
+      assert(!new java.io.File(s"$path/metadata/v${hint.toInt + 1}.metadata.json").exists(),
+        s"$op published a metadata version")
+      assert(parquetFiles(s"$path/data").size == files, s"$op staged parquet into data/")
+    }
+  }
+
+  test("snapshot summaries count the data and delete files each commit adds") {
+    val path = tmp("summary")
+    IcebergInterop.write((1L to 6L).map(i => (i, if (i % 2 == 0) "a" else "b", i * 10.0))
+      .toDF("id", "cat", "v"), path, partitionBy = Seq("cat"))
+    val src = Seq((2L, "a", 0.0, "U"), (3L, "b", 0.0, "D"), (5L, "b", 0.0, "U"),
+      (7L, "b", 70.0, "I"), (8L, "a", 80.0, "I")).toDF("id", "cat", "v", "op")
+    val merged = IcebergInterop.merge(spark, path, src, Seq("id"), Seq(
+      graft.sinks.VersionedTable.MatchedDelete(Some(col("s.op") === "D")),
+      graft.sinks.VersionedTable.MatchedUpdate(Map("v" -> col("s.v")), Some(col("s.op") === "U")),
+      graft.sinks.VersionedTable.NotMatchedInsert(cond = Some(col("s.op") === "I"))))
+    val deleted = IcebergInterop.deletePositions(spark, path, col("id") === 1L)
+    val summaries = IcebergInterop.metadataTable(spark, path, "snapshots")
+      .select("snapshot_id", "summary").as[(Long, Map[String, String])].collect().toMap
+    // the files the merge's own manifests added, read back
+    implicit val fmts: Formats = DefaultFormats
+    val meta = latestMeta(path)
+    def added(id: Long): Map[Int, Seq[(String, Long)]] = {
+      val snap = (meta \ "snapshots").extract[List[JValue]]
+        .find(s => (s \ "snapshot-id").extract[Long] == id).get
+      avroRecords((snap \ "manifest-list").extract[String])._1
+        .filter(_.get("added_snapshot_id") == id)
+        .groupBy(r => Option(r.get("content")).fold(0)(_.asInstanceOf[Int]))
+        .map { case (content, rs) => content -> rs.flatMap { r =>
+          avroRecords(r.get("manifest_path").toString)._1.map { e =>
+            val d = e.get("data_file").asInstanceOf[org.apache.avro.generic.GenericRecord]
+            d.get("file_path").toString -> d.get("file_size_in_bytes").asInstanceOf[Long]
+          }
+        } }
+    }
+    def rowsIn(files: Seq[(String, Long)]): Long =
+      if (files.isEmpty) 0L else spark.read.parquet(files.map(_._1): _*).count()
+    val m = added(merged)
+    val (data, dels) = (m.getOrElse(0, Nil), m.getOrElse(1, Nil))
+    assert(data.nonEmpty && dels.size == 1)
+    assert(rowsIn(data) == 4L, "two updated rows and two inserts")
+    assert(rowsIn(dels) == 3L, "the keys of two updates and one delete")
+    val ms = summaries(merged)
+    assert(ms("added-data-files") == data.size.toString)
+    assert(ms("added-records") == rowsIn(data).toString)
+    assert(ms("added-delete-files") == "1")
+    assert(ms("added-equality-delete-files") == "1")
+    assert(ms("added-equality-deletes") == rowsIn(dels).toString)
+    assert(ms("added-files-size") == (data ++ dels).map(_._2).sum.toString)
+    assert(!ms.contains("operation"), "operation is its own column")
+    val pos = added(deleted).getOrElse(1, Nil)
+    val ds = summaries(deleted)
+    assert(ds("added-delete-files") == "1" && ds("added-position-delete-files") == "1")
+    assert(ds("added-position-deletes") == rowsIn(pos).toString && rowsIn(pos) == 1L)
+    assert(!ds.contains("added-data-files"))
+  }
 }

@@ -363,6 +363,24 @@ class IcebergForeignSpec extends SparkSpec {
       s"delete file must not appear in the data inventory: $all")
   }
 
+  test("a graft append to the foreign table keeps the metadata fields it does not own") {
+    val root = buildForeignTable()
+    IcebergInterop.write(Seq((9L, 90.0)).toDF("id", "v"), root)
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    val meta = org.json4s.jackson.JsonMethods.parse(new String(Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/metadata/v4.metadata.json")), "UTF-8"))
+    val log = (meta \ "metadata-log").extract[List[org.json4s.JValue]]
+    assert(log.map(e => (e \ "metadata-file").extract[String]) ==
+      List(s"file:$root/metadata/v2.metadata.json"), "metadata-log dropped")
+    assert((meta \ "statistics") == org.json4s.JArray(Nil), "statistics dropped")
+    val props = (meta \ "properties").extract[Map[String, String]]
+    assert(props.get("some.engine.specific.knob").contains("true") &&
+      props.get("write.parquet.compression-codec").contains("zstd"), props.toString)
+    assert((meta \ "table-uuid").extract[String] == "0f7cbd6e-0000-4000-8000-000000000042")
+    assert(IcebergInterop.read(spark, root).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(2L, 3L, 4L, 5L, 7L, 8L, 9L))
+  }
+
   test("foreign refs metadata: branch/tag spellings with retention fields resolve") {
     // real writers stamp refs with retention bookkeeping graft never
     // writes (min-snapshots-to-keep, max-snapshot-age-ms, max-ref-age-ms);

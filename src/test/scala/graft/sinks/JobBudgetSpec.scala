@@ -147,10 +147,13 @@ class JobBudgetSpec extends SparkSpec {
       }
       p
     }
-    def jobs(format: String)(op: String => Unit): Int = {
+    def jobs(format: String, prep: String => Unit = _ => ())(op: String => Unit): Int = {
       val p = table(format)
+      prep(p)
       jobsOf(op(p))
     }
+    val more = batch(Seq(7L, 8L))
+    def append(p: String): Unit = { IcebergInterop.write(more, p, partitionBy = Seq("cat")); () }
     val measured = Seq(
       "VersionedTable.delete" -> jobs("graft")(p =>
         VersionedTable.delete(spark, p, col("id") === 2L, Seq("cat"))),
@@ -165,8 +168,20 @@ class JobBudgetSpec extends SparkSpec {
       "IcebergInterop.deletePositions" -> jobs("iceberg")(p =>
         IcebergInterop.deletePositions(spark, p, col("id") === 2L)),
       "IcebergInterop.merge" -> jobs("iceberg")(p =>
-        IcebergInterop.merge(spark, p, src, Seq("id"), clauses)))
-    // measured before the file-identity refactor; the counts must not move
+        IcebergInterop.merge(spark, p, src, Seq("id"), clauses)),
+      "IcebergInterop.write" -> jobs("iceberg")(append),
+      "IcebergInterop.deleteEquality" -> jobs("iceberg")(p =>
+        IcebergInterop.deleteEquality(spark, p, Seq(2L).toDF("id"))),
+      "IcebergInterop.compact" -> jobs("iceberg", append)(p =>
+        IcebergInterop.compact(spark, p)),
+      "IcebergInterop.rewriteManifests" -> jobs("iceberg", append)(p =>
+        IcebergInterop.rewriteManifests(spark, p)),
+      "IcebergInterop.writeToBranch" -> jobs("iceberg", p =>
+        IcebergInterop.createBranch(spark, p, "audit"))(p =>
+        IcebergInterop.writeToBranch(more, p, "audit")))
+    // measured before the file-identity refactor (the Iceberg write, delete,
+    // maintenance and branch rows before the one-commit refactor); the
+    // counts must not move
     val budget = Seq(
       "VersionedTable.delete" -> 3,
       "VersionedTable.update" -> 3,
@@ -174,7 +189,12 @@ class JobBudgetSpec extends SparkSpec {
       "DeltaInterop.deleteDv" -> 5,
       "DeltaInterop.updateDv" -> 8,
       "IcebergInterop.deletePositions" -> 1,
-      "IcebergInterop.merge" -> 10)
+      "IcebergInterop.merge" -> 10,
+      "IcebergInterop.write" -> 2,
+      "IcebergInterop.deleteEquality" -> 1,
+      "IcebergInterop.compact" -> 2,
+      "IcebergInterop.rewriteManifests" -> 0,
+      "IcebergInterop.writeToBranch" -> 2)
     assert(measured == budget)
   }
 }
