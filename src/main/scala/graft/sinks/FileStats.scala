@@ -561,26 +561,38 @@ object FileStats {
     * drop out of the conjunction (still conservative). The same
     * aggregate counts the source, so an empty source reports [[Empty]].
     */
-  private[sinks] def keyEnvelope(source: DataFrame, on: Seq[String]): Envelope = {
+  private[sinks] def keyEnvelope(source: DataFrame, on: Seq[String]): Envelope =
+    keyEnvelope(source, on, Nil)._1
+
+  /** [[keyEnvelope]] that also evaluates the aggregates `extra` over
+    * `source` in the same job and returns their values, in order. With
+    * `extra` the aggregate runs even when no key column is orderable.
+    */
+  private[sinks] def keyEnvelope(source: DataFrame, on: Seq[String],
+      extra: Seq[Column]): (Envelope, Seq[Any]) = {
     val fields = source.schema.fields.filter(f => on.contains(f.name))
     val orderable = fields.filter(_.dataType match {
       case _: NumericType | StringType | DateType | TimestampType |
            TimestampNTZType | BooleanType => true
       case _ => false
     })
-    if (orderable.isEmpty) return Unbounded
+    if (orderable.isEmpty && extra.isEmpty) return (Unbounded, Nil)
     val aggs = orderable.flatMap(f =>
       Seq(min(col(f.name)).as(s"__lo_${f.name}"),
         max(col(f.name)).as(s"__hi_${f.name}")))
-    val row = source.agg(count(lit(1)).as("__n"), aggs.toSeq: _*)
+    val row = source.agg(count(lit(1)).as("__n"), (aggs.toSeq ++ extra): _*)
       .collect()(0) // one row
-    if (row.getAs[Long]("__n") == 0L) return Empty
+    val extras = row.toSeq.takeRight(extra.size)
+    if (row.getAs[Long]("__n") == 0L) return (Empty, extras)
     val bounds = orderable.map { f =>
       (f, row.getAs[Any](s"__lo_${f.name}"), row.getAs[Any](s"__hi_${f.name}"))
     }
-    if (bounds.exists(b => b._2 == null || b._3 == null)) Unmatchable
-    else Bounds(bounds.map { case (f, lo, hi) =>
-      col(f.name) >= lit(lo) && col(f.name) <= lit(hi)
-    }.reduce(_ && _))
+    val env =
+      if (orderable.isEmpty) Unbounded
+      else if (bounds.exists(b => b._2 == null || b._3 == null)) Unmatchable
+      else Bounds(bounds.map { case (f, lo, hi) =>
+        col(f.name) >= lit(lo) && col(f.name) <= lit(hi)
+      }.reduce(_ && _))
+    (env, extras)
   }
 }

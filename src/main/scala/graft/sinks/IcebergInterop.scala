@@ -495,10 +495,28 @@ object IcebergInterop {
 
   /** The schema and spec a commit stamps, and the metadata fields it
     * sets: `fields` is empty unless `schema` or `partFields` differ
-    * from the document's current ones.
+    * from the document's current ones. `specs` is the spec list after
+    * the commit.
     */
   private final case class Lineage(schemaId: Int, schema: JValue, specId: Int,
-      specFields: JArray, fields: List[JField])
+      specFields: JArray, specs: List[JValue], fields: List[JField]) {
+    private def idOf(spec: JValue): Int = (spec \ "spec-id").extractOrElse[Int](-1)
+    private val listed = specs.find(s => (s \ "fields").extractOrElse[List[JValue]](Nil).isEmpty)
+
+    /** The unpartitioned spec equality deletes are committed under: under
+      * it a delete file is global, so it applies to a key in every
+      * partition. The listed one, else the next free spec id.
+      */
+    val globalSpecId: Int = listed.map(idOf).getOrElse(specs.map(idOf).foldLeft(-1)(_ max _) + 1)
+
+    /** `fields`, plus the unpartitioned spec when a manifest of the
+      * commit declares it and the list does not have it yet.
+      */
+    def fieldsWith(global: Boolean): List[JField] =
+      if (!global || listed.nonEmpty) fields
+      else fields.filterNot(_._1 == "partition-specs") :+ ("partition-specs" -> JArray(specs :+
+        JObject("spec-id" -> JInt(globalSpecId), "fields" -> JArray(Nil))))
+  }
 
   /** Schema lineage: an unchanged schema keeps the prior `schemas` list
     * verbatim; a changed one (additive evolution, or overwrite's schema
@@ -528,7 +546,7 @@ object IcebergInterop {
       }
     val (specs, specId, specFields, lastPartId) = specLineage(meta, partFields, schema)
     val specChanged = specs != (meta \ "partition-specs").extractOrElse[List[JValue]](Nil)
-    Lineage(schemaId, schemaJ, specId, specFields, schemaFields ++ (
+    Lineage(schemaId, schemaJ, specId, specFields, specs, schemaFields ++ (
       if (!specChanged) Nil
       else List[JField]("partition-spec" -> specFields, "partition-specs" -> JArray(specs),
         "default-spec-id" -> JInt(specId), "last-partition-id" -> JInt(lastPartId))))
@@ -726,21 +744,33 @@ object IcebergInterop {
   /** Write one data (`content` 0) or delete (1) manifest under the
     * stamp's header and return its manifest-list record, stamped with
     * the same spec id, content kind, sequence number and snapshot.
+    * `global` manifests declare the unpartitioned spec
+    * ([[Lineage.globalSpecId]]) instead of the table's.
     */
-  private def writeManifest(s: Stamp, content: Int,
-      entries: Seq[GenericRecord]): GenericRecord = {
+  private def writeManifest(s: Stamp, content: Int, entries: Seq[GenericRecord],
+      global: Boolean = false): GenericRecord = {
     val p = s"${s.path}/metadata/${java.util.UUID.randomUUID()}-" +
       (if (content == 0) "m0.avro" else "d0.avro")
+    val (specId, specFields) =
+      if (global) (s.lineage.globalSpecId, JArray(Nil))
+      else (s.lineage.specId, s.lineage.specFields)
     val len = writeAvro(s.fs, new Path(p),
       if (content == 0) s.entrySchema else DeleteManifestEntrySchema,
       Map("schema" -> JsonMethods.compact(JsonMethods.render(s.lineage.schema)),
-        "partition-spec" -> JsonMethods.compact(JsonMethods.render(s.lineage.specFields)),
-        "partition-spec-id" -> s.lineage.specId.toString,
+        "partition-spec" -> JsonMethods.compact(JsonMethods.render(specFields)),
+        "partition-spec-id" -> specId.toString,
         "format-version" -> s.fmt.toString,
         "content" -> (if (content == 0) "data" else "deletes")),
       entries)
-    listRecord(p, len, s.lineage.specId, content, s.seq, s.snapshotId)
+    listRecord(p, len, specId, content, s.seq, s.snapshotId)
   }
+
+  /** The manifest of one staged equality-delete file on the `eqIds`
+    * fields. It declares the unpartitioned spec: the delete carries no
+    * partition tuple, and a key it names may live in any partition.
+    */
+  private def eqDeleteManifest(s: Stamp, del: CommitKernel.Staged, eqIds: Seq[Int]): GenericRecord =
+    writeManifest(s, 1, Seq(deleteEntry(s, del, 2, eqIds)), global = true)
 
   /** The ADDED entry of a staged delete parquet: `kind` 1 = position
     * deletes, 2 = equality deletes on the `eqIds` fields.
@@ -804,9 +834,9 @@ object IcebergInterop {
       if (fmt >= 2) (t.meta \ "last-sequence-number").extractOrElse[Long](0L) + 1 else 0L
     val lin = lineage(t.meta, schema, partFields)
     val listPath = s"$path/metadata/snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro"
+    val added = manifests(Stamp(fs, path, schema, partFields, lin, fmt, snapshotId, seq))
     writeAvro(fs, new Path(listPath), ManifestFileSchema, Map("format-version" -> fmt.toString),
-      manifests(Stamp(fs, path, schema, partFields, lin, fmt, snapshotId, seq)) ++
-        carried.map(carry))
+      added ++ carried.map(carry))
     val now = System.currentTimeMillis()
     val snap = JObject(
       "snapshot-id" -> JLong(snapshotId),
@@ -819,7 +849,8 @@ object IcebergInterop {
       (if (fmt >= 2) Some(JObject("sequence-number" -> JLong(seq))) else None)
     val allProps = t.props ++ props + ("schema.name-mapping.default" -> nameMapping(schema))
     publish(fs, path, t, refsOf(t.meta) + (ref -> (snapshotId, "branch")), now,
-      add = Some(snap), set = lin.fields ++ List[JField](
+      add = Some(snap), set = lin.fieldsWith(
+        added.exists(_.get("partition_spec_id") == lin.globalSpecId)) ++ List[JField](
         "format-version" -> JInt(fmt),
         "properties" -> JObject(allProps.toList.map { case (k, v) => k -> (JString(v): JValue) })) ++
         (if (fmt >= 2) List[JField]("last-sequence-number" -> JLong(seq)) else Nil))
@@ -1181,51 +1212,56 @@ object IcebergInterop {
     * `_metadata.row_index` (exact parquet row ordinals); the delete
     * set rides a broadcast (bounded: deletes are maintenance-compacted
     * away, never corpus-sized). Delete files name a data file as the
-    * manifest spells it; the broadcast per-file table maps Spark's
-    * spelling ([[CommitKernel.fileKey]]) to that one.
+    * manifest spells it; a literal per-file map keyed by Spark's
+    * spelling ([[CommitKernel.fileKey]]) gives each data row that
+    * spelling and its file's data sequence, with no job. Every delete
+    * file's sequence is a column read the same way, so all position
+    * deletes (and DVs) take one broadcast anti-join, and all equality
+    * deletes on one column set another: the jobs a scan runs do not
+    * grow with the number of delete files.
     */
   private def applyRowDeletes(spark: SparkSession, fs: FileSystem, schema: StructType,
       files: Seq[String], dataSeqByPath: Map[String, Long],
       posDeletes: Seq[(String, Long)],
       eqDeletes: Seq[(String, Long, Seq[String])],
       dvDeletes: Option[DataFrame] = None): DataFrame = {
-    val base = spark.read.schema(schema).parquet(files: _*)
-      .withColumn("__fk", col("_metadata.file_path"))
+    val dataFile = element_at(typedLit(CommitKernel.byKey(fs, files)(new Path(_)).map {
+      case (k, p) => k -> (p, dataSeqByPath.getOrElse(p, 0L)) }), col("_metadata.file_path"))
+    val seqd = spark.read.schema(schema).parquet(files: _*)
+      .withColumn("__fp", dataFile("_1"))
+      .withColumn("__dseq", coalesce(dataFile("_2"), lit(0L)))
       .withColumn("__pos", col("_metadata.row_index"))
-    val seqDf = spark.createDataFrame(
-      dataSeqByPath.toSeq.map { case (p, q) =>
-        org.apache.spark.sql.Row(CommitKernel.fileKey(fs, new Path(p)), p, q) }.asJava,
-      StructType(Seq(StructField("__fk", StringType), StructField("__fp", StringType),
-        StructField("__dseq", LongType))))
-    val seqd = base.join(broadcast(seqDf), Seq("__fk"), "left")
+    // the rows of delete files in one read, each with its file's
+    // sequence number as `__mseq`
+    def deleteRows(deletes: Seq[(String, Long)], fileSchema: StructType): DataFrame =
+      spark.read.schema(fileSchema).parquet(deletes.map(_._1): _*)
+        .withColumn("__mseq", element_at(typedLit(CommitKernel.byKey(fs, deletes)(d =>
+          new Path(d._1)).map { case (k, d) => k -> d._2 }), col("_metadata.file_path")))
     // position deletes and v3 deletion vectors share one anti-join:
     // both name (file, row ordinal, delete sequence) tuples
-    val posFrames = posDeletes.map { case (p, q) =>
-      spark.read.schema(DeleteFileSchema).parquet(p)
-        .select(col("file_path").as("__del_fp"),
-          col("pos").as("__del_pos"), lit(q).as("__mseq"))
-    } ++ dvDeletes.toSeq
+    val posFrames = (if (posDeletes.isEmpty) Nil
+      else Seq(deleteRows(posDeletes, DeleteFileSchema).select(col("file_path").as("__del_fp"),
+        col("pos").as("__del_pos"), col("__mseq")))) ++ dvDeletes.toSeq
     val afterPos =
       if (posFrames.isEmpty) seqd
-      else {
-        val delDf = posFrames.reduce(_ unionByName _)
-        seqd.join(broadcast(delDf),
-          col("__fp") === col("__del_fp") && col("__pos") === col("__del_pos") &&
-            coalesce(col("__dseq"), lit(0L)) <= col("__mseq"),
-          "left_anti")
-      }
+      else seqd.join(broadcast(posFrames.reduce(_ unionByName _)),
+        col("__fp") === col("__del_fp") && col("__pos") === col("__del_pos") &&
+          col("__dseq") <= col("__mseq"),
+        "left_anti")
     // equality deletes: drop data rows whose equality columns match a
     // delete row (null-safely — the spec's IS NOT DISTINCT FROM
     // semantics) and whose data sequence is STRICTLY BELOW the
     // delete's (position deletes use <=, equality deletes use < —
     // an equality delete in the same commit as an insert must not
     // kill it)
-    val afterEq = eqDeletes.foldLeft(afterPos) { case (df, (p, q, cols)) =>
-      val eqSchema = StructType(cols.map(c => schema(c)))
-      val delRows = spark.read.schema(eqSchema).parquet(p)
-        .select(cols.map(c => col(c).as(s"__eq_$c")): _*)
-      val cond = cols.map(c => col(c) <=> col(s"__eq_$c"))
-        .reduce(_ && _) && coalesce(col("__dseq"), lit(0L)) < lit(q)
+    val columnSets = eqDeletes.map(_._3.toSet).distinct
+    val afterEq = columnSets.foldLeft(afterPos) { (df, set) =>
+      val group = eqDeletes.filter(_._3.toSet == set)
+      val cols = group.head._3
+      val delRows = deleteRows(group.map(d => (d._1, d._2)), StructType(cols.map(schema(_))))
+        .select(cols.map(c => col(c).as(s"__eq_$c")) :+ col("__mseq"): _*)
+      val cond = cols.map(c => col(c) <=> col(s"__eq_$c")).reduce(_ && _) &&
+        col("__dseq") < col("__mseq")
       df.join(broadcast(delRows), cond, "left_anti")
     }
     afterEq.select(schema.fieldNames.map(col): _*)
@@ -1320,7 +1356,7 @@ object IcebergInterop {
       .getOrElse(return t.current)
     commit(fs, path, t, t.schema, t.partFields, "delete", 2,
       manifestList(fs, t.meta, t.current), addedSummary(Nil, Seq(2 -> del)))(s =>
-      Seq(writeManifest(s, 1, Seq(deleteEntry(s, del, 2, eqIds)))))
+      Seq(eqDeleteManifest(s, del, eqIds)))
   }
 
   /** MERGE INTO on the Iceberg wire format — the MERGE-ON-READ shape
@@ -1331,17 +1367,26 @@ object IcebergInterop {
     * updated + inserted rows. The spec's sequence rule does the rest:
     * an equality delete applies only to data files with a STRICTLY
     * lower sequence, so the same snapshot's appends survive while
-    * every older version of the touched keys dies. Cost is
-    * O(matched + inserted rows) — no data file is rewritten, the true
-    * 100 TB merge shape ([[DeltaInterop.merge]] is the COW spelling).
+    * every older version of the touched keys dies. No data file is
+    * rewritten, the true 100 TB merge shape ([[DeltaInterop.merge]] is
+    * the COW spelling).
     *
-    * Matched rows are found over the source keys' [min,max] envelope
-    * ([[FileStats.keyEnvelope]], stats-pruned through [[readWhere]],
-    * which also applies existing row-level deletes so a dead row can
-    * never match). Clause semantics, `t.`/`s.` value references, and
-    * the multiple-source-rows `raise_error` guard are
-    * [[VersionedTable.merge]]'s, shared via [[MergeKernel]]. Returns
-    * the committed snapshot id (the current id when a full no-op).
+    * A source-decided batch ([[MergeKernel.sourceDecided]]: its rows
+    * alone decide every outcome, as a CDC batch with unique keys and
+    * "delete, else upsert" clauses does) never reads the table: both
+    * files are staged straight from the source, and the delete file
+    * names every acted-on key, present in the table or not. One
+    * aggregate over the source answers the key envelope, emptiness and
+    * the rule. Any other batch finds its matched rows over the source
+    * keys' [min,max] envelope ([[FileStats.keyEnvelope]],
+    * stats-pruned through [[scan]], which also applies existing
+    * row-level deletes so a dead row can never match). Clause
+    * semantics, `t.`/`s.` value references, and the
+    * multiple-source-rows `raise_error` guard are
+    * [[VersionedTable.merge]]'s, shared via [[MergeKernel]]. A commit
+    * that writes a delete file upgrades a v1 table to format 2.
+    * Returns the committed snapshot id (the current id when a full
+    * no-op).
     */
   def merge(spark: SparkSession, path: String, source: DataFrame,
       on: Seq[String], clauses: Seq[VersionedTable.MergeClause],
@@ -1364,54 +1409,61 @@ object IcebergInterop {
     val idByName = fieldIdToName(t.meta).map(_.swap)
     val eqIds = on.map(c => idByName.getOrElse(c,
       throw new IllegalStateException(s"no field id for $c")))
-    // the base list, read once: scanned for matches, then carried
-    lazy val listRecs = manifestList(fs, t.meta, t.current)
-    val t0 = FileStats.keyEnvelope(source.select(on.map(col): _*), on) match {
-      case FileStats.Empty => return t.current // full no-op
-      case FileStats.Unmatchable =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      case FileStats.Unbounded => scan(spark, fs, t, listRecs, None)
-      case FileStats.Bounds(p) => scan(spark, fs, t, listRecs, Some(p))
+    val decided = MergeKernel.sourceDecided(schema, source, on, clauses, "IcebergInterop merge")
+    val (envelope, rule) = graft.JobLabel(spark, "iceberg.merge: key envelope") {
+      FileStats.keyEnvelope(source.alias("s"), on, decided.map(_.rule).toSeq)
     }
+    if (envelope == FileStats.Empty) return t.current // full no-op
+    // the base list, read once: scanned for matches (join path), then carried
+    lazy val listRecs = manifestList(fs, t.meta, t.current)
+    def stageAppends(rows: DataFrame) = stageDataFiles(rows.filter(col("__r").isNotNull)
+      .select("__r.*"), path, t.partFields.map(_.name), label = "iceberg.merge: stage appends")
+    // sorted equality-delete parquet of the ON-key rows
+    def stageDeletes(keys: DataFrame) = stageDeleteFile(
+      keys.coalesce(1).sortWithinPartitions(on.map(col): _*),
+      path, "eqdelete", "iceberg.merge: stage eq-deletes")
+    // Emptiness and the delete-key count both come from the STAGED
+    // WRITES' own parquet footers — no count()/isEmpty probe actions
+    // per micro-batch; staging drops zero-row files before any manifest
+    // sees them.
     val src = source.persist()
-    try {
-      val j = MergeKernel.join(t0, src, on).persist()
-      val mc = MergeKernel.columns(schema, schema.fieldNames.toSet, source.columns.toSet,
-        on, clauses, "IcebergInterop merge")
-      // keys to equality-delete: every matched row some clause acted on
-      // (the filter's guard raises on duplicate source rows even when
-      // nothing is appended — delete-only merges still validate)
-      val delKeys = j.filter(mc.matched && mc.matchTag =!= "keep" && mc.guard)
-        .select(on.map(k => col(s"t.$k").as(k)): _*).distinct()
-      try {
-        // append set: updated matched rows + inserted rows (the dup
-        // guard is `picked`'s first branch and fires during staging)
-        val appendRows = j.select(
-          when(mc.matched && col("s.__scnt") > 1, mc.picked)
-            .when(mc.matched && mc.matchTag === "update", mc.matchedResult)
-            .when(col("t.__te").isNull, mc.notMatchedResult)
-            .otherwise(lit(null).cast(StructType(schema.fields))).as("__r"))
-          .filter(col("__r").isNotNull).select("__r.*")
-        // Emptiness and the delete-key count both come from the STAGED
-        // WRITES' own parquet footers — no count()/isEmpty probe actions
-        // per micro-batch (guide §1: cut actions, not just task work);
-        // staging drops zero-row files before any manifest sees them.
-        val moved = stageDataFiles(appendRows, path, t.partFields.map(_.name),
-          label = "iceberg.merge: stage appends")
-        // sorted equality-delete parquet of the ON-key rows
-        val del = stageDeleteFile(
-          delKeys.coalesce(1).sortWithinPartitions(on.map(col): _*),
-          path, "eqdelete", "iceberg.merge: stage eq-deletes")
-        if (del.isEmpty && moved.isEmpty) return t.current // full no-op
-        commit(fs, path, t, schema, t.partFields, "overwrite",
-          if (del.nonEmpty) 2 else t.format, listRecs,
-          addedSummary(moved, del.toSeq.map(2 -> _)), txnProps(txn)) { s =>
-          (if (moved.isEmpty) Nil else Seq(writeManifest(s, 0, buildEntries(moved, s)))) ++
-            del.map(d => writeManifest(s, 1, Seq(deleteEntry(s, d, 2, eqIds))))
+    val (moved, del) = try decided.filter(_ => rule == Seq(true)) match {
+      case Some(d) =>
+        val s = src.alias("s")
+        (stageAppends(s.select(d.append.as("__r"))),
+          stageDeletes(s.filter(d.acted).select(on.map(k => col(s"s.$k").as(k)): _*)))
+      case None =>
+        val t0 = envelope match {
+          case FileStats.Unmatchable =>
+            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+          case FileStats.Bounds(p) => scan(spark, fs, t, listRecs, Some(p))
+          case _ => scan(spark, fs, t, listRecs, None)
         }
-      } finally { j.unpersist(); () }
+        val j = MergeKernel.join(t0, src, on).persist()
+        try {
+          val mc = MergeKernel.columns(schema, schema.fieldNames.toSet, source.columns.toSet,
+            on, clauses, "IcebergInterop merge")
+          // append set: updated matched rows + inserted rows (the dup
+          // guard is `picked`'s first branch and fires during staging)
+          val moved = stageAppends(j.select(
+            when(mc.matched && col("s.__scnt") > 1, mc.picked)
+              .when(mc.matched && mc.matchTag === "update", mc.matchedResult)
+              .when(col("t.__te").isNull, mc.notMatchedResult)
+              .otherwise(lit(null).cast(StructType(schema.fields))).as("__r")))
+          // keys to equality-delete: every matched row some clause acted
+          // on (the filter's guard raises on duplicate source rows even
+          // when nothing is appended — delete-only merges still validate)
+          (moved, stageDeletes(j.filter(mc.matched && mc.matchTag =!= "keep" && mc.guard)
+            .select(on.map(k => col(s"t.$k").as(k)): _*).distinct()))
+        } finally { j.unpersist(); () }
     } finally { src.unpersist(); () }
+    if (del.isEmpty && moved.isEmpty) return t.current // full no-op
+    commit(fs, path, t, schema, t.partFields, "overwrite",
+      if (del.nonEmpty) 2 else t.format, listRecs,
+      addedSummary(moved, del.toSeq.map(2 -> _)), txnProps(txn)) { s =>
+      (if (moved.isEmpty) Nil else Seq(writeManifest(s, 0, buildEntries(moved, s)))) ++
+        del.map(eqDeleteManifest(s, _, eqIds))
+    }
   }
 
   /** `foreachBatch` body for a STREAMING MERGE into the Iceberg wire

@@ -2728,37 +2728,10 @@ private[sinks] object MergeKernel {
     def fromTarget: Column = struct(out.fields.toSeq.map(f =>
       (if (targetCols(f.name)) col(s"t.${f.name}")
        else lit(null).cast(f.dataType)).as(f.name)): _*)
-    def fromMap(m: Map[String, Column], default: String => Column): Column = {
-      val unknown = m.keySet.filterNot(out.fieldNames.contains)
-      require(unknown.isEmpty, s"$errPrefix: unknown target columns $unknown")
-      struct(out.fields.toSeq.map { f =>
-        m.getOrElse(f.name, default(f.name)).cast(f.dataType).as(f.name)
-      }: _*)
-    }
-    def fromSource(name: String): Column =
-      if (sourceCols(name)) col(s"s.$name") else lit(null)
-    val dropRow = lit(null).cast(outType)
-    val matchedResult = clauses.foldRight(fromTarget) {
-      case (MatchedUpdate(set, cond), acc) =>
-        when(cond.getOrElse(lit(true)), fromMap(set, fromTargetCol)).otherwise(acc)
-      case (MatchedDelete(cond), acc) =>
-        when(cond.getOrElse(lit(true)), dropRow).otherwise(acc)
-      case (_, acc) => acc
-    }
-    val notMatchedResult = clauses.foldRight(dropRow) {
-      case (NotMatchedInsert(values, cond), acc) =>
-        when(cond.getOrElse(lit(true)),
-          fromMap(values.getOrElse(Map.empty), fromSource)).otherwise(acc)
-      case (_, acc) => acc
-    }
-    // first holding matched clause as a tag, for CDC rows / delete keys
-    val matchTag = clauses.foldRight(lit("keep")) {
-      case (MatchedUpdate(_, cond), acc) =>
-        when(cond.getOrElse(lit(true)), lit("update")).otherwise(acc)
-      case (MatchedDelete(cond), acc) =>
-        when(cond.getOrElse(lit(true)), lit("delete")).otherwise(acc)
-      case (_, acc) => acc
-    }
+    val matchedResult = firstMatched(clauses, fromTarget,
+      rowOf(out, _, fromTargetCol, errPrefix), lit(null).cast(outType))
+    val notMatchedResult = inserted(out, sourceCols, clauses, errPrefix)
+    val tag = matchTag(clauses)
     val matched = col("t.__te").isNotNull && col("s.__se").isNotNull
     val keyText = errKeys match {
       case Seq(k) => col(s"s.$k").cast("string")
@@ -2772,6 +2745,105 @@ private[sinks] object MergeKernel {
         .when(col("t.__te").isNotNull, fromTarget)
         .otherwise(notMatchedResult)
     val guard = when(col("s.__scnt") > 1, dupError.cast("boolean")).otherwise(lit(true))
-    Cols(matched, matchedResult, notMatchedResult, fromTarget, matchTag, picked, guard)
+    Cols(matched, matchedResult, notMatchedResult, fromTarget, tag, picked, guard)
   }
+
+  /** A row of `out` from an UPDATE's or INSERT's value map: `default`
+    * gives the columns the map leaves unset.
+    */
+  private def rowOf(out: StructType, m: Map[String, Column], default: String => Column,
+      errPrefix: String): Column = {
+    val unknown = m.keySet.filterNot(out.fieldNames.contains)
+    require(unknown.isEmpty, s"$errPrefix: unknown target columns $unknown")
+    struct(out.fields.toSeq.map { f =>
+      m.getOrElse(f.name, default(f.name)).cast(f.dataType).as(f.name)
+    }: _*)
+  }
+
+  /** The first holding matched clause's outcome: `update` of its value
+    * map, or `delete`; `none` when no matched clause holds.
+    */
+  private def firstMatched(clauses: Seq[MergeClause], none: Column,
+      update: Map[String, Column] => Column, delete: Column): Column =
+    clauses.foldRight(none) {
+      case (MatchedUpdate(set, cond), acc) => when(cond.getOrElse(lit(true)), update(set)).otherwise(acc)
+      case (MatchedDelete(cond), acc) => when(cond.getOrElse(lit(true)), delete).otherwise(acc)
+      case (_, acc) => acc
+    }
+
+  /** The first holding matched clause as a tag (`update`, `delete`, or
+    * `keep` when none holds), for CDC rows and delete keys.
+    */
+  private def matchTag(clauses: Seq[MergeClause]): Column =
+    firstMatched(clauses, lit("keep"), _ => lit("update"), lit("delete"))
+
+  /** The row the first holding INSERT writes for an unmatched source
+    * row, or null. An INSERT without values copies the source's columns
+    * (null where the source has none).
+    */
+  private def inserted(out: StructType, sourceCols: Set[String], clauses: Seq[MergeClause],
+      errPrefix: String): Column = {
+    def fromSource(name: String): Column = if (sourceCols(name)) col(s"s.$name") else lit(null)
+    clauses.foldRight(lit(null).cast(StructType(out.fields))) {
+      case (NotMatchedInsert(values, cond), acc) =>
+        when(cond.getOrElse(lit(true)),
+          rowOf(out, values.getOrElse(Map.empty), fromSource, errPrefix)).otherwise(acc)
+      case (_, acc) => acc
+    }
+  }
+
+  /** A source-decided merge's per-row columns over the source aliased
+    * `s`: `rule` is an aggregate, true when the batch is source-decided;
+    * `acted` marks a row whose non-null key a matched clause updates or
+    * deletes; `append` is the row the merge writes for it, or null.
+    */
+  final case class SourceDecided(rule: Column, acted: Column, append: Column)
+
+  /** The rule under which a merge's outcome follows from its source
+    * alone, so that deleting every acted-on key and appending every
+    * `append` row equals the join. It holds when
+    *  - every clause condition and value resolves against the source.
+    *    An UPDATE column left unset reads `t.k`: for an ON key that is
+    *    `s.k` on a match, for any other column it reads the target;
+    *  - no non-null ON key repeats in the source;
+    *  - each row's matched and unmatched outcomes agree: its UPDATE row
+    *    equals its INSERT row, or it is deleted or kept when matched and
+    *    not inserted when unmatched. A row with a null ON key never
+    *    matches, so only its INSERT counts.
+    * The first is checked here, on the driver: None when a clause reads
+    * the target or is not deterministic (the rule and the write each
+    * evaluate it). The other two are `rule`, an aggregate the caller
+    * runs over the source. Each target key is taken to name one row, as
+    * an upsert table's does: a key held by two target rows gets one
+    * updated row, where the join would write two.
+    */
+  def sourceDecided(target: StructType, source: DataFrame, on: Seq[String],
+      clauses: Seq[MergeClause], errPrefix: String): Option[SourceDecided] =
+    // resolved as the merge's own join resolves them (an empty target
+    // side, analysis only); a clause the join cannot resolve takes the
+    // join path, which fails or not as it always has
+    scala.util.Try {
+      val out = StructType(target.fields)
+      val keyOrTarget = (c: String) => if (on.contains(c)) col(s"s.$c") else col(s"t.$c")
+      val updated = firstMatched(clauses, lit(null).cast(out),
+        rowOf(out, _, keyOrTarget, errPrefix), lit(null).cast(out))
+      val tag = matchTag(clauses)
+      val insert = inserted(out, source.columns.toSet, clauses, errPrefix)
+      val probe = join(source.sparkSession.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), target), source, on)
+      val targetSide = probe.queryExecution.analyzed.collectFirst {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.left.outputSet
+      }.get
+      val readsTarget = probe.select(updated, tag, insert).queryExecution.analyzed.expressions
+        .exists(e => !e.deterministic || e.references.exists(targetSide.contains))
+      val keyed = on.map(k => col(s"s.$k").isNotNull).reduce(_ && _)
+      val agree = !keyed || when(tag === "update", updated <=> insert).otherwise(insert.isNull)
+      val keys = on.map(k => col(s"s.$k"))
+      if (readsTarget) None
+      else Some(SourceDecided(
+        rule = count(when(keyed, lit(1))) === count_distinct(keys.head, keys.tail: _*) &&
+          count(when(!agree, lit(1))) === 0,
+        acted = keyed && tag =!= "keep",
+        append = insert))
+    }.toOption.flatten
 }

@@ -1045,4 +1045,37 @@ class IcebergInteropSpec extends SparkSpec {
     assert(ds("added-position-deletes") == rowsIn(pos).toString && rowsIn(pos) == 1L)
     assert(!ds.contains("added-data-files"))
   }
+
+  test("equality deletes on a partitioned table commit under an unpartitioned spec") {
+    implicit val fmts: Formats = DefaultFormats
+    val path = tmp("eq-spec")
+    IcebergInterop.write(sample, path, partitionBy = Seq("cat"))
+    val default = (latestMeta(path) \ "default-spec-id").extract[Int]
+    IcebergInterop.deleteEquality(spark, path, Seq(1L).toDF("id"))
+    // a merge whose delete key lives in another partition than its new row
+    IcebergInterop.merge(spark, path, Seq((3L, "a", 33.0)).toDF("id", "cat", "v"), Seq("id"),
+      Seq(graft.sinks.VersionedTable.MatchedUpdate(Map("cat" -> col("s.cat"), "v" -> col("s.v")))))
+    val meta = latestMeta(path)
+    val specs = (meta \ "partition-specs").extract[List[JValue]]
+    def fieldsOf(id: Int): List[JValue] = (specs.find(s => (s \ "spec-id").extract[Int] == id)
+      .getOrElse(fail(s"spec $id not listed")) \ "fields").extract[List[JValue]]
+    assert((meta \ "default-spec-id").extract[Int] == default)
+    assert(fieldsOf(default).nonEmpty)
+    assert(specs.count(s => (s \ "fields").extract[List[JValue]].isEmpty) == 1,
+      "the unpartitioned spec is added once")
+    val cur = (meta \ "current-snapshot-id").extract[Long]
+    val snap = (meta \ "snapshots").extract[List[JValue]]
+      .find(s => (s \ "snapshot-id").extract[Long] == cur).get
+    val deletes = avroRecords((snap \ "manifest-list").extract[String])._1
+      .filter(_.get("manifest_path").toString.endsWith("-d0.avro"))
+    assert(deletes.size == 2)
+    deletes.foreach { r =>
+      val (_, header) = avroRecords(r.get("manifest_path").toString)
+      assert(header("partition-spec") == "[]", header("partition-spec"))
+      assert(r.get("partition_spec_id").toString == header("partition-spec-id"))
+      assert(fieldsOf(header("partition-spec-id").toInt).isEmpty)
+    }
+    assert(IcebergInterop.read(spark, path).as[(Long, String, Double)].collect().toSet ==
+      Set((2L, "a", 20.0), (3L, "a", 33.0)))
+  }
 }

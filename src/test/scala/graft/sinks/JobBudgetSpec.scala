@@ -197,4 +197,66 @@ class JobBudgetSpec extends SparkSpec {
       "IcebergInterop.writeToBranch" -> 2)
     assert(measured == budget)
   }
+
+  /** CDC-shaped clauses: delete on `D`, else upsert every column. */
+  private val cdc = Seq(
+    VersionedTable.MatchedDelete(Some(col("s.op") === "D")),
+    VersionedTable.MatchedUpdate(Map("cat" -> col("s.cat"), "v" -> col("s.v")),
+      Some(col("s.op") =!= "D")),
+    VersionedTable.NotMatchedInsert(
+      values = Some(Map("id" -> col("s.id"), "cat" -> col("s.cat"), "v" -> col("s.v"))),
+      cond = Some(col("s.op") =!= "D")))
+
+  private def cdcBatch(upserts: Seq[Long], deletes: Seq[Long]): DataFrame =
+    batch(upserts).withColumn("op", lit("U"))
+      .unionByName(batch(deletes).withColumn("op", lit("D")))
+
+  test("a source-decided iceberg merge stages from its source alone: 3 jobs in a stream body") {
+    def table(tag: String): String = {
+      val p = tmp(s"iceberg-decided-$tag")
+      TableSink.writeBatch(batch(1L to 6L), SinkConfig("iceberg", p, partitionBy = Seq("cat")))
+      p
+    }
+    val src = cdcBatch(Seq(2L, 7L), Seq(3L, 9L))
+    val bodyPath = table("body")
+    val body = IcebergInterop.streamBatchMerger(bodyPath, Seq("id"), cdc, "budget-cdc")
+    // envelope and rule in one aggregate, then the appends and the delete
+    // keys; the second batch's table already carries a delete file, which
+    // only a read of the table would pay for
+    assert(jobsOf(body(src, 0L)) == 3)
+    assert(jobsOf(body(cdcBatch(Seq(4L, 8L), Seq(2L)), 1L)) == 3)
+    val idle = jobsOf(body(empty.withColumn("op", lit("U")), 2L))
+    assert(idle <= 1, s"empty batch ran $idle jobs")
+    val batchPath = table("batch")
+    val batchJobs = jobsOf(IcebergInterop.merge(spark, batchPath, src, Seq("id"), cdc))
+    assert(batchJobs == 7, s"batch DML ran $batchJobs jobs")
+    assert(IcebergInterop.read(spark, bodyPath).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 4L, 5L, 6L, 7L, 8L))
+    assert(IcebergInterop.read(spark, batchPath).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 4L, 5L, 6L, 7L))
+  }
+
+  test("iceberg reads, merges and delete collapses run as many jobs over 1 equality-delete file as over 3") {
+    def table(deleteFiles: Int): String = {
+      val p = tmp(s"iceberg-eq-$deleteFiles")
+      TableSink.writeBatch(batch(1L to 12L), SinkConfig("iceberg", p, partitionBy = Seq("cat")))
+      (1 to deleteFiles).foreach(i => IcebergInterop.deleteEquality(spark, p, Seq(i.toLong).toDF("id")))
+      p
+    }
+    val clauses = Seq(
+      VersionedTable.MatchedUpdate(Map("v" -> col("s.v"))),
+      VersionedTable.NotMatchedInsert())
+    val src = batch(Seq(5L, 20L)).withColumn("v", col("v") + 1.0)
+    def measure(deleteFiles: Int): Seq[(String, Int)] = {
+      val Seq(read, merged, collapsed) = Seq.fill(3)(table(deleteFiles))
+      Seq(
+        "read" -> jobsOf(IcebergInterop.read(spark, read).collect()),
+        "merge" -> jobsOf(IcebergInterop.merge(spark, merged, src, Seq("id"), clauses)),
+        "collapseDeletes" -> jobsOf(IcebergInterop.collapseDeletes(spark, collapsed)))
+    }
+    val one = measure(1)
+    val three = measure(3)
+    assert(three == one, s"1 file: $one, 3 files: $three")
+    assert(one == Seq("read" -> 2, "merge" -> 11, "collapseDeletes" -> 3), one)
+  }
 }
