@@ -2815,14 +2815,18 @@ private[sinks] object MergeKernel {
     * evaluate it). The other two are `rule`, an aggregate the caller
     * runs over the source. Each target key is taken to name one row, as
     * an upsert table's does: a key held by two target rows gets one
-    * updated row, where the join would write two.
+    * updated row, where the join would write two. A merge without a
+    * matched clause keeps every matched row, so the rule could hold only
+    * for a batch that inserts no keyed row: it is None, and such a merge
+    * does not pay for the rule.
     */
   def sourceDecided(target: StructType, source: DataFrame, on: Seq[String],
       clauses: Seq[MergeClause], errPrefix: String): Option[SourceDecided] =
+    if (!clauses.exists(c => c.isInstanceOf[MatchedUpdate] || c.isInstanceOf[MatchedDelete])) None
     // resolved as the merge's own join resolves them (an empty target
     // side, analysis only); a clause the join cannot resolve takes the
     // join path, which fails or not as it always has
-    scala.util.Try {
+    else scala.util.Try {
       val out = StructType(target.fields)
       val keyOrTarget = (c: String) => if (on.contains(c)) col(s"s.$c") else col(s"t.$c")
       val updated = firstMatched(clauses, lit(null).cast(out),

@@ -169,6 +169,8 @@ class JobBudgetSpec extends SparkSpec {
         IcebergInterop.deletePositions(spark, p, col("id") === 2L)),
       "IcebergInterop.merge" -> jobs("iceberg")(p =>
         IcebergInterop.merge(spark, p, src, Seq("id"), clauses)),
+      "IcebergInterop.merge (insert-only)" -> jobs("iceberg")(p =>
+        IcebergInterop.merge(spark, p, src, Seq("id"), Seq(VersionedTable.NotMatchedInsert()))),
       "IcebergInterop.write" -> jobs("iceberg")(append),
       "IcebergInterop.deleteEquality" -> jobs("iceberg")(p =>
         IcebergInterop.deleteEquality(spark, p, Seq(2L).toDF("id"))),
@@ -180,8 +182,9 @@ class JobBudgetSpec extends SparkSpec {
         IcebergInterop.createBranch(spark, p, "audit"))(p =>
         IcebergInterop.writeToBranch(more, p, "audit")))
     // measured before the file-identity refactor (the Iceberg write, delete,
-    // maintenance and branch rows before the one-commit refactor); the
-    // counts must not move
+    // maintenance and branch rows before the one-commit refactor, the
+    // insert-only merge before source-decided merges); the counts must
+    // not move
     val budget = Seq(
       "VersionedTable.delete" -> 3,
       "VersionedTable.update" -> 3,
@@ -190,6 +193,7 @@ class JobBudgetSpec extends SparkSpec {
       "DeltaInterop.updateDv" -> 8,
       "IcebergInterop.deletePositions" -> 1,
       "IcebergInterop.merge" -> 10,
+      "IcebergInterop.merge (insert-only)" -> 9,
       "IcebergInterop.write" -> 2,
       "IcebergInterop.deleteEquality" -> 1,
       "IcebergInterop.compact" -> 2,
